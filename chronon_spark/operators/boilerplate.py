@@ -52,6 +52,35 @@ def boilerplate_lines(
     )
 
 
+def _strip_lines(lists, value_set, sep: str):
+    """(lines rejoined with ``sep``, number of lines dropped) per row of a
+    list<string> Arrow array, dropping every line in ``value_set``; a
+    null list gives null text and 0. Slice-aware: a sliced array's
+    ``values`` is still the parent's whole child array while its
+    ``offsets`` are sliced, so the child is cut to the offsets' range."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    null_mask = pc.is_null(lists).to_numpy(zero_copy_only=False)
+    offsets = lists.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    flat = lists.values.slice(offsets[0], offsets[-1] - offsets[0])
+    keep = pc.fill_null(pc.invert(pc.is_in(flat, value_set=value_set)), True)
+    kb = keep.to_numpy(zero_copy_only=False).astype(np.int64)
+    cum = np.concatenate([[0], np.cumsum(kb)])
+    new_off = cum[offsets - offsets[0]]
+    kept_arr = pa.ListArray.from_arrays(pa.array(new_off, type=pa.int32()), flat.filter(keep))
+    joined = pc.binary_join(kept_arr, sep)
+    nrem_arr = pa.array((np.diff(offsets) - np.diff(new_off)).astype(np.int32), type=pa.int32())
+    if null_mask.any():
+        # null text: null cleaned text, 0 removed — same as the literal
+        # path's array_join(null)/size(null) algebra
+        valid = pa.array(~null_mask)
+        joined = pc.if_else(valid, joined, pa.nulls(len(null_mask), pa.string()))
+        nrem_arr = pc.if_else(valid, nrem_arr, pa.scalar(0, pa.int32()))
+    return joined, nrem_arr
+
+
 def remove_boilerplate_lines(
     docs: DataFrame,
     min_doc_freq: int = 3,
@@ -124,33 +153,12 @@ def remove_boilerplate_lines(
     )
 
     def _clean(batches):
-        import numpy as np
-        import pyarrow.compute as pc
-
         vs = pa.array(bset.value, type=pa.string())
         for b in batches:
             lists = b.column(b.schema.get_field_index(PARTS))
             if isinstance(lists, pa.ChunkedArray):  # defensive; batches are flat
                 lists = lists.combine_chunks()
-            null_mask = pc.is_null(lists).to_numpy(zero_copy_only=False)
-            offsets = lists.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            flat = lists.values
-            keep = pc.fill_null(pc.invert(pc.is_in(flat, value_set=vs)), True)
-            kb = keep.to_numpy(zero_copy_only=False).astype(np.int64)
-            cum = np.concatenate([[0], np.cumsum(kb)])
-            new_off = cum[offsets - offsets[0]]
-            kept_arr = pa.ListArray.from_arrays(
-                pa.array(new_off, type=pa.int32()), flat.filter(keep)
-            )
-            joined = pc.binary_join(kept_arr, sep)
-            nrem = (np.diff(offsets) - np.diff(new_off)).astype(np.int32)
-            nrem_arr = pa.array(nrem, type=pa.int32())
-            if null_mask.any():
-                # null text: null cleaned text, 0 removed — same as the
-                # literal path's array_join(null)/size(null) algebra
-                valid = pa.array(~null_mask)
-                joined = pc.if_else(valid, joined, pa.nulls(len(null_mask), pa.string()))
-                nrem_arr = pc.if_else(valid, nrem_arr, pa.scalar(0, pa.int32()))
+            joined, nrem_arr = _strip_lines(lists, vs, sep)
             cols = [b.column(b.schema.get_field_index(n)) for n in out_names]
             yield pa.RecordBatch.from_arrays(
                 cols + [joined, nrem_arr], out_names + [out_col, "n_lines_removed"]

@@ -11,35 +11,54 @@ Events at exactly ``ts == qt`` are EXCLUDED (zero-leakage invariant,
 SawtoothAggregator.scala:108-115). Unbounded windows cover ``(-inf, qt)``.
 
 Execution: instead of the reference's three RDD cogroups keyed by
-(murmur_hash(keys), headStart) (spark/GroupBy.scala:279-358), we run ONE
-DataFrame cogroup per key over (queries × events) and evaluate every
-query's aggregate with vectorized numpy inside an Arrow-batched
-``applyInPandas`` kernel:
+(murmur_hash(keys), headStart) (spark/GroupBy.scala:279-358), the raw
+kernel streams like the reference's sawtooth aggregators: query rows and
+event rows are tag-unioned into ONE stream (each side's non-key columns
+packed in one struct column, so a row carries a single null slot for
+the other side), hash-partitioned on the keys and sorted by (keys, ts,
+side) — queries before events at equal ts, so a query's strict head is
+the running event count before its row. One ``mapInArrow`` call per
+Arrow batch cuts the batch into key segments (an open segment carries
+into the next batch) and evaluates every query of every segment at once
+with vectorized numpy:
 
 - invertible ops (count/sum/average/variance/skew/kurtosis) are prefix-sum
-  lookups: two ``np.searchsorted`` calls per (part, query-batch) — O((E+Q)·logE)
-  per key, no per-row Python;
+  lookups; window tails are one batch-wide ``searchsorted`` over
+  (segment, ts) — O((E+Q)·logE) per batch, no per-key Python. Float
+  prefix sums restart at each segment, so sums match a per-key prefix
+  bit for bit;
 - min/max use an O(E log E) sparse table with O(1) vectorized range lookups;
 - first/last are index lookups on the non-null event index;
 - list/map-valued ops (last_k/top_k/percentile/histogram/unique) slice the
-  compacted value array per query (numpy slicing, loop over queries only).
+  compacted value array per query (numpy slicing, loop over queries only);
+- bucketed parts regroup events by (segment, bucket) and evaluate one
+  range per (bucket, query of that key) pair.
+
+Results leave as typed Arrow arrays with validity masks.
 
 This is the same asymptotic shape as the reference's TwoStackLite
 (windowing/TwoStackLiteAggregator.scala:26-120) but batch-vectorized.
-Skew note: one key's events land in one Arrow batch, so this RAW kernel
-is the exact-but-small-key path; ``mode="auto"`` routes every tileable
+Skew note: a key's whole history still sits in one task's memory (its
+segment accumulates until the key ends), so this RAW kernel is the
+exact-but-small-key path; ``mode="auto"`` routes every tileable
 GroupBy (now including the whole collection family) to operators/
 tiled.py, whose hop pre-tiling compresses a hot key to per-tile IRs
-before the cogroup (measured 6.8× at a 1.5M-event key, BENCH §8).
+before the cogroup (measured 6.8× at a 1.5M-event key, BENCH §8), and
+hot-key time slicing splits a dense-query key across tasks.
 """
 
 from __future__ import annotations
 
+from typing import Iterator
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from chronon_spark.api.types import AggregationPart, GroupBy, Operation
 from chronon_spark.functions.sketches import HLL_M, hll_estimate, hll_idx_rho_exprs
@@ -127,41 +146,45 @@ class _SparseTable:
 
 
 class _EventCol:
-    """Per-input-column precomputation shared across parts/windows."""
+    """Per-input-column precomputation shared across parts/windows, over
+    event values in (segment, ts) order. ``seg`` is the nondecreasing
+    segment id of each event (None = one segment): a segment is one key's
+    events, and float prefix sums restart at each segment start so every
+    range sum is that key's own running-sum difference, bit for bit."""
 
     def __init__(
         self,
-        series: pd.Series,
+        arr: pa.Array,
         numeric: bool,
         integral: bool = False,
         ts: "np.ndarray | None" = None,
+        seg: "np.ndarray | None" = None,
     ):
         self.numeric = numeric
         self.integral = integral
         self._ts = ts
+        self._seg = seg
         self._tie_compact = None
         if numeric:
-            vals = pd.to_numeric(series, errors="coerce").to_numpy(dtype=np.float64)
+            # nulls (and NaN) → NaN → masked out
+            vals = arr.cast(pa.float64(), safe=False).to_numpy(zero_copy_only=False)
             self.mask = ~np.isnan(vals)
             self.vals = vals
             if integral:
                 # exact long SUM: int64 prefix sums (running totals beyond
                 # 2^53 stay exact — same contract as the tiled kernel's
-                # int64 tile-prefix, tiled.py _TilePrefix). Values arrive
-                # int64-exact from Arrow when the column has no nulls.
-                if pd.api.types.is_integer_dtype(series.dtype):
-                    ivals = series.to_numpy(dtype=np.int64)
-                else:
-                    ivals = np.nan_to_num(vals, nan=0.0).astype(np.int64)
+                # int64 tile-prefix, tiled.py _TilePrefix). One prefix over
+                # all segments is exact: int64 differences are modular.
+                ivals = arr.cast(pa.int64()).fill_null(0).to_numpy(zero_copy_only=False)
                 self._ipsum = np.empty(len(ivals) + 1, dtype=np.int64)
                 self._ipsum[0] = 0
-                np.cumsum(np.where(self.mask, ivals, 0), out=self._ipsum[1:])
+                np.cumsum(ivals, out=self._ipsum[1:])
         else:
-            self.raw = series.to_numpy(dtype=object)
-            self.mask = np.array([v is not None and v == v for v in self.raw], dtype=bool)
+            self.raw = _objects(arr)
+            self.mask = arr.is_valid().to_numpy(zero_copy_only=False)
             self.vals = None
         self.pcount = _prefix(self.mask.astype(np.float64))
-        # compacted (non-null) values in ts order + their original indices
+        # compacted (non-null) values in (segment, ts) order + their indices
         self.nn_idx = np.flatnonzero(self.mask)
         if numeric:
             self.compact = self.vals[self.nn_idx]
@@ -171,7 +194,6 @@ class _EventCol:
         self._pmoments = None
         self._tmin = None
         self._tmax = None
-        self._sorted_compact_cache = None
 
     @property
     def tie_compact(self) -> np.ndarray:
@@ -180,8 +202,9 @@ class _EventCol:
         FIRST/LAST/FIRST_K/LAST_K pick the SAME element on exact-tie
         timestamps in both execution paths (the order the gate oracle
         asserts). Window bounds always fall on ts-run boundaries, so the
-        reorder is invisible to every other op. Falls back to input order
-        when the constructor got no ts array."""
+        reorder is invisible to every other op. The segment is the primary
+        sort key, so runs never cross keys. Falls back to input order when
+        the constructor got no ts array."""
         if self._ts is None:
             return self.compact
         if self._tie_compact is None:
@@ -193,8 +216,10 @@ class _EventCol:
                 # UTF8 ordering agrees with Python's for the practical
                 # string/categorical cases; compact is already non-null)
                 key = np.array([str(v) for v in vals], dtype=object)
-            order = np.lexsort((key, self._ts[self.nn_idx]))
-            self._tie_compact = vals[order]
+            sort_keys = (key, self._ts[self.nn_idx])
+            if self._seg is not None:
+                sort_keys += (self._seg[self.nn_idx],)
+            self._tie_compact = vals[np.lexsort(sort_keys)]
         return self._tie_compact
 
     def count_in(self, lo, hi):
@@ -206,18 +231,42 @@ class _EventCol:
         chi = (self.pcount[hi]).astype(np.int64)
         return clo, chi
 
+    def _seg_prefix(self, z: np.ndarray) -> "tuple[np.ndarray, np.ndarray]":
+        """(hi, lo) prefix tables that restart at every segment start:
+        for lo ≤ a < b ≤ hi inside one segment, hi[b] − lo[a] is the
+        per-key prefix difference, summed in the same order."""
+        n = len(z)
+        hi = np.empty(n + 1, dtype=np.float64)
+        hi[0] = 0.0
+        if self._seg is None or n == 0:
+            starts = np.zeros(1, dtype=np.int64)
+        else:
+            starts = np.r_[0, np.flatnonzero(np.diff(self._seg)) + 1]
+        for s0, s1 in zip(starts, np.r_[starts[1:], n]):
+            np.cumsum(z[s0:s1], out=hi[s0 + 1 : s1 + 1])
+        if len(starts) == 1:
+            return hi, hi
+        lo = hi.copy()
+        lo[starts] = 0.0
+        return hi, lo
+
+    @staticmethod
+    def range_sum(pref, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
+        """Σ over event ranges [lo, hi) from a _seg_prefix table pair;
+        empty ranges sum to exactly 0."""
+        return np.where(hi > lo, pref[0][hi] - pref[1][lo], 0.0)
+
     @property
     def psum(self):
         if self._psum is None:
-            z = np.where(self.mask, self.vals, 0.0)
-            self._psum = _prefix(z)
+            self._psum = self._seg_prefix(np.where(self.mask, self.vals, 0.0))
         return self._psum
 
     @property
     def pmoments(self):
         if self._pmoments is None:
             z = np.where(self.mask, self.vals, 0.0)
-            self._pmoments = tuple(_prefix(z**i) for i in (2, 3, 4))
+            self._pmoments = tuple(self._seg_prefix(z**i) for i in (2, 3, 4))
         return self._pmoments
 
     def tmin(self):
@@ -233,60 +282,57 @@ class _EventCol:
         return self._tmax
 
 
-def _obj(values, valid) -> np.ndarray:
-    out = np.empty(len(values), dtype=object)
-    for i in range(len(values)):
-        out[i] = values[i] if valid[i] else None
-    return out
+def _objects(arr: pa.Array) -> np.ndarray:
+    """A non-numeric Arrow array as a 1-D object array (None = null)."""
+    if pa.types.is_string(arr.type) or pa.types.is_large_string(arr.type):
+        return arr.to_numpy(zero_copy_only=False)
+    return np.fromiter(arr.to_pylist(), dtype=object, count=len(arr))
 
 
-def _compute_part(
-    part: AggregationPart, col: _EventCol, lo: np.ndarray, hi: np.ndarray
-) -> np.ndarray:
-    """Aggregate one unpacked part over per-query event-index ranges [lo, hi)."""
+def _compute_part(part: AggregationPart, col: _EventCol, lo: np.ndarray, hi: np.ndarray):
+    """Aggregate one unpacked part over per-query event-index ranges
+    [lo, hi). Scalar ops return a (values, valid) pair, list/map-valued
+    ops and non-numeric picks an object array (None = null)."""
     if len(col.mask) == 0:  # sliced groups can be query-only (no events in reach)
-        return _obj([None] * len(lo), np.zeros(len(lo), dtype=bool))
+        return np.zeros(len(lo)), np.zeros(len(lo), dtype=bool)
     op = part.operation
     cnt = col.count_in(lo, hi)
     has = cnt > 0
 
     if op is Operation.COUNT:
-        return _obj([int(c) for c in cnt], has)
+        return cnt, has
     if op is Operation.SUM:
         if col.integral:
-            s = col._ipsum[hi] - col._ipsum[lo]
-            return _obj([int(x) for x in s], has)
-        s = col.psum[hi] - col.psum[lo]
-        return _obj([float(x) for x in s], has)
+            return col._ipsum[hi] - col._ipsum[lo], has
+        return col.range_sum(col.psum, lo, hi), has
     if op is Operation.AVERAGE:
-        s = col.psum[hi] - col.psum[lo]
-        return _obj([s[i] / cnt[i] if cnt[i] else None for i in range(len(cnt))], has)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return col.range_sum(col.psum, lo, hi) / cnt, has
     if op in (Operation.VARIANCE, Operation.SKEW, Operation.KURTOSIS):
         p2, p3, p4 = col.pmoments
         n = cnt.astype(np.float64)
         with np.errstate(divide="ignore", invalid="ignore"):
-            s1 = col.psum[hi] - col.psum[lo]
-            s2 = p2[hi] - p2[lo]
-            s3 = p3[hi] - p3[lo]
-            s4 = p4[hi] - p4[lo]
+            s1 = col.range_sum(col.psum, lo, hi)
+            s2 = col.range_sum(p2, lo, hi)
+            s3 = col.range_sum(p3, lo, hi)
+            s4 = col.range_sum(p4, lo, hi)
             m1 = s1 / n
             m2 = s2 / n - m1**2
             m3 = s3 / n - 3 * m1 * s2 / n + 2 * m1**3
             m4 = s4 / n - 4 * m1 * s3 / n + 6 * m1**2 * s2 / n - 3 * m1**4
-        if op is Operation.VARIANCE:
-            vals = np.maximum(m2, 0.0)
-            return _obj([float(v) for v in vals], has)
-        if op is Operation.SKEW:
-            out = np.where((n < 3) | (m2 <= 0), np.nan, m3 / np.power(np.maximum(m2, 1e-300), 1.5))
-            return _obj([float(v) for v in out], has)
-        out = np.where((n < 4) | (m2 <= 0), np.nan, m4 / np.maximum(m2, 1e-300) ** 2 - 3.0)
-        return _obj([float(v) for v in out], has)
+            if op is Operation.VARIANCE:
+                return np.maximum(m2, 0.0), has
+            if op is Operation.SKEW:
+                skew = m3 / np.power(np.maximum(m2, 1e-300), 1.5)
+                return np.where((n < 3) | (m2 <= 0), np.nan, skew), has
+            out = np.where((n < 4) | (m2 <= 0), np.nan, m4 / np.maximum(m2, 1e-300) ** 2 - 3.0)
+        return out, has
     if op is Operation.MIN and col.numeric:
         v = col.tmin().query(lo, hi)
-        return _obj([float(x) for x in v], has & np.isfinite(v))
+        return v, has & np.isfinite(v)
     if op is Operation.MAX and col.numeric:
         v = col.tmax().query(lo, hi)
-        return _obj([float(x) for x in v], has & np.isfinite(v))
+        return v, has & np.isfinite(v)
 
     # compacted-range ops (and string min/max fallback)
     clo, chi = col.compact_range(lo, hi)
@@ -304,7 +350,9 @@ def _compute_part(
     if op in (Operation.FIRST, Operation.LAST):
         # vectorized gather: first/last non-null value in range
         valid = chi > clo
-        idx = clo if op is Operation.FIRST else chi - 1
+        idx = np.where(valid, clo if op is Operation.FIRST else chi - 1, 0)
+        if col.numeric:
+            return (compact[idx] if len(compact) else np.zeros(len(lo))), valid
         out[:] = None
         sel = np.flatnonzero(valid)
         if len(sel):
@@ -320,10 +368,6 @@ def _compute_part(
             out[i] = sl.min()
         elif op is Operation.MAX:
             out[i] = sl.max()
-        elif op is Operation.FIRST:
-            out[i] = sl[0]
-        elif op is Operation.LAST:
-            out[i] = sl[-1]
         elif op is Operation.FIRST_K:
             out[i] = list(sl[:k])
         elif op is Operation.LAST_K:
@@ -396,11 +440,12 @@ def _weighted_pct(vals: np.ndarray, wts: np.ndarray, p: float) -> "float | None"
 
 def _merge_unbounded(
     part: AggregationPart, col: _EventCol, lo: np.ndarray, hi: np.ndarray, base: dict
-) -> np.ndarray:
+):
     """Unbounded part under hot-key slicing: value at qt = events in
     [slice_start, qt) merged with the baseline IR over everything before
     slice_start (_build_baselines). Merge rules are the ops' own IR
-    algebra — identical results to the full-prefix computation."""
+    algebra — identical results to the full-prefix computation. Returns
+    what _compute_part returns."""
     op = part.operation
     nq = len(lo)
     empty = len(col.mask) == 0
@@ -409,74 +454,64 @@ def _merge_unbounded(
     bn = 0 if bn_raw is None else int(bn_raw)
     k = int(part.arg_map.get("k", 1))
 
+    def within(pref_of):
+        return np.zeros(nq) if empty else col.range_sum(pref_of(col), lo, hi)
+
     if op is Operation.COUNT:
         total = cnt + bn
-        return _obj([int(x) for x in total], total > 0)
+        return total, total > 0
     if op is Operation.SUM:
         bs = _nn(base.get("s1"))
         has = (cnt > 0) | (bs is not None)
-        if col.integral and not empty:
-            s = col._ipsum[hi] - col._ipsum[lo] + (0 if bs is None else int(bs))
-            return _obj([int(x) for x in s], has)
-        within = np.zeros(nq) if empty else col.psum[hi] - col.psum[lo]
-        if col.integral:  # integral column, no within events
-            s = within + (0 if bs is None else int(bs))
-            return _obj([int(x) for x in s], has)
-        s = within + (0.0 if bs is None else float(bs))
-        return _obj([float(x) for x in s], has)
+        if col.integral:
+            s = np.full(nq, 0 if bs is None else int(bs), dtype=np.int64)
+            if not empty:
+                s += col._ipsum[hi] - col._ipsum[lo]
+            return s, has
+        return within(lambda c: c.psum) + (0.0 if bs is None else float(bs)), has
     if op is Operation.AVERAGE:
         bs = float(_nn(base.get("s1")) or 0.0)
         total = cnt + bn
-        within = np.zeros(nq) if empty else col.psum[hi] - col.psum[lo]
-        s = within + bs
-        return _obj(
-            [s[i] / total[i] if total[i] else None for i in range(nq)], total > 0
-        )
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return (within(lambda c: c.psum) + bs) / total, total > 0
     if op in (Operation.VARIANCE, Operation.SKEW, Operation.KURTOSIS):
         b1 = float(_nn(base.get("s1")) or 0.0)
         b2 = float(_nn(base.get("s2")) or 0.0)
         b3 = float(_nn(base.get("s3")) or 0.0)
         b4 = float(_nn(base.get("s4")) or 0.0)
         n = (cnt + bn).astype(np.float64)
-        if empty:
-            s1 = np.full(nq, b1)
-            s2 = np.full(nq, b2)
-            s3 = np.full(nq, b3)
-            s4 = np.full(nq, b4)
-        else:
-            p2, p3, p4 = col.pmoments
-            s1 = col.psum[hi] - col.psum[lo] + b1
-            s2 = p2[hi] - p2[lo] + b2
-            s3 = p3[hi] - p3[lo] + b3
-            s4 = p4[hi] - p4[lo] + b4
+        s1 = within(lambda c: c.psum) + b1
+        s2 = within(lambda c: c.pmoments[0]) + b2
+        s3 = within(lambda c: c.pmoments[1]) + b3
+        s4 = within(lambda c: c.pmoments[2]) + b4
+        has = n > 0
         with np.errstate(divide="ignore", invalid="ignore"):
             m1 = s1 / n
             m2 = s2 / n - m1**2
             m3 = s3 / n - 3 * m1 * s2 / n + 2 * m1**3
             m4 = s4 / n - 4 * m1 * s3 / n + 6 * m1**2 * s2 / n - 3 * m1**4
-        has = n > 0
-        if op is Operation.VARIANCE:
-            return _obj([float(v) for v in np.maximum(m2, 0.0)], has)
-        if op is Operation.SKEW:
-            out = np.where(
-                (n < 3) | (m2 <= 0), np.nan, m3 / np.power(np.maximum(m2, 1e-300), 1.5)
-            )
-            return _obj([float(v) for v in out], has)
-        out = np.where((n < 4) | (m2 <= 0), np.nan, m4 / np.maximum(m2, 1e-300) ** 2 - 3.0)
-        return _obj([float(v) for v in out], has)
+            if op is Operation.VARIANCE:
+                return np.maximum(m2, 0.0), has
+            if op is Operation.SKEW:
+                out = np.where(
+                    (n < 3) | (m2 <= 0), np.nan, m3 / np.power(np.maximum(m2, 1e-300), 1.5)
+                )
+                return out, has
+            out = np.where((n < 4) | (m2 <= 0), np.nan, m4 / np.maximum(m2, 1e-300) ** 2 - 3.0)
+        return out, has
     if op in (Operation.MIN, Operation.MAX) and col.numeric:
         bm = _nn(base.get("mn" if op is Operation.MIN else "mx"))
         fill = np.inf if op is Operation.MIN else -np.inf
-        within = np.full(nq, fill) if empty else (
+        within_v = np.full(nq, fill) if empty else (
             col.tmin().query(lo, hi) if op is Operation.MIN else col.tmax().query(lo, hi)
         )
         if bm is not None:
-            within = (
-                np.minimum(within, float(bm))
+            within_v = (
+                np.minimum(within_v, float(bm))
                 if op is Operation.MIN
-                else np.maximum(within, float(bm))
+                else np.maximum(within_v, float(bm))
             )
-        return _obj([float(x) for x in within], np.isfinite(within))
+        return within_v, np.isfinite(within_v)
 
     # gather family: compact-range merges with baseline lists/picks
     if empty:
@@ -636,279 +671,459 @@ def _cast_feature(out_vals: np.ndarray, part: AggregationPart, input_type: T.Dat
     return out_vals
 
 
-def _parse_bucketed_base(qdf: pd.DataFrame, mapping: dict) -> dict:
+def _to_arrow(res, part: AggregationPart, input_type: T.DataType) -> pa.Array:
+    """One part's results (what _compute_part returns) as an Arrow array
+    of the part's declared type. A (values, valid) pair becomes a typed
+    array with a validity mask — a NaN value stays NaN, only ~valid is
+    null; object arrays go through _cast_feature and, like every pandas
+    column at the Arrow boundary, turn NaN inside lists/maps into null."""
+    atype = to_arrow_type(_plain_output_type(part, input_type))
+    if isinstance(res, tuple):
+        vals, valid = res
+        if not valid.any():
+            return pa.nulls(len(valid), atype)
+        if pa.types.is_floating(atype):
+            return pa.array(vals.astype(np.float64), mask=~valid).cast(atype, safe=False)
+        if pa.types.is_integer(atype):
+            # Arrow safe-casts down to a declared narrower integer type
+            return pa.array(np.where(valid, vals, 0).astype(np.int64), mask=~valid).cast(atype)
+        if pa.types.is_boolean(atype):
+            return pa.array(np.where(valid, vals, 0) != 0, mask=~valid)
+        obj = np.empty(len(valid), dtype=object)
+        obj[valid] = vals[valid]
+        res = obj
+    return pa.array(_cast_feature(res, part, input_type), type=atype, from_pandas=True)
+
+
+def _parse_bucketed_base(cell, mapping: dict) -> dict:
     """Per-bucket baseline state dicts from the parallel-array columns
     _build_baselines assembles for a bucketed unbounded part: scalar
     states aligned to the bucket-label array, list states as (lengths,
-    flat values) pairs. Returns {bucket label: {skey: value}}."""
-    def _cell(name):
-        return qdf[name].iloc[0] if name in qdf.columns else None
-
-    def _isna(v):
-        return v is None or (isinstance(v, float) and v != v)
-
-    bks = _cell(mapping["__bk"])
-    if _isna(bks):
+    flat values) pairs. ``cell(column)`` reads the segment's baseline
+    value (None when null or absent). Returns {bucket label: {skey: value}}."""
+    bks = cell(mapping["__bk"])
+    if bks is None:
         return {}
-    bks = list(bks)
     per: list[dict] = [dict() for _ in bks]
     for skey, name in mapping.items():
         if skey == "__bk":
             continue
         if skey in _LIST_SKEYS:
-            ln, fl = _cell(f"{name}_l"), _cell(f"{name}_f")
-            lens = [0] * len(bks) if _isna(ln) else [int(x) for x in ln]
-            flat = [] if _isna(fl) else list(fl)
+            ln, fl = cell(f"{name}_l"), cell(f"{name}_f")
+            lens = [0] * len(bks) if ln is None else [int(x) for x in ln]
+            flat = [] if fl is None else fl
             off = 0
             for t, L in enumerate(lens):
                 per[t][skey] = flat[off : off + L]
                 off += L
         else:
-            arr = _cell(name)
-            vals = None if _isna(arr) else list(arr)
+            vals = cell(name)
             for t in range(len(bks)):
                 per[t][skey] = None if vals is None else vals[t]
     return {str(b): d for b, d in zip(bks, per)}
 
 
+# the raw kernel's sorted stream: query rows (SIDE 0) and event rows
+# (SIDE 1) tag-unioned on the segment keys and ts; each side's other
+# columns ride packed in one struct column (Q_PACK / EV_PACK), so a row
+# carries ONE null slot for the other side, whatever either side's
+# width, and event columns never collide with query passthrough columns
+SIDE = "__side"
+Q_PACK = "__q"
+EV_PACK = "__e"
+# rows of complete key segments evaluated per kernel step
+CHUNK_ROWS = 4096
+
+
+def _concat(batches: "list[pa.RecordBatch]") -> pa.RecordBatch:
+    if len(batches) == 1:
+        return batches[0]
+    return pa.Table.from_batches(batches).combine_chunks().to_batches()[0]
+
+
+def _stream_columns(b: pa.RecordBatch) -> "tuple[dict, dict]":
+    """({name: array} of the query side — top-level columns plus the
+    Q_PACK fields —, {name: array} of the EV_PACK fields). Struct
+    flatten honours a sliced batch's offset and the struct's nulls."""
+    top = dict(zip(b.schema.names, b.columns))
+
+    def fields(pack: str) -> dict:
+        s = top.pop(pack, None)
+        return {} if s is None else {f.name: a for f, a in zip(s.type, s.flatten())}
+
+    ev = fields(EV_PACK)
+    return {**top, **fields(Q_PACK)}, ev
+
+
+def _segment_starts(batch: pa.RecordBatch, keys: "list[str]") -> np.ndarray:
+    """Rows where a new key segment starts (row 0 always does). Neighbours
+    share a segment when every key is equal, null matching null and NaN
+    matching NaN — Spark's grouping equality."""
+    n = batch.num_rows
+    new = np.zeros(n, dtype=bool)
+    new[:1] = True
+    if n < 2:
+        return np.flatnonzero(new)
+    for k in keys:
+        a = batch.column(k)
+        diff = pc.fill_null(pc.not_equal(a.slice(0, n - 1), a.slice(1)), True)
+        diff = diff.to_numpy(zero_copy_only=False)
+        same = [a.is_null()]
+        if pa.types.is_floating(a.type):
+            same.append(pc.fill_null(pc.is_nan(a), False))
+        for m in same:
+            m = m.to_numpy(zero_copy_only=False)
+            diff &= ~(m[:-1] & m[1:])
+        new[1:] |= diff
+    return np.flatnonzero(new)
+
+
+def _run_starts(*cols: np.ndarray) -> np.ndarray:
+    """True where a run of equal (cols...) tuples starts."""
+    new = np.zeros(len(cols[0]), dtype=bool)
+    new[:1] = True
+    for c in cols:
+        new[1:] |= c[1:] != c[:-1]
+    return new
+
+
+def _bucket_labels(arr: pa.Array) -> pa.Array:
+    """Bucket map keys: strings as they are, integers in their SQL string
+    form ('14' — the JVM-side IRs CAST the column), anything else str()."""
+    t = arr.type
+    if pa.types.is_string(t) or pa.types.is_large_string(t) or pa.types.is_integer(t):
+        return arr.cast(pa.string())
+    return pa.array([str(v) for v in arr.to_pylist()], type=pa.string())
+
+
+class _Events:
+    """Event rows of one stream chunk in (segment, ts) order: the chunk's
+    key segments, or (by_bucket) their per-bucket regrouping. Column
+    views and _EventCol precomputation are cached per column."""
+
+    def __init__(self, cols: dict, rows, seg, ts, numeric: dict, integral: dict):
+        self.cols, self.rows, self.seg, self.ts = cols, rows, seg, ts
+        self._numeric, self._integral = numeric, integral
+        self._arrays: dict = {}
+        self._cols: dict = {}
+        self._buckets: dict = {}
+        self._rank = None
+
+    def array(self, name: str) -> pa.Array:
+        if name not in self._arrays:
+            self._arrays[name] = self.cols[name].take(self.rows)
+        return self._arrays[name]
+
+    def col(self, name: str) -> _EventCol:
+        if name not in self._cols:
+            self._cols[name] = _EventCol(
+                self.array(name), self._numeric[name], self._integral[name],
+                ts=self.ts, seg=self.seg,
+            )
+        return self._cols[name]
+
+    def start(self, q_seg: np.ndarray) -> np.ndarray:
+        """Index of the first event of each segment in ``q_seg``."""
+        return np.searchsorted(self.seg, q_seg, side="left")
+
+    def search(self, q_seg: np.ndarray, t: np.ndarray) -> np.ndarray:
+        """Index of the first event with ts ≥ t in segment q_seg: ONE
+        searchsorted over all segments, on (segment, dense ts rank) keys."""
+        if self._rank is None:
+            uniq = np.unique(self.ts)
+            span = len(uniq) + 1
+            self._rank = (uniq, span, self.seg * span + np.searchsorted(uniq, self.ts))
+        uniq, span, key = self._rank
+        return np.searchsorted(key, q_seg * span + np.searchsorted(uniq, t), side="left")
+
+    def by_bucket(self, bcol: str):
+        """(events regrouped by (segment, bucket value) — each group a
+        segment of its own, buckets in first-appearance order within their
+        key —, each group's key segment, each group's map-key label)."""
+        if bcol not in self._buckets:
+            barr = self.array(bcol)
+            ok = barr.is_valid().to_numpy(zero_copy_only=False)
+            if pa.types.is_floating(barr.type):
+                ok &= ~pc.fill_null(pc.is_nan(barr), False).to_numpy(zero_copy_only=False)
+            pos = np.flatnonzero(ok)
+            labels = _bucket_labels(barr.take(pos))
+            codes = pc.dictionary_encode(labels).indices.to_numpy(zero_copy_only=False)
+            seg = self.seg[pos]
+            # group = (segment, bucket); order groups by their first event
+            o = np.lexsort((pos, codes, seg))
+            g_new = _run_starts(codes[o], seg[o])
+            first = pos[o][g_new][np.cumsum(g_new) - 1]
+            o2 = np.lexsort((pos[o], first))
+            fin, first = o[o2], first[o2]
+            g_new = _run_starts(first)
+            sub = pos[fin]
+            self._buckets[bcol] = (
+                _Events(
+                    self.cols, self.rows[sub], np.cumsum(g_new) - 1, self.ts[sub],
+                    self._numeric, self._integral,
+                ),
+                seg[fin][g_new],
+                labels.take(fin[g_new]),
+            )
+        return self._buckets[bcol]
+
+
+def _bucket_pairs(g_seg: np.ndarray, q_seg: np.ndarray):
+    """(group, query) index pairs joining every bucket group with every
+    query of its key segment — Σ over keys of queries × that key's
+    buckets, never (all queries × all buckets)."""
+    qa = np.searchsorted(q_seg, g_seg, side="left")
+    cnt = np.searchsorted(q_seg, g_seg, side="right") - qa
+    pg = np.repeat(np.arange(len(g_seg)), cnt)
+    pq = np.arange(len(pg)) - np.repeat(np.cumsum(cnt) - cnt - qa, cnt)
+    return pg, pq
+
+
+def _bucket_map(vals: pa.Array, labels: pa.Array, pg, pq, nq: int) -> pa.Array:
+    """Map[bucket → value] per query from per-(group, query) pair values:
+    entries in group order, null values dropped, an empty map is null
+    (BucketedColumnAggregator semantics)."""
+    keep = np.flatnonzero(vals.is_valid().to_numpy(zero_copy_only=False))
+    keep = keep[np.lexsort((pg[keep], pq[keep]))]
+    counts = np.bincount(pq[keep], minlength=nq)
+    offsets = np.zeros(nq + 1, dtype=np.int32)
+    np.cumsum(counts, out=offsets[1:])
+    items = vals.take(keep)
+    if pa.types.is_floating(items.type):
+        # a NaN map value (skew/kurtosis of < 3/4 events) leaves as null,
+        # the pandas-boundary rule for values nested in a map
+        items = pc.if_else(pc.is_nan(items), pa.scalar(None, items.type), items)
+    return pa.MapArray.from_arrays(
+        pa.array(offsets, mask=np.r_[counts == 0, False]), labels.take(pg[keep]), items
+    )
+
+
+def _scatter(pieces: list, n: int, atype: pa.DataType) -> pa.Array:
+    """An n-row column from (row indices, values) pieces; rows that no
+    piece covers are null."""
+    if len(pieces) == 1 and len(pieces[0][0]) == n:
+        return pieces[0][1]  # pieces index rows in order
+    if not pieces:
+        return pa.nulls(n, atype)
+    rows = np.concatenate([r for r, _ in pieces])
+    src = np.full(n, -1, dtype=np.int64)
+    src[rows] = np.arange(len(rows))
+    return pa.concat_arrays([v for _, v in pieces]).take(pa.array(src, mask=src < 0))
+
+
+def _hll_eval(ev: _Events, name: str, lo, hi, base_entries=None):
+    """APPROX_UNIQUE_COUNT via the shared HLL register sketch: JVM-hashed
+    (idx, rho) per event (null-guarded), register max over each query's
+    event range — the SAME estimator the tiled kernel stitches from tile
+    maps (functions/sketches.py).
+
+    ``base_entries``: sliced hot key — sparse (i, r) register entries
+    covering every event before the slice; register max is associative,
+    so merging them with the local range reproduces the unsliced estimate
+    bit-identically."""
+    idx = ev.array(f"__hh_{name}_idx").cast(pa.float64()).to_numpy(zero_copy_only=False)
+    rho = ev.array(f"__hh_{name}_rho").cast(pa.float64()).to_numpy(zero_copy_only=False)
+    pos = np.flatnonzero(~np.isnan(idx))
+    cidx = idx[pos].astype(np.int64)
+    crho = rho[pos].astype(np.uint8)
+    a = np.searchsorted(pos, lo, side="left")
+    b = np.searchsorted(pos, hi, side="left")
+    base_regs = np.zeros(HLL_M, dtype=np.uint8)
+    for e in base_entries or ():
+        base_regs[int(e["i"])] = max(base_regs[int(e["i"])], int(e["r"]))
+    has_base = bool(base_entries)
+    out = np.zeros(len(lo), dtype=np.int64)
+    valid = (b > a) | has_base
+    for i in np.flatnonzero(valid):
+        regs = base_regs.copy()
+        np.maximum.at(regs, cidx[a[i]:b[i]], crho[a[i]:b[i]])
+        out[i] = hll_estimate(regs)
+    return out, valid
+
+
 def make_temporal_kernel(
     gb: GroupBy,
     events_schema: T.StructType,
-    query_cols: list[str],
+    query_cols: "list[str]",
+    seg_keys: "list[str] | None" = None,
     baseline_cols: "dict[int, dict[str, str]] | None" = None,
 ):
-    """``baseline_cols``: hot-key slicing support — {index within the
-    unbounded-part subsequence of unpacked(): {state: qdf column}}. When a
-    query group carries a non-null ``__slice_lo``, unbounded parts compute
-    [slice_start, qt) locally and merge the group's baseline IR columns
-    (_merge_unbounded) instead of needing the full event prefix."""
+    """The raw as-of kernel: a ``mapInArrow`` function over one sorted
+    stream. Input batches hold tag-unioned rows — queries (SIDE 0: the
+    ``query_cols``, plus slicing columns) and events (SIDE 1), each
+    side's non-key columns packed under Q_PACK / EV_PACK — sorted by
+    (``seg_keys``, ts, SIDE) within a partition, so a key's rows form one
+    contiguous segment and a query's strict head ``ts < qt`` is the count
+    of its segment's events before its row (queries sort before events at
+    equal ts). Each batch is cut
+    into segments; the last, possibly still open, carries into the next
+    batch. One output batch per chunk of complete segments: ``query_cols``
+    plus one column per unpacked part, one row per query row.
+
+    Every part is evaluated batch-wide over all segments at once: window
+    tails are one (segment, ts) searchsorted, prefix tables span the
+    batch (float sums restart per segment). Null-ts query rows get null
+    features, and so do query rows without events (null keys: events are
+    null-key filtered).
+
+    ``seg_keys`` default to the GroupBy keys (``keys + [__qs]`` under
+    hot-key slicing). ``baseline_cols``: hot-key slicing support — {index
+    within the unbounded-part subsequence of unpacked(): {state: query
+    column}}. When a segment's queries carry a non-null ``__slice_lo``,
+    unbounded parts compute [slice_start, qt) locally and merge the
+    segment's baseline IR columns (_merge_unbounded) instead of needing
+    the full event prefix."""
     parts = gb.unpacked()
-    numeric_cols = {
+    seg_keys = list(seg_keys or gb.key_columns)
+    numeric = {
         f.name: isinstance(f.dataType, (T.NumericType, T.BooleanType)) for f in events_schema.fields
     }
-    integral_cols = {f.name: isinstance(f.dataType, _INTEGRAL) for f in events_schema.fields}
+    integral = {f.name: isinstance(f.dataType, _INTEGRAL) for f in events_schema.fields}
     input_types = {f.name: f.dataType for f in events_schema.fields}
+    names = list(query_cols) + [p.output_column for p in parts]
 
-    def kernel(qdf: pd.DataFrame, edf: pd.DataFrame) -> pd.DataFrame:
-        out = qdf.loc[:, query_cols].copy()
-        nq = len(qdf)
-        if nq == 0:
-            for p in parts:
-                out[p.output_column] = pd.Series([], dtype=object)
-            return out
-        # null-ts query rows get null features IN the kernel (the
-        # padGroupByFields contract). Handling them here instead of a
-        # driver-side pre-filter + pad-union lets passthrough callers ship
-        # the query frame through ONE subtree — the filter/union form
-        # re-evaluated the whole (possibly window-heavy) query plan a
-        # second time just to find the pad rows.
-        null_ts = qdf[TS_COL].isna().to_numpy()
-        if null_ts.any():
-            pad_out = qdf.loc[null_ts, query_cols].copy()
-            for p in parts:
-                pad_out[p.output_column] = None
-            if null_ts.all():
-                return pad_out
-            return pd.concat(
-                [kernel(qdf.loc[~null_ts], edf), pad_out], ignore_index=True
-            )
-        slice_lo = None
-        if baseline_cols is not None and "__slice_lo" in qdf.columns:
-            v = qdf["__slice_lo"].iloc[0]
-            slice_lo = None if pd.isna(v) else int(v)
-        if len(edf) == 0 and slice_lo is None:
-            for p in parts:
-                out[p.output_column] = None
-            return out
-        edf = edf.sort_values(TS_COL, kind="mergesort").reset_index(drop=True)
-        ev_ts = edf[TS_COL].to_numpy(dtype=np.int64)
-        qt = qdf[TS_COL].to_numpy(dtype=np.int64)
-        head = np.searchsorted(ev_ts, qt, side="left")  # ts < qt — strict head
+    def evaluate(b: pa.RecordBatch) -> pa.RecordBatch:
+        qc, evc = _stream_columns(b)
+        is_ev = qc[SIDE].to_numpy(zero_copy_only=False) == 1
+        seg = np.zeros(b.num_rows, dtype=np.int64)
+        seg[_segment_starts(b, seg_keys)] = 1
+        seg = np.cumsum(seg) - 1
+        ev_before = np.cumsum(is_ev) - is_ev
+        ts_col = qc[TS_COL]
+        ts = ts_col.fill_null(0).cast(pa.int64()).to_numpy(zero_copy_only=False)
+        q_rows = np.flatnonzero(~is_ev)
+        q_ok = np.flatnonzero(ts_col.is_valid().to_numpy(zero_copy_only=False)[q_rows])
+        rows = q_rows[q_ok]
+        qs, qt, head = seg[rows], ts[rows], ev_before[rows]
+        ev_rows = np.flatnonzero(is_ev)
+        ev = _Events(evc, ev_rows, seg[ev_rows], ts[ev_rows], numeric, integral)
 
-        cols: dict[str, _EventCol] = {}
-        bucket_groups: dict[str, dict] = {}
+        def cell(name: str, i: int):
+            return qc[name][int(rows[i])].as_py() if name in qc else None
 
-        def get_groups(bcol: str) -> dict:
-            if bcol not in bucket_groups:
-                bmask = edf[bcol].notna()
-                groups = {}
-                for bval, sub in edf[bmask].groupby(bcol, sort=False):
-                    sub = sub.reset_index(drop=True)
-                    groups[str(bval)] = (sub, sub[TS_COL].to_numpy(dtype=np.int64))
-                bucket_groups[bcol] = groups
-            return bucket_groups[bcol]
+        # hot-key slices: segments whose queries carry a slice start
+        sliced_segs = []
+        if baseline_cols and "__slice_lo" in qc:
+            slo = qc["__slice_lo"].take(rows).is_valid().to_numpy(zero_copy_only=False)
+            for s in np.unique(qs[slo]):
+                qi = np.arange(*np.searchsorted(qs, [s, s + 1]))
+                sliced_segs.append((s, qi, cell("__slice_lo", qi[0])))
+        sliced_q = np.zeros(len(rows), dtype=bool)
+        for _, qi, _ in sliced_segs:
+            sliced_q[qi] = True
 
-        def event_col(name: str, frame: pd.DataFrame = None) -> _EventCol:
-            if frame is None:
-                if name not in cols:
-                    cols[name] = _EventCol(
-                        edf[name], numeric_cols[name], integral_cols[name], ts=ev_ts
-                    )
-                return cols[name]
-            fts = (
-                frame[TS_COL].to_numpy(dtype=np.int64) if TS_COL in frame.columns else None
-            )
-            return _EventCol(frame[name], numeric_cols[name], integral_cols[name], ts=fts)
-
-        def hll_eval(
-            frame: pd.DataFrame,
-            name: str,
-            lo: np.ndarray,
-            hi: np.ndarray,
-            base_entries=None,
-        ):
-            """APPROX_UNIQUE_COUNT via the shared HLL register sketch:
-            JVM-hashed (idx, rho) per event (null-guarded), register max
-            over each query's event range — the SAME estimator the tiled
-            kernel stitches from tile maps (functions/sketches.py).
-
-            ``base_entries``: sliced hot key — sparse (i, r) register
-            entries covering every event before the slice; register max is
-            associative, so merging them with the local range reproduces
-            the unsliced estimate bit-identically."""
-            idx = pd.to_numeric(frame[f"__hh_{name}_idx"], errors="coerce").to_numpy(np.float64)
-            rho = pd.to_numeric(frame[f"__hh_{name}_rho"], errors="coerce").to_numpy(np.float64)
-            pos = np.flatnonzero(~np.isnan(idx))
-            cidx = idx[pos].astype(np.int64)
-            crho = rho[pos].astype(np.uint8)
-            a = np.searchsorted(pos, lo, side="left")
-            b = np.searchsorted(pos, hi, side="left")
-            base_regs = np.zeros(HLL_M, dtype=np.uint8)
-            has_base = False
-            if base_entries is not None and not (
-                isinstance(base_entries, float) and base_entries != base_entries
-            ):
-                for e in base_entries:
-                    ei = int(e["i"] if isinstance(e, dict) else e[0])
-                    er = int(e["r"] if isinstance(e, dict) else e[1])
-                    if er > base_regs[ei]:
-                        base_regs[ei] = er
-                    has_base = True
-            out = np.empty(len(lo), dtype=object)
-            out[:] = None
-            for i in range(len(lo)):
-                if b[i] <= a[i] and not has_base:
-                    continue
-                regs = base_regs.copy()
-                np.maximum.at(regs, cidx[a[i]:b[i]], crho[a[i]:b[i]])
-                out[i] = hll_estimate(regs)
-            return out
-
-        ub_i = -1
-        for p in parts:
-            if p.window is None:
-                ub_i += 1
-                if slice_lo is not None and baseline_cols and ub_i in baseline_cols:
-                    if "__bk" in baseline_cols[ub_i]:
-                        # bucketed sliced hot group: merge each bucket's
-                        # baseline IR with that bucket's slice-local
-                        # events — same per-bucket algebra as unsliced,
-                        # same merge rules as the plain sliced path
-                        base_by_b = _parse_bucketed_base(qdf, baseline_cols[ub_i])
-                        groups = get_groups(p.bucket)
-                        stripped = AggregationPart(
-                            p.input_column, p.operation, p.arg_map, None, None
-                        )
-                        maps = [dict() for _ in range(nq)]
-                        zero = np.zeros(nq, dtype=np.int64)
-                        empty_sub = edf.iloc[0:0]
-                        for bval in set(groups) | set(base_by_b):
-                            base_b = base_by_b.get(bval, {})
-                            if bval in groups:
-                                sub, sub_ts = groups[bval]
-                                sub_lo = np.full(
-                                    nq,
-                                    np.searchsorted(sub_ts, slice_lo, side="left"),
-                                    dtype=np.int64,
-                                )
-                                sub_head = np.searchsorted(sub_ts, qt, side="left")
-                            else:
-                                sub, sub_ts = empty_sub, np.empty(0, dtype=np.int64)
-                                sub_lo = sub_head = zero
-                            if p.operation is Operation.APPROX_UNIQUE_COUNT:
-                                raw = hll_eval(
-                                    sub, p.input_column, sub_lo, sub_head,
-                                    base_b.get("hreg"),
-                                )
-                            else:
-                                scol = _EventCol(
-                                    sub[p.input_column],
-                                    numeric_cols[p.input_column],
-                                    integral_cols[p.input_column],
-                                    ts=sub_ts,
-                                )
-                                raw = _merge_unbounded(
-                                    stripped, scol, sub_lo, sub_head, base_b
-                                )
-                            vals = _cast_feature(
-                                raw, stripped, input_types[p.input_column]
-                            )
-                            for qi, v in enumerate(vals):
-                                if v is not None and v is not pd.NA:
-                                    maps[qi][bval] = v
-                        out[p.output_column] = [m if m else None for m in maps]
-                        continue
-                    # sliced hot group: local range is [slice_start, qt),
-                    # everything earlier comes from the baseline IR row
-                    lo = np.full(
-                        nq, np.searchsorted(ev_ts, slice_lo, side="left"), dtype=np.int64
-                    )
-                    base = {
-                        st: (
-                            qdf[cname].iloc[0]
-                            if cname in qdf.columns
-                            else None
-                        )
-                        for st, cname in baseline_cols[ub_i].items()
-                    }
-                    if p.operation is Operation.APPROX_UNIQUE_COUNT:
-                        vals = hll_eval(
-                            edf, p.input_column, lo, head, base.get("hreg")
-                        )
-                    else:
-                        vals = _merge_unbounded(
-                            p, event_col(p.input_column), lo, head, base
-                        )
-                    out[p.output_column] = _cast_feature(vals, p, input_types[p.input_column])
-                    continue
-                lo = np.zeros(nq, dtype=np.int64)
-            else:
-                w, hop = p.window.millis, p.hop_millis
-                tail_t = ((qt - w) // hop) * hop  # floor-to-hop grid (sawtooth tail)
-                lo = np.searchsorted(ev_ts, tail_t, side="left")
+        def plain_part(p: AggregationPart, sel: np.ndarray, lo: np.ndarray, tail) -> pa.Array:
+            """Part values for queries ``sel`` over the full event range."""
+            itype = input_types[p.input_column]
             if p.bucket is None:
                 if p.operation is Operation.APPROX_UNIQUE_COUNT:
-                    vals = hll_eval(edf, p.input_column, lo, head)
+                    res = _hll_eval(ev, p.input_column, lo[sel], head[sel])
                 else:
-                    vals = _compute_part(p, event_col(p.input_column), lo, head)
-                out[p.output_column] = _cast_feature(vals, p, input_types[p.input_column])
+                    res = _compute_part(p, ev.col(p.input_column), lo[sel], head[sel])
+                return _to_arrow(res, p, itype)
+            # bucketed: every (bucket group, query of its key) pair is one
+            # range over the regrouped events; pairs fold into maps
+            stripped = AggregationPart(p.input_column, p.operation, p.arg_map, p.window, None)
+            bev, g_seg, labels = ev.by_bucket(p.bucket)
+            pg, pq = _bucket_pairs(g_seg, qs[sel])
+            qq = sel[pq]
+            sub_hi = bev.search(pg, qt[qq])
+            sub_lo = bev.start(pg) if tail is None else bev.search(pg, tail[qq])
+            if p.operation is Operation.APPROX_UNIQUE_COUNT:
+                res = _hll_eval(bev, p.input_column, sub_lo, sub_hi)
             else:
-                # bucketed: per distinct bucket value, compute on the event
-                # subset and assemble Map[bucket → value] per query
-                # (BucketedColumnAggregator semantics)
-                groups = get_groups(p.bucket)
-                maps = [dict() for _ in range(nq)]
-                stripped = AggregationPart(p.input_column, p.operation, p.arg_map, p.window, None)
-                for bval, (sub, sub_ts) in groups.items():
-                    sub_head = np.searchsorted(sub_ts, qt, side="left")
-                    if p.window is None:
-                        sub_lo = np.zeros(nq, dtype=np.int64)
-                    else:
-                        sub_lo = np.searchsorted(sub_ts, tail_t, side="left")
-                    if p.operation is Operation.APPROX_UNIQUE_COUNT:
-                        raw_vals = hll_eval(sub, p.input_column, sub_lo, sub_head)
-                    else:
-                        scol = _EventCol(
-                            sub[p.input_column], numeric_cols[p.input_column],
-                            integral_cols[p.input_column], ts=sub_ts,
-                        )
-                        raw_vals = _compute_part(stripped, scol, sub_lo, sub_head)
-                    vals = _cast_feature(raw_vals, stripped, input_types[p.input_column])
-                    for i, v in enumerate(vals):
-                        if v is not None and v is not pd.NA:
-                            maps[i][bval] = v
-                out[p.output_column] = [m if m else None for m in maps]
-        return out
+                res = _compute_part(stripped, bev.col(p.input_column), sub_lo, sub_hi)
+            return _bucket_map(_to_arrow(res, stripped, itype), labels, pg, pq, len(sel))
+
+        def sliced_part(p: AggregationPart, atype, mapping: dict, s, qi, slice_lo) -> pa.Array:
+            """Unbounded part for the queries ``qi`` of sliced segment
+            ``s``: events in [slice_lo, qt) merged with the baseline IR."""
+            itype = input_types[p.input_column]
+            name = p.input_column
+            is_hll = p.operation is Operation.APPROX_UNIQUE_COUNT
+            if "__bk" not in mapping:
+                base = {st: cell(c, qi[0]) for st, c in mapping.items()}
+                lo = np.full(len(qi), ev.search(np.array([s]), np.array([slice_lo]))[0])
+                if is_hll:
+                    res = _hll_eval(ev, name, lo, head[qi], base.get("hreg"))
+                else:
+                    res = _merge_unbounded(p, ev.col(name), lo, head[qi], base)
+                return _to_arrow(res, p, itype)
+            # bucketed sliced hot segment: merge each bucket's baseline IR
+            # with that bucket's slice-local events — same per-bucket
+            # algebra as unsliced, same merge rules as the plain sliced path
+            stripped = AggregationPart(p.input_column, p.operation, p.arg_map, p.window, None)
+            base_by_b = _parse_bucketed_base(lambda c: cell(c, qi[0]), mapping)
+            bev, g_seg, labels = ev.by_bucket(p.bucket)
+            gs = np.arange(*np.searchsorted(g_seg, [s, s + 1]))
+            groups = dict(zip(labels.take(gs).to_pylist(), gs))
+            maps = [dict() for _ in qi]
+            for lab in list(groups) + [lab for lab in base_by_b if lab not in groups]:
+                base_b = base_by_b.get(lab, {})
+                if lab in groups:
+                    gq = np.full(len(qi), groups[lab])
+                    sub_lo = np.full(len(qi), bev.search(gq[:1], np.array([slice_lo]))[0])
+                    sub_hi = bev.search(gq, qt[qi])
+                else:
+                    sub_lo = sub_hi = np.zeros(len(qi), dtype=np.int64)
+                if is_hll:
+                    res = _hll_eval(bev, name, sub_lo, sub_hi, base_b.get("hreg"))
+                else:
+                    res = _merge_unbounded(stripped, bev.col(name), sub_lo, sub_hi, base_b)
+                for i, v in enumerate(_to_arrow(res, stripped, itype).to_pylist()):
+                    if v is not None:
+                        maps[i][lab] = v
+            entries = [list(m.items()) or None for m in maps]
+            return pa.array(entries, type=atype, from_pandas=True)
+
+        feats = []
+        ub_i = -1
+        all_q = np.arange(len(rows))
+        for p in parts:
+            atype = to_arrow_type(output_field(p, events_schema).dataType)
+            mapping = None
+            if p.window is None:
+                ub_i += 1
+                if baseline_cols and ub_i in baseline_cols:
+                    mapping = baseline_cols[ub_i]
+                lo, tail = ev.start(qs), None
+            else:
+                w, hop = p.window.millis, p.hop_millis
+                tail = ((qt - w) // hop) * hop  # floor-to-hop grid (sawtooth tail)
+                lo = ev.search(qs, tail)
+            sel = all_q if mapping is None else np.flatnonzero(~sliced_q)
+            pieces = [(sel, plain_part(p, sel, lo, tail))] if len(sel) else []
+            if mapping is not None:
+                pieces += [
+                    (qi, sliced_part(p, atype, mapping, s, qi, slo)) for s, qi, slo in sliced_segs
+                ]
+            full = _scatter(pieces, len(rows), atype)
+            feats.append(_scatter([(q_ok, full)], len(q_rows), atype))
+        cols = [qc[c].take(q_rows) for c in query_cols]
+        return pa.RecordBatch.from_arrays(cols + feats, names=names)
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        pending: list[pa.RecordBatch] = []  # rows of the still-open segment
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            if pending:
+                last = pending[-1]
+                joint = _concat([last.slice(last.num_rows - 1), b])
+                if len(_segment_starts(joint, seg_keys)) == 1:
+                    pending.append(b)  # the open segment spans the whole batch
+                    continue
+            work = _concat(pending + [b])
+            starts = _segment_starts(work, seg_keys)
+            cut = int(starts[-1])
+            # complete segments go in chunks of ~CHUNK_ROWS rows: the
+            # working set stays bounded whatever the Arrow batch size
+            bounds = np.unique(starts[np.searchsorted(starts, np.arange(0, cut, CHUNK_ROWS))])
+            for a, z in zip(bounds, np.r_[bounds[1:], cut]):
+                yield evaluate(work.slice(a, z - a))
+            pending = [work.slice(cut)]
+        if pending:
+            yield evaluate(_concat(pending))
 
     return kernel
 
@@ -1150,12 +1365,6 @@ def _temporal_events_impl(
         )
 
     events = null_key_filter(events, tuple(keys)).filter(F.col(TS_COL).isNotNull())
-    # queries and events often derive from the same frame (e.g. features at
-    # every event); re-alias every event column so the cogroup children share
-    # no attribute ids — shared ids trip Catalyst's self-join dedup and the
-    # right child loses its non-key columns at execution
-    events = events.select(*[F.col(c).alias(c) for c in events.columns])
-
     # uniqSort trick (spark/Extensions.scala:303-318): only DISTINCT
     # (keys, ts) pass through the Arrow kernel. Wide passthrough columns
     # (e.g. multi-KB text) never leave the JVM; duplicate left rows are
@@ -1171,7 +1380,7 @@ def _temporal_events_impl(
 
     if passthrough:
         # the WHOLE query frame rides the kernel: null-ts rows are padded
-        # IN-kernel and null-key rows cogroup against an empty event group
+        # IN-kernel and null-key rows form segments without events
         # (events are null-key-filtered) — a filter + pad-union here would
         # re-evaluate the query subtree twice (measured as a full second
         # window chain in the flagship plan)
@@ -1181,9 +1390,7 @@ def _temporal_events_impl(
         qlite = queries.select(*keys, TS_COL).filter(cond).distinct()
         slim_cols = keys + [TS_COL]
 
-    schema = T.StructType(
-        [qlite.schema[c] for c in slim_cols] + [output_field(p, ev_schema) for p in parts]
-    )
+    feat_fields = [output_field(p, ev_schema) for p in parts]
     # ---- hot-key time slicing, raw-kernel edition: the dense-query regime
     # (features at every event of a crawl-storm url) is exactly where the
     # raw kernel wins on plan shape but serializes the hot key onto one
@@ -1207,7 +1414,7 @@ def _temporal_events_impl(
     cls = slice_classification(gb)
     if cls is not None and (hot_keys or hot_key_threshold):
         # the hot path consumes qlite up to three times (detection action,
-        # baseline-slice derivation, kernel cogroup input); without a
+        # baseline-slice derivation, kernel stream input); without a
         # persist each consumer re-executes the query spine's upstream —
         # for an enriched spine (window functions over the full input)
         # that triples the job's dominant stage (measured 253s → 422s on
@@ -1289,18 +1496,45 @@ def _temporal_events_impl(
             ),
         )
         co_keys = keys + ["__qs"]
-    kernel = make_temporal_kernel(gb, ev_schema, slim_cols, baseline_cols=baseline_cols)
-    # explicit keys-hash repartition with a pinned partition count: the
-    # kernel stage is CPU-bound, and AQE's byte-targeted coalescing would
-    # otherwise shrink it to a handful of tasks (16MB of slim rows ≈ 10
-    # partitions on a 32-core box — a 3x parallelism loss measured)
+    kernel = make_temporal_kernel(
+        gb, ev_schema, slim_cols, seg_keys=co_keys, baseline_cols=baseline_cols
+    )
+    # ONE sorted stream: query rows (SIDE 0) tag-unioned with event rows
+    # (SIDE 1), each side's other columns packed in one struct column
+    # (Q_PACK / EV_PACK), hash-partitioned on the
+    # segment keys and sorted by (keys, ts, SIDE) — queries sort before
+    # events at equal ts, so the strict head ts < qt is the running event
+    # count — then one Python call per Arrow batch, not one per key.
+    # Explicit repartition with a pinned partition count: the kernel stage
+    # is CPU-bound, and AQE's byte-targeted coalescing would otherwise
+    # shrink it to a handful of tasks (16MB of slim rows ≈ 10 partitions
+    # on a 32-core box — a 3x parallelism loss measured)
+    def side(frame: DataFrame, tag: int, pack: str) -> DataFrame:
+        rest = [c for c in frame.columns if c not in co_keys and c != TS_COL]
+        packed = [F.struct(*rest).alias(pack)] if rest else []
+        return frame.select(*co_keys, TS_COL, *packed, F.lit(tag).cast("byte").alias(SIDE))
+
+    stream = side(qlite, 0, Q_PACK).unionByName(side(events, 1, EV_PACK), allowMissingColumns=True)
+    out_fields = [
+        stream.schema[c] if c in stream.columns else T.StructField(c, qlite.schema[c].dataType)
+        for c in slim_cols
+    ]
     p_n = kernel_partitions(spark)
     feats = (
-        qlite.repartition(p_n, *co_keys)
-        .groupBy(*co_keys)
-        .cogroup(events.repartition(p_n, *co_keys).groupBy(*co_keys))
-        .applyInPandas(kernel, schema=schema)
+        stream.repartition(p_n, *co_keys)
+        .sortWithinPartitions(*co_keys, TS_COL, SIDE)
+        .mapInArrow(kernel, T.StructType(out_fields + feat_fields))
     )
+    # the union widens a key or ts whose query and event types differ;
+    # hand the query columns back in their own types
+    widened = {f.name for f in out_fields if f.dataType != qlite.schema[f.name].dataType}
+    if widened:
+        feats = feats.select(
+            *[
+                F.col(c).cast(qlite.schema[c].dataType).alias(c) if c in widened else c
+                for c in feats.columns
+            ]
+        )
     if passthrough:
         return feats
     return queries.join(feats, slim_cols, "left")
@@ -1379,7 +1613,7 @@ def _baseline_states(p: AggregationPart, integral: bool) -> list[str]:
 
         # two PARALLEL flat arrays (sample values, per-sample weights):
         # the natural array<struct<n, q:array>> shape segfaults pyarrow's
-        # arrow_to_pandas on the cogroup input, flat double arrays don't
+        # arrow_to_pandas, flat double arrays don't
         return [f"pqv{_pct_samples(p)}", f"pqw{_pct_samples(p)}"]
     if op is Operation.APPROX_HISTOGRAM_K:
         # prefix Misra-Gries count-map (the op's own day IR + entry-sum
@@ -1616,7 +1850,7 @@ def _baseline_state_exprs(c: str, st: str):
         # IR (functions/aggregations._pct_ir); the cumulative flattens to
         # PARALLEL flat arrays (values / weights, weight = n_slice/
         # |q_slice| per aggregations._pct_merge) because pyarrow segfaults
-        # on an array<struct<…, array>> cogroup input column
+        # on an array<struct<…, array>> column
         sa = F.expr(
             equirank_sample_struct(f"sort_array(collect_list(CAST({c} AS DOUBLE)))", ss)
         )

@@ -27,8 +27,9 @@ k-selections + head), and per-tile sorted value arrays
 path when every part qualifies, else the exact raw kernel.
 
 Tie semantics: events sharing an exact timestamp are ordered by
-(ts, value) inside tiles — deterministic across layouts. The raw kernel
-shares the same tie-break for its ordered gathers (temporal._EventCol
+(ts, value) inside tiles — deterministic across layouts. The raw kernel's
+sorted stream orders events by (keys, ts) only, and its ordered gathers
+re-sort each key segment's equal-ts runs by value (temporal._EventCol
 .tie_compact), so FIRST/LAST/FIRST_K/LAST_K pick the SAME element on
 both paths; the reference leaves equal-ts order unspecified (partition
 iteration order). Every other aggregate is tie-insensitive.

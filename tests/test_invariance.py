@@ -9,10 +9,12 @@
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from chronon_spark.api.types import (
     Accuracy,
@@ -24,7 +26,7 @@ from chronon_spark.api.types import (
     TimeUnit,
     Window,
 )
-from chronon_spark.operators.temporal import make_temporal_kernel
+from chronon_spark.operators.temporal import EV_PACK, SIDE, make_temporal_kernel
 from chronon_spark.pipelines.webtext import backfill_features
 from chronon_spark.fixtures.webtext import generate_webtext
 from chronon_spark.runner import run_group_by_backfill
@@ -93,55 +95,137 @@ KERNEL_GB = GroupBy(
     aggregations=(
         Aggregation("v", Operation.COUNT, windows=(None, Window(1, TimeUnit.HOURS))),
         Aggregation("v", Operation.SUM, windows=(Window(4, TimeUnit.HOURS),)),
+        Aggregation("v", Operation.AVERAGE, windows=(None,)),
         Aggregation("v", Operation.MIN, windows=(Window(1, TimeUnit.HOURS),)),
         Aggregation("v", Operation.MAX, windows=(None,)),
         Aggregation("v", Operation.LAST, windows=(Window(2, TimeUnit.HOURS),)),
         Aggregation("v", Operation.LAST_K, arg_map={"k": 3}, windows=(None,)),
+        Aggregation("v", Operation.SUM, windows=(Window(2, TimeUnit.HOURS),), buckets=("b",)),
     ),
     accuracy=Accuracy.TEMPORAL,
 )
-
-import pyspark.sql.types as T
 
 EV_SCHEMA = T.StructType(
     [
         T.StructField("k", T.StringType()),
         T.StructField("ts", T.LongType()),
         T.StructField("v", T.DoubleType()),
+        T.StructField("b", T.StringType()),
     ]
 )
 
+KEYS = ["a", "b", "c", None]  # events never carry the null key (null-key filtered)
 
-@settings(max_examples=60, deadline=None)
+
+def _stream_batches(queries, events, cuts):
+    """The kernel's input as Spark hands it over: query rows (side 0) and
+    event rows (side 1) sorted by (k, ts, side), nulls first, cut into
+    Arrow batches at ``cuts``."""
+    rows = [(k, t, 0, None, None) for k, t in queries] + [
+        (k, t, 1, v, bk) for k, t, v, bk in events
+    ]
+    rows.sort(key=lambda r: (r[0] is not None, r[0] or "", r[1] is not None, r[1] or 0, r[2]))
+    table = pa.table(
+        {
+            "k": pa.array([r[0] for r in rows], pa.string()),
+            "ts": pa.array([r[1] for r in rows], pa.int64()),
+            SIDE: pa.array([r[2] for r in rows], pa.int8()),
+            EV_PACK: pa.StructArray.from_arrays(
+                [
+                    pa.array([r[3] for r in rows], pa.float64()),
+                    pa.array([r[4] for r in rows], pa.string()),
+                ],
+                names=["v", "b"],
+                mask=pa.array([r[2] == 0 for r in rows]),
+            ),
+        }
+    )
+    bounds = [0] + sorted({c % (len(rows) + 1) for c in cuts}) + [len(rows)]
+    return [table.slice(a, b - a).to_batches()[0] for a, b in zip(bounds, bounds[1:]) if b > a]
+
+
+def _times(hours):
+    """Offsets from T0 over ``hours``: a 5-min grid (exact-ts ties, and
+    window starts that land on hop boundaries) mixed with arbitrary
+    milliseconds (events inside the sawtooth gap between a window's
+    hop-floored start and ``qt - w``)."""
+    grid = st.integers(0, hours * 12).map(lambda m: m * 300_000)
+    return st.one_of(grid, st.integers(0, hours * 3_600_000))
+
+
+@settings(max_examples=200, deadline=None)
+# the sawtooth gap, pinned: qt − 1h lies 60 s past a hop boundary
+# (T0 ≡ 200,000 mod 5 min), and the event sits between that boundary and
+# qt − 1h — inside the 1h/2h/4h windows, outside a plain sliding window
+@example(events=[(0, 150_000, 1, "x")], queries=[(0, 3_760_000)], cuts=[])
 @given(
-    ev_ts=st.lists(st.integers(0, 6 * 3_600_000), min_size=0, max_size=60),
-    q_off=st.lists(st.integers(0, 7 * 3_600_000), min_size=1, max_size=25),
-    nulls=st.lists(st.booleans(), min_size=0, max_size=60),
+    events=st.lists(
+        st.tuples(
+            st.integers(0, 2),
+            _times(6),
+            st.one_of(st.none(), st.integers(0, 100)),
+            st.sampled_from(["x", "y", None]),
+        ),
+        max_size=60,
+    ),
+    queries=st.lists(
+        st.tuples(
+            st.integers(0, 3),
+            st.one_of(st.none(), _times(7)),
+        ),
+        min_size=1,
+        max_size=30,
+    ),
+    cuts=st.lists(st.integers(0, 200), max_size=6),
 )
-def test_kernel_property(ev_ts, q_off, nulls):
-    """Pure-kernel property test: arbitrary event/query time sets,
-    duplicates and nulls included — engine == naive oracle."""
-    base = T0
-    ev_ts = sorted(base + t for t in ev_ts)
-    nulls = (nulls + [False] * len(ev_ts))[: len(ev_ts)]
-    vals = [None if nz else float((i * 37) % 101) for i, nz in enumerate(nulls)]
-    edf = pd.DataFrame({"k": "a", "ts": np.array(ev_ts, dtype=np.int64), "v": vals})
-    qts = sorted(base + t for t in q_off)
-    qdf = pd.DataFrame({"k": "a", "ts": np.array(qts, dtype=np.int64)})
+def test_kernel_property(events, queries, cuts):
+    """Pure-kernel property test, no Spark: the sorted-stream kernel fed
+    arbitrary Arrow batch cuts (segments straddle batches) over several
+    keys, a null key, null-ts queries, exact-ts ties, off-grid times and
+    null values — every query row equals the naive oracle."""
+    ev = [(KEYS[k], T0 + t, None if v is None else float(v), bk) for k, t, v, bk in events]
+    qs = [(KEYS[k], None if t is None else T0 + t) for k, t in queries]
     kernel = make_temporal_kernel(KERNEL_GB, EV_SCHEMA, ["k", "ts"])
-    out = kernel(qdf, edf)
-    parts = KERNEL_GB.unpacked()
-    ets = edf["ts"].to_numpy(np.int64)
-    evs = edf["v"].to_numpy(object)
-    for i, qt in enumerate(qts):
-        for p in parts:
-            got = out.iloc[i][p.output_column]
-            if got is pd.NA:
-                got = None
-            if isinstance(got, np.ndarray):
-                got = list(got)
-            exp = naive_feature(p, ets, evs, int(qt)) if len(edf) else None
-            assert allclose_feature(got, exp), (qt, p.output_column, got, exp)
+    out = pa.Table.from_batches(list(kernel(iter(_stream_batches(qs, ev, cuts))))).to_pylist()
+    assert sorted(((r["k"] or ""), r["ts"] or 0) for r in out) == sorted(
+        ((k or ""), t or 0) for k, t in qs
+    )
+    for row in out:
+        mine = sorted((e for e in ev if e[0] == row["k"]), key=lambda e: e[1])
+        ets = np.array([e[1] for e in mine], dtype=np.int64)
+        evs = np.array([e[2] for e in mine], dtype=object)
+        bks = np.array([e[3] for e in mine], dtype=object)
+        for p in KERNEL_GB.unpacked():
+            got = row[p.output_column]
+            if isinstance(got, list) and got and isinstance(got[0], tuple):
+                got = dict(got)  # Arrow map → dict
+            if row["ts"] is None or not mine:
+                exp = None
+            else:
+                exp = naive_feature(p, ets, evs, row["ts"], buckets=bks if p.bucket else None)
+            assert allclose_feature(got, exp), (row, p.output_column, got, exp)
+
+
+def test_segment_prefix_sums_bit_identical():
+    """Float prefix sums over a batch of key segments restart per segment:
+    every in-segment range sum equals the per-key prefix difference bit
+    for bit."""
+    from chronon_spark.operators.temporal import _EventCol, _prefix
+
+    rng = np.random.default_rng(7)
+    lens = rng.integers(1, 40, 60)
+    seg = np.repeat(np.arange(len(lens)), lens)
+    vals = rng.standard_normal(len(seg)) * 10.0 ** rng.integers(-3, 9, len(seg))
+    col = _EventCol(pa.array(vals), numeric=True, seg=seg)
+    starts = np.r_[0, np.cumsum(lens)]
+    for a, b in zip(starts[:-1], starts[1:]):
+        own = _prefix(vals[a:b])
+        lo, hi = np.meshgrid(np.arange(a, b + 1), np.arange(a, b + 1))
+        keep = lo <= hi
+        lo, hi = lo[keep], hi[keep]
+        got = col.range_sum(col.psum, lo, hi)
+        exp = own[hi - a] - own[lo - a]
+        assert np.array_equal(got, exp), (a, b)
 
 
 def test_tiled_collection_partitioning_invariance(spark):

@@ -830,6 +830,26 @@ def test_boilerplate_arrow_path_large_set(spark):
     assert arrow[4]["text_clean"] == "plain body" and arrow[4]["n_lines_removed"] == 0
 
 
+def test_boilerplate_strip_lines_sliced_batch():
+    """The Arrow path's per-batch filter on SLICED list arrays (a nonzero
+    offset, as Arrow batch views produce): a slice reads only its own
+    lines, so it gives the same result as a fresh copy of its rows."""
+    import pyarrow as pa
+
+    from chronon_spark.operators.boilerplate import _strip_lines
+
+    lists = pa.array([["a", "BP"], ["BP", "b", "c"], None, ["BP"], ["d"]])
+    vs = pa.array(["BP"])
+    for start in range(len(lists)):
+        sliced = lists.slice(start)
+        copied = pa.array(sliced.to_pylist(), type=lists.type)
+        got = [a.to_pylist() for a in _strip_lines(sliced, vs, "\n")]
+        assert got == [a.to_pylist() for a in _strip_lines(copied, vs, "\n")], start
+    joined, nrem = _strip_lines(lists.slice(1), vs, "\n")
+    assert joined.to_pylist() == ["b\nc", None, "", "d"]
+    assert nrem.to_pylist() == [1, 0, 1, 0]
+
+
 def test_lm_score_vocab_broadcast_guard(spark):
     """lm_score's vocab hint is size-guarded by the exact V from the
     smoothing aggregate: above the cutoff the initial plan must NOT carry

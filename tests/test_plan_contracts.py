@@ -283,7 +283,7 @@ def test_tilestore_materialize_partition_pruning(spark, tmp_path):
 
 
 def test_sliced_raw_kernel_plan_contracts(spark):
-    """Hot-key slicing plan contracts: (1) the kernel cogroup partitions on
+    """Hot-key slicing plan contracts: (1) the kernel stream partitions on
     (keys, __qs) so a hot key's work really lands on many tasks; (2) the
     stats-family default plan carries percentile_approx, never the
     unbounded-buffer exact percentile; (3) baseline building adds no
@@ -320,7 +320,7 @@ def test_sliced_raw_kernel_plan_contracts(spark):
     # the kernel stage's exchange must hash on user AND the slice id:
     # some hashpartitioning clause carries __qs in its key list
     low = plan.lower()
-    assert "flatmapcogroupsinpandas" in low
+    assert "mapinarrow" in low
     assert any(
         "__qs" in seg[:120] for seg in low.split("hashpartitioning(")[1:]
     ), "no exchange hashes on the slice id"
