@@ -329,11 +329,14 @@ def compute_join_part(
     (ts | ds), feature columns prefixed with the part's full prefix.
 
     ``temporal_mode``: forwarded to temporal_events for TEMPORAL parts.
-    Callers that KNOW the left spine is dense (queries at ~every event of
-    the right source, e.g. a self-join backfill) should pass "raw" — hop
-    tiling degenerates there (every tile holds a query head, so the head
-    semi-join keeps ~all raw events on top of the tile build; see
-    pipelines/webtext.py for the same reasoning and measurements).
+    "auto" measures the tile compression of the (pruned) right events
+    with one Spark action and runs the tiled kernel only where tiles at
+    least halve the rows (temporal.choose_kernel). Callers that KNOW the
+    left spine is dense (queries at ~every event of the right source,
+    e.g. a self-join backfill) should pass "raw" — it skips that action,
+    and hop tiling degenerates there anyway (every tile holds a query
+    head, so the head semi-join keeps ~all raw events on top of the tile
+    build; see pipelines/webtext.py for the same reasoning).
 
     ``left_is_small``: shared probe verdict from join_backfill (one
     limit+count per backfill, not one per part).

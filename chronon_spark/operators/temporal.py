@@ -39,12 +39,14 @@ Results leave as typed Arrow arrays with validity masks.
 This is the same asymptotic shape as the reference's TwoStackLite
 (windowing/TwoStackLiteAggregator.scala:26-120) but batch-vectorized.
 Skew note: a key's whole history still sits in one task's memory (its
-segment accumulates until the key ends), so this RAW kernel is the
-exact-but-small-key path; ``mode="auto"`` routes every tileable
-GroupBy (now including the whole collection family) to operators/
-tiled.py, whose hop pre-tiling compresses a hot key to per-tile IRs
-before the cogroup (measured 6.8× at a 1.5M-event key, BENCH §8), and
-hot-key time slicing splits a dense-query key across tasks.
+segment accumulates until the key ends). ``mode="auto"`` therefore
+measures, for a tileable GroupBy, how much 5-minute tiles would compress
+the events (choose_kernel: one aggregate over keys and ts) and routes
+the GroupBy to operators/tiled.py, whose hop pre-tiling compresses a hot
+key to per-tile IRs before the cogroup, only when tiles at least halve
+the rows over the whole input or for the heaviest key; sparse inputs,
+where tiles compress nothing, stay on this kernel. Hot-key time slicing
+splits a dense-query key across tasks on either kernel.
 """
 
 from __future__ import annotations
@@ -60,7 +62,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
-from chronon_spark.api.types import AggregationPart, GroupBy, Operation
+from chronon_spark.api.types import FIVE_MINUTES_MS, AggregationPart, GroupBy, Operation
 from chronon_spark.functions.sketches import HLL_M, hll_estimate, hll_idx_rho_exprs
 from chronon_spark.sources.scan import TS_COL, null_key_filter
 
@@ -1103,25 +1105,35 @@ def make_temporal_kernel(
         return pa.RecordBatch.from_arrays(cols + feats, names=names)
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pending: list[pa.RecordBatch] = []  # rows of the still-open segment
+        # zero-copy slices holding the rows of the still-open segment; only
+        # they are ever copied, joined to the head chunk of the next batch
+        pending: list[pa.RecordBatch] = []
         for b in batches:
             if b.num_rows == 0:
                 continue
-            if pending:
+            starts = _segment_starts(b, seg_keys)
+            if pending and len(starts) == 1:
                 last = pending[-1]
-                joint = _concat([last.slice(last.num_rows - 1), b])
+                joint = _concat([last.slice(last.num_rows - 1), b.slice(0, 1)])
                 if len(_segment_starts(joint, seg_keys)) == 1:
                     pending.append(b)  # the open segment spans the whole batch
                     continue
-            work = _concat(pending + [b])
-            starts = _segment_starts(work, seg_keys)
             cut = int(starts[-1])
             # complete segments go in chunks of ~CHUNK_ROWS rows: the
             # working set stays bounded whatever the Arrow batch size
             bounds = np.unique(starts[np.searchsorted(starts, np.arange(0, cut, CHUNK_ROWS))])
-            for a, z in zip(bounds, np.r_[bounds[1:], cut]):
-                yield evaluate(work.slice(a, z - a))
-            pending = [work.slice(cut)]
+            bounds = bounds[bounds < cut]
+            ends = np.r_[bounds[1:], cut]
+            if pending:
+                # the open segment closes here: its rows (plus the rest of
+                # the batch's first segment when it continues) head the
+                # first chunk
+                z = int(ends[0]) if cut else 0
+                yield evaluate(_concat(pending + [b.slice(0, z)] if z else pending))
+                bounds, ends = bounds[1:], ends[1:]
+            for a, z in zip(bounds, ends):
+                yield evaluate(b.slice(a, z - a))
+            pending = [b.slice(cut)]
         if pending:
             yield evaluate(_concat(pending))
 
@@ -1208,8 +1220,8 @@ def _attach_elementwise_temporal(
     ElementWiseAggregator.scala) on the temporal path: posexplode the array
     input and ride the existing BUCKET machinery with the position as the
     bucket, then densify Map[pos → value] into the output array. Any op ×
-    window works uniformly; the exploded GroupBy auto-dispatches to the
-    tiled kernel when its ops allow.
+    window works uniformly; the exploded GroupBy auto-dispatches like any
+    other (choose_kernel).
 
     Null contract: null/empty arrays never update (posexplode skips them);
     null elements inside arrays are skipped per-position (the reference
@@ -1278,6 +1290,54 @@ def _attach_elementwise_temporal(
     return out
 
 
+# mode="auto" picks the tiled kernel only when 5-minute tiles cut the rows
+# it reads at least this many times, over the whole input or for the
+# heaviest key. The crossover, measured with `tools/bench_raw_hotkey.py
+# 1000000 2000 sparse` (one 1M-event key, 2,000 random query times,
+# local[4] on a shared 4-vCPU box, best of two): raw/tiled seconds at 1, 1.5,
+# 2, 3, 4 and 8 events per tile were 6.99/8.73, 6.61/7.05, 5.93/5.96,
+# 5.87/4.50, 5.94/3.91 and 5.32/3.14 — the kernels tie at 2 and the
+# tiled one wins from 3 on. Spread over 500 keys of 2,000 events, raw
+# stayed 1.5-1.75x faster up to 8 events per tile (the tiled kernel pays
+# one pandas call per key), so the global test can pick tiles where raw
+# would be faster.
+TILE_MIN_COMPRESSION = 2
+
+
+def choose_kernel(gb: GroupBy, events: DataFrame) -> str:
+    """"tiled" or "raw" for a tileable GroupBy, from one aggregate over the
+    events' keys and ts: the event count E, the approximate count T of
+    distinct (keys, 5-minute tile) pairs, and the heaviest key's events
+    and tiles. Tiles pay for a tile-build shuffle, a head semi-join and a
+    per-key pandas cogroup; they win only when they compress. The
+    heaviest-key test keeps one storm key on tiles even when many cold
+    keys dilute the global ratio, so the key's raw history never has to
+    sit in one task. The decision is logged on the ``chronon_spark``
+    logger."""
+    import logging
+
+    keys = list(gb.key_columns)
+    tile = (F.col(TS_COL) / FIVE_MINUTES_MS).cast("long")
+    per_key = (
+        null_key_filter(events, tuple(keys))
+        .filter(F.col(TS_COL).isNotNull())
+        .groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("e"), F.approx_count_distinct(tile).alias("t"))
+    )
+    r = per_key.agg(
+        F.sum("e").alias("e"), F.sum("t").alias("t"), F.max(F.struct("e", "t")).alias("h")
+    ).first()
+    e, t = r["e"] or 0, r["t"] or 0
+    h_e, h_t = (r["h"]["e"], r["h"]["t"]) if r["h"] is not None else (0, 0)
+    compresses = e >= TILE_MIN_COMPRESSION * t or h_e >= TILE_MIN_COMPRESSION * h_t
+    choice = "tiled" if e and compresses else "raw"
+    logging.getLogger("chronon_spark").info(
+        "temporal dispatch %s: events=%d tiles~%d, heaviest key events=%d tiles~%d -> %s",
+        gb.name, e, t, h_e, h_t, choice,
+    )
+    return choice
+
+
 def _temporal_events_impl(
     spark: SparkSession,
     gb: GroupBy,
@@ -1299,8 +1359,12 @@ def _temporal_events_impl(
     null get null features (padGroupByFields, spark/Join.scala:410-432).
 
     ``mode``: "auto" uses the hop-tiled path (operators/tiled.py) when
-    EVERY aggregation is algebraic — hot keys then cost O(5-min tiles)
-    instead of O(events). "split" computes tileable parts tiled and the
+    every aggregation is tileable AND tiles compress the events at least
+    TILE_MIN_COMPRESSION-fold, over the whole input or for the heaviest
+    key (choose_kernel: one Spark action) — hot keys then cost O(5-min
+    tiles) instead of O(events); otherwise the raw sorted-stream kernel.
+    With ``tile_warehouse`` + ``tile_range`` a tileable GroupBy always
+    reads the TileStore. "split" computes tileable parts tiled and the
     rest raw, joined on (keys, ts) — only worth it when the raw parts
     are rare/cheap, since the raw half still ships the full event stream
     (measured: splitting a mixed GroupBy costs ~2x; see BENCH).
@@ -1319,8 +1383,13 @@ def _temporal_events_impl(
             temporal_events_tiled,
         )
 
-        if mode == "tiled" or (mode == "auto" and is_tileable(gb, events.schema)):
-            if tile_warehouse is not None and tile_range is not None:
+        cached = tile_warehouse is not None and tile_range is not None
+        if mode == "auto" and is_tileable(gb, events.schema):
+            # the TileStore path keeps its persisted tiles; otherwise the
+            # measured tile compression picks the kernel
+            mode = "tiled" if cached else choose_kernel(gb, events)
+        if mode == "tiled":
+            if cached:
                 from chronon_spark.operators.tilestore import (
                     TileStore,
                     temporal_events_tiled_cached,

@@ -132,13 +132,80 @@ def test_tiled_equals_raw(spark):
     ev_df = spark.createDataFrame(ev)
     q_df = spark.createDataFrame(q)
     tiled = temporal_events_tiled(spark, GB, q_df, ev_df)
-    raw = temporal_events(spark, GB, q_df, ev_df)
-    cols = [p.output_column for p in GB.unpacked()]
-    t = sorted([tuple(r) for r in tiled.select("user", "ts", *cols).collect()], key=repr)
-    r = sorted([tuple(r) for r in raw.select("user", "ts", *cols).collect()], key=repr)
-    assert len(t) == len(r)
-    for a, b in zip(t, r):
-        assert allclose_feature(list(a), list(b)), (a, b)
+    raw = temporal_events(spark, GB, q_df, ev_df, mode="raw")
+    _assert_same_features(GB, tiled, raw)
+
+
+def _assert_same_features(gb, a_df, b_df):
+    cols = [p.output_column for p in gb.unpacked()]
+    a = sorted([tuple(r) for r in a_df.select("user", "ts", *cols).collect()], key=repr)
+    b = sorted([tuple(r) for r in b_df.select("user", "ts", *cols).collect()], key=repr)
+    assert len(a) == len(b)
+    for x, y in zip(a, b):
+        assert allclose_feature(list(x), list(y)), (x, y)
+
+
+DISPATCH_GB = GroupBy(
+    name="d", sources=GB.sources, key_columns=("user",),
+    aggregations=(
+        Aggregation("price", Operation.COUNT, windows=(None, Window(7))),
+        Aggregation("price", Operation.SUM, windows=(Window(1),)),
+        Aggregation("price", Operation.LAST, windows=(Window(7),)),
+    ),
+    accuracy=Accuracy.TEMPORAL,
+)
+
+
+def _dispatch_input(kind: str, seed: int = 5):
+    """(events, queries, expected kernel). sparse: 5 keys, ~1 event per
+    tile; storm: one key with ~10 events per tile; diluted: that storm key
+    plus 200 cold keys whose tiles pull the global ratio under 2."""
+    rng = np.random.default_rng(seed)
+
+    def keyed(names, n, span_ms):
+        return pd.DataFrame({
+            "user": rng.choice(names, n),
+            "ts": (T0 + rng.integers(0, span_ms, n)).astype(np.int64),
+            "price": rng.integers(1, 500, n).astype(float),
+        })
+
+    storm = keyed(["hot"], 3_000, MS_DAY)
+    if kind == "sparse":
+        ev, want = keyed([f"u{i}" for i in range(5)], 1_000, 32 * MS_DAY), "raw"
+    elif kind == "storm":
+        ev, want = storm, "tiled"
+    else:
+        ev, want = pd.concat([storm, keyed([f"c{i}" for i in range(200)], 4_000, 32 * MS_DAY)]), "tiled"
+    q = ev.sample(100, random_state=seed)[["user", "ts"]].drop_duplicates()
+    q["ts"] += rng.integers(-MS_DAY, MS_DAY, len(q))
+    return ev, q, want
+
+
+@pytest.mark.parametrize("kind", ["sparse", "storm", "diluted"])
+def test_auto_dispatch_by_tile_compression(spark, kind, caplog):
+    """mode="auto" runs the tiled kernel only when tiles at least halve
+    the rows, globally or for the heaviest key, and logs its decision;
+    either way it answers what both forced kernels answer."""
+    import logging
+
+    from chronon_spark.operators.temporal import TILE_MIN_COMPRESSION
+
+    ev, q, want = _dispatch_input(kind)
+    tiles = ev.assign(t=ev["ts"] // 300_000).groupby("user")["t"].nunique()
+    ratio, hot_ratio = len(ev) / tiles.sum(), (ev["user"] == "hot").sum() / tiles.get("hot", 1)
+    if kind == "diluted":
+        assert ratio < TILE_MIN_COMPRESSION <= hot_ratio
+    ev_df, q_df = spark.createDataFrame(ev), spark.createDataFrame(q)
+    with caplog.at_level(logging.INFO, logger="chronon_spark"):
+        auto = temporal_events(spark, DISPATCH_GB, q_df, ev_df)
+    assert any(r.getMessage().endswith(f"-> {want}") for r in caplog.records)
+    plan = auto._jdf.queryExecution().executedPlan().toString()
+    op = {"raw": "MapInArrow", "tiled": "FlatMapCoGroupsInPandas"}
+    assert op[want] in plan and op[{"raw": "tiled", "tiled": "raw"}[want]] not in plan
+    for forced in ("raw", "tiled"):
+        _assert_same_features(
+            DISPATCH_GB, auto, temporal_events(spark, DISPATCH_GB, q_df, ev_df, mode=forced)
+        )
 
 
 def test_tiled_hll_approx_unique(spark):

@@ -12,6 +12,14 @@ per-slice baseline IRs for the unbounded parts.
 LAST — O(1)/query vectorized, slicing pays mostly for replication);
 ``heavy`` = gather/percentile ops (per-query python loops — the shape
 where one hot task serializes real compute and slicing must win).
+
+``sparse`` = the raw/tiled crossover behind temporal.TILE_MIN_COMPRESSION:
+``n_hot_events`` events at a fixed number per 5-minute tile (1-8), on one
+key and then spread over 500 keys, ``n_hot_queries`` random query times
+over the same span, mode="raw" timed against mode="tiled" (best of two,
+light ops):
+
+    python tools/bench_raw_hotkey.py 1000000 2000 sparse
 """
 
 import os
@@ -40,44 +48,13 @@ def main():
     spark = (
         SparkSession.builder.master(f"local[{os.cpu_count()}]")
         .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.showConsoleProgress", "false")
         .appName("bench-raw-hotkey")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    rng = np.random.default_rng(7)
-    days = 60
-    hot = pd.DataFrame(
-        {
-            "url": "u_hot",
-            "ts": np.sort(T0 + rng.integers(0, days * MS_DAY, n_hot_ev)).astype(np.int64),
-            "text_len": rng.integers(50, 5000, n_hot_ev).astype(np.int64),
-            "lang": rng.choice(["en", "de", "fr"], n_hot_ev),
-        }
-    )
-    n_cold = 31 * 6_000
-    cold = pd.DataFrame(
-        {
-            "url": [f"u{i}" for i in rng.integers(0, 31, n_cold)],
-            "ts": (T0 + rng.integers(0, days * MS_DAY, n_cold)).astype(np.int64),
-            "text_len": rng.integers(50, 5000, n_cold).astype(np.int64),
-            "lang": rng.choice(["en", "de", "fr"], n_cold),
-        }
-    )
-    ev = pd.concat([hot, cold], ignore_index=True)
-    q = pd.concat(
-        [
-            hot.iloc[rng.choice(n_hot_ev, n_hot_q, replace=False)][["url", "ts"]],
-            cold[["url", "ts"]],
-        ],
-        ignore_index=True,
-    ).drop_duplicates()
-
-    ev_df = spark.createDataFrame(ev).repartition(32).cache()
-    q_df = spark.createDataFrame(q).repartition(32).cache()
-    print(f"events={ev_df.count():,} queries={q_df.count():,}", flush=True)
 
     mode = sys.argv[3] if len(sys.argv) > 3 else "light"
     if mode == "approx":
@@ -121,6 +98,43 @@ def main():
         accuracy=Accuracy.TEMPORAL,
     )
 
+    if mode == "sparse":
+        sparse_crossover(spark, gb, n_hot_ev, n_hot_q)
+        spark.stop()
+        return
+
+    rng = np.random.default_rng(7)
+    days = 60
+    hot = pd.DataFrame(
+        {
+            "url": "u_hot",
+            "ts": np.sort(T0 + rng.integers(0, days * MS_DAY, n_hot_ev)).astype(np.int64),
+            "text_len": rng.integers(50, 5000, n_hot_ev).astype(np.int64),
+            "lang": rng.choice(["en", "de", "fr"], n_hot_ev),
+        }
+    )
+    n_cold = 31 * 6_000
+    cold = pd.DataFrame(
+        {
+            "url": [f"u{i}" for i in rng.integers(0, 31, n_cold)],
+            "ts": (T0 + rng.integers(0, days * MS_DAY, n_cold)).astype(np.int64),
+            "text_len": rng.integers(50, 5000, n_cold).astype(np.int64),
+            "lang": rng.choice(["en", "de", "fr"], n_cold),
+        }
+    )
+    ev = pd.concat([hot, cold], ignore_index=True)
+    q = pd.concat(
+        [
+            hot.iloc[rng.choice(n_hot_ev, n_hot_q, replace=False)][["url", "ts"]],
+            cold[["url", "ts"]],
+        ],
+        ignore_index=True,
+    ).drop_duplicates()
+
+    ev_df = spark.createDataFrame(ev).repartition(32).cache()
+    q_df = spark.createDataFrame(q).repartition(32).cache()
+    print(f"events={ev_df.count():,} queries={q_df.count():,}", flush=True)
+
     def run(tag, **kw):
         t0 = time.time()
         out = temporal_events(spark, gb, q_df, ev_df, mode="raw", **kw)
@@ -138,6 +152,51 @@ def main():
     best = min(v for k, v in runs.items() if k != "plain")
     print(f"speedup (plain / best sliced): {runs['plain'] / best:.2f}x", flush=True)
     spark.stop()
+
+
+def sparse_crossover(spark, gb, n_ev: int, n_q: int) -> None:
+    """Time mode="raw" against mode="tiled" on ``n_ev`` events at a fixed
+    number of events per 5-minute tile (the tile compression E/T) with
+    ``n_q`` queries at random times over the events' span, best of two
+    runs each, for compressions from 1 to 8: once with every event on one
+    key, once spread over 500 keys (where the tiled kernel also pays one
+    pandas call per key)."""
+    from chronon_spark.operators.temporal import temporal_events
+
+    tile_ms = 300_000
+    rng = np.random.default_rng(11)
+    print(f"{'keys':>5s} {'E/T':>5s} {'events':>9s} {'tiles':>9s} {'raw_s':>7s} {'tiled_s':>7s} "
+          "raw/tiled", flush=True)
+    for n_keys in (1, 500):
+        m = n_ev // n_keys
+        for per_tile in (1, 1.5, 2, 3, 4, 8):
+            n_tiles = int(round(m / per_tile))
+            # every tile of every key holds floor or ceil of m / n_tiles events
+            tile = np.tile(np.sort(np.arange(m) % n_tiles), n_keys)
+            ev = pd.DataFrame({
+                "url": np.repeat([f"u{k}" for k in range(n_keys)], m),
+                "ts": (T0 + tile * tile_ms + rng.integers(0, tile_ms, len(tile))).astype(np.int64),
+                "text_len": rng.integers(50, 5000, len(tile)).astype(np.int64),
+                "lang": rng.choice(["en", "de", "fr"], len(tile)),
+            })
+            q = pd.DataFrame({
+                "url": [f"u{k}" for k in rng.integers(0, n_keys, n_q)],
+                "ts": (T0 + rng.integers(0, n_tiles * tile_ms, n_q)).astype(np.int64),
+            }).drop_duplicates()
+            ev_df = spark.createDataFrame(ev).repartition(32).cache()
+            q_df = spark.createDataFrame(q).repartition(32).cache()
+            ev_df.count(), q_df.count()
+            best = {"raw": float("inf"), "tiled": float("inf")}
+            for _ in range(2):
+                for mode in best:
+                    t0 = time.time()
+                    out = temporal_events(spark, gb, q_df, ev_df, mode=mode)
+                    out.write.format("noop").mode("overwrite").save()
+                    best[mode] = min(best[mode], time.time() - t0)
+            print(f"{n_keys:5d} {m / n_tiles:5.2f} {len(tile):9,d} {n_tiles * n_keys:9,d} "
+                  f"{best['raw']:7.2f} {best['tiled']:7.2f} {best['raw'] / best['tiled']:6.2f}",
+                  flush=True)
+            ev_df.unpersist(), q_df.unpersist()
 
 
 if __name__ == "__main__":
