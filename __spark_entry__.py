@@ -12,6 +12,8 @@ date/millis derivations agree with DuckDB's naive-timestamp arithmetic.
 
 from __future__ import annotations
 
+import datetime
+import logging
 import os
 import sys
 from collections.abc import Callable
@@ -149,12 +151,19 @@ def _ds_bounds(ev: DataFrame, parquet_path: "str | None" = None) -> tuple[str, s
                     st = md.row_group(g).column(ci).statistics
                     if st is None or not st.has_min_max or (st.null_count or 0) > 0:
                         raise ValueError("no exact ts stats")
+                    if not isinstance(st.min, datetime.datetime):
+                        raise ValueError(f"ts stats are {type(st.min).__name__}, not timestamps")
                     lo = st.min if lo is None or st.min < lo else lo
                     hi = st.max if hi is None or st.max > hi else hi
             if lo is not None:
                 return lo.strftime("%Y-%m-%d"), hi.strftime("%Y-%m-%d")
-        except Exception:
-            pass  # fall through to the scan-aggregate
+        except (KeyError, ValueError, OSError) as exc:
+            # no ts column, no exact stats, or an unreadable footer (pyarrow's
+            # ArrowInvalid is a ValueError, its IO errors OSErrors)
+            logging.getLogger("chronon_spark").info(
+                "ds bounds of %s: footer stats unusable (%s); falling back to a scan aggregate",
+                parquet_path, exc,
+            )
     r = ev.agg(F.min("ds").alias("a"), F.max("ds").alias("b")).first()
     return r["a"], r["b"]
 

@@ -8,18 +8,22 @@ with ``ts`` in days ``[ds − W + 1, ds]`` — i.e. everything strictly before
 use the daily resolution (windowing/Resolution.scala:49-62), so whole-day
 range frames are exact — no sawtooth correction needed.
 
-Plan shape (1 shuffle + 1 window sort, all inside Catalyst):
+Plan shape (one scan of the events, 2 shuffles, all inside Catalyst):
 
   events ── groupBy(keys, day) → daily partial IRs      [SHUFFLE: keys+day]
-         └─ explode day → influenced output days (hop emission,
-            HopsAggregator.scala:99-143 leftBoundaries analogue)
-  spine left-join daily → Window.partitionBy(keys).orderBy(day)
-            .rangeBetween(-(W-1), 0) merges IRs → finalize
+  daily ── lead(day) over Window.partitionBy(keys).orderBy(day) [SHUFFLE: keys]
+        └─ explode each daily row into its own day (the row that carries
+           the IRs) plus the output days up to the key's next daily row,
+           capped by the max window and end_ds (hop emission,
+           HopsAggregator.scala:99-143 leftBoundaries analogue)
+  same keys partitioning → .rangeBetween(-(W-1), 0) merges IRs → finalize
 
 At 100 TB this scales because the window merge operates on the
-*daily-compressed* IRs (|keys| × |days| rows), not raw events, and both
-the groupBy and the window sort shuffle on the same key hash (one
-exchange reused by AQE).
+*daily-compressed* IRs (≤ |keys| × |days| rows, unique per (keys, day)),
+not raw events, and the spine comes out of the same pass, so the merge
+windows reuse the lead window's exchange. UNIQUE_COUNT parts add a scan
+for their (keys, day, value) occurrences and full-outer join ±1
+difference rows onto the frame (_unique_deltas).
 """
 
 from __future__ import annotations
@@ -264,41 +268,34 @@ def _snapshot_plain(
     if daily is None:
         daily = _daily_irs(keys, spec_parts, ev)
 
-    # ---- stage 2: output-day spine = days each daily row influences
-    # (bounded by max window; unbounded windows influence through end_ds)
+    # ---- stage 2, in the same pass over ``daily``: each daily row keeps its
+    # own day (the only row that carries its IRs) and fans out to the output
+    # days up to the key's next daily row, capped by the widest window's
+    # reach (unbounded windows reach through end_ds) and by end_ds. Rows stay
+    # unique per (keys, day); lookback rows before start_ds stay in the frame
+    # for the window merge without being output days.
     start_idx = F.expr(f"datediff(to_date('{start_ds}'), {EPOCH})")
     end_idx = F.expr(f"datediff(to_date('{end_ds}'), {EPOCH})")
-    max_w = gb.max_window_millis if not any(p.window is None for p in parts) else None
-    if max_w is None:
-        # any unbounded window ⇒ output days are dense from each key's first
-        # event day; build keys × sequence directly (the per-daily-row
-        # explode would emit O(days²) pre-distinct rows per key)
-        spine = (
-            daily.groupBy(*keys)
-            .agg(F.greatest(F.min(DAY_IDX), start_idx).alias("__d0"))
-            .filter(F.col("__d0") <= end_idx)
-            .withColumn(DAY_IDX, F.explode(F.sequence(F.col("__d0"), end_idx)))
-            .select(*keys, DAY_IDX)
-            .withColumn("__is_out", F.lit(True))
-        )
-    else:
+    by_key = Window.partitionBy(*keys).orderBy(F.col(DAY_IDX))
+    day = F.col(DAY_IDX)
+    last = F.least(end_idx, F.coalesce(F.col("__next") - 1, end_idx))
+    if gb.max_window_millis is not None and all(p.window is not None for p in parts):
         max_days = max(p.window.days_ceil for p in parts if p.window is not None)
-        span_end = F.least(end_idx, F.col(DAY_IDX) + F.lit(max_days - 1))
-        spine = (
-            daily.select(*keys, DAY_IDX)
-            .withColumn(
-                "__out_day",
-                F.explode(F.sequence(F.greatest(F.col(DAY_IDX), start_idx), span_end)),
-            )
-            .filter(F.col("__out_day") >= start_idx)
-            .select(*keys, F.col("__out_day").alias(DAY_IDX))
-            .distinct()
-            .withColumn("__is_out", F.lit(True))
-        )
-
-    # full outer: lookback daily rows (days before start_ds) must be present
-    # in the frame for the window merge even though they are not output days
-    merged = daily.join(spine, keys + [DAY_IDX], "full_outer")
+        last = F.least(last, day + F.lit(max_days - 1))
+    first = F.greatest(day + 1, start_idx)
+    days = F.when(first <= last, F.concat(F.array(day), F.sequence(first, last))).otherwise(
+        F.array(day)
+    )
+    own = F.col("__out_day") == day
+    merged = (
+        daily.withColumn("__next", F.lead(DAY_IDX).over(by_key))
+        .withColumn("__out_day", F.explode(days))
+    ).select(
+        *keys,
+        F.col("__out_day").alias(DAY_IDX),
+        *[F.when(own, F.col(c)).alias(c) for c in daily.columns if c not in keys + [DAY_IDX]],
+        F.col("__out_day").between(start_idx, end_idx).alias("__is_out"),
+    )
 
     # sliding-distinct difference rows join the same frame; their running
     # sum is the exact windowed distinct count at every output day
@@ -311,25 +308,11 @@ def _snapshot_plain(
 
     # ---- stage 3: window merges + finalize
     feature_cols = []
+    run_w = by_key.rangeBetween(Window.unboundedPreceding, 0)
     for p in spec_parts:
-        irc = _ir_col(p)
-        if p.window is None:
-            w = (
-                Window.partitionBy(*keys)
-                .orderBy(F.col(DAY_IDX))
-                .rangeBetween(Window.unboundedPreceding, 0)
-            )
-        else:
-            w = (
-                Window.partitionBy(*keys)
-                .orderBy(F.col(DAY_IDX))
-                .rangeBetween(-(p.window.days_ceil - 1), 0)
-            )
+        w = run_w if p.window is None else by_key.rangeBetween(-(p.window.days_ceil - 1), 0)
         spec = spec_for(p.operation)
-        merged = merged.withColumn(f"__m_{p.output_column}", spec.merge(irc, p).over(w))
-    run_w = (
-        Window.partitionBy(*keys).orderBy(F.col(DAY_IDX)).rangeBetween(Window.unboundedPreceding, 0)
-    )
+        merged = merged.withColumn(f"__m_{p.output_column}", spec.merge(_ir_col(p), p).over(w))
     for p in uniq_parts:
         merged = merged.withColumn(
             f"__m_{p.output_column}", F.sum(f"__d_{p.output_column}").over(run_w)

@@ -20,15 +20,23 @@ reference's bloom filter (Catalyst turns it into a BroadcastHashJoin when
 the key set is small; above the broadcast threshold AQE falls back to a
 shuffled semi join, which is still a strict filter, never a blowup).
 
-Scale notes: each join part computes independently (thread parallelism as
-in spark/Join.scala:292-404 can be layered on; parts are separate Spark
-jobs sharing the left scan). The final fold is a sequence of LEFT OUTER
-equi-joins on (keys, ts, row_uid) — co-partitioned on the same keys, so
-AQE reuses the exchange.
+Scale notes: the folded left is persisted once and shared by every part
+(the reference caches leftDf, spark/JoinBase.scala:423-466). Parts are
+built concurrently on one thread pool, as in spark/Join.scala:292-404, so
+each part's driver-side work (plan construction, the temporal kernel
+decision, small-mode key collects, part-table writes) overlaps the
+others'; each source table is read once per backfill. The final fold is
+a sequence of LEFT OUTER equi-joins on (keys, ts, row_uid) — co-partitioned
+on the same keys, so AQE reuses the exchange.
 """
 
 from __future__ import annotations
 
+import contextvars
+import logging
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,6 +54,7 @@ from chronon_spark.sources.scan import (
     TS_COL,
     render_source,
     scan_table,
+    shared_scans,
     shift_ds,
     skew_filter,
     union_sources,
@@ -62,12 +71,23 @@ _ACTIVE_CACHES: list = []
 def release_backfill_caches() -> None:
     """Unpersist every frame join_backfill cached. Call once the backfill
     output has been MATERIALIZED (written/collected) — the runner does per
-    step; unpersisting earlier would re-execute the left plan 2×/part."""
+    step; unpersisting earlier would re-execute the left plan 2×/part.
+
+    A frame of a stopped session is dropped: its cache stopped with it. A
+    frame that fails to unpersist does not stop the release of the rest:
+    each failure is logged, then the first is raised."""
+    errors = []
     while _ACTIVE_CACHES:
+        df = _ACTIVE_CACHES.pop()
+        if df.sparkSession.sparkContext._jsc is None:
+            continue
         try:
-            _ACTIVE_CACHES.pop().unpersist()
-        except Exception:
-            pass
+            df.unpersist()
+        except Exception as exc:
+            logging.getLogger("chronon_spark").exception("unpersist of a backfill cache failed")
+            errors.append(exc)
+    if errors:
+        raise errors[0]
 
 
 def bootstrap_fold(left: DataFrame, join: Join, spark: SparkSession) -> tuple[DataFrame, list[set]]:
@@ -324,19 +344,25 @@ def compute_join_part(
     hot_key_threshold: "int | str | None" = None,
     temporal_mode: str = "auto",
     prune_keys: bool = True,
-) -> DataFrame:
+) -> tuple[DataFrame, list[str]]:
     """Compute one joinPart's feature frame keyed by the LEFT key names +
     (ts | ds), feature columns prefixed with the part's full prefix.
+    Returns (frame, the columns to fold it onto the left with).
+
+    Building the plan runs Spark actions (the small-mode key collect, the
+    "auto" kernel decision, a tile-range bound), which is why join_backfill
+    builds its parts concurrently.
 
     ``temporal_mode``: forwarded to temporal_events for TEMPORAL parts.
     "auto" measures the tile compression of the (pruned) right events
     with one Spark action and runs the tiled kernel only where tiles at
-    least halve the rows (temporal.choose_kernel). Callers that KNOW the
-    left spine is dense (queries at ~every event of the right source,
-    e.g. a self-join backfill) should pass "raw" — it skips that action,
-    and hop tiling degenerates there anyway (every tile holds a query
-    head, so the head semi-join keeps ~all raw events on top of the tile
-    build; see pipelines/webtext.py for the same reasoning).
+    least halve the heaviest key's events (temporal.choose_kernel).
+    Callers that KNOW the left spine is dense (queries at ~every event of
+    the right source, e.g. a self-join backfill) should pass "raw" — it
+    skips that action, and hop tiling degenerates there anyway (every
+    tile holds a query head, so the head semi-join keeps ~all raw events
+    on top of the tile build; see pipelines/webtext.py for the same
+    reasoning).
 
     ``left_is_small``: shared probe verdict from join_backfill (one
     limit+count per backfill, not one per part).
@@ -446,6 +472,7 @@ def _rename_keys(df: DataFrame, right_keys: list[str], left_keys: list[str]) -> 
     return df
 
 
+@shared_scans()
 def join_backfill(
     spark: SparkSession,
     join: Join,
@@ -459,12 +486,14 @@ def join_backfill(
 ) -> DataFrame:
     """Full Join backfill over [start_ds, end_ds] of the left source.
 
+    Every part is built on a pool of ``part_parallelism`` threads
+    (spark/Join.scala:292-404, spark.chronon.join.part.parallelism), and
+    each source table is read once per call (sources.scan.shared_scans).
+
     ``part_warehouse``: optional Warehouse — each joinPart is then
     materialized to its own table ``{join}__{part}`` (already-complete
-    parts are reused: lineage + resume, spark/JoinBase.scala:209-213)
-    and the part jobs run CONCURRENTLY on a thread pool so Spark
-    schedules their stages in parallel (spark/Join.scala:292-404,
-    spark.chronon.join.part.parallelism).
+    parts are reused: lineage + resume, spark/JoinBase.scala:209-213) by
+    its pool task, so Spark schedules the part jobs' stages in parallel.
 
     ``tile_warehouse``: tileable temporal parts read/write the persisted
     5-min tile cache (operators/tilestore.py) — repeated backfills scan
@@ -541,10 +570,7 @@ def join_backfill(
             return left
         return left.filter(~F.coalesce(cov, F.lit(False)))
 
-    out = left
     if part_warehouse is not None:
-        from concurrent.futures import ThreadPoolExecutor
-
         from chronon_spark.plans.ranges import PartitionRange
 
         # materialize the left first: the row uid must be STABLE across the
@@ -559,43 +585,50 @@ def join_backfill(
         # (only this call's cache, not an outer chained backfill's)
         cached_left = left
         left = part_warehouse.read(ltable)
-        out = left
         if cached_left in _ACTIVE_CACHES:
             _ACTIVE_CACHES.remove(cached_left)
         cached_left.unpersist()
 
-        def materialize(part_and_prune):
-            part, prune = part_and_prune
-            table = f"{join.name}__{part.full_prefix}"
-            feats, join_cols = compute_join_part(
-                spark, part_input(part), part, start_ds, end_ds, join.skew_keys,
-                left_is_small=left_is_small, tile_warehouse=tile_warehouse,
-                hot_key_threshold=hot_key_threshold, temporal_mode=temporal_mode,
-                prune_keys=prune,
+    def run_part(part: JoinPart, prune: bool) -> tuple[DataFrame, list[str]]:
+        feats, join_cols = compute_join_part(
+            spark, part_input(part), part, start_ds, end_ds, join.skew_keys,
+            left_is_small=left_is_small, tile_warehouse=tile_warehouse,
+            hot_key_threshold=hot_key_threshold, temporal_mode=temporal_mode,
+            prune_keys=prune,
+        )
+        if part_warehouse is None:
+            return feats, join_cols
+        table = f"{join.name}__{part.full_prefix}"
+        if "ds" not in feats.columns:
+            feats = feats.withColumn(
+                "ds", F.date_format(F.timestamp_millis(F.col(TS_COL)), "yyyy-MM-dd")
+            ) if TS_COL in feats.columns else feats.withColumn("ds", F.lit(start_ds))
+        if part_warehouse.unfilled(table, requested):
+            part_warehouse.insert_partitions(
+                feats, table, lineage={"config": join.name, "part": part.full_prefix}
             )
-            if "ds" not in feats.columns:
-                feats = feats.withColumn(
-                    "ds", F.date_format(F.timestamp_millis(F.col(TS_COL)), "yyyy-MM-dd")
-                ) if TS_COL in feats.columns else feats.withColumn("ds", F.lit(start_ds))
-            if part_warehouse.unfilled(table, requested):
-                part_warehouse.insert_partitions(
-                    feats, table, lineage={"config": join.name, "part": part.full_prefix}
-                )
-            return table, join_cols
+        return part_warehouse.read(table), join_cols
 
-        with ThreadPoolExecutor(max_workers=part_parallelism) as pool:
-            results = list(pool.map(materialize, zip(right_parts, part_prunes)))
-        for table, join_cols in results:
-            out = coalesced_join(out, part_warehouse.read(table), join_cols, "left")
-    else:
-        for part, prune in zip(right_parts, part_prunes):
-            feats, join_cols = compute_join_part(
-                spark, part_input(part), part, start_ds, end_ds, join.skew_keys,
-                left_is_small=left_is_small, tile_warehouse=tile_warehouse,
-                hot_key_threshold=hot_key_threshold, temporal_mode=temporal_mode,
-                prune_keys=prune,
-            )
-            out = coalesced_join(out, feats, join_cols, "left")
+    # every part is built on one pool (spark/Join.scala:292-404,
+    # spark.chronon.join.part.parallelism): plan construction over py4j and
+    # the driver-side actions in it — a temporal part's kernel decision, the
+    # small-mode key collect, a part warehouse's write — overlap across
+    # parts. Each task runs with the caller's Spark local properties, so its
+    # jobs stay in the caller's job group, and in a copy of its context, so
+    # it shares this backfill's table scans.
+    def in_pool(fn):
+        target, ctx = inheritable_thread_target(spark)(fn), contextvars.copy_context()
+        return lambda *a: ctx.run(target, *a)
+
+    with ThreadPoolExecutor(max_workers=part_parallelism) as pool:
+        futures = [
+            pool.submit(in_pool(run_part), part, prune)
+            for part, prune in zip(right_parts, part_prunes)
+        ]
+        results = [f.result() for f in futures]
+    out = left
+    for feats, join_cols in results:
+        out = coalesced_join(out, feats, join_cols, "left")
 
     if join.label_part is not None:
         from chronon_spark.operators.labels import attach_labels

@@ -44,8 +44,8 @@ measures, for a tileable GroupBy, how much 5-minute tiles would compress
 the events (choose_kernel: one aggregate over keys and ts) and routes
 the GroupBy to operators/tiled.py, whose hop pre-tiling compresses a hot
 key to per-tile IRs before the cogroup, only when tiles at least halve
-the rows over the whole input or for the heaviest key; sparse inputs,
-where tiles compress nothing, stay on this kernel. Hot-key time slicing
+the heaviest key's events; sparse inputs, and many keys that each
+compress but none of them heavy, stay on this kernel. Hot-key time slicing
 splits a dense-query key across tasks on either kernel.
 """
 
@@ -1290,30 +1290,28 @@ def _attach_elementwise_temporal(
     return out
 
 
-# mode="auto" picks the tiled kernel only when 5-minute tiles cut the rows
-# it reads at least this many times, over the whole input or for the
-# heaviest key. The crossover, measured with `tools/bench_raw_hotkey.py
-# 1000000 2000 sparse` (one 1M-event key, 2,000 random query times,
-# local[4] on a shared 4-vCPU box, best of two): raw/tiled seconds at 1, 1.5,
-# 2, 3, 4 and 8 events per tile were 6.99/8.73, 6.61/7.05, 5.93/5.96,
-# 5.87/4.50, 5.94/3.91 and 5.32/3.14 — the kernels tie at 2 and the
-# tiled one wins from 3 on. Spread over 500 keys of 2,000 events, raw
+# mode="auto" picks the tiled kernel only when 5-minute tiles cut the
+# heaviest key's events at least this many times. The crossover, measured
+# with `tools/bench_raw_hotkey.py 1000000 2000 sparse` (one 1M-event key,
+# 2,000 random query times, local[4] on a shared 4-vCPU box, best of two):
+# raw/tiled seconds at 1, 1.5, 2, 3, 4 and 8 events per tile were
+# 6.99/8.73, 6.61/7.05, 5.93/5.96, 5.87/4.50, 5.94/3.91 and 5.32/3.14 —
+# the kernels tie at 2 and the tiled one wins from 3 on. Spread over 500 keys of 2,000 events, raw
 # stayed 1.5-1.75x faster up to 8 events per tile (the tiled kernel pays
-# one pandas call per key), so the global test can pick tiles where raw
-# would be faster.
+# one pandas call per key), so the rule reads no global ratio: compressing
+# tiles over many light keys do not pay for that call per key.
 TILE_MIN_COMPRESSION = 2
 
 
 def choose_kernel(gb: GroupBy, events: DataFrame) -> str:
     """"tiled" or "raw" for a tileable GroupBy, from one aggregate over the
-    events' keys and ts: the event count E, the approximate count T of
-    distinct (keys, 5-minute tile) pairs, and the heaviest key's events
-    and tiles. Tiles pay for a tile-build shuffle, a head semi-join and a
-    per-key pandas cogroup; they win only when they compress. The
-    heaviest-key test keeps one storm key on tiles even when many cold
-    keys dilute the global ratio, so the key's raw history never has to
-    sit in one task. The decision is logged on the ``chronon_spark``
-    logger."""
+    events' keys and ts: the heaviest key's events and approximate count
+    of distinct 5-minute tiles (the totals are only logged). Tiles pay for
+    a tile-build shuffle, a head semi-join and a per-key pandas cogroup;
+    they win only when the heaviest key's tiles compress, which keeps one
+    storm key on tiles however many cold keys surround it, so the key's
+    raw history never has to sit in one task. The decision is logged on
+    the ``chronon_spark`` logger."""
     import logging
 
     keys = list(gb.key_columns)
@@ -1329,8 +1327,7 @@ def choose_kernel(gb: GroupBy, events: DataFrame) -> str:
     ).first()
     e, t = r["e"] or 0, r["t"] or 0
     h_e, h_t = (r["h"]["e"], r["h"]["t"]) if r["h"] is not None else (0, 0)
-    compresses = e >= TILE_MIN_COMPRESSION * t or h_e >= TILE_MIN_COMPRESSION * h_t
-    choice = "tiled" if e and compresses else "raw"
+    choice = "tiled" if h_e and h_e >= TILE_MIN_COMPRESSION * h_t else "raw"
     logging.getLogger("chronon_spark").info(
         "temporal dispatch %s: events=%d tiles~%d, heaviest key events=%d tiles~%d -> %s",
         gb.name, e, t, h_e, h_t, choice,
@@ -1360,8 +1357,8 @@ def _temporal_events_impl(
 
     ``mode``: "auto" uses the hop-tiled path (operators/tiled.py) when
     every aggregation is tileable AND tiles compress the events at least
-    TILE_MIN_COMPRESSION-fold, over the whole input or for the heaviest
-    key (choose_kernel: one Spark action) — hot keys then cost O(5-min
+    TILE_MIN_COMPRESSION-fold for the heaviest key (choose_kernel: one
+    Spark action) — hot keys then cost O(5-min
     tiles) instead of O(events); otherwise the raw sorted-stream kernel.
     With ``tile_warehouse`` + ``tile_range`` a tileable GroupBy always
     reads the TileStore. "split" computes tileable parts tiled and the

@@ -24,9 +24,8 @@ removed at most once), per-tile k-heaps (FIRST_K/LAST_K/TOP_K/BOTTOM_K;
 the window's k-selection is contained in the union of per-tile
 k-selections + head), and per-tile sorted value arrays
 (APPROX_PERCENTILE — exact). temporal_events(mode="auto") picks this
-path when every part qualifies and tiles at least halve the event rows,
-over the whole input or for the heaviest key (temporal.choose_kernel);
-otherwise the exact raw kernel, which reads sparse events faster.
+path when every part qualifies and tiles at least halve the heaviest
+key's events (temporal.choose_kernel); otherwise the exact raw kernel, which reads sparse events faster.
 
 Tie semantics: events sharing an exact timestamp are ordered by
 (ts, value) inside tiles — deterministic across layouts. The raw kernel's

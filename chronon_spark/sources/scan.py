@@ -15,6 +15,9 @@ Also performs window-aware scan-range narrowing
 from __future__ import annotations
 
 import datetime as _dt
+import threading
+from contextlib import contextmanager
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,9 +48,42 @@ def millis_to_ds(ms: int) -> str:
     return _dt.datetime.fromtimestamp(ms / 1000, tz=_dt.timezone.utc).date().isoformat()
 
 
+# table -> frame inside a shared_scans() block; None outside one
+_SCANS: ContextVar[dict[str, DataFrame] | None] = ContextVar("chronon_scans", default=None)
+_SCANS_LOCK = threading.Lock()
+
+
+@contextmanager
+def shared_scans():
+    """Within the block, scan_table reads each table once and hands every
+    later caller the same frame (a parquet read runs a schema-inference job
+    per call). The memo lives only as long as the block, so a table
+    rewritten after the block is read fresh; nested blocks share the outer
+    memo.
+    Threads see it when they run in a copy of the caller's context."""
+    if _SCANS.get() is not None:
+        yield
+        return
+    token = _SCANS.set({})
+    try:
+        yield
+    finally:
+        _SCANS.reset(token)
+
+
 def scan_table(spark: SparkSession, table: str) -> DataFrame:
     """Load a table by catalog name or parquet path (spark/LocalDataLoader.scala
     idea). Paths containing '/' or ending in .parquet read as parquet."""
+    memo = _SCANS.get()
+    if memo is None:
+        return _read_table(spark, table)
+    with _SCANS_LOCK:
+        if table not in memo:
+            memo[table] = _read_table(spark, table)
+        return memo[table]
+
+
+def _read_table(spark: SparkSession, table: str) -> DataFrame:
     if "/" in table or table.endswith(".parquet"):
         return spark.read.parquet(table)
     return spark.table(table)

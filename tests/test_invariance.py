@@ -264,6 +264,15 @@ SNAP_GB_AGGS = (
 )
 
 
+# keys beside the generated one: "b" has only events before start_ds minus
+# the widest window (5 days), "c" has gaps wider than every window and an
+# event past end_ds; (day offset from start_ds, ms into the day, value)
+SNAP_FIXED_KEYS = {
+    "b": [(-9, 3_600_000, 2.0), (-8, 0, None), (-8, 7_200_000, 5.0)],
+    "c": [(-7, 60_000, 1.0), (0, 0, 3.0), (0, 0, 4.0), (7, 1_000, 6.0)],
+}
+
+
 @settings(max_examples=6, deadline=None)
 @given(
     day_off=st.lists(st.integers(0, 8), min_size=1, max_size=30),
@@ -274,37 +283,50 @@ SNAP_GB_AGGS = (
 def test_snapshot_property(spark, day_off, in_day, vals, nulls):
     """Snapshot path vs the naive oracle on adversarial shapes: day gaps,
     duplicate timestamps, null runs, single-event days — every path
-    (spec IRs, delta-DISTINCT, quantile samples) on one frame."""
+    (spec IRs, delta-DISTINCT, quantile samples) on one frame, with and
+    without an unbounded part. Key "a" is generated; "b" and "c" are
+    SNAP_FIXED_KEYS. The output rows are exactly the days in
+    [start_ds, end_ds] that some event reaches: within the widest window,
+    or from the key's first event on when a part is unbounded."""
     import datetime as dt
 
     from chronon_spark.operators.groupby import snapshot_events
 
     n = min(len(day_off), len(in_day), len(vals), len(nulls))
-    base = 1_699_920_000_000  # 2023-11-14 00:00 UTC (day-aligned)
-    ts = np.array(
-        sorted(base + day_off[i] * MS_DAY + in_day[i] for i in range(n)),
-        dtype=np.int64,
+    base = 1_699_920_000_000  # 2023-11-14 00:00 UTC (day-aligned) = start_ds
+    rows = [("a", day_off[i], in_day[i], None if nulls[i] else float(vals[i])) for i in range(n)]
+    rows += [(k, d, ms, v) for k, evs in SNAP_FIXED_KEYS.items() for d, ms, v in evs]
+    ev = pd.DataFrame(
+        [(k, base + d * MS_DAY + ms, v) for k, d, ms, v in rows], columns=["k", "ts", "v"]
     )
-    v = [None if nulls[i] else float(vals[i]) for i in range(n)]
-    ev = pd.DataFrame({"k": "a", "ts": ts, "v": v})
     df = spark.createDataFrame(ev).withColumn(
         "ds", F.date_format(F.timestamp_millis(F.col("ts")), "yyyy-MM-dd")
     )
-    gb = GroupBy(
-        name="prop_snap", sources=(EventSource(table="x"),), key_columns=("k",),
-        aggregations=SNAP_GB_AGGS,
-    )
-    out = snapshot_events(spark, gb, df, "2023-11-14", "2023-11-20").collect()
-    if ev["ts"].min() > 1_699_920_000_000 + 6 * MS_DAY + MS_DAY - 1:
-        assert out == []  # every event lands after end_ds → empty backfill
-        return
-    assert out, "snapshot produced no rows"
-    ets = ev["ts"].to_numpy(np.int64)
-    evs = ev["v"].to_numpy(object)
-    for row in out:
-        d = dt.date.fromisoformat(row["ds"]) + dt.timedelta(days=1)
-        qt = int(dt.datetime(d.year, d.month, d.day, tzinfo=dt.timezone.utc).timestamp() * 1000)
-        for p in gb.unpacked():
-            got = row[p.output_column]
-            exp = naive_feature(p, ets, evs, qt)
-            assert allclose_feature(got, exp), (row["ds"], p.output_column, got, exp)
+    bounded = tuple(a for a in SNAP_GB_AGGS if None not in a.windows)
+    for aggs, reach in ((SNAP_GB_AGGS, None), (bounded, 5)):
+        gb = GroupBy(
+            name="prop_snap", sources=(EventSource(table="x"),), key_columns=("k",),
+            aggregations=aggs,
+        )
+        out = snapshot_events(spark, gb, df, "2023-11-14", "2023-11-20").collect()
+        event_days = {k: set((g["ts"] - base) // MS_DAY) for k, g in ev.groupby("k")}
+        want = {
+            (k, x)
+            for k, days in event_days.items()
+            for x in range(7)
+            if any(d <= x and (reach is None or x - d < reach) for d in days)
+        }
+        got = [
+            (r["k"], (dt.date.fromisoformat(r["ds"]) - dt.date(2023, 11, 14)).days) for r in out
+        ]
+        assert len(got) == len(set(got)) and set(got) == want, (sorted(got), sorted(want))
+        for row in out:
+            g = ev[ev["k"] == row["k"]].sort_values("ts", kind="stable")
+            ets = g["ts"].to_numpy(np.int64)
+            evs = g["v"].to_numpy(object)
+            d = dt.date.fromisoformat(row["ds"]) + dt.timedelta(days=1)
+            qt = int(dt.datetime(d.year, d.month, d.day, tzinfo=dt.timezone.utc).timestamp() * 1000)
+            for p in gb.unpacked():
+                got_v = row[p.output_column]
+                exp = naive_feature(p, ets, evs, qt)
+                assert allclose_feature(got_v, exp), (row["k"], row["ds"], p.output_column, got_v, exp)

@@ -214,3 +214,104 @@ def test_small_mode_in_pushdown(spark):
     a = sorted([tuple(r) for r in feats_small.collect()], key=repr)
     b = sorted([tuple(r) for r in feats_semi.collect()], key=repr)
     assert a == b
+
+
+def test_parts_planned_concurrently_in_callers_job_group(spark, setup, monkeypatch):
+    """join_backfill builds its parts on a thread pool: the temporal part's
+    kernel decision runs off the calling thread, yet its jobs land in the
+    caller's job group; each table is read once per backfill, and every
+    frame it cached is released afterwards."""
+    import threading
+
+    from chronon_spark.operators import join as join_mod
+    from chronon_spark.operators import temporal
+    from chronon_spark.sources import scan
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    decisions, reads = [], []
+    choose, read = temporal.choose_kernel, scan._read_table
+
+    def traced_choose(gb, events):
+        decisions.append((threading.current_thread(), sc.getLocalProperty("spark.jobGroup.id")))
+        return choose(gb, events)
+
+    monkeypatch.setattr(temporal, "choose_kernel", traced_choose)
+    monkeypatch.setattr(scan, "_read_table", lambda s, t: reads.append(t) or read(s, t))
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("g", "join")
+    try:
+        out = join_backfill(spark, JOIN, START, END)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    [(thread, group)] = decisions
+    assert thread is not threading.main_thread() and group == "g"
+    # the decision ran jobs, and no job of the backfill escaped the group
+    assert tracker.getJobIdsForGroup("g")
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    assert sorted(reads) == ["checkouts", "purchases", "users_dim"]
+    assert out.count() > 0
+    join_mod.release_backfill_caches()
+    assert not join_mod._ACTIVE_CACHES
+
+
+def test_release_backfill_caches_fails_loudly(spark):
+    """A frame that fails to unpersist is reported after the rest are
+    released; a frame of a stopped session is dropped quietly."""
+    from types import SimpleNamespace as NS
+
+    from chronon_spark.operators.join import _ACTIVE_CACHES, release_backfill_caches
+
+    def failing(live: bool):
+        def unpersist():
+            raise RuntimeError("unpersist failed")
+
+        return NS(sparkSession=NS(sparkContext=NS(_jsc=object() if live else None)), unpersist=unpersist)
+
+    df = spark.range(3).persist()
+    df.count()
+    _ACTIVE_CACHES.extend([df, failing(live=False), failing(live=True)])
+    with pytest.raises(RuntimeError, match="unpersist failed"):
+        release_backfill_caches()
+    assert not _ACTIVE_CACHES and not df.is_cached
+    _ACTIVE_CACHES.append(failing(live=False))
+    release_backfill_caches()
+    assert not _ACTIVE_CACHES
+
+
+def test_shared_scans_reads_each_table_once_across_threads(monkeypatch):
+    """Concurrent scan_table calls inside one shared_scans block read each
+    table once and all get the same frame; outside the block nothing is
+    shared."""
+    import contextvars
+    import sys
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from chronon_spark.sources import scan
+
+    reads = []
+
+    def fake_read(spark, table):
+        reads.append(table)
+        time.sleep(0.001)
+        return object()
+
+    monkeypatch.setattr(scan, "_read_table", fake_read)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with scan.shared_scans(), ThreadPoolExecutor(max_workers=16) as pool:
+            futures = [
+                pool.submit(contextvars.copy_context().run, scan.scan_table, None, f"t{i % 3}")
+                for i in range(300)
+            ]
+            frames = [f.result(timeout=60) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert sorted(reads) == ["t0", "t1", "t2"]
+    assert len({id(f) for f in frames}) == 3
+    assert scan.scan_table(None, "t0") not in frames

@@ -2,6 +2,7 @@
 be visible in the executed plan, not just implied (SURVEY §4)."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -52,6 +53,39 @@ def test_snapshot_sketch_ir_plan(spark):
     plan = _plan(snapshot_events(spark, gb, ev, "2023-11-15", "2023-12-10"))
     assert "flatten(collect_list" not in plan
     assert "collect_set" not in plan
+
+
+@pytest.mark.parametrize("unbounded", [False, True])
+def test_snapshot_single_scan_plan(spark, tmp_path, unbounded):
+    """The snapshot spine comes out of the same pass over the daily IRs:
+    without a UNIQUE_COUNT part the events are scanned once and no
+    full-outer join stitches a spine back on."""
+    from chronon_spark.api.types import Aggregation, EventSource, GroupBy, Operation, Window
+    from chronon_spark.operators.groupby import snapshot_events
+
+    path = str(tmp_path / "ev")
+    spark.createDataFrame(
+        pd.DataFrame({
+            "user": [f"u{i % 3}" for i in range(60)],
+            "ts": [1_700_000_000_000 + i * 43_200_000 for i in range(60)],
+            "price": [float(i) for i in range(60)],
+        })
+    ).write.parquet(path)
+    ev = spark.read.parquet(path).withColumn(
+        "ds", F.date_format(F.timestamp_millis(F.col("ts")), "yyyy-MM-dd")
+    )
+    gb = GroupBy(
+        name="one_scan",
+        sources=(EventSource(table=path),),
+        key_columns=("user",),
+        aggregations=(
+            Aggregation("price", Operation.SUM, windows=(Window(3), Window(7))),
+            Aggregation("price", Operation.LAST, windows=(None if unbounded else Window(2),)),
+        ),
+    )
+    plan = _plan(snapshot_events(spark, gb, ev, "2023-11-20", "2023-12-10"))
+    assert plan.count("FileScan parquet") == 1, plan
+    assert "FullOuter" not in plan, plan
 
 
 def _walk(node, pred, out):

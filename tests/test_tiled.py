@@ -159,7 +159,9 @@ DISPATCH_GB = GroupBy(
 def _dispatch_input(kind: str, seed: int = 5):
     """(events, queries, expected kernel). sparse: 5 keys, ~1 event per
     tile; storm: one key with ~10 events per tile; diluted: that storm key
-    plus 200 cold keys whose tiles pull the global ratio under 2."""
+    plus 200 cold keys whose tiles pull the global ratio under 2; packed:
+    300 cold keys of 8 events in one tile each (a global ratio over 2)
+    beside one heavy key of ~1 event per tile."""
     rng = np.random.default_rng(seed)
 
     def keyed(names, n, span_ms):
@@ -174,6 +176,14 @@ def _dispatch_input(kind: str, seed: int = 5):
         ev, want = keyed([f"u{i}" for i in range(5)], 1_000, 32 * MS_DAY), "raw"
     elif kind == "storm":
         ev, want = storm, "tiled"
+    elif kind == "packed":
+        tile_start = (T0 // 300_000 + np.repeat(np.arange(300), 8)) * 300_000
+        cold = pd.DataFrame({
+            "user": np.repeat([f"c{i}" for i in range(300)], 8),
+            "ts": (tile_start + rng.integers(0, 300_000, 2_400)).astype(np.int64),
+            "price": rng.integers(1, 500, 2_400).astype(float),
+        })
+        ev, want = pd.concat([keyed(["heavy"], 1_000, 32 * MS_DAY), cold]), "raw"
     else:
         ev, want = pd.concat([storm, keyed([f"c{i}" for i in range(200)], 4_000, 32 * MS_DAY)]), "tiled"
     q = ev.sample(100, random_state=seed)[["user", "ts"]].drop_duplicates()
@@ -181,11 +191,11 @@ def _dispatch_input(kind: str, seed: int = 5):
     return ev, q, want
 
 
-@pytest.mark.parametrize("kind", ["sparse", "storm", "diluted"])
+@pytest.mark.parametrize("kind", ["sparse", "storm", "diluted", "packed"])
 def test_auto_dispatch_by_tile_compression(spark, kind, caplog):
     """mode="auto" runs the tiled kernel only when tiles at least halve
-    the rows, globally or for the heaviest key, and logs its decision;
-    either way it answers what both forced kernels answer."""
+    the heaviest key's events, whatever the global ratio, and logs its
+    decision; either way it answers what both forced kernels answer."""
     import logging
 
     from chronon_spark.operators.temporal import TILE_MIN_COMPRESSION
@@ -195,6 +205,9 @@ def test_auto_dispatch_by_tile_compression(spark, kind, caplog):
     ratio, hot_ratio = len(ev) / tiles.sum(), (ev["user"] == "hot").sum() / tiles.get("hot", 1)
     if kind == "diluted":
         assert ratio < TILE_MIN_COMPRESSION <= hot_ratio
+    if kind == "packed":
+        heavy_ratio = (ev["user"] == "heavy").sum() / tiles["heavy"]
+        assert heavy_ratio < TILE_MIN_COMPRESSION <= ratio
     ev_df, q_df = spark.createDataFrame(ev), spark.createDataFrame(q)
     with caplog.at_level(logging.INFO, logger="chronon_spark"):
         auto = temporal_events(spark, DISPATCH_GB, q_df, ev_df)

@@ -14,10 +14,11 @@ LAST — O(1)/query vectorized, slicing pays mostly for replication);
 where one hot task serializes real compute and slicing must win).
 
 ``sparse`` = the raw/tiled crossover behind temporal.TILE_MIN_COMPRESSION:
-``n_hot_events`` events at a fixed number per 5-minute tile (1-8), on one
-key and then spread over 500 keys, ``n_hot_queries`` random query times
-over the same span, mode="raw" timed against mode="tiled" (best of two,
-light ops):
+one key of 50k events up to ``n_hot_events`` at 3 and 8 events per
+5-minute tile (the key-size axis), then ``n_hot_events`` events at 1-8
+per tile on one key and spread over 500 keys; ``n_hot_queries`` random
+query times over the same span, mode="raw" timed against mode="tiled"
+(best of two, light ops):
 
     python tools/bench_raw_hotkey.py 1000000 2000 sparse
 """
@@ -155,48 +156,51 @@ def main():
 
 
 def sparse_crossover(spark, gb, n_ev: int, n_q: int) -> None:
-    """Time mode="raw" against mode="tiled" on ``n_ev`` events at a fixed
-    number of events per 5-minute tile (the tile compression E/T) with
-    ``n_q`` queries at random times over the events' span, best of two
-    runs each, for compressions from 1 to 8: once with every event on one
-    key, once spread over 500 keys (where the tiled kernel also pays one
-    pandas call per key)."""
+    """Time mode="raw" against mode="tiled" at a fixed number of events per
+    5-minute tile (the tile compression E/T) with ``n_q`` queries at random
+    times over the events' span, best of two runs each. First the key-size
+    axis: one key of 50k, 200k, 400k and 1M events (those up to ``n_ev``)
+    at 3 and 8 events per tile; then compressions from 1 to 8 at ``n_ev``
+    events, once on one key and once spread over 500 keys (where the tiled
+    kernel also pays one pandas call per key)."""
     from chronon_spark.operators.temporal import temporal_events
 
     tile_ms = 300_000
     rng = np.random.default_rng(11)
+    sizes = sorted({s for s in (50_000, 200_000, 400_000, 1_000_000) if s <= n_ev} | {n_ev})
+    runs = [(1, n, per_tile) for n in sizes for per_tile in (3, 8)]
+    runs += [(k, n_ev, per_tile) for k in (1, 500) for per_tile in (1, 1.5, 2, 3, 4, 8)]
     print(f"{'keys':>5s} {'E/T':>5s} {'events':>9s} {'tiles':>9s} {'raw_s':>7s} {'tiled_s':>7s} "
           "raw/tiled", flush=True)
-    for n_keys in (1, 500):
-        m = n_ev // n_keys
-        for per_tile in (1, 1.5, 2, 3, 4, 8):
-            n_tiles = int(round(m / per_tile))
-            # every tile of every key holds floor or ceil of m / n_tiles events
-            tile = np.tile(np.sort(np.arange(m) % n_tiles), n_keys)
-            ev = pd.DataFrame({
-                "url": np.repeat([f"u{k}" for k in range(n_keys)], m),
-                "ts": (T0 + tile * tile_ms + rng.integers(0, tile_ms, len(tile))).astype(np.int64),
-                "text_len": rng.integers(50, 5000, len(tile)).astype(np.int64),
-                "lang": rng.choice(["en", "de", "fr"], len(tile)),
-            })
-            q = pd.DataFrame({
-                "url": [f"u{k}" for k in rng.integers(0, n_keys, n_q)],
-                "ts": (T0 + rng.integers(0, n_tiles * tile_ms, n_q)).astype(np.int64),
-            }).drop_duplicates()
-            ev_df = spark.createDataFrame(ev).repartition(32).cache()
-            q_df = spark.createDataFrame(q).repartition(32).cache()
-            ev_df.count(), q_df.count()
-            best = {"raw": float("inf"), "tiled": float("inf")}
-            for _ in range(2):
-                for mode in best:
-                    t0 = time.time()
-                    out = temporal_events(spark, gb, q_df, ev_df, mode=mode)
-                    out.write.format("noop").mode("overwrite").save()
-                    best[mode] = min(best[mode], time.time() - t0)
-            print(f"{n_keys:5d} {m / n_tiles:5.2f} {len(tile):9,d} {n_tiles * n_keys:9,d} "
-                  f"{best['raw']:7.2f} {best['tiled']:7.2f} {best['raw'] / best['tiled']:6.2f}",
-                  flush=True)
-            ev_df.unpersist(), q_df.unpersist()
+    for n_keys, n, per_tile in runs:
+        m = n // n_keys
+        n_tiles = int(round(m / per_tile))
+        # every tile of every key holds floor or ceil of m / n_tiles events
+        tile = np.tile(np.sort(np.arange(m) % n_tiles), n_keys)
+        ev = pd.DataFrame({
+            "url": np.repeat([f"u{k}" for k in range(n_keys)], m),
+            "ts": (T0 + tile * tile_ms + rng.integers(0, tile_ms, len(tile))).astype(np.int64),
+            "text_len": rng.integers(50, 5000, len(tile)).astype(np.int64),
+            "lang": rng.choice(["en", "de", "fr"], len(tile)),
+        })
+        q = pd.DataFrame({
+            "url": [f"u{k}" for k in rng.integers(0, n_keys, n_q)],
+            "ts": (T0 + rng.integers(0, n_tiles * tile_ms, n_q)).astype(np.int64),
+        }).drop_duplicates()
+        ev_df = spark.createDataFrame(ev).repartition(32).cache()
+        q_df = spark.createDataFrame(q).repartition(32).cache()
+        ev_df.count(), q_df.count()
+        best = {"raw": float("inf"), "tiled": float("inf")}
+        for _ in range(2):
+            for mode in best:
+                t0 = time.time()
+                out = temporal_events(spark, gb, q_df, ev_df, mode=mode)
+                out.write.format("noop").mode("overwrite").save()
+                best[mode] = min(best[mode], time.time() - t0)
+        print(f"{n_keys:5d} {m / n_tiles:5.2f} {len(tile):9,d} {n_tiles * n_keys:9,d} "
+              f"{best['raw']:7.2f} {best['tiled']:7.2f} {best['raw'] / best['tiled']:6.2f}",
+              flush=True)
+        ev_df.unpersist(), q_df.unpersist()
 
 
 if __name__ == "__main__":
