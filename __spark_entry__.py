@@ -93,6 +93,12 @@ def _memo_frame(spark: SparkSession, key: str, build) -> DataFrame:
     return df
 
 
+def _memo_drop(key: str) -> None:
+    """Forget ``key``'s frames in every application (its files changed)."""
+    for k in [k for k in _READ_MEMO if k[1] == key]:
+        del _READ_MEMO[k]
+
+
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _memo_frame(
         spark,
@@ -1118,6 +1124,8 @@ def _flagship_pages(spark: SparkSession) -> DataFrame:
         # DuckDB oracle reads the same directory via a glob, so the
         # multi-file layout is invisible to it (content hash is order-free).
         oracle_cols.repartition(16).write.mode("overwrite").parquet(FLAGSHIP_PAGES_PATH)
+        # a memoized scan lists the files it replaced
+        _memo_drop(f"flagship:{FLAGSHIP_PAGES_PATH}")
         n, h = _fixture_fingerprint(spark.read.parquet(FLAGSHIP_PAGES_PATH))
         with open(sidecar, "w") as f:
             _json.dump({"rows": n, "hash": h, "gen_hash": gen_hash}, f)
@@ -1150,10 +1158,11 @@ def _flagship_pages(spark: SparkSession) -> DataFrame:
     # serve the MATERIALIZED parquet — the exact same rows the DuckDB
     # oracle reads (oracle_sql reads this path). The generated frame
     # re-synthesizes ~200MB of text (repeat+substring) on EVERY action
-    # that consumes it (the flagship pipeline evaluates pages 3×: dup
-    # probe, slim feature pass, payload join); the parquet scan replaces
-    # that with a zstd-compressed columnar read whose ReadSchema prunes
-    # to the columns each stage actually needs.
+    # that consumes it (backfill_features reads pages in its (url, ts)
+    # dup probe, in a text-hash probe when some (url, ts) repeats, as
+    # here, in its slim feature pass and in its payload join); the parquet
+    # scan replaces that with a zstd-compressed columnar read whose
+    # ReadSchema prunes to the columns each stage actually needs.
     return _memo_frame(
         spark,
         f"flagship:{FLAGSHIP_PAGES_PATH}",

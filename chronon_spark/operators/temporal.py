@@ -12,15 +12,23 @@ SawtoothAggregator.scala:108-115). Unbounded windows cover ``(-inf, qt)``.
 
 Execution: instead of the reference's three RDD cogroups keyed by
 (murmur_hash(keys), headStart) (spark/GroupBy.scala:279-358), the raw
-kernel streams like the reference's sawtooth aggregators: query rows and
-event rows are tag-unioned into ONE stream (each side's non-key columns
-packed in one struct column, so a row carries a single null slot for
-the other side), hash-partitioned on the keys and sorted by (keys, ts,
-side) — queries before events at equal ts, so a query's strict head is
-the running event count before its row. One ``mapInArrow`` call per
-Arrow batch cuts the batch into key segments (an open segment carries
-into the next batch) and evaluates every query of every segment at once
-with vectorized numpy:
+kernel streams like the reference's sawtooth aggregators: ONE stream of
+query and event rows (non-key columns packed in one struct column per
+role), hash-partitioned on the keys and sorted by (keys, ts). It has two
+shapes:
+
+- union: query rows and event rows from two frames, tag-unioned, each
+  row carrying a single null slot for the other role;
+- dense (``events=None``): the query frame alone, every row with a key
+  and ts also an event, its event struct built in place — each row is
+  read, shipped and sorted once, not twice.
+
+A query's strict head is its segment's first event at ts ≥ qt, found by
+the same (segment, ts-rank) ``searchsorted`` that gives window tails, so
+the rule holds whatever the row order among equal ts. One
+``mapInArrow`` call per Arrow batch cuts the batch into key segments (an
+open segment carries into the next batch) and evaluates every query of
+every segment at once with vectorized numpy:
 
 - invertible ops (count/sum/average/variance/skew/kurtosis) are prefix-sum
   lookups; window tails are one batch-wide ``searchsorted`` over
@@ -57,7 +65,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
@@ -725,14 +733,17 @@ def _parse_bucketed_base(cell, mapping: dict) -> dict:
     return {str(b): d for b, d in zip(bks, per)}
 
 
-# the raw kernel's sorted stream: query rows (SIDE 0) and event rows
-# (SIDE 1) tag-unioned on the segment keys and ts; each side's other
-# columns ride packed in one struct column (Q_PACK / EV_PACK), so a row
-# carries ONE null slot for the other side, whatever either side's
-# width, and event columns never collide with query passthrough columns
+# the raw kernel's sorted stream: query rows and event rows on the
+# segment keys and ts, tagged in SIDE; each side's other columns ride
+# packed in one struct column (Q_PACK / EV_PACK), so event columns never
+# collide with query passthrough columns. The union shape tags query
+# rows SIDE_QUERY and event rows SIDE_EVENT (a row carries ONE null slot
+# for the other side); the dense shape tags a row that is both SIDE_BOTH
+# and fills both packs in place
 SIDE = "__side"
 Q_PACK = "__q"
 EV_PACK = "__e"
+SIDE_QUERY, SIDE_EVENT, SIDE_BOTH = 0, 1, 2
 # rows of complete key segments evaluated per kernel step
 CHUNK_ROWS = 4096
 
@@ -951,16 +962,19 @@ def make_temporal_kernel(
     baseline_cols: "dict[int, dict[str, str]] | None" = None,
 ):
     """The raw as-of kernel: a ``mapInArrow`` function over one sorted
-    stream. Input batches hold tag-unioned rows — queries (SIDE 0: the
-    ``query_cols``, plus slicing columns) and events (SIDE 1), each
-    side's non-key columns packed under Q_PACK / EV_PACK — sorted by
-    (``seg_keys``, ts, SIDE) within a partition, so a key's rows form one
-    contiguous segment and a query's strict head ``ts < qt`` is the count
-    of its segment's events before its row (queries sort before events at
-    equal ts). Each batch is cut
-    into segments; the last, possibly still open, carries into the next
-    batch. One output batch per chunk of complete segments: ``query_cols``
-    plus one column per unpacked part, one row per query row.
+    stream. Input rows are queries (the ``query_cols``, plus slicing
+    columns, under Q_PACK) and events (the inputs under EV_PACK), tagged
+    in SIDE: the union shape has query-only rows (SIDE_QUERY) and
+    event-only rows (SIDE_EVENT); the dense shape has rows that are both
+    (SIDE_BOTH), plus query-only rows where the row cannot be an event
+    (null keys or ts). Rows are sorted by (``seg_keys``, ts) within a
+    partition, so a key's rows form one contiguous segment, in any order
+    among equal ts: a query's strict head ``ts < qt`` is its segment's
+    first event at ts ≥ qt, found by the same (segment, ts-rank)
+    searchsorted that gives window tails. Each batch is cut into
+    segments; the last, possibly still open, carries into the next batch.
+    One output batch per chunk of complete segments: ``query_cols`` plus
+    one column per unpacked part, one row per query row.
 
     Every part is evaluated batch-wide over all segments at once: window
     tails are one (segment, ts) searchsorted, prefix tables span the
@@ -986,19 +1000,20 @@ def make_temporal_kernel(
 
     def evaluate(b: pa.RecordBatch) -> pa.RecordBatch:
         qc, evc = _stream_columns(b)
-        is_ev = qc[SIDE].to_numpy(zero_copy_only=False) == 1
+        side = qc[SIDE].to_numpy(zero_copy_only=False)
         seg = np.zeros(b.num_rows, dtype=np.int64)
         seg[_segment_starts(b, seg_keys)] = 1
         seg = np.cumsum(seg) - 1
-        ev_before = np.cumsum(is_ev) - is_ev
         ts_col = qc[TS_COL]
         ts = ts_col.fill_null(0).cast(pa.int64()).to_numpy(zero_copy_only=False)
-        q_rows = np.flatnonzero(~is_ev)
+        q_rows = np.flatnonzero(side != SIDE_EVENT)
         q_ok = np.flatnonzero(ts_col.is_valid().to_numpy(zero_copy_only=False)[q_rows])
         rows = q_rows[q_ok]
-        qs, qt, head = seg[rows], ts[rows], ev_before[rows]
-        ev_rows = np.flatnonzero(is_ev)
+        qs, qt = seg[rows], ts[rows]
+        ev_rows = np.flatnonzero(side != SIDE_QUERY)
         ev = _Events(evc, ev_rows, seg[ev_rows], ts[ev_rows], numeric, integral)
+        # strict head: the segment's first event at ts ≥ qt
+        head = ev.search(qs, qt)
 
         def cell(name: str, i: int):
             return qc[name][int(rows[i])].as_py() if name in qc else None
@@ -1144,7 +1159,7 @@ def temporal_events(
     spark: SparkSession,
     gb: GroupBy,
     queries: DataFrame,
-    events: DataFrame,
+    events: "DataFrame | None",
     mode: str = "auto",
     passthrough: bool = False,
     tile_warehouse=None,
@@ -1157,6 +1172,12 @@ def temporal_events(
     with GroupBy ``derivations`` applied to the output (selectExpr over
     feature columns — spark/GroupBy.scala:763-774 applies them to ALL
     GroupBy output regardless of accuracy).
+
+    ``events=None``: every query row with a non-null key and ts is also an
+    event (features at every event of the frame itself); needs
+    ``passthrough=True``. The raw kernel then streams the query frame
+    alone, each row entering as query and event at once (the dense
+    shape), instead of a union with a second pass over the same rows.
 
     ``hot_key_threshold``: keys whose query count exceeds it get time
     slicing in BOTH kernels (skew MITIGATION, not exclusion): tile-aligned
@@ -1188,7 +1209,9 @@ def temporal_events(
             )
         else:
             out = queries
-        out = _attach_elementwise_temporal(spark, gb, ew_aggs, out, queries, events)
+        out = _attach_elementwise_temporal(
+            spark, gb, ew_aggs, out, queries, queries if events is None else events
+        )
     else:
         out = _temporal_events_impl(
             spark, gb, queries, events, mode=mode, passthrough=passthrough,
@@ -1371,7 +1394,15 @@ def _temporal_events_impl(
     (keys, ts): every query column rides through the Arrow kernel and the
     uniqSort-distinct + join-back (3 shuffles) are skipped. Only use with
     slim query frames — wide payloads belong on the join-back path.
+
+    ``events=None`` (with passthrough): the query rows are the events.
+    The raw kernel streams them in the dense shape, except under hot-key
+    slicing, where a hot row's event reaches slices in which it is no
+    query; sliced calls stream the union shape over the persisted rows.
     """
+    dense = events is None
+    if dense and not passthrough:
+        raise ValueError("events=None streams the query rows as events; it needs passthrough=True")
     keys = list(gb.key_columns)
     if mode != "raw":
         from chronon_spark.operators.tiled import (
@@ -1380,6 +1411,8 @@ def _temporal_events_impl(
             temporal_events_tiled,
         )
 
+        if dense:
+            events = queries  # the tiled paths read the rows as an event frame
         cached = tile_warehouse is not None and tile_range is not None
         if mode == "auto" and is_tileable(gb, events.schema):
             # the TileStore path keeps its persisted tiles; otherwise the
@@ -1416,9 +1449,8 @@ def _temporal_events_impl(
         - set(keys)
         - {TS_COL}
     )
-    events = events.select(*keys, TS_COL, *needed)
-    ev_schema = events.schema
-
+    ev_schema = (queries if dense else events).select(*keys, TS_COL, *needed).schema
+    ev_cols = [F.col(c) for c in needed]
     # APPROX_UNIQUE inputs get JVM-side HLL (idx, rho) columns so the raw
     # kernel answers with the SAME sketch the tiled path uses (no Python
     # hashing, estimator parity across mode="raw"/"tiled")
@@ -1426,16 +1458,10 @@ def _temporal_events_impl(
         {p.input_column for p in parts if p.operation is Operation.APPROX_UNIQUE_COUNT}
     ):
         idx_expr, rho_expr = hll_idx_rho_exprs(c)
-        events = events.withColumn(f"__hh_{c}_idx", idx_expr).withColumn(
-            f"__hh_{c}_rho", rho_expr
-        )
+        ev_cols += [idx_expr.alias(f"__hh_{c}_idx"), rho_expr.alias(f"__hh_{c}_rho")]
 
-    events = null_key_filter(events, tuple(keys)).filter(F.col(TS_COL).isNotNull())
-    # uniqSort trick (spark/Extensions.scala:303-318): only DISTINCT
-    # (keys, ts) pass through the Arrow kernel. Wide passthrough columns
-    # (e.g. multi-KB text) never leave the JVM; duplicate left rows are
-    # rehydrated 1:1 by the join back. Null-key/null-ts left rows fall out
-    # of the equi-join with null features (padGroupByFields semantics).
+    # a row is an event when its ts and some key are set
+    # (null_key_filter); the same test keeps the uniqSort queries below
     cond = F.col(TS_COL).isNotNull()
     kcond = None
     for k in keys:
@@ -1443,6 +1469,8 @@ def _temporal_events_impl(
         kcond = c if kcond is None else (kcond | c)
     if kcond is not None:
         cond = cond & kcond
+    if not dense:
+        events = events.select(*keys, TS_COL, *ev_cols).filter(cond)
 
     if passthrough:
         # the WHOLE query frame rides the kernel: null-ts rows are padded
@@ -1453,6 +1481,12 @@ def _temporal_events_impl(
         qlite = queries
         slim_cols = queries.columns
     else:
+        # uniqSort trick (spark/Extensions.scala:303-318): only DISTINCT
+        # (keys, ts) pass through the Arrow kernel. Wide passthrough
+        # columns (e.g. multi-KB text) never leave the JVM; duplicate left
+        # rows are rehydrated 1:1 by the join back. Null-key/null-ts left
+        # rows fall out of the equi-join with null features
+        # (padGroupByFields semantics).
         qlite = queries.select(*keys, TS_COL).filter(cond).distinct()
         slim_cols = keys + [TS_COL]
 
@@ -1498,6 +1532,12 @@ def _temporal_events_impl(
             qlite.select(*keys), keys, hot_key_threshold,
             auto_factor=auto_hot_factor(cls[1]),
         )
+    if dense and hot_keys:
+        # a hot row's event replicates to every slice its windows reach,
+        # but it is a query in its home slice only: sliced calls stream
+        # the union shape, events read back from the persisted rows
+        events = qlite.select(*keys, TS_COL, *ev_cols).filter(cond)
+        dense = False
     if hot_keys:
         if cls is None:
             raise ValueError(
@@ -1565,30 +1605,44 @@ def _temporal_events_impl(
     kernel = make_temporal_kernel(
         gb, ev_schema, slim_cols, seg_keys=co_keys, baseline_cols=baseline_cols
     )
-    # ONE sorted stream: query rows (SIDE 0) tag-unioned with event rows
-    # (SIDE 1), each side's other columns packed in one struct column
-    # (Q_PACK / EV_PACK), hash-partitioned on the
-    # segment keys and sorted by (keys, ts, SIDE) — queries sort before
-    # events at equal ts, so the strict head ts < qt is the running event
-    # count — then one Python call per Arrow batch, not one per key.
-    # Explicit repartition with a pinned partition count: the kernel stage
-    # is CPU-bound, and AQE's byte-targeted coalescing would otherwise
-    # shrink it to a handful of tasks (16MB of slim rows ≈ 10 partitions
-    # on a 32-core box — a 3x parallelism loss measured)
-    def side(frame: DataFrame, tag: int, pack: str) -> DataFrame:
+    # ONE sorted stream, hash-partitioned on the segment keys and sorted
+    # by (keys, ts), then one Python call per Arrow batch, not one per
+    # key. Explicit repartition with a pinned partition count: the kernel
+    # stage is CPU-bound, and AQE's byte-targeted coalescing would
+    # otherwise shrink it to a handful of tasks (16MB of slim rows ≈ 10
+    # partitions on a 32-core box — a 3x parallelism loss measured). The
+    # dense shape partitions on the keys, so a query frame already
+    # partitioned that way (backfill_features) shares its exchange. The
+    # union shape partitions on a hash of the keys that no input carries:
+    # Spark drops a repartition on the keys when both union inputs are
+    # already partitioned on them, and once AQE coalesces one input the
+    # union splits keys from their events.
+    def packed(frame: DataFrame, pack: str) -> list:
         rest = [c for c in frame.columns if c not in co_keys and c != TS_COL]
-        packed = [F.struct(*rest).alias(pack)] if rest else []
-        return frame.select(*co_keys, TS_COL, *packed, F.lit(tag).cast("byte").alias(SIDE))
+        return [F.struct(*rest).alias(pack)] if rest else []
 
-    stream = side(qlite, 0, Q_PACK).unionByName(side(events, 1, EV_PACK), allowMissingColumns=True)
+    def tag(side) -> Column:
+        return F.lit(side).cast("byte").alias(SIDE)
+
+    if dense:
+        ev_pack = [F.when(cond, F.struct(*ev_cols)).alias(EV_PACK)] if ev_cols else []
+        side = F.when(cond, SIDE_BOTH).otherwise(SIDE_QUERY)
+        stream = qlite.select(*co_keys, TS_COL, *packed(qlite, Q_PACK), *ev_pack, tag(side))
+        part_by = co_keys
+    else:
+        stream = qlite.select(*co_keys, TS_COL, *packed(qlite, Q_PACK), tag(SIDE_QUERY)).unionByName(
+            events.select(*co_keys, TS_COL, *packed(events, EV_PACK), tag(SIDE_EVENT)),
+            allowMissingColumns=True,
+        )
+        part_by = [F.xxhash64(*co_keys)]
     out_fields = [
         stream.schema[c] if c in stream.columns else T.StructField(c, qlite.schema[c].dataType)
         for c in slim_cols
     ]
     p_n = kernel_partitions(spark)
     feats = (
-        stream.repartition(p_n, *co_keys)
-        .sortWithinPartitions(*co_keys, TS_COL, SIDE)
+        stream.repartition(p_n, *part_by)
+        .sortWithinPartitions(*co_keys, TS_COL)
         .mapInArrow(kernel, T.StructType(out_fields + feat_fields))
     )
     # the union widens a key or ts whose query and event types differ;

@@ -26,7 +26,7 @@ from chronon_spark.api.types import (
 )
 from chronon_spark.api.types import Window as W
 from chronon_spark.operators.features import lag_lead, sessionize
-from chronon_spark.operators.temporal import temporal_events
+from chronon_spark.operators.temporal import kernel_partitions, temporal_events
 
 WEBTEXT_GROUPBY = GroupBy(
     name="url_activity",
@@ -55,6 +55,12 @@ def enrich_pages(pages: DataFrame, session_gap_ms: int = 30 * 60 * 1000) -> Data
     return out
 
 
+def _repeat_probe(frame: DataFrame, keys: "list[str]") -> DataFrame:
+    """The ``keys`` tuples found on more than one row of ``frame``: a
+    narrow aggregate that reads the key columns only."""
+    return frame.groupBy(*keys).agg(F.count("*").alias("__n")).filter(F.col("__n") > 1)
+
+
 def backfill_features(
     spark: SparkSession,
     pages: DataFrame,
@@ -72,55 +78,53 @@ def backfill_features(
     per stage. On a bucketed-by-url Iceberg table that final join is
     shuffle-free on the pages side. ``text`` passes through byte-identical
     (BASELINE.json input_hint contract).
+
+    With the default queries the page text is read twice: once for the
+    slim frame (``text_len`` when the table lacks it) and once for the
+    payload. The slim frame is hash-partitioned on url at the kernel's
+    partition count before the window chain, and the as-of kernel streams
+    that frame alone (``temporal_events(events=None)``: each page row is
+    query and event at once), so the windows and the kernel share one
+    exchange. The duplicate probe groups on (url, ts) without text; only
+    when some (url, ts) repeats does a text hash join the payload keys.
     """
     if "text_len" not in pages.columns:
         pages = pages.withColumn("text_len", F.length("text"))
-    if queries is None:
-        # 8-byte text hash riding the slim frame keys the final payload
-        # join: two crawls of one url at the SAME millisecond with
-        # different texts match 1:1 by hash instead of fanning out, and
-        # byte-identical duplicate crawls collapse to one payload row
-        # (each left row still gets its exact text — identity preserved)
+    if queries is not None:
+        events = pages.select("url", "ts", "text_len", "lang")
+        return temporal_events(
+            spark, WEBTEXT_GROUPBY, queries, events, mode="raw",
+            hot_key_threshold=hot_key_threshold,
+        )
+    payload_keys = ["url", "ts"]
+    if not _repeat_probe(pages, payload_keys).isEmpty():
+        # an 8-byte text hash keys the payload join: two crawls of one url
+        # at the SAME millisecond with different texts match 1:1 by hash
+        # instead of fanning out, and byte-identical duplicate crawls
+        # collapse to one payload row (each left row still gets its exact
+        # text — identity preserved)
         pages = pages.withColumn("__th", F.xxhash64("text"))
-        slim = pages.select("url", "ts", "ds", "text_len", "lang", "__th")
-        left = enrich_pages(slim).select(
-            "url",
-            "ts",
-            "ds",
-            "lang",
-            "text_len",
-            "__th",
-            "text_len_lag_1",
-            "text_len_lag_2",
-            "text_len_lead_1",
-            "session_id",
-            "session_ts",
-            "session_event_idx",
-        )
-        payload_keys = ["url", "ts", "__th"]
-        payload = pages.select(*payload_keys, "text")
-        # byte-identical duplicate crawls at one (url, ts) would fan the
-        # join out; dedupe the wide payload ONLY when such rows exist —
-        # probed on the SLIM frame (narrow aggregate, no text movement),
-        # so the common duplicate-free case pays zero wide-side aggregate
-        has_dup = (
-            slim.groupBy(*payload_keys)
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") > 1)
-            .limit(1)
-            .count()
-            > 0
-        )
-        if has_dup:
-            payload = payload.dropDuplicates(payload_keys)
-    else:
-        slim = pages.select("url", "ts", "ds", "text_len", "lang")
-        left = queries
-        payload = None
-        payload_keys = []
-    events = slim.select("url", "ts", "text_len", "lang")
-    # passthrough: the left frame is slim and unique per (url, ts) by
-    # construction — skip the uniqSort-distinct + join-back shuffles.
+        payload_keys.append("__th")
+    payload = pages.select(*payload_keys, "text")
+    # byte-identical duplicate crawls would still fan the join out: the
+    # wide payload is deduplicated only when such rows exist
+    if len(payload_keys) > 2 and not _repeat_probe(pages, payload_keys).isEmpty():
+        payload = payload.dropDuplicates(payload_keys)
+    slim = pages.select(*payload_keys, "ds", "text_len", "lang").repartition(
+        kernel_partitions(spark), "url"
+    )
+    left = enrich_pages(slim).select(
+        *payload_keys,
+        "ds",
+        "lang",
+        "text_len",
+        "text_len_lag_1",
+        "text_len_lag_2",
+        "text_len_lead_1",
+        "session_id",
+        "session_ts",
+        "session_event_idx",
+    )
     # mode="raw": queries sit at EVERY event, so every 5-min tile contains
     # a query head and tiling degenerates to raw + tile overhead (measured
     # 3x slower); the tiled path wins for sparse/backfill query patterns.
@@ -136,7 +140,7 @@ def backfill_features(
     # (measured: the detection job alone cost more than the kernel-tail
     # saving at 40M rows)
     hot_keys = None
-    if hot_key_threshold is not None and queries is None:
+    if hot_key_threshold is not None:
         from chronon_spark.operators.temporal import (
             auto_hot_factor,
             detect_hot_keys,
@@ -148,13 +152,9 @@ def backfill_features(
             pages.select("url"), ["url"], hot_key_threshold,
             auto_factor=auto_hot_factor(cls[1] if cls else None),
         )
-        hot_key_threshold = None
+    # passthrough: the left frame is slim and one row per page
     feats = temporal_events(
-        spark, WEBTEXT_GROUPBY, left, events, mode="raw",
-        passthrough=(queries is None), hot_key_threshold=hot_key_threshold,
-        hot_keys=hot_keys,
+        spark, WEBTEXT_GROUPBY, left, None, mode="raw", passthrough=True, hot_keys=hot_keys
     )
-    if payload is not None:
-        # the single wide-column shuffle of the whole pipeline
-        feats = feats.join(payload, payload_keys, "left").drop("__th")
-    return feats
+    # the single wide-column shuffle of the whole pipeline
+    return feats.join(payload, payload_keys, "left").drop("__th")

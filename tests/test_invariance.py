@@ -26,7 +26,14 @@ from chronon_spark.api.types import (
     TimeUnit,
     Window,
 )
-from chronon_spark.operators.temporal import EV_PACK, SIDE, make_temporal_kernel
+from chronon_spark.operators.temporal import (
+    EV_PACK,
+    SIDE,
+    SIDE_BOTH,
+    SIDE_EVENT,
+    SIDE_QUERY,
+    make_temporal_kernel,
+)
 from chronon_spark.pipelines.webtext import backfill_features
 from chronon_spark.fixtures.webtext import generate_webtext
 from chronon_spark.runner import run_group_by_backfill
@@ -117,14 +124,22 @@ EV_SCHEMA = T.StructType(
 KEYS = ["a", "b", "c", None]  # events never carry the null key (null-key filtered)
 
 
-def _stream_batches(queries, events, cuts):
-    """The kernel's input as Spark hands it over: query rows (side 0) and
-    event rows (side 1) sorted by (k, ts, side), nulls first, cut into
-    Arrow batches at ``cuts``."""
-    rows = [(k, t, 0, None, None) for k, t in queries] + [
-        (k, t, 1, v, bk) for k, t, v, bk in events
-    ]
-    rows.sort(key=lambda r: (r[0] is not None, r[0] or "", r[1] is not None, r[1] or 0, r[2]))
+def _stream_batches(queries, events, cuts, dense=False):
+    """The kernel's input as Spark hands it over, sorted by (k, ts) with
+    nulls first, cut into Arrow batches at ``cuts``. Union shape: query
+    rows and event rows, events first among equal (k, ts), the order a
+    running-count head gets wrong. Dense shape: every event row is also a
+    query; the queries add only query-only rows, those with a null key
+    or ts."""
+    if dense:
+        rows = [(k, t, SIDE_BOTH, v, bk) for k, t, v, bk in events] + [
+            (k, t, SIDE_QUERY, None, None) for k, t in queries if k is None or t is None
+        ]
+    else:
+        rows = [(k, t, SIDE_EVENT, v, bk) for k, t, v, bk in events] + [
+            (k, t, SIDE_QUERY, None, None) for k, t in queries
+        ]
+    rows.sort(key=lambda r: (r[0] is not None, r[0] or "", r[1] is not None, r[1] or 0))
     table = pa.table(
         {
             "k": pa.array([r[0] for r in rows], pa.string()),
@@ -136,7 +151,7 @@ def _stream_batches(queries, events, cuts):
                     pa.array([r[4] for r in rows], pa.string()),
                 ],
                 names=["v", "b"],
-                mask=pa.array([r[2] == 0 for r in rows]),
+                mask=pa.array([r[2] == SIDE_QUERY for r in rows], pa.bool_()),
             ),
         }
     )
@@ -157,7 +172,10 @@ def _times(hours):
 # the sawtooth gap, pinned: qt − 1h lies 60 s past a hop boundary
 # (T0 ≡ 200,000 mod 5 min), and the event sits between that boundary and
 # qt − 1h — inside the 1h/2h/4h windows, outside a plain sliding window
-@example(events=[(0, 150_000, 1, "x")], queries=[(0, 3_760_000)], cuts=[])
+@example(events=[(0, 150_000, 1, "x")], queries=[(0, 3_760_000)], cuts=[], dense=False)
+# an exact-ts tie of two rows that are query and event at once: neither
+# may see the other
+@example(events=[(0, 0, 1, "x"), (0, 0, 2, "y")], queries=[(3, 0)], cuts=[], dense=True)
 @given(
     events=st.lists(
         st.tuples(
@@ -177,16 +195,21 @@ def _times(hours):
         max_size=30,
     ),
     cuts=st.lists(st.integers(0, 200), max_size=6),
+    dense=st.booleans(),
 )
-def test_kernel_property(events, queries, cuts):
+def test_kernel_property(events, queries, cuts, dense):
     """Pure-kernel property test, no Spark: the sorted-stream kernel fed
     arbitrary Arrow batch cuts (segments straddle batches) over several
     keys, a null key, null-ts queries, exact-ts ties, off-grid times and
-    null values — every query row equals the naive oracle."""
+    null values, in both stream shapes — every query row equals the naive
+    oracle."""
     ev = [(KEYS[k], T0 + t, None if v is None else float(v), bk) for k, t, v, bk in events]
     qs = [(KEYS[k], None if t is None else T0 + t) for k, t in queries]
+    batches = _stream_batches(qs, ev, cuts, dense)
+    if dense:
+        qs = [e[:2] for e in ev] + [q for q in qs if q[0] is None or q[1] is None]
     kernel = make_temporal_kernel(KERNEL_GB, EV_SCHEMA, ["k", "ts"])
-    out = pa.Table.from_batches(list(kernel(iter(_stream_batches(qs, ev, cuts))))).to_pylist()
+    out = [r for b in kernel(iter(batches)) for r in b.to_pylist()]
     assert sorted(((r["k"] or ""), r["ts"] or 0) for r in out) == sorted(
         ((k or ""), t or 0) for k, t in qs
     )

@@ -176,6 +176,104 @@ def test_bucketed_flagship_end_to_end(spark, tmp_path):
         wh.drop("pages_flag_b")
 
 
+def _nodes(root, name: str) -> list:
+    out: list = []
+    _walk(root, lambda nd: name in nd.getClass().getSimpleName(), out)
+    return out
+
+
+def _plain_plan(spark, build):
+    """The executed plan of ``build()`` planned without AQE (a plain tree
+    for the walk)."""
+    saved = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        return build()._jdf.queryExecution().executedPlan()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", saved)
+
+
+def test_flagship_reads_text_twice_in_one_stream(spark, tmp_path, monkeypatch):
+    """backfill_features over a parquet page table: two scans read
+    ``text`` (the slim frame's length, the payload); no Union, since each
+    page row enters the as-of stream once, as query and event; ONE
+    REPARTITION_BY_NUM url exchange under both the window chain and the
+    kernel; and a duplicate probe that reads no text."""
+    import re
+
+    from chronon_spark.fixtures.webtext import generate_webtext
+    from chronon_spark.pipelines import webtext
+
+    path = str(tmp_path / "pages")
+    generate_webtext(spark, n_rows=2000, n_urls=50, days=10).select(
+        "url", "ts", "ds", "lang", "text"
+    ).write.parquet(path)
+    probes: list = []
+    probe = webtext._repeat_probe
+    monkeypatch.setattr(webtext, "_repeat_probe", lambda f, k: probes.append(probe(f, k)) or probes[-1])
+    root = _plain_plan(spark, lambda: webtext.backfill_features(spark, spark.read.parquet(path)))
+
+    def reads_text(scan) -> bool:
+        return re.search(r"[<,]text:", scan.toString().split("ReadSchema:")[1]) is not None
+
+    assert sum(map(reads_text, _nodes(root, "FileSourceScan"))) == 2, root.toString()
+    assert not _nodes(root, "Union"), root.toString()
+    (kernel,) = _nodes(root, "MapInArrow")
+    (exchange,) = _nodes(kernel, "ShuffleExchange")
+    head = exchange.toString().splitlines()[0]
+    assert "REPARTITION_BY_NUM" in head and "hashpartitioning(url" in head, head
+    windows = _nodes(kernel, "WindowExec")
+    assert windows and all(len(_nodes(w, "ShuffleExchange")) == 1 for w in windows)
+    assert probes and not reads_text(_nodes(_plain_plan(spark, lambda: probes[0]), "FileSourceScan")[0])
+
+
+def test_union_stream_exchange_above_union(spark):
+    """The union shape shuffles the union itself, whatever its inputs'
+    partitioning. The trap: a query frame hash-partitioned on the keys by
+    a window and events repartitioned on them at the kernel's count.
+    Under Spark's partitioning-aware Union a repartition on the keys is
+    dropped there, AQE coalesces the query side, and the union splits
+    keys from their events."""
+    import numpy as np
+    from pyspark.sql import Window as SW
+
+    from chronon_spark.api.types import Aggregation, EventSource, GroupBy, Operation, Window
+    from chronon_spark.operators.temporal import kernel_partitions, temporal_events
+
+    n = 4000
+    rng = np.random.default_rng(5)
+    ev = spark.createDataFrame(
+        pd.DataFrame({
+            "user": [f"u{i % 37}" for i in range(n)],
+            "ts": (1_700_000_000_000 + rng.integers(0, 10 * 86_400_000, n)).astype("int64"),
+            "v": rng.integers(0, 9, n).astype(float),
+        })
+    )
+    gb = GroupBy(
+        name="trap", sources=(EventSource(table="ev"),), key_columns=("user",),
+        aggregations=(Aggregation("v", Operation.SUM, windows=(Window(1), None)),),
+    )
+    lagged = ev.select(
+        "user", "ts", F.lag("ts").over(SW.partitionBy("user").orderBy("ts")).alias("lag")
+    )
+
+    def build(q, e):
+        return temporal_events(spark, gb, q, e, mode="raw", passthrough=True).drop("lag")
+
+    def trap():
+        return build(lagged, ev.repartition(kernel_partitions(spark), "user"))
+
+    root = _plain_plan(spark, trap)
+    unions = _nodes(root, "Union")
+    over = [
+        x for x in _nodes(root, "ShuffleExchange")
+        if x.children().apply(0).getClass().getSimpleName() == "UnionExec"
+    ]
+    assert unions and len(over) == len(unions), root.toString()
+    plain = build(ev.select("user", "ts"), ev)
+    assert trap().exceptAll(plain).count() == 0 and plain.exceptAll(trap()).count() == 0
+
+
 def test_incremental_phase2_reads_cache_only(spark, tmp_path):
     """The incremental runner's output step must plan as scans of the IR /
     occurrence cache tables ONLY — the raw events relation may not appear

@@ -144,3 +144,32 @@ def test_flagship_hot_key_slicing_identical(spark, pages):
 
     a, b = canon(plain), canon(sliced)
     assert a.equals(b)
+
+
+def test_flagship_fixture_rewrite_drops_memoized_scan(spark, tmp_path, monkeypatch):
+    """Writing the flagship fixture's parquet drops the memoized scan of
+    it: the next call reads the new files, not a frame that lists the
+    replaced ones."""
+    import shutil
+
+    import __spark_entry__ as entry
+    from chronon_spark.fixtures import webtext as wt
+
+    def generator(rows):
+        def generate(spark, **_):
+            return spark.createDataFrame(
+                [(f"u{i}", 1_700_000_000_000 + i, 5, "en", "hello") for i in range(rows)],
+                "url string, ts long, text_len int, lang string, text string",
+            )
+
+        return generate
+
+    path = str(tmp_path / "pages")
+    monkeypatch.setattr(entry, "FLAGSHIP_PAGES_PATH", path)
+    monkeypatch.setattr(entry, "_FIXTURE_VALIDATED", False)
+    monkeypatch.setattr(entry, "_READ_MEMO", {})
+    monkeypatch.setattr(wt, "generate_webtext", generator(3))
+    assert entry._flagship_pages(spark).count() == 3
+    shutil.rmtree(path)
+    monkeypatch.setattr(wt, "generate_webtext", generator(5))
+    assert entry._flagship_pages(spark).count() == 5
