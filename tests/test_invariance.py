@@ -108,6 +108,24 @@ KERNEL_GB = GroupBy(
         Aggregation("v", Operation.LAST, windows=(Window(2, TimeUnit.HOURS),)),
         Aggregation("v", Operation.LAST_K, arg_map={"k": 3}, windows=(None,)),
         Aggregation("v", Operation.SUM, windows=(Window(2, TimeUnit.HOURS),), buckets=("b",)),
+        Aggregation("v", Operation.VARIANCE, windows=(None, Window(2, TimeUnit.HOURS))),
+        Aggregation("v", Operation.SKEW, windows=(Window(4, TimeUnit.HOURS),)),
+        Aggregation("v", Operation.KURTOSIS, windows=(None,)),
+        Aggregation("v", Operation.FIRST, windows=(None, Window(1, TimeUnit.HOURS))),
+        Aggregation("v", Operation.FIRST_K, arg_map={"k": 2}, windows=(Window(2, TimeUnit.HOURS),)),
+        Aggregation("v", Operation.TOP_K, arg_map={"k": 3}, windows=(Window(1, TimeUnit.HOURS),)),
+        Aggregation("v", Operation.BOTTOM_K, arg_map={"k": 2}, windows=(None,)),
+        Aggregation("v", Operation.UNIQUE_COUNT, windows=(Window(2, TimeUnit.HOURS),)),
+        Aggregation("v", Operation.BOUNDED_UNIQUE_COUNT, arg_map={"k": 4}, windows=(None,)),
+        Aggregation("v", Operation.HISTOGRAM, windows=(Window(1, TimeUnit.HOURS),)),
+        # k ≥ the 60 events a stream can hold, so no key is truncated away
+        Aggregation("v", Operation.APPROX_HISTOGRAM_K, arg_map={"k": 64}, windows=(None,)),
+        # the raw kernel keeps every value: the sample budget is never hit
+        Aggregation(
+            "v", Operation.APPROX_PERCENTILE, arg_map={"percentiles": [0.25, 0.5, 0.9]},
+            windows=(Window(4, TimeUnit.HOURS),),
+        ),
+        Aggregation("v", Operation.AVERAGE, windows=(None,), buckets=("b",)),
     ),
     accuracy=Accuracy.TEMPORAL,
 )
