@@ -160,20 +160,17 @@ def serving_plan(gb: GroupBy) -> dict:
     analyzer-side answer to "can this GroupBy be KV-uploaded?" (the
     reference's analyzer validates online-serving support per column;
     Analyzer.scala's output schema check). Parts in the bounded-IR
-    family (operators/upload.UPLOADABLE, no bucket/element-wise) ride
+    family (operators/upload.UPLOADABLE, bucketed or not) ride
     ``group_by_upload``/``fetch_features``; everything else is served by
     the lambda-tile path (tilestore + streaming/lambda_tiles), which
     covers every op at per-(key, tile) granularity."""
-    from chronon_spark.operators.upload import BUCKETABLE, UPLOADABLE
+    from chronon_spark.operators.upload import UPLOADABLE
 
     kv, tile_only = [], []
     for p in gb.unpacked():
         # bucketed AND element-wise (positional-bucket rewrite) parts
         # ride the bucketed IR frames — same op support
-        ok_op = p.operation in (
-            BUCKETABLE if (p.bucket is not None or p.element_wise) else UPLOADABLE
-        )
-        if ok_op:
+        if p.operation in UPLOADABLE:
             kv.append(p.output_column)
         else:
             why = (

@@ -45,7 +45,11 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     aggregation — duplicate rows collapse before the exchange, so the
     shuffle moves one candidate row per (partition, hash) instead of
     every row — and needs no per-partition sort. The window form shipped
-    the full corpus through the exchange and sorted each partition."""
+    the full corpus through the exchange and sorted each partition.
+
+    ``min_by`` skips null ids, so a cluster whose rows all have a null
+    ``id_col`` has no row to keep: the query fails rather than emit an
+    all-null row that loses the text."""
     cols = df.columns
     agg = (
         df.withColumn("__th", F.md5(normalize_text(text_col)))
@@ -55,7 +59,11 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
             F.count("*").alias("dup_count"),
         )
     )
-    return agg.select(*[F.col(f"__row.{c}").alias(c) for c in cols], "dup_count")
+    no_id = F.raise_error(
+        F.lit(f"exact_dedup: a duplicate cluster has no row with a non-null {id_col}")
+    )
+    row = F.coalesce(F.col("__row"), no_id)
+    return agg.select(*[row[c].alias(c) for c in cols], "dup_count")
 
 
 def shingle_hashes(text_col: str, k: int = 5):

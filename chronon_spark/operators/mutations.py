@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from chronon_spark.api.types import GroupBy, Operation
+from chronon_spark.functions.op_algebra import moments
 from chronon_spark.operators.temporal import _cast_feature, _plain_output_type, output_field
 from chronon_spark.sources.scan import TS_COL, null_key_filter
 
@@ -69,24 +70,8 @@ def _weighted_scalar(op: Operation, x: np.ndarray, w: np.ndarray):
         return float(s1)
     if op is Operation.AVERAGE:
         return float(s1 / n)
-    m1 = s1 / n
-    m2 = (w * x * x).sum() / n - m1**2
-    if op is Operation.VARIANCE:
-        return float(max(m2, 0.0))
-    if op is Operation.SKEW:
-        if n < 3 or m2 <= 0:
-            return float("nan")
-        m3 = (w * x**3).sum() / n - 3 * m1 * (w * x * x).sum() / n + 2 * m1**3
-        return float(m3 / m2**1.5)
-    if n < 4 or m2 <= 0:
-        return float("nan")
-    m4 = (
-        (w * x**4).sum() / n
-        - 4 * m1 * (w * x**3).sum() / n
-        + 6 * m1**2 * (w * x * x).sum() / n
-        - 3 * m1**4
-    )
-    return float(m4 / m2**2 - 3.0)
+    s = [(w * x**i).sum() for i in (2, 3, 4)]
+    return float(moments(op, np.array([n]), np.array([s1]), *(np.array([v]) for v in s))[0])
 
 
 def _weighted_hist(vals: np.ndarray, w: np.ndarray):
@@ -185,33 +170,8 @@ def _weighted_kernel(gb: GroupBy, ev_schema: T.StructType, slim_cols: list[str])
                     p2 = np.concatenate([[0.0], np.cumsum(wm * x * x)])
                     p3 = np.concatenate([[0.0], np.cumsum(wm * x**3)])
                     p4 = np.concatenate([[0.0], np.cumsum(wm * x**4)])
-                    res = []
-                    for i in range(nq):
-                        c = n[i]
-                        if c <= 0:
-                            res.append(None)
-                            continue
-                        m1 = s1[i] / c
-                        m2 = p2[hi[i]] / c - m1**2
-                        if p.operation is Operation.VARIANCE:
-                            res.append(float(max(m2, 0.0)))
-                        elif p.operation is Operation.SKEW:
-                            if c < 3 or m2 <= 0:
-                                res.append(float("nan"))
-                            else:
-                                m3 = p3[hi[i]] / c - 3 * m1 * p2[hi[i]] / c + 2 * m1**3
-                                res.append(float(m3 / m2**1.5))
-                        else:
-                            if c < 4 or m2 <= 0:
-                                res.append(float("nan"))
-                            else:
-                                m4 = (
-                                    p4[hi[i]] / c
-                                    - 4 * m1 * p3[hi[i]] / c
-                                    + 6 * m1**2 * p2[hi[i]] / c
-                                    - 3 * m1**4
-                                )
-                                res.append(float(m4 / m2**2 - 3.0))
+                    vals = moments(p.operation, n, s1, p2[hi], p3[hi], p4[hi])
+                    res = [float(v) if c > 0 else None for v, c in zip(vals, n)]
                 out[p.output_column] = res
             else:
                 # general path: per-query mask on (mutation cutoff ∧ sawtooth

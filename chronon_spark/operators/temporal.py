@@ -28,7 +28,11 @@ the same (segment, ts-rank) ``searchsorted`` that gives window tails, so
 the rule holds whatever the row order among equal ts. One
 ``mapInArrow`` call per Arrow batch cuts the batch into key segments (an
 open segment carries into the next batch) and evaluates every query of
-every segment at once with vectorized numpy:
+every segment at once with vectorized numpy. Each op's IR, range-reduce,
+merge and finalize come from the shared numpy op registry
+(functions/op_algebra.py, also behind the upload fetch kernel): a query's
+value is finalize(reduce(its event range)), and under hot-key slicing
+finalize(merge(baseline IR, reduce(slice-local range))). The reduces:
 
 - invertible ops (count/sum/average/variance/skew/kurtosis) are prefix-sum
   lookups; window tails are one batch-wide ``searchsorted`` over
@@ -71,7 +75,9 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
 from chronon_spark.api.types import FIVE_MINUTES_MS, AggregationPart, GroupBy, Operation
-from chronon_spark.functions.sketches import HLL_M, hll_estimate, hll_idx_rho_exprs
+from chronon_spark.functions import op_algebra as alg
+from chronon_spark.functions.op_algebra import EventCol, HllCol
+from chronon_spark.functions.sketches import hll_idx_rho_exprs
 from chronon_spark.sources.scan import TS_COL, null_key_filter
 
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.BooleanType)
@@ -111,544 +117,6 @@ def output_field(part: AggregationPart, events_schema: T.StructType) -> T.Struct
 # ------------------------------------------------------------------ numpy kernels
 
 
-def _prefix(arr: np.ndarray) -> np.ndarray:
-    out = np.empty(len(arr) + 1, dtype=np.float64)
-    out[0] = 0.0
-    np.cumsum(arr, out=out[1:])
-    return out
-
-
-class _SparseTable:
-    """O(1) range min/max after O(n log n) build, vectorized over queries."""
-
-    def __init__(self, vals: np.ndarray, is_min: bool):
-        n = len(vals)
-        self.n = n
-        fill = np.inf if is_min else -np.inf
-        k_max = max(1, int(np.floor(np.log2(n))) + 1) if n else 1
-        table = np.full((k_max, n), fill, dtype=np.float64)
-        if n:
-            table[0] = vals
-            reducer = np.minimum if is_min else np.maximum
-            for k in range(1, k_max):
-                half = 1 << (k - 1)
-                if n - (1 << k) + 1 <= 0:
-                    break
-                table[k, : n - (1 << k) + 1] = reducer(
-                    table[k - 1, : n - (1 << k) + 1], table[k - 1, half : n - (1 << k) + 1 + half]
-                )
-        self.table = table
-        self.fill = fill
-
-    def query(self, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
-        """range [lo, hi) per element; empty ranges yield self.fill."""
-        res = np.full(len(lo), self.fill, dtype=np.float64)
-        ln = hi - lo
-        nz = ln > 0
-        if not nz.any():
-            return res
-        k = np.zeros(len(lo), dtype=np.int64)
-        k[nz] = np.floor(np.log2(ln[nz])).astype(np.int64)
-        a = self.table[k[nz], lo[nz]]
-        b = self.table[k[nz], hi[nz] - (1 << k[nz])]
-        res[nz] = np.minimum(a, b) if self.fill == np.inf else np.maximum(a, b)
-        return res
-
-
-class _EventCol:
-    """Per-input-column precomputation shared across parts/windows, over
-    event values in (segment, ts) order. ``seg`` is the nondecreasing
-    segment id of each event (None = one segment): a segment is one key's
-    events, and float prefix sums restart at each segment start so every
-    range sum is that key's own running-sum difference, bit for bit."""
-
-    def __init__(
-        self,
-        arr: pa.Array,
-        numeric: bool,
-        integral: bool = False,
-        ts: "np.ndarray | None" = None,
-        seg: "np.ndarray | None" = None,
-    ):
-        self.numeric = numeric
-        self.integral = integral
-        self._ts = ts
-        self._seg = seg
-        self._tie_compact = None
-        if numeric:
-            # nulls (and NaN) → NaN → masked out
-            vals = arr.cast(pa.float64(), safe=False).to_numpy(zero_copy_only=False)
-            self.mask = ~np.isnan(vals)
-            self.vals = vals
-            if integral:
-                # exact long SUM: int64 prefix sums (running totals beyond
-                # 2^53 stay exact — same contract as the tiled kernel's
-                # int64 tile-prefix, tiled.py _TilePrefix). One prefix over
-                # all segments is exact: int64 differences are modular.
-                ivals = arr.cast(pa.int64()).fill_null(0).to_numpy(zero_copy_only=False)
-                self._ipsum = np.empty(len(ivals) + 1, dtype=np.int64)
-                self._ipsum[0] = 0
-                np.cumsum(ivals, out=self._ipsum[1:])
-        else:
-            self.raw = _objects(arr)
-            self.mask = arr.is_valid().to_numpy(zero_copy_only=False)
-            self.vals = None
-        self.pcount = _prefix(self.mask.astype(np.float64))
-        # compacted (non-null) values in (segment, ts) order + their indices
-        self.nn_idx = np.flatnonzero(self.mask)
-        if numeric:
-            self.compact = self.vals[self.nn_idx]
-        else:
-            self.compact = self.raw[self.nn_idx]
-        self._psum = None
-        self._pmoments = None
-        self._tmin = None
-        self._tmax = None
-
-    @property
-    def tie_compact(self) -> np.ndarray:
-        """Compact values with equal-ts runs re-ordered ascending by value
-        — the tiled kernel's (ts, value) struct-sort tie-break, shared so
-        FIRST/LAST/FIRST_K/LAST_K pick the SAME element on exact-tie
-        timestamps in both execution paths (the order the gate oracle
-        asserts). Window bounds always fall on ts-run boundaries, so the
-        reorder is invisible to every other op. The segment is the primary
-        sort key, so runs never cross keys. Falls back to input order when
-        the constructor got no ts array."""
-        if self._ts is None:
-            return self.compact
-        if self._tie_compact is None:
-            vals = self.compact
-            if self.numeric:
-                key = vals
-            else:
-                # non-numeric gather columns: order by string form (Spark's
-                # UTF8 ordering agrees with Python's for the practical
-                # string/categorical cases; compact is already non-null)
-                key = np.array([str(v) for v in vals], dtype=object)
-            sort_keys = (key, self._ts[self.nn_idx])
-            if self._seg is not None:
-                sort_keys += (self._seg[self.nn_idx],)
-            self._tie_compact = vals[np.lexsort(sort_keys)]
-        return self._tie_compact
-
-    def count_in(self, lo, hi):
-        return (self.pcount[hi] - self.pcount[lo]).astype(np.int64)
-
-    def compact_range(self, lo, hi):
-        """map event-index range [lo,hi) → compact-index range."""
-        clo = (self.pcount[lo]).astype(np.int64)
-        chi = (self.pcount[hi]).astype(np.int64)
-        return clo, chi
-
-    def _seg_prefix(self, z: np.ndarray) -> "tuple[np.ndarray, np.ndarray]":
-        """(hi, lo) prefix tables that restart at every segment start:
-        for lo ≤ a < b ≤ hi inside one segment, hi[b] − lo[a] is the
-        per-key prefix difference, summed in the same order."""
-        n = len(z)
-        hi = np.empty(n + 1, dtype=np.float64)
-        hi[0] = 0.0
-        if self._seg is None or n == 0:
-            starts = np.zeros(1, dtype=np.int64)
-        else:
-            starts = np.r_[0, np.flatnonzero(np.diff(self._seg)) + 1]
-        for s0, s1 in zip(starts, np.r_[starts[1:], n]):
-            np.cumsum(z[s0:s1], out=hi[s0 + 1 : s1 + 1])
-        if len(starts) == 1:
-            return hi, hi
-        lo = hi.copy()
-        lo[starts] = 0.0
-        return hi, lo
-
-    @staticmethod
-    def range_sum(pref, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
-        """Σ over event ranges [lo, hi) from a _seg_prefix table pair;
-        empty ranges sum to exactly 0."""
-        return np.where(hi > lo, pref[0][hi] - pref[1][lo], 0.0)
-
-    @property
-    def psum(self):
-        if self._psum is None:
-            self._psum = self._seg_prefix(np.where(self.mask, self.vals, 0.0))
-        return self._psum
-
-    @property
-    def pmoments(self):
-        if self._pmoments is None:
-            z = np.where(self.mask, self.vals, 0.0)
-            self._pmoments = tuple(self._seg_prefix(z**i) for i in (2, 3, 4))
-        return self._pmoments
-
-    def tmin(self):
-        if self._tmin is None:
-            v = np.where(self.mask, self.vals, np.inf)
-            self._tmin = _SparseTable(v, is_min=True)
-        return self._tmin
-
-    def tmax(self):
-        if self._tmax is None:
-            v = np.where(self.mask, self.vals, -np.inf)
-            self._tmax = _SparseTable(v, is_min=False)
-        return self._tmax
-
-
-def _objects(arr: pa.Array) -> np.ndarray:
-    """A non-numeric Arrow array as a 1-D object array (None = null)."""
-    if pa.types.is_string(arr.type) or pa.types.is_large_string(arr.type):
-        return arr.to_numpy(zero_copy_only=False)
-    return np.fromiter(arr.to_pylist(), dtype=object, count=len(arr))
-
-
-def _compute_part(part: AggregationPart, col: _EventCol, lo: np.ndarray, hi: np.ndarray):
-    """Aggregate one unpacked part over per-query event-index ranges
-    [lo, hi). Scalar ops return a (values, valid) pair, list/map-valued
-    ops and non-numeric picks an object array (None = null)."""
-    if len(col.mask) == 0:  # sliced groups can be query-only (no events in reach)
-        return np.zeros(len(lo)), np.zeros(len(lo), dtype=bool)
-    op = part.operation
-    cnt = col.count_in(lo, hi)
-    has = cnt > 0
-
-    if op is Operation.COUNT:
-        return cnt, has
-    if op is Operation.SUM:
-        if col.integral:
-            return col._ipsum[hi] - col._ipsum[lo], has
-        return col.range_sum(col.psum, lo, hi), has
-    if op is Operation.AVERAGE:
-        with np.errstate(divide="ignore", invalid="ignore"):
-            return col.range_sum(col.psum, lo, hi) / cnt, has
-    if op in (Operation.VARIANCE, Operation.SKEW, Operation.KURTOSIS):
-        p2, p3, p4 = col.pmoments
-        n = cnt.astype(np.float64)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            s1 = col.range_sum(col.psum, lo, hi)
-            s2 = col.range_sum(p2, lo, hi)
-            s3 = col.range_sum(p3, lo, hi)
-            s4 = col.range_sum(p4, lo, hi)
-            m1 = s1 / n
-            m2 = s2 / n - m1**2
-            m3 = s3 / n - 3 * m1 * s2 / n + 2 * m1**3
-            m4 = s4 / n - 4 * m1 * s3 / n + 6 * m1**2 * s2 / n - 3 * m1**4
-            if op is Operation.VARIANCE:
-                return np.maximum(m2, 0.0), has
-            if op is Operation.SKEW:
-                skew = m3 / np.power(np.maximum(m2, 1e-300), 1.5)
-                return np.where((n < 3) | (m2 <= 0), np.nan, skew), has
-            out = np.where((n < 4) | (m2 <= 0), np.nan, m4 / np.maximum(m2, 1e-300) ** 2 - 3.0)
-        return out, has
-    if op is Operation.MIN and col.numeric:
-        v = col.tmin().query(lo, hi)
-        return v, has & np.isfinite(v)
-    if op is Operation.MAX and col.numeric:
-        v = col.tmax().query(lo, hi)
-        return v, has & np.isfinite(v)
-
-    # compacted-range ops (and string min/max fallback)
-    clo, chi = col.compact_range(lo, hi)
-    k = int(part.arg_map.get("k", 1))
-    out = np.empty(len(lo), dtype=object)
-    # ordered gathers share the tiled kernel's (ts, value) tie-break;
-    # order-insensitive ops keep the cheaper input-order compact
-    compact = (
-        col.tie_compact
-        if part.operation
-        in (Operation.FIRST, Operation.LAST, Operation.FIRST_K, Operation.LAST_K)
-        else col.compact
-    )
-
-    if op in (Operation.FIRST, Operation.LAST):
-        # vectorized gather: first/last non-null value in range
-        valid = chi > clo
-        idx = np.where(valid, clo if op is Operation.FIRST else chi - 1, 0)
-        if col.numeric:
-            return (compact[idx] if len(compact) else np.zeros(len(lo))), valid
-        out[:] = None
-        sel = np.flatnonzero(valid)
-        if len(sel):
-            out[sel] = compact[idx[sel]]
-        return out
-    for i in range(len(lo)):
-        a, b = clo[i], chi[i]
-        if b <= a:
-            out[i] = None
-            continue
-        sl = compact[a:b]
-        if op is Operation.MIN:
-            out[i] = sl.min()
-        elif op is Operation.MAX:
-            out[i] = sl.max()
-        elif op is Operation.FIRST_K:
-            out[i] = list(sl[:k])
-        elif op is Operation.LAST_K:
-            out[i] = list(sl[-k:][::-1])
-        elif op is Operation.TOP_K:
-            out[i] = list(np.sort(sl)[::-1][:k])
-        elif op is Operation.BOTTOM_K:
-            out[i] = list(np.sort(sl)[:k])
-        elif op is Operation.APPROX_PERCENTILE:
-            qs = part.arg_map.get("percentiles", [0.5])
-            out[i] = [float(np.percentile(sl.astype(np.float64), q * 100)) for q in qs]
-        elif op in (Operation.HISTOGRAM, Operation.APPROX_HISTOGRAM_K):
-            # integral columns key as their SQL string form ('14', not the
-            # pandas-float artifact '14.0') — the reference stringifies by
-            # column type (ItemsSketch<String> via .toString), and the
-            # JVM-side IRs (snapshot, tiles, upload, slicing baselines)
-            # all CAST the original type
-            keyed = sl.astype(np.int64) if col.integral else sl
-            uniq, counts = np.unique(keyed.astype(str), return_counts=True)
-            d = {str(u): int(c) for u, c in zip(uniq, counts)}
-            kk = part.arg_map.get("k")
-            if kk:
-                top = sorted(d.items(), key=lambda x: (-x[1], x[0]))[: int(kk)]
-                d = dict(top)
-            out[i] = d
-        elif op in (
-            Operation.UNIQUE_COUNT,
-            Operation.APPROX_UNIQUE_COUNT,
-            Operation.BOUNDED_UNIQUE_COUNT,
-        ):
-            u = len(np.unique(sl))
-            if op is Operation.BOUNDED_UNIQUE_COUNT:
-                u = min(u, k)
-            out[i] = int(u)
-        else:
-            raise ValueError(f"unsupported op {op}")
-    return out
-
-
-def _nn(v):
-    """Baseline scalar normalizer: Spark nulls surface as None or NaN."""
-    if v is None:
-        return None
-    if isinstance(v, float) and v != v:
-        return None
-    return v
-
-
-def _weighted_pct(vals: np.ndarray, wts: np.ndarray, p: float) -> "float | None":
-    """Weighted linear-interpolated percentile over value-sorted (v, w)
-    samples — the numpy mirror of functions/aggregations._pct_scan
-    (position x = p·(Σw − 1); unit weights reproduce np.percentile's
-    linear interpolation exactly)."""
-    tot = float(wts.sum())
-    x = p * (tot - 1.0)
-    cum = 0.0
-    ppos = None
-    pv = None
-    for v, wt in zip(vals, wts):
-        pos = cum + wt - 1.0
-        if pos >= x:
-            if pv is None or pos <= ppos:
-                return float(v)
-            return float(pv + (v - pv) * (x - ppos) / (pos - ppos))
-        cum += wt
-        ppos = pos
-        pv = v
-    return None if pv is None else float(pv)
-
-
-def _merge_unbounded(
-    part: AggregationPart, col: _EventCol, lo: np.ndarray, hi: np.ndarray, base: dict
-):
-    """Unbounded part under hot-key slicing: value at qt = events in
-    [slice_start, qt) merged with the baseline IR over everything before
-    slice_start (_build_baselines). Merge rules are the ops' own IR
-    algebra — identical results to the full-prefix computation. Returns
-    what _compute_part returns."""
-    op = part.operation
-    nq = len(lo)
-    empty = len(col.mask) == 0
-    cnt = np.zeros(nq, dtype=np.int64) if empty else col.count_in(lo, hi)
-    bn_raw = _nn(base.get("n"))
-    bn = 0 if bn_raw is None else int(bn_raw)
-    k = int(part.arg_map.get("k", 1))
-
-    def within(pref_of):
-        return np.zeros(nq) if empty else col.range_sum(pref_of(col), lo, hi)
-
-    if op is Operation.COUNT:
-        total = cnt + bn
-        return total, total > 0
-    if op is Operation.SUM:
-        bs = _nn(base.get("s1"))
-        has = (cnt > 0) | (bs is not None)
-        if col.integral:
-            s = np.full(nq, 0 if bs is None else int(bs), dtype=np.int64)
-            if not empty:
-                s += col._ipsum[hi] - col._ipsum[lo]
-            return s, has
-        return within(lambda c: c.psum) + (0.0 if bs is None else float(bs)), has
-    if op is Operation.AVERAGE:
-        bs = float(_nn(base.get("s1")) or 0.0)
-        total = cnt + bn
-        with np.errstate(divide="ignore", invalid="ignore"):
-            return (within(lambda c: c.psum) + bs) / total, total > 0
-    if op in (Operation.VARIANCE, Operation.SKEW, Operation.KURTOSIS):
-        b1 = float(_nn(base.get("s1")) or 0.0)
-        b2 = float(_nn(base.get("s2")) or 0.0)
-        b3 = float(_nn(base.get("s3")) or 0.0)
-        b4 = float(_nn(base.get("s4")) or 0.0)
-        n = (cnt + bn).astype(np.float64)
-        s1 = within(lambda c: c.psum) + b1
-        s2 = within(lambda c: c.pmoments[0]) + b2
-        s3 = within(lambda c: c.pmoments[1]) + b3
-        s4 = within(lambda c: c.pmoments[2]) + b4
-        has = n > 0
-        with np.errstate(divide="ignore", invalid="ignore"):
-            m1 = s1 / n
-            m2 = s2 / n - m1**2
-            m3 = s3 / n - 3 * m1 * s2 / n + 2 * m1**3
-            m4 = s4 / n - 4 * m1 * s3 / n + 6 * m1**2 * s2 / n - 3 * m1**4
-            if op is Operation.VARIANCE:
-                return np.maximum(m2, 0.0), has
-            if op is Operation.SKEW:
-                out = np.where(
-                    (n < 3) | (m2 <= 0), np.nan, m3 / np.power(np.maximum(m2, 1e-300), 1.5)
-                )
-                return out, has
-            out = np.where((n < 4) | (m2 <= 0), np.nan, m4 / np.maximum(m2, 1e-300) ** 2 - 3.0)
-        return out, has
-    if op in (Operation.MIN, Operation.MAX) and col.numeric:
-        bm = _nn(base.get("mn" if op is Operation.MIN else "mx"))
-        fill = np.inf if op is Operation.MIN else -np.inf
-        within_v = np.full(nq, fill) if empty else (
-            col.tmin().query(lo, hi) if op is Operation.MIN else col.tmax().query(lo, hi)
-        )
-        if bm is not None:
-            within_v = (
-                np.minimum(within_v, float(bm))
-                if op is Operation.MIN
-                else np.maximum(within_v, float(bm))
-            )
-        return within_v, np.isfinite(within_v)
-
-    # gather family: compact-range merges with baseline lists/picks
-    if empty:
-        clo = chi = np.zeros(nq, dtype=np.int64)
-        compact = np.empty(0, dtype=object)
-    else:
-        clo, chi = col.compact_range(lo, hi)
-        compact = (
-            col.tie_compact
-            if op in (Operation.FIRST, Operation.LAST, Operation.FIRST_K, Operation.LAST_K)
-            else col.compact
-        )
-    out = np.empty(nq, dtype=object)
-    b_fst = _nn(base.get("fst"))
-    b_lst = _nn(base.get("lst"))
-    b_list = base.get(
-        {
-            Operation.FIRST_K: "fstk",
-            Operation.LAST_K: "lstk",
-            Operation.TOP_K: "topk",
-            Operation.BOTTOM_K: "botk",
-            Operation.BOUNDED_UNIQUE_COUNT: "uset",
-        }.get(op)
-    )
-    if b_list is None or (isinstance(b_list, float) and b_list != b_list):
-        b_list = []
-    else:
-        b_list = list(b_list)
-    qs_p = None
-    bp_vals = bp_wts = None
-    if op is Operation.APPROX_PERCENTILE:
-        # baseline = parallel flat (sample values, per-sample weights)
-        # arrays flattened from the per-slice equi-rank IRs on the JVM
-        # side (weight = n_slice/|q_slice|, aggregations._pct_merge)
-        qs_p = part.arg_map.get("percentiles", [0.5])
-
-        def _flat(v):
-            if v is None or (isinstance(v, float) and v != v):
-                return np.empty(0, dtype=np.float64)
-            return np.asarray(v, dtype=np.float64)
-
-        bp_vals = _flat(base.get("pqv"))
-        bp_wts = _flat(base.get("pqw"))
-    mg_base = None
-    MG_ERR_KEY = "\x00__mg_err"
-    if op is Operation.APPROX_HISTOGRAM_K:
-        # prefix Misra-Gries count-map from the parallel (keys, counts)
-        # baseline arrays; the chr(0) sentinel carries the truncation
-        # error bound (est ≤ true ≤ est + err for every retained key)
-        mg_base = {}
-        bk, bv = base.get("mgk"), base.get("mgv")
-        if bk is not None and not (isinstance(bk, float) and bk != bk):
-            for k_, v_ in zip(list(bk), list(bv)):
-                mg_base[str(k_)] = int(v_)
-    for i in range(nq):
-        a, b = clo[i], chi[i]
-        sl = compact[a:b]
-        if op is Operation.FIRST:
-            out[i] = b_fst if b_fst is not None else (sl[0] if b > a else None)
-        elif op is Operation.LAST:
-            out[i] = sl[-1] if b > a else b_lst
-        elif op is Operation.MIN:
-            cands = list(sl) + ([] if _nn(base.get("mn")) is None else [base["mn"]])
-            out[i] = min(cands) if cands else None
-        elif op is Operation.MAX:
-            cands = list(sl) + ([] if _nn(base.get("mx")) is None else [base["mx"]])
-            out[i] = max(cands) if cands else None
-        elif op is Operation.FIRST_K:
-            m = (b_list + list(sl))[:k]
-            out[i] = m or None
-        elif op is Operation.LAST_K:
-            m = (list(sl[-k:][::-1]) + b_list)[:k]
-            out[i] = m or None
-        elif op is Operation.TOP_K:
-            m = sorted(list(sl) + b_list, reverse=True)[:k]
-            out[i] = m or None
-        elif op is Operation.BOTTOM_K:
-            m = sorted(list(sl) + b_list)[:k]
-            out[i] = m or None
-        elif op is Operation.APPROX_HISTOGRAM_K:
-            d = dict(mg_base)
-            d.pop(MG_ERR_KEY, None)
-            if b > a:
-                # integral keys in SQL string form, matching the JVM
-                # baseline IRs (see _compute_part's histogram branch)
-                keyed = sl.astype(np.int64) if col.integral else sl
-                uniq, counts = np.unique(keyed.astype(str), return_counts=True)
-                for u_, c_ in zip(uniq, counts):
-                    d[str(u_)] = d.get(str(u_), 0) + int(c_)
-            if not d:
-                out[i] = None
-            else:
-                kk_ = part.arg_map.get("k")
-                items = sorted(d.items(), key=lambda x: (-x[1], x[0]))
-                out[i] = dict(items[: int(kk_)] if kk_ else items)
-        elif op is Operation.BOUNDED_UNIQUE_COUNT:
-            # a baseline set capped at k either IS the complete prefix set
-            # (size < k) or has already pinned the answer at k — exact
-            if b <= a and not b_list:
-                out[i] = None
-            else:
-                u = set(x for x in sl.tolist())
-                u.update(b_list)
-                out[i] = min(len(u), k)
-        elif op is Operation.APPROX_PERCENTILE:
-            ls = sl.astype(np.float64) if b > a else np.empty(0, dtype=np.float64)
-            if len(ls) == 0 and len(bp_vals) == 0:
-                out[i] = None
-            elif len(bp_vals) == 0 or np.all(bp_wts == 1.0):
-                # exact regime: every slice kept all its values (n ≤ S →
-                # weight exactly 1.0), so the merged multiset IS the full
-                # prefix — np.percentile on it is bit-identical to unsliced
-                out[i] = [
-                    float(np.percentile(np.concatenate([bp_vals, ls]), q * 100))
-                    for q in qs_p
-                ]
-            else:
-                va = np.concatenate([bp_vals, ls])
-                wa = np.concatenate([bp_wts, np.ones(len(ls))])
-                order = np.argsort(va, kind="mergesort")
-                va, wa = va[order], wa[order]
-                out[i] = [_weighted_pct(va, wa, q) for q in qs_p]
-        else:
-            raise ValueError(f"unsupported unbounded-sliced op {op}")
-    return out
-
-
 def _cast_feature(out_vals: np.ndarray, part: AggregationPart, input_type: T.DataType):
     """Coerce python values to the declared Spark type.
 
@@ -682,7 +150,7 @@ def _cast_feature(out_vals: np.ndarray, part: AggregationPart, input_type: T.Dat
 
 
 def _to_arrow(res, part: AggregationPart, input_type: T.DataType) -> pa.Array:
-    """One part's results (what _compute_part returns) as an Arrow array
+    """One part's results (what op_algebra.finalize returns) as an Arrow array
     of the part's declared type. A (values, valid) pair becomes a typed
     array with a validity mask — a NaN value stays NaN, only ~valid is
     null; object arrays go through _cast_feature and, like every pandas
@@ -718,7 +186,7 @@ def _parse_bucketed_base(cell, mapping: dict) -> dict:
     for skey, name in mapping.items():
         if skey == "__bk":
             continue
-        if skey in _LIST_SKEYS:
+        if skey not in alg.SCALAR_STATES:
             ln, fl = cell(f"{name}_l"), cell(f"{name}_f")
             lens = [0] * len(bks) if ln is None else [int(x) for x in ln]
             flat = [] if fl is None else fl
@@ -731,6 +199,26 @@ def _parse_bucketed_base(cell, mapping: dict) -> dict:
             for t in range(len(bks)):
                 per[t][skey] = None if vals is None else vals[t]
     return {str(b): d for b, d in zip(bks, per)}
+
+
+def _baseline_ir(p: AggregationPart, rows: "list[dict]", numeric: bool, integral: bool) -> dict:
+    """The registry IR of baseline rows ({canonical state: value}, one
+    dict per row), re-joining the states the JVM ships as parallel
+    columns: a percentile sample's (values, weights), a count-map's
+    (keys, counts), HLL register entries."""
+
+    def value(base: dict, st: str):
+        if st == "pqs":
+            return None if base.get("pqv") is None else (base["pqv"], base.get("pqw"))
+        if st == "mgh":
+            return None if base.get("mgk") is None else (base["mgk"], base["mgv"])
+        if st == "hreg":
+            ents = base.get("hreg") or ()
+            return [e["i"] for e in ents], [e["r"] for e in ents]
+        return base.get(st)
+
+    values = {st: [value(b, st) for b in rows] for st in alg.STATES[p.operation]}
+    return alg.from_values(p, numeric, integral, values)
 
 
 # the raw kernel's sorted stream: query rows and event rows on the
@@ -812,7 +300,7 @@ def _bucket_labels(arr: pa.Array) -> pa.Array:
 class _Events:
     """Event rows of one stream chunk in (segment, ts) order: the chunk's
     key segments, or (by_bucket) their per-bucket regrouping. Column
-    views and _EventCol precomputation are cached per column."""
+    views and EventCol precomputation are cached per column."""
 
     def __init__(self, cols: dict, rows, seg, ts, numeric: dict, integral: dict):
         self.cols, self.rows, self.seg, self.ts = cols, rows, seg, ts
@@ -827,13 +315,27 @@ class _Events:
             self._arrays[name] = self.cols[name].take(self.rows)
         return self._arrays[name]
 
-    def col(self, name: str) -> _EventCol:
+    def col(self, name: str) -> EventCol:
         if name not in self._cols:
-            self._cols[name] = _EventCol(
+            self._cols[name] = EventCol(
                 self.array(name), self._numeric[name], self._integral[name],
                 ts=self.ts, seg=self.seg,
             )
         return self._cols[name]
+
+    def input(self, p: AggregationPart) -> "EventCol | HllCol":
+        """What the part's op reduces: its input column, or for
+        APPROX_UNIQUE_COUNT the JVM-hashed (idx, rho) columns."""
+        if p.operation is not Operation.APPROX_UNIQUE_COUNT:
+            return self.col(p.input_column)
+        key = ("hll", p.input_column)
+        if key not in self._cols:
+            idx, rho = (
+                self.array(f"__hh_{p.input_column}_{x}").cast(pa.float64()).to_numpy(zero_copy_only=False)
+                for x in ("idx", "rho")
+            )
+            self._cols[key] = HllCol(idx, rho)
+        return self._cols[key]
 
     def start(self, q_seg: np.ndarray) -> np.ndarray:
         """Index of the first event of each segment in ``q_seg``."""
@@ -924,36 +426,6 @@ def _scatter(pieces: list, n: int, atype: pa.DataType) -> pa.Array:
     return pa.concat_arrays([v for _, v in pieces]).take(pa.array(src, mask=src < 0))
 
 
-def _hll_eval(ev: _Events, name: str, lo, hi, base_entries=None):
-    """APPROX_UNIQUE_COUNT via the shared HLL register sketch: JVM-hashed
-    (idx, rho) per event (null-guarded), register max over each query's
-    event range — the SAME estimator the tiled kernel stitches from tile
-    maps (functions/sketches.py).
-
-    ``base_entries``: sliced hot key — sparse (i, r) register entries
-    covering every event before the slice; register max is associative,
-    so merging them with the local range reproduces the unsliced estimate
-    bit-identically."""
-    idx = ev.array(f"__hh_{name}_idx").cast(pa.float64()).to_numpy(zero_copy_only=False)
-    rho = ev.array(f"__hh_{name}_rho").cast(pa.float64()).to_numpy(zero_copy_only=False)
-    pos = np.flatnonzero(~np.isnan(idx))
-    cidx = idx[pos].astype(np.int64)
-    crho = rho[pos].astype(np.uint8)
-    a = np.searchsorted(pos, lo, side="left")
-    b = np.searchsorted(pos, hi, side="left")
-    base_regs = np.zeros(HLL_M, dtype=np.uint8)
-    for e in base_entries or ():
-        base_regs[int(e["i"])] = max(base_regs[int(e["i"])], int(e["r"]))
-    has_base = bool(base_entries)
-    out = np.zeros(len(lo), dtype=np.int64)
-    valid = (b > a) | has_base
-    for i in np.flatnonzero(valid):
-        regs = base_regs.copy()
-        np.maximum.at(regs, cidx[a[i]:b[i]], crho[a[i]:b[i]])
-        out[i] = hll_estimate(regs)
-    return out, valid
-
-
 def make_temporal_kernel(
     gb: GroupBy,
     events_schema: T.StructType,
@@ -986,9 +458,9 @@ def make_temporal_kernel(
     hot-key slicing). ``baseline_cols``: hot-key slicing support — {index
     within the unbounded-part subsequence of unpacked(): {state: query
     column}}. When a segment's queries carry a non-null ``__slice_lo``,
-    unbounded parts compute [slice_start, qt) locally and merge the
-    segment's baseline IR columns (_merge_unbounded) instead of needing
-    the full event prefix."""
+    unbounded parts reduce [slice_start, qt) locally and merge the
+    segment's baseline IR (op_algebra.merge) instead of needing the full
+    event prefix."""
     parts = gb.unpacked()
     seg_keys = list(seg_keys or gb.key_columns)
     numeric = {
@@ -1029,15 +501,18 @@ def make_temporal_kernel(
         for _, qi, _ in sliced_segs:
             sliced_q[qi] = True
 
+        def values(p: AggregationPart, evs: _Events, lo, hi, base=None) -> pa.Array:
+            """finalize(merge(base, reduce(events in [lo, hi)))) as Arrow:
+            one path for every op, the merge skipped without a baseline."""
+            ir = alg.reduce(p, evs.input(p), lo, hi)
+            if base is not None:
+                ir = alg.merge(p, base, ir)
+            return _to_arrow(alg.finalize(p, ir), p, input_types[p.input_column])
+
         def plain_part(p: AggregationPart, sel: np.ndarray, lo: np.ndarray, tail) -> pa.Array:
             """Part values for queries ``sel`` over the full event range."""
-            itype = input_types[p.input_column]
             if p.bucket is None:
-                if p.operation is Operation.APPROX_UNIQUE_COUNT:
-                    res = _hll_eval(ev, p.input_column, lo[sel], head[sel])
-                else:
-                    res = _compute_part(p, ev.col(p.input_column), lo[sel], head[sel])
-                return _to_arrow(res, p, itype)
+                return values(p, ev, lo[sel], head[sel])
             # bucketed: every (bucket group, query of its key) pair is one
             # range over the regrouped events; pairs fold into maps
             stripped = AggregationPart(p.input_column, p.operation, p.arg_map, p.window, None)
@@ -1046,52 +521,38 @@ def make_temporal_kernel(
             qq = sel[pq]
             sub_hi = bev.search(pg, qt[qq])
             sub_lo = bev.start(pg) if tail is None else bev.search(pg, tail[qq])
-            if p.operation is Operation.APPROX_UNIQUE_COUNT:
-                res = _hll_eval(bev, p.input_column, sub_lo, sub_hi)
-            else:
-                res = _compute_part(stripped, bev.col(p.input_column), sub_lo, sub_hi)
-            return _bucket_map(_to_arrow(res, stripped, itype), labels, pg, pq, len(sel))
+            return _bucket_map(values(stripped, bev, sub_lo, sub_hi), labels, pg, pq, len(sel))
 
-        def sliced_part(p: AggregationPart, atype, mapping: dict, s, qi, slice_lo) -> pa.Array:
+        def sliced_part(p: AggregationPart, mapping: dict, s, qi, slice_lo) -> pa.Array:
             """Unbounded part for the queries ``qi`` of sliced segment
             ``s``: events in [slice_lo, qt) merged with the baseline IR."""
-            itype = input_types[p.input_column]
-            name = p.input_column
-            is_hll = p.operation is Operation.APPROX_UNIQUE_COUNT
+            kind = numeric[p.input_column], integral[p.input_column]
             if "__bk" not in mapping:
                 base = {st: cell(c, qi[0]) for st, c in mapping.items()}
+                base_ir = alg.take(_baseline_ir(p, [base], *kind), np.zeros(len(qi), dtype=np.int64))
                 lo = np.full(len(qi), ev.search(np.array([s]), np.array([slice_lo]))[0])
-                if is_hll:
-                    res = _hll_eval(ev, name, lo, head[qi], base.get("hreg"))
-                else:
-                    res = _merge_unbounded(p, ev.col(name), lo, head[qi], base)
-                return _to_arrow(res, p, itype)
-            # bucketed sliced hot segment: merge each bucket's baseline IR
-            # with that bucket's slice-local events — same per-bucket
-            # algebra as unsliced, same merge rules as the plain sliced path
+                return values(p, ev, lo, head[qi], base_ir)
+            # bucketed sliced hot segment: every (bucket label, query) pair
+            # merges the label's baseline IR with its slice-local events;
+            # labels in event order, then baseline-only labels
             stripped = AggregationPart(p.input_column, p.operation, p.arg_map, p.window, None)
             base_by_b = _parse_bucketed_base(lambda c: cell(c, qi[0]), mapping)
             bev, g_seg, labels = ev.by_bucket(p.bucket)
             gs = np.arange(*np.searchsorted(g_seg, [s, s + 1]))
             groups = dict(zip(labels.take(gs).to_pylist(), gs))
-            maps = [dict() for _ in qi]
-            for lab in list(groups) + [lab for lab in base_by_b if lab not in groups]:
-                base_b = base_by_b.get(lab, {})
-                if lab in groups:
-                    gq = np.full(len(qi), groups[lab])
-                    sub_lo = np.full(len(qi), bev.search(gq[:1], np.array([slice_lo]))[0])
-                    sub_hi = bev.search(gq, qt[qi])
-                else:
-                    sub_lo = sub_hi = np.zeros(len(qi), dtype=np.int64)
-                if is_hll:
-                    res = _hll_eval(bev, name, sub_lo, sub_hi, base_b.get("hreg"))
-                else:
-                    res = _merge_unbounded(stripped, bev.col(name), sub_lo, sub_hi, base_b)
-                for i, v in enumerate(_to_arrow(res, stripped, itype).to_pylist()):
-                    if v is not None:
-                        maps[i][lab] = v
-            entries = [list(m.items()) or None for m in maps]
-            return pa.array(entries, type=atype, from_pandas=True)
+            labs = list(groups) + [lab for lab in base_by_b if lab not in groups]
+            pl = np.repeat(np.arange(len(labs)), len(qi))
+            pq = np.tile(np.arange(len(qi)), len(labs))
+            g = np.array([groups.get(lab, -1) for lab in labs], dtype=np.int64)[pl]
+            sub_lo = np.zeros(len(pl), dtype=np.int64)
+            sub_hi = np.zeros(len(pl), dtype=np.int64)
+            on = g >= 0
+            sub_lo[on] = bev.search(g[on], np.full(on.sum(), slice_lo))
+            sub_hi[on] = bev.search(g[on], qt[qi][pq[on]])
+            rows_b = [base_by_b.get(lab, {}) for lab in labs]
+            base_ir = alg.take(_baseline_ir(stripped, rows_b, *kind), pl)
+            vals = values(stripped, bev, sub_lo, sub_hi, base_ir)
+            return _bucket_map(vals, pa.array(labs, pa.string()), pl, pq, len(qi))
 
         feats = []
         ub_i = -1
@@ -1111,9 +572,7 @@ def make_temporal_kernel(
             sel = all_q if mapping is None else np.flatnonzero(~sliced_q)
             pieces = [(sel, plain_part(p, sel, lo, tail))] if len(sel) else []
             if mapping is not None:
-                pieces += [
-                    (qi, sliced_part(p, atype, mapping, s, qi, slo)) for s, qi, slo in sliced_segs
-                ]
+                pieces += [(qi, sliced_part(p, mapping, s, qi, slo)) for s, qi, slo in sliced_segs]
             full = _scatter(pieces, len(rows), atype)
             feats.append(_scatter([(q_ok, full)], len(q_rows), atype))
         cols = [qc[c].take(q_rows) for c in query_cols]
@@ -1503,7 +962,7 @@ def _temporal_events_impl(
     # prefix state is a small mergeable IR (_BASELINE_OPS): each (hot key,
     # query slice) gets a baseline IR row covering every earlier event
     # (_build_baselines) and the kernel merges it with the slice-local
-    # range (_merge_unbounded). Only exact set-like unbounded state
+    # range (op_algebra.merge). Only exact set-like unbounded state
     # (UNIQUE_COUNT, HISTOGRAM, bucketed unbounded) stays unsliceable.
     # Results are bit-identical either way for every op except the approx
     # sketches past their exactness regime (see _BASELINE_OPS note): the
@@ -1677,26 +1136,7 @@ def _temporal_events_impl(
 # degrades to its own sketch contract (equi-rank weighted samples /
 # mergeable Misra-Gries with error sentinel) — the same estimators the
 # tiled kernel uses (functions/aggregations._pct_ir/_hist_ir_capped).
-_BASELINE_OPS = {
-    Operation.COUNT,
-    Operation.SUM,
-    Operation.AVERAGE,
-    Operation.MIN,
-    Operation.MAX,
-    Operation.VARIANCE,
-    Operation.SKEW,
-    Operation.KURTOSIS,
-    Operation.FIRST,
-    Operation.LAST,
-    Operation.FIRST_K,
-    Operation.LAST_K,
-    Operation.TOP_K,
-    Operation.BOTTOM_K,
-    Operation.APPROX_UNIQUE_COUNT,
-    Operation.BOUNDED_UNIQUE_COUNT,
-    Operation.APPROX_PERCENTILE,
-    Operation.APPROX_HISTOGRAM_K,
-}
+_BASELINE_OPS = alg.BOUNDED_OPS
 
 
 def slice_classification(gb: GroupBy) -> "tuple[int, list[AggregationPart]] | None":
@@ -1722,41 +1162,31 @@ def slice_classification(gb: GroupBy) -> "tuple[int, list[AggregationPart]] | No
 
 
 def _baseline_states(p: AggregationPart, integral: bool) -> list[str]:
-    op = p.operation
+    """The baseline state columns of an unbounded part: its registry
+    states (op_algebra.STATES), named with their cap where parts with
+    other caps must not share the column; an integral SUM's exact long
+    sum is "s1i". A percentile sample ships as two PARALLEL flat arrays
+    (values, weights) and a Misra-Gries count-map as (keys, counts): the
+    natural nested shapes segfault pyarrow's arrow_to_pandas."""
     k = int(p.arg_map.get("k", 1))
-    if op is Operation.APPROX_UNIQUE_COUNT:
-        return ["hreg"]  # sparse HLL register entries (idx, rho)
-    if op is Operation.BOUNDED_UNIQUE_COUNT:
-        return [f"uset{k}"]  # distinct set capped at k — exact under cap
-    if op is Operation.APPROX_PERCENTILE:
-        from chronon_spark.functions.aggregations import _pct_samples
+    out = []
+    for st in alg.STATES[p.operation]:
+        if st == "s1" and integral and p.operation is Operation.SUM:
+            out.append("s1i")
+        elif st in alg.LIST_STATES:
+            out.append(f"{st}{k}")  # ≤k lists; a distinct set capped at k
+        elif st == "pqs":
+            from chronon_spark.functions.aggregations import _pct_samples
 
-        # two PARALLEL flat arrays (sample values, per-sample weights):
-        # the natural array<struct<n, q:array>> shape segfaults pyarrow's
-        # arrow_to_pandas, flat double arrays don't
-        return [f"pqv{_pct_samples(p)}", f"pqw{_pct_samples(p)}"]
-    if op is Operation.APPROX_HISTOGRAM_K:
-        # prefix Misra-Gries count-map (the op's own day IR + entry-sum
-        # merge, functions/aggregations._hist_ir_capped), shipped as two
-        # parallel flat arrays (keys, counts) for the same pyarrow reason
-        mk = int(p.arg_map.get("k", 8))
-        return [f"mgk{mk}", f"mgv{mk}"]
-    return {
-        Operation.COUNT: ["n"],
-        Operation.SUM: ["s1i" if integral else "s1"],
-        Operation.AVERAGE: ["n", "s1"],
-        Operation.MIN: ["mn"],
-        Operation.MAX: ["mx"],
-        Operation.VARIANCE: ["n", "s1", "s2"],
-        Operation.SKEW: ["n", "s1", "s2", "s3"],
-        Operation.KURTOSIS: ["n", "s1", "s2", "s3", "s4"],
-        Operation.FIRST: ["fst"],
-        Operation.LAST: ["lst"],
-        Operation.FIRST_K: [f"fstk{k}"],
-        Operation.LAST_K: [f"lstk{k}"],
-        Operation.TOP_K: [f"topk{k}"],
-        Operation.BOTTOM_K: [f"botk{k}"],
-    }[op]
+            out += [f"pqv{_pct_samples(p)}", f"pqw{_pct_samples(p)}"]
+        elif st == "mgh":
+            # prefix count-map: the op's own day IR + entry-sum merge
+            # (functions/aggregations._hist_ir_capped)
+            mk = int(p.arg_map.get("k", 8))
+            out += [f"mgk{mk}", f"mgv{mk}"]
+        else:
+            out.append(st)
+    return out
 
 
 def _let_col(value: "Column", fn) -> "Column":
@@ -1837,9 +1267,6 @@ def _pq_flatten(irs: "Column", s_budget: int, want_values: bool) -> "Column":
     return _let_col(F.struct(irs.alias("rs")), fn)
 
 
-_MG_ERR_KEY = "\x00__mg_err"
-
-
 def _mg_truncate(m: "Column", cap: int) -> "Column":
     """Cap a merged Misra-Gries count-map back to ``cap`` entries,
     folding the largest dropped count into the chr(0) error sentinel
@@ -1852,7 +1279,7 @@ def _mg_truncate(m: "Column", cap: int) -> "Column":
         ranked = ranked_and_err["rk"]
         err = ranked_and_err["er"]
         sentinel = F.struct(
-            F.lit(_MG_ERR_KEY).alias("key"),
+            F.lit(alg.MG_ERR_KEY).alias("key"),
             (err + F.element_at(ranked, cap + 1)["value"]).alias("value"),
         )
         kept = F.map_from_entries(
@@ -1865,7 +1292,7 @@ def _mg_truncate(m: "Column", cap: int) -> "Column":
                     ranked,
                     F.array(
                         F.struct(
-                            F.lit(_MG_ERR_KEY).alias("key"), err.alias("value")
+                            F.lit(alg.MG_ERR_KEY).alias("key"), err.alias("value")
                         )
                     ),
                 )
@@ -1874,7 +1301,7 @@ def _mg_truncate(m: "Column", cap: int) -> "Column":
         return F.when(F.size(ranked) > cap, kept).otherwise(small)
 
     ents = F.filter(
-        F.map_entries(m), lambda kv: kv["key"] != F.lit(_MG_ERR_KEY)
+        F.map_entries(m), lambda kv: kv["key"] != F.lit(alg.MG_ERR_KEY)
     )
     ranked = F.array_sort(
         ents,
@@ -1884,7 +1311,7 @@ def _mg_truncate(m: "Column", cap: int) -> "Column":
         .otherwise(F.lit(1)),
     )
     err0 = F.coalesce(
-        F.element_at(m, F.lit(_MG_ERR_KEY)), F.lit(0).cast("long")
+        F.element_at(m, F.lit(alg.MG_ERR_KEY)), F.lit(0).cast("long")
     )
     return F.when(
         m.isNull() | (F.size(F.map_entries(m)) == 0), m
@@ -1909,13 +1336,6 @@ def _canon_skey(st: str) -> str:
     if st == "s1i":
         return "s1"
     return st
-
-
-# states whose cumulative column is an ARRAY (per-bucket baselines ship
-# them as parallel lengths + flattened-values columns)
-_LIST_SKEYS = frozenset(
-    {"hreg", "uset", "fstk", "lstk", "topk", "botk", "pqv", "pqw", "mgk", "mgv"}
-)
 
 
 def _baseline_state_exprs(c: str, st: str):
@@ -2208,7 +1628,7 @@ def _build_baselines(
         for n in cum_exprs:
             # derive list-ness from the trailing state token
             tail = n.rsplit("_", 1)[-1]
-            is_list = _canon_skey(tail) in _LIST_SKEYS
+            is_list = _canon_skey(tail) not in alg.SCALAR_STATES
             if is_list:
                 sel.append(
                     F.expr(
@@ -2237,15 +1657,6 @@ HOT_KEY_DETECT_CAP = 1000
 # (BENCH §28/§30)
 AUTO_HOT_FLOOR = 10_000
 
-# baseline states with O(1)-per-event, O(1)-per-query prefix cost; every
-# other state (HLL registers, quantile samples, count-maps, k-lists) pays
-# an O(sketch-size) copy per query, making a hot key's cost superlinear
-# in its size — slicing pays much earlier there
-_SCALAR_BASELINE_STATES = frozenset(
-    {"n", "s1", "s1i", "s2", "s3", "s4", "mn", "mx", "fst", "lst"}
-)
-
-
 def auto_hot_factor(ub_parts) -> int:
     """Fair-share multiplier for threshold="auto": 1 when any unbounded
     part carries sketch state (per-query cost superlinear in hot-key size
@@ -2260,11 +1671,12 @@ def auto_hot_factor(ub_parts) -> int:
             # per-query cost is O(#buckets) — superlinear in hot-key size
             # like sketch state; slice at fair share
             return 1
-        for st in _baseline_states(p, False):
-            base = st[:4] if st.startswith(("fstk", "lstk", "topk", "botk", "uset")) else st
-            base = base[:3] if base.startswith(("pqv", "pqw", "mgk", "mgv")) else base
-            if base not in _SCALAR_BASELINE_STATES:
-                return 1
+        # scalar states cost O(1) per event and per query; every other
+        # state (HLL registers, quantile samples, count-maps, k-lists)
+        # pays an O(sketch-size) copy per query, so a hot key's cost is
+        # superlinear in its size and slicing pays much earlier
+        if not alg.SCALAR_STATES.issuperset(alg.STATES[p.operation]):
+            return 1
     return 4
 
 

@@ -30,7 +30,7 @@ key's events (temporal.choose_kernel); otherwise the exact raw kernel, which rea
 Tie semantics: events sharing an exact timestamp are ordered by
 (ts, value) inside tiles — deterministic across layouts. The raw kernel's
 sorted stream orders events by (keys, ts) only, and its ordered gathers
-re-sort each key segment's equal-ts runs by value (temporal._EventCol
+re-sort each key segment's equal-ts runs by value (op_algebra.EventCol
 .tie_compact), so FIRST/LAST/FIRST_K/LAST_K pick the SAME element on
 both paths; the reference leaves equal-ts order unspecified (partition
 iteration order). Every other aggregate is tie-insensitive.
@@ -45,7 +45,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from chronon_spark.api.types import FIVE_MINUTES_MS, GroupBy, Operation
-from chronon_spark.operators.temporal import _SparseTable, output_field
+from chronon_spark.functions.op_algebra import SparseTable, moments, percentiles
+from chronon_spark.operators.temporal import output_field
 from chronon_spark.sources.scan import TS_COL, null_key_filter
 
 TILE_MS = FIVE_MINUTES_MS
@@ -386,7 +387,7 @@ class _TilePrefix:
                 np.cumsum(arr, out=p[1:])
                 self.prefix[s] = p
         self.tmin = (
-            _SparseTable(
+            SparseTable(
                 np.nan_to_num(
                     pd.to_numeric(tdf[_stat_col(col, "mn")], errors="coerce").to_numpy(np.float64),
                     nan=np.inf,
@@ -397,7 +398,7 @@ class _TilePrefix:
             else None
         )
         self.tmax = (
-            _SparseTable(
+            SparseTable(
                 np.nan_to_num(
                     pd.to_numeric(tdf[_stat_col(col, "mx")], errors="coerce").to_numpy(np.float64),
                     nan=-np.inf,
@@ -439,14 +440,14 @@ class _HeadCol:
         self._tmin = None
         self._tmax = None
 
-    def tmin(self) -> _SparseTable:
+    def tmin(self) -> SparseTable:
         if self._tmin is None:
-            self._tmin = _SparseTable(np.where(self.mask, self.vals, np.inf), is_min=True)
+            self._tmin = SparseTable(np.where(self.mask, self.vals, np.inf), is_min=True)
         return self._tmin
 
-    def tmax(self) -> _SparseTable:
+    def tmax(self) -> SparseTable:
         if self._tmax is None:
-            self._tmax = _SparseTable(np.where(self.mask, self.vals, -np.inf), is_min=False)
+            self._tmax = SparseTable(np.where(self.mask, self.vals, -np.inf), is_min=False)
         return self._tmax
 
 
@@ -631,33 +632,6 @@ def _slide_counter_bucketed(tmaps, hb, hv, hmask, t_lo, t_hi, hl, h_hi, order):
         yield i, live
 
 
-def _weighted_percentiles(vs: np.ndarray, ws: np.ndarray, qs) -> list[float]:
-    """Weighted linear-interpolated percentiles: position x = q·(Σw − 1);
-    identical to numpy's interpolation when all weights are 1 (the same
-    contract as the snapshot path's _pct_scan)."""
-    order = np.argsort(vs, kind="stable")
-    v = vs[order]
-    cum = np.cumsum(ws[order])
-    total = cum[-1]
-    pos = cum - 1.0
-    out = []
-    for q in qs:
-        x = q * (total - 1.0)
-        i = int(np.searchsorted(pos, x, side="left"))
-        if i <= 0:
-            out.append(float(v[0]))
-        elif i >= len(v):
-            out.append(float(v[-1]))
-        else:
-            p_prev, p_cur = pos[i - 1], pos[i]
-            if p_cur <= p_prev:
-                out.append(float(v[i]))
-            else:
-                f = (x - p_prev) / (p_cur - p_prev)
-                out.append(float(v[i - 1] + (v[i] - v[i - 1]) * f))
-    return out
-
-
 def _eval_bucketed_pct(p, ctx, hl, h_hi, nq):
     """Bucketed APPROX_PERCENTILE over the multi-level cover: per-tile
     Map[bucket → (n, ≤S samples)], kernel-side per-bucket weighted
@@ -700,7 +674,7 @@ def _eval_bucketed_pct(p, ctx, hl, h_hi, nq):
         if not acc:
             continue
         res[i] = {
-            str(b): _weighted_percentiles(np.concatenate(vp), np.concatenate(wp), qs)
+            str(b): percentiles(np.concatenate(vp), np.concatenate(wp), qs)
             for b, (vp, wp) in acc.items()
         }
     return res
@@ -943,7 +917,7 @@ def _eval_collection(p, ctx, t_lo, t_hi, hl, h_hi, q_order, nq, input_types, cas
                 w_parts.append(np.ones(len(hv)))
             if not v_parts:
                 continue
-            res[i] = _weighted_percentiles(
+            res[i] = percentiles(
                 np.concatenate(v_parts), np.concatenate(w_parts), qs
             )
         return res
@@ -1027,7 +1001,7 @@ class _CollCtx:
                 if len(v) > cap:
                     total = w.sum()
                     qpts = np.linspace(0.0, 1.0, cap)
-                    v = np.asarray(_weighted_percentiles(v, w, qpts))
+                    v = np.asarray(percentiles(v, w, qpts))
                     w = np.full(cap, total / cap)
                 ts_out.append(coarse[start])
                 lens.append(len(v))
@@ -1157,7 +1131,7 @@ class _CollCtx:
                     if len(v) > s_budget:
                         total = w.sum()
                         qpts = np.linspace(0.0, 1.0, s_budget)
-                        v = np.asarray(_weighted_percentiles(v, w, qpts))
+                        v = np.asarray(percentiles(v, w, qpts))
                         w = np.full(s_budget, total / s_budget)
                     merged[b] = (v, w)
                 ts_out.append(coarse[start])
@@ -1495,31 +1469,8 @@ def make_tiled_kernel(
                     s2 = (tc.prefix["s2"][t_hi] - tc.prefix["s2"][t_lo]) + (hc.p2[h_hi] - hc.p2[hl])
                     s3 = (tc.prefix["s3"][t_hi] - tc.prefix["s3"][t_lo]) + (hc.p3[h_hi] - hc.p3[hl])
                     s4 = (tc.prefix["s4"][t_hi] - tc.prefix["s4"][t_lo]) + (hc.p4[h_hi] - hc.p4[hl])
-                    for i in range(nq):
-                        c_ = n[i]
-                        if c_ <= 0:
-                            continue
-                        m1 = s1[i] / c_
-                        m2 = s2[i] / c_ - m1**2
-                        if op is Operation.VARIANCE:
-                            res[i] = float(max(m2, 0.0))
-                        elif op is Operation.SKEW:
-                            if c_ < 3 or m2 <= 0:
-                                res[i] = float("nan")
-                            else:
-                                m3 = s3[i] / c_ - 3 * m1 * s2[i] / c_ + 2 * m1**3
-                                res[i] = float(m3 / m2**1.5)
-                        else:
-                            if c_ < 4 or m2 <= 0:
-                                res[i] = float("nan")
-                            else:
-                                m4 = (
-                                    s4[i] / c_
-                                    - 4 * m1 * s3[i] / c_
-                                    + 6 * m1**2 * s2[i] / c_
-                                    - 3 * m1**4
-                                )
-                                res[i] = float(m4 / m2**2 - 3.0)
+                    vals = moments(op, n, s1, s2, s3, s4)
+                    res = [float(v) if c_ > 0 else None for v, c_ in zip(vals, n)]
             elif op in (Operation.MIN, Operation.MAX):
                 is_min = op is Operation.MIN
                 table = tc.tmin if is_min else tc.tmax

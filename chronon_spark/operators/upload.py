@@ -16,38 +16,35 @@ key whose width is O(window/hop) REGARDLESS of history length —
 
 — and ``fetch_features`` answers (key, ts) requests by merging the hop
 IRs at/after each request's sawtooth window start with the streamed
-events in [boundary, ts), per key, inside one Arrow-batched cogroup
-kernel (the offline twin of the fetcher's in-memory merge).
+events in [boundary, ts), per key, inside one Arrow cogroup kernel (the
+offline twin of the fetcher's in-memory merge). The per-op algebra of
+that merge — IR states, range-reduce, merge, finalize — is the shared
+numpy op registry (functions/op_algebra.py), the same one the raw as-of
+kernel evaluates; this module only lays the upload row out and reads it
+back as registry IRs (_upload_entries).
 
 Layout notes (deliberate deviations from the reference, documented):
 - IRs are typed columns / flat parallel arrays, not serialized blobs —
-  columnar-friendly, and every hop array is primitive-element only
-  (array-of-struct-of-array inputs crash pyarrow's cogroup conversion).
+  columnar-friendly, and every hop array is primitive-element only:
+  list states ride as (flat values, per-entry lengths) columns.
 - We store tail hops only for windowed ops; the reference additionally
   pre-collapses the hop majority per window. The merge count per fetch
   is ≤ window/hop (≤169 for 7d@1h) — bounded, so the pre-collapse is an
   optimization we skip, not a semantic.
 
-Scope: the scalar-algebraic family (COUNT/SUM/AVERAGE/MIN/MAX/
-VARIANCE/SKEW/KURTOSIS), FIRST/LAST (shared (ts, value) tie-break),
+Scope: every op whose IR is bounded (the registry state names each
+frame's columns): the scalar-algebraic family (COUNT/SUM/AVERAGE/MIN/
+MAX/VARIANCE/SKEW/KURTOSIS), FIRST/LAST (shared (ts, value) tie-break),
 APPROX_UNIQUE_COUNT (HLL register entries, functions/sketches.py), and
 the bounded-IR gather/sketch family — TOP_K/BOTTOM_K/FIRST_K/LAST_K
 (≤k lists), BOUNDED_UNIQUE_COUNT (≤k capped set — exact under the cap
 argument), APPROX_PERCENTILE ((n, ≤S equi-rank sample) per hop; exact
 while no hop truncates, the tiled kernel's own tile IR beyond), and
 APPROX_HISTOGRAM_K (≤8k-entry capped Misra-Gries count-map with error
-sentinel). Hop-list states ship as parallel (flat primitive array,
-per-hop lengths) columns — nested array<array<>> cogroup inputs
-segfault pyarrow's arrow_to_pandas just like the struct-of-array shape.
-Bucketed aggregations are served too — Map[bucket → agg] built from
-per-(hop, bucket) IR entry rows (one flat entry list per key, the HLL
-frame's layout), exactly the BucketedColumnAggregator contract — for
-the scalar family, k-lists, capped sets, equi-rank percentile samples,
-HLL registers, and capped Misra-Gries count-maps (whose nested
-Map[bucket → Map] output can't cross the Arrow cogroup boundary, so
-the kernel ships four parallel flat columns and a post-kernel
-higher-order-function select densifies them). Element-wise parts ride
-the same machinery via the positional-bucket rewrite (posexplode →
+sentinel). Bucketed aggregations are served too — Map[bucket → agg]
+built from per-(hop, bucket) IR entry rows (one flat entry list per
+key), exactly the BucketedColumnAggregator contract. Element-wise parts
+ride the same machinery via the positional-bucket rewrite (posexplode →
 __pos buckets → densify with the observed tensor size). The only
 rejections left are exact UNIQUE_COUNT/HISTOGRAM (truly unbounded
 state) — served offline by the lambda-tile path
@@ -68,10 +65,11 @@ from __future__ import annotations
 import datetime as _dt
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from chronon_spark.api.types import (
     AggregationPart,
@@ -79,66 +77,28 @@ from chronon_spark.api.types import (
     Operation,
     sawtooth_hop_millis,
 )
-from chronon_spark.functions.sketches import HLL_M, hll_estimate, hll_idx_rho_exprs
+from chronon_spark.functions import op_algebra as alg
+from chronon_spark.functions.sketches import hll_idx_rho_exprs
+from chronon_spark.operators.temporal import (
+    _bucket_map,
+    _Events,
+    _hreg_reduce,
+    _to_arrow,
+    output_field,
+)
 from chronon_spark.sources.scan import TS_COL, null_key_filter
 
 MS_DAY = 86_400_000
 
-UPLOADABLE = {
-    Operation.COUNT,
-    Operation.SUM,
-    Operation.AVERAGE,
-    Operation.MIN,
-    Operation.MAX,
-    Operation.VARIANCE,
-    Operation.SKEW,
-    Operation.KURTOSIS,
-    Operation.FIRST,
-    Operation.LAST,
-    Operation.APPROX_UNIQUE_COUNT,
-    # bounded-IR gather/sketch family: per-hop state is a ≤k list, ≤k
-    # value set, (n, ≤S equi-rank sample), or ≤8k-entry capped count-map
-    # — the same IR algebra the hot-key slicer merges (temporal.py
-    # _BASELINE_OPS); only exact UNIQUE_COUNT/HISTOGRAM (truly unbounded
-    # state) stay lambda-tile-only
-    Operation.TOP_K,
-    Operation.BOTTOM_K,
-    Operation.FIRST_K,
-    Operation.LAST_K,
-    Operation.BOUNDED_UNIQUE_COUNT,
-    Operation.APPROX_PERCENTILE,
-    Operation.APPROX_HISTOGRAM_K,
-}
+# per-hop state is a scalar, a ≤k list, a ≤k value set, an (n, ≤S
+# equi-rank sample) or a ≤8k-entry capped count-map — the same IR algebra
+# the hot-key slicer merges (temporal.py _BASELINE_OPS); only exact
+# UNIQUE_COUNT/HISTOGRAM (truly unbounded state) stay lambda-tile-only.
+# Bucketed parts too: a per-(hop, bucket) IR is as bounded as a per-hop
+# one, so the row stays bounded by hops × distinct buckets.
+UPLOADABLE = alg.BOUNDED_OPS
 
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.BooleanType)
-
-# hop states whose per-hop value is a bounded LIST — shipped to the fetch
-# kernel as parallel (flat values, per-hop lengths) primitive arrays
-_LIST_STATES = frozenset({"topk", "botk", "fstk", "lstk", "uset", "mgk", "mgv"})
-
-_MOMENT_STATES = {
-    Operation.COUNT: ("n",),
-    Operation.SUM: ("n", "s"),
-    Operation.AVERAGE: ("n", "s1"),
-    Operation.VARIANCE: ("n", "s1", "s2"),
-    Operation.SKEW: ("n", "s1", "s2", "s3"),
-    Operation.KURTOSIS: ("n", "s1", "s2", "s3", "s4"),
-    Operation.MIN: ("n", "mn"),
-    Operation.MAX: ("n", "mx"),
-    Operation.FIRST: ("fst",),
-    Operation.LAST: ("lst",),
-    Operation.TOP_K: ("topk",),
-    Operation.BOTTOM_K: ("botk",),
-    Operation.FIRST_K: ("fstk",),
-    Operation.LAST_K: ("lstk",),
-    Operation.BOUNDED_UNIQUE_COUNT: ("uset",),
-    Operation.APPROX_PERCENTILE: ("pqs",),
-    Operation.APPROX_HISTOGRAM_K: ("mgh",),
-    # only reached by the bucketed frames — the unbucketed HLL flow
-    # builds its register rollups as dedicated two-stage frames
-    Operation.APPROX_UNIQUE_COUNT: ("hreg",),
-}
-
 
 def boundary_millis(end_ds: str) -> int:
     """Exclusive batch-end boundary: UTC midnight AFTER ``end_ds`` (the
@@ -147,47 +107,13 @@ def boundary_millis(end_ds: str) -> int:
     return int(d.timestamp()) * 1000 + MS_DAY
 
 
-# bucketed parts are uploadable for the scalar-algebraic family AND the
-# k-list/capped-set family: the per-(hop, bucket) state is one scalar IR
-# row (or one ≤k list) per OBSERVED bucket, so the upload row stays
-# bounded by hops × distinct-buckets — the same Map[bucket → agg]
-# contract GroupByUpload serves. Sketch ops (HLL, percentile samples,
-# count-maps) × bucket stay lambda-tile-only (map-of-sketch hop state).
-BUCKETABLE = {
-    Operation.COUNT,
-    Operation.SUM,
-    Operation.AVERAGE,
-    Operation.MIN,
-    Operation.MAX,
-    Operation.VARIANCE,
-    Operation.SKEW,
-    Operation.KURTOSIS,
-    Operation.FIRST,
-    Operation.LAST,
-    Operation.TOP_K,
-    Operation.BOTTOM_K,
-    Operation.FIRST_K,
-    Operation.LAST_K,
-    Operation.BOUNDED_UNIQUE_COUNT,
-    # per-(hop, bucket) (n, ≤S equi-rank sample) / sparse HLL registers /
-    # ≤8k-entry count-maps — all bounded per entry. APPROX_HISTOGRAM_K's
-    # Map[bucket → Map[key → count]] output cannot cross the Arrow
-    # cogroup boundary, so the kernel ships it as four parallel flat
-    # columns and fetch_features densifies them in a post-kernel select.
-    Operation.APPROX_PERCENTILE,
-    Operation.APPROX_UNIQUE_COUNT,
-    Operation.APPROX_HISTOGRAM_K,
-}
-
-
 def _check_parts(gb: GroupBy) -> list[AggregationPart]:
     parts = list(gb.unpacked())
     bad = [
         p.output_column
         for p in parts
         if p.element_wise
-        or (p.bucket is None and p.operation not in UPLOADABLE)
-        or (p.bucket is not None and p.operation not in BUCKETABLE)
+        or p.operation not in UPLOADABLE
     ]
     if bad:
         raise ValueError(
@@ -235,13 +161,12 @@ def _state_aggs(
     )
     k = int(p.arg_map.get("k", 1))
     out = []
-    for st in _MOMENT_STATES[p.operation]:
+    for st in alg.STATES[p.operation]:
         if st == "n":
             out.append(F.count(c).alias(f"{o}__n"))
-        elif st == "s":
-            out.append(F.sum(c if integral else cd).alias(f"{o}__s"))
         elif st == "s1":
-            out.append(F.sum(cd).alias(f"{o}__s1"))
+            exact = integral and p.operation is Operation.SUM
+            out.append(F.sum(c if exact else cd).alias(f"{o}__s1"))
         elif st == "s2":
             out.append(F.sum(cd * cd).alias(f"{o}__s2"))
         elif st == "s3":
@@ -253,14 +178,12 @@ def _state_aggs(
         elif st == "mx":
             out.append(F.max(c).alias(f"{o}__mx"))
         elif st in ("fst", "lst"):
-            # (ts, value) struct min/max — lexicographic struct ordering IS
-            # the engine's shared exact-tie rule (operators/temporal.py
-            # tie_compact): earliest ts, smallest value on ties for FIRST;
-            # latest ts, largest value for LAST
+            # the value of the (ts, value) struct min/max — lexicographic
+            # struct ordering IS the engine's shared exact-tie rule
+            # (op_algebra.EventCol.tie_compact): earliest ts, smallest
+            # value on ties for FIRST; latest ts, largest value for LAST
             s = F.when(c.isNotNull(), F.struct(F.col(TS_COL).alias("t"), c.alias("v")))
-            out.append(
-                (F.min(s) if st == "fst" else F.max(s)).alias(f"{o}__{st}")
-            )
+            out.append((F.min(s) if st == "fst" else F.max(s))["v"].alias(f"{o}__{st}"))
         elif st == "topk":
             out.append(
                 F.expr(
@@ -340,8 +263,6 @@ def _state_aggs(
         elif st == "hreg":
             # sparse per-group HLL register entries (i, r), reduced to
             # per-register maxima inside the agg — bucketed frames only
-            from chronon_spark.operators.temporal import _hreg_reduce
-
             idx, rho = hll_idx_rho_exprs(cs)
             ents = F.sort_array(
                 F.collect_list(
@@ -353,6 +274,12 @@ def _state_aggs(
             )
             out.append(_hreg_reduce(ents).alias(f"{o}__hreg"))
     return out
+
+
+def _is_list(st: str) -> bool:
+    """Hop states shipped as a list per entry: the registry's list states
+    and a count-map's (keys, counts) halves (_split_map_states)."""
+    return st in alg.LIST_STATES or st in ("mgk", "mgv")
 
 
 def _split_map_states(df: DataFrame, parts: "list[AggregationPart]") -> DataFrame:
@@ -403,14 +330,6 @@ def _fxs2(name, sub):
 
 def _fx_nested(name, sub):
     return lambda x: F.transform(x[name], lambda e: e[sub])
-
-
-def _explode_tv(df: DataFrame, o: str, st: str) -> DataFrame:
-    """Split a struct(t, v) scalar state into flat _ts/_v columns."""
-    col = f"{o}__{st}"
-    return df.withColumn(f"{col}_ts", F.col(col)["t"]).withColumn(
-        f"{col}_v", F.col(col)["v"]
-    ).drop(col)
 
 
 def _ew_subconfigs(gb: GroupBy):
@@ -528,10 +447,8 @@ def group_by_upload(
         f = ev.groupBy(*keys).agg(*aggs)
         for p in ub:
             o = p.output_column
-            for st in _MOMENT_STATES[p.operation]:
-                if st in ("fst", "lst"):
-                    f = _explode_tv(f, o, st)
-                elif st == "pqs":
+            for st in alg.STATES[p.operation]:
+                if st == "pqs":
                     f = (
                         f.withColumn(f"{o}__pqs_n", F.col(f"{o}__pqs")["n"])
                         .withColumn(f"{o}__pqs_q", F.col(f"{o}__pqs")["q"])
@@ -572,43 +489,26 @@ def group_by_upload(
             ).alias("__e")
         )
 
-        def _ext(name):
-            return lambda x: x[name]
-
-        def _ext2(name, sub):
-            return lambda x: x[name][sub]
-
-        def _ext_size(name):
-            return lambda x: F.size(x[name])
-
-        def _ext_size2(name, sub):
-            return lambda x: F.size(x[name][sub])
-
         sel = [F.col(k) for k in keys] + [
-            F.transform("__e", _ext("__h")).alias(f"__h{r}")
+            F.transform("__e", _fx("__h")).alias(f"__h{r}")
         ]
         for sc in state_cols:
             st = sc.rsplit("__", 1)[1]
-            if st in ("fst", "lst"):
-                sel.append(F.transform("__e", _ext2(sc, "t")).alias(f"{sc}_ts"))
-                sel.append(F.transform("__e", _ext2(sc, "v")).alias(f"{sc}_v"))
-            elif st == "pqs":
-                # flat sample values + per-hop lengths (counts ride __n):
-                # nested array<array<>> cogroup inputs segfault pyarrow's
-                # arrow_to_pandas, so every hop-list column ships as
-                # (flat primitive array, per-hop length array)
-                sel.append(F.transform("__e", _ext2(sc, "n")).alias(f"{sc}_n"))
+            if st == "pqs":
+                # per-hop counts, then the samples as every hop-list
+                # column ships: (flat primitive array, per-hop lengths)
+                sel.append(F.transform("__e", _fx2(sc, "n")).alias(f"{sc}_n"))
                 sel.append(
-                    F.flatten(F.transform("__e", _ext2(sc, "q"))).alias(f"{sc}_q_f")
+                    F.flatten(F.transform("__e", _fx2(sc, "q"))).alias(f"{sc}_q_f")
                 )
                 sel.append(
-                    F.transform("__e", _ext_size2(sc, "q")).alias(f"{sc}_q_l")
+                    F.transform("__e", _fxs2(sc, "q")).alias(f"{sc}_q_l")
                 )
-            elif st in _LIST_STATES:
-                sel.append(F.flatten(F.transform("__e", _ext(sc))).alias(f"{sc}_f"))
-                sel.append(F.transform("__e", _ext_size(sc)).alias(f"{sc}_l"))
+            elif _is_list(st):
+                sel.append(F.flatten(F.transform("__e", _fx(sc))).alias(f"{sc}_f"))
+                sel.append(F.transform("__e", _fxs(sc)).alias(f"{sc}_l"))
             else:
-                sel.append(F.transform("__e", _ext(sc)).alias(sc))
+                sel.append(F.transform("__e", _fx(sc)).alias(sc))
         frames.append(f.select(*sel))
 
     # ---- unbucketed HLL parts: per-part two-stage register rollups
@@ -689,10 +589,7 @@ def group_by_upload(
         ]
         for sc in state_cols:
             st = sc.rsplit("__", 1)[1]
-            if st in ("fst", "lst"):
-                sel.append(F.transform("__e", _fx2(sc, "t")).alias(f"{sc}_ts_bu"))
-                sel.append(F.transform("__e", _fx2(sc, "v")).alias(f"{sc}_v_bu"))
-            elif st in _LIST_STATES:
+            if _is_list(st):
                 # per-bucket ≤k lists → (flat, per-bucket lengths)
                 sel.append(F.flatten(F.transform("__e", _fx(sc))).alias(f"{sc}_bu_f"))
                 sel.append(F.transform("__e", _fxs(sc)).alias(f"{sc}_bu_l"))
@@ -753,10 +650,7 @@ def group_by_upload(
         ]
         for sc in state_cols:
             st = sc.rsplit("__", 1)[1]
-            if st in ("fst", "lst"):
-                sel.append(F.transform("__e", _fx2(sc, "t")).alias(f"{sc}_ts_bw"))
-                sel.append(F.transform("__e", _fx2(sc, "v")).alias(f"{sc}_v_bw"))
-            elif st in _LIST_STATES:
+            if _is_list(st):
                 # per-(hop, bucket)-entry ≤k lists → (flat, lengths)
                 sel.append(F.flatten(F.transform("__e", _fx(sc))).alias(f"{sc}_bw_f"))
                 sel.append(F.transform("__e", _fxs(sc)).alias(f"{sc}_bw_l"))
@@ -794,18 +688,6 @@ def group_by_upload(
 # --------------------------------------------------------------------- fetch
 
 
-def _np(row, col, dtype=None):
-    v = row.get(col)
-    if v is None or (isinstance(v, float) and np.isnan(v)):
-        return np.empty(0, dtype=dtype or np.float64)
-    a = np.asarray(v, dtype=dtype) if dtype is not None else np.asarray(v)
-    return a
-
-
-def _nan_f(v):
-    return np.nan if v is None else float(v)
-
-
 def fetch_features(
     spark: SparkSession,
     gb: GroupBy,
@@ -818,8 +700,10 @@ def fetch_features(
     ``ts``, ts ≥ boundary) from the ``group_by_upload`` artifact plus the
     ``streamed`` head (events with ts ≥ boundary; earlier rows are
     ignored — they are the upload's job). Extra query columns pass
-    through. One shuffle on the keys; per-key work is O(hops + head)
-    via prefix/suffix state merges, never a history scan."""
+    through. One shuffle on the keys; per key, every part is
+    "suffix-merge the hop IRs from the window start, merge the head
+    range, finalize" in the shared op algebra (functions/op_algebra.py),
+    never a history scan."""
     import dataclasses
 
     if any(a.element_wise for a in gb.aggregations):
@@ -904,128 +788,53 @@ def fetch_features(
     hll_cols = sorted(
         {p.input_column for p in parts if p.operation is Operation.APPROX_UNIQUE_COUNT}
     )
+    hll_names = [f"__hh_{c}_{x}" for c in hll_cols for x in ("idx", "rho")]
     passthrough = [c for c in queries.columns if c not in keys and c != TS_COL]
+    for p in parts:
+        if p.operation in (Operation.MIN, Operation.MAX) and not isinstance(
+            st_types[p.input_column], (T.NumericType, T.BooleanType)
+        ):
+            raise ValueError(
+                f"{p.output_column}: MIN/MAX upload-fetch supports numeric "
+                f"inputs only; use the lambda-tile path for {st_types[p.input_column]}"
+            )
 
     head = null_key_filter(streamed, tuple(keys)).filter(
         F.col(TS_COL).isNotNull() & (F.col(TS_COL) >= boundary)
     )
     for c in hll_cols:
         idx, rho = hll_idx_rho_exprs(c)
-        head = head.withColumn(f"__hi_{c}", idx).withColumn(f"__hr_{c}", rho)
+        head = head.withColumn(f"__hh_{c}_idx", idx).withColumn(f"__hh_{c}_rho", rho)
     head_sel = (
         [F.col(k) for k in keys]
         + [F.lit(0).alias("__tag"), F.col(TS_COL)]
-        + [F.col(c) for c in inputs]
-        + [F.col(f"__hi_{c}") for c in hll_cols]
-        + [F.col(f"__hr_{c}") for c in hll_cols]
+        + [F.col(c) for c in inputs + hll_names]
         + [F.lit(None).cast(q_types[c]).alias(c) for c in passthrough]
     )
     q_sel = (
         [F.col(k) for k in keys]
         + [F.lit(1).alias("__tag"), F.col(TS_COL)]
         + [F.lit(None).cast(st_types[c]).alias(c) for c in inputs]
-        + [F.lit(None).cast("int").alias(f"__hi_{c}") for c in hll_cols]
-        + [F.lit(None).cast("int").alias(f"__hr_{c}") for c in hll_cols]
+        + [F.lit(None).cast("int").alias(c) for c in hll_names]
         + [F.col(c) for c in passthrough]
     )
     left = head.select(*head_sel).unionByName(queries.select(*q_sel))
 
-    # ---- plain-python part configs for the kernel closure
-    cfg = []
-    for p in parts:
-        integral = isinstance(st_types[p.input_column], _INTEGRAL)
-        w = None if p.window is None else p.window.millis
-        r = None if w is None else sawtooth_hop_millis(w)
-        cfg.append(
-            {
-                "o": p.output_column,
-                "op": p.operation,
-                "col": p.input_column,
-                "w": w,
-                "r": r,
-                # shared per-resolution hop-start array in the upload row
-                # (bucketed parts read their bucket frame's own arrays)
-                "hop": None
-                if r is None
-                else (f"__bh_{r}_{p.bucket}" if p.bucket else f"__h{r}"),
-                "bucket": p.bucket,
-                "bf": None if r is None or not p.bucket else f"__bf_{r}_{p.bucket}",
-                "bu": None if not p.bucket else f"__bu_{p.bucket}",
-                "integral": integral,
-                "numeric": isinstance(
-                    st_types[p.input_column], (T.NumericType, T.BooleanType)
-                ),
-                "k": int(
-                    p.arg_map.get(
-                        "k", 8 if p.operation is Operation.APPROX_HISTOGRAM_K else 1
-                    )
-                ),
-                "percentiles": list(p.arg_map.get("percentiles", [0.5])),
-            }
-        )
-        if p.operation in (Operation.MIN, Operation.MAX) and not cfg[-1]["numeric"]:
-            raise ValueError(
-                f"{p.output_column}: MIN/MAX upload-fetch supports numeric "
-                f"inputs only; use the lambda-tile path for {st_types[p.input_column]}"
-            )
-
-    out_fields = [T.StructField(k, q_types[k]) for k in keys]
-    out_fields += [T.StructField(c, q_types[c]) for c in passthrough]
-    for c in cfg:
-        op = c["op"]
-        if c["bucket"] is not None and op is Operation.APPROX_HISTOGRAM_K:
-            # nested Map[bucket → Map] can't cross the Arrow boundary:
-            # ship four parallel flat columns, densified post-kernel
-            out_fields += [
-                T.StructField(f"{c['o']}__bk", T.ArrayType(T.StringType())),
-                T.StructField(f"{c['o']}__ln", T.ArrayType(T.IntegerType())),
-                T.StructField(f"{c['o']}__k", T.ArrayType(T.StringType())),
-                T.StructField(f"{c['o']}__v", T.ArrayType(T.LongType())),
-            ]
-            continue
-        if op in (Operation.COUNT, Operation.APPROX_UNIQUE_COUNT):
-            t = T.LongType()
-        elif op is Operation.SUM:
-            t = T.LongType() if c["integral"] else T.DoubleType()
-        elif op in (
-            Operation.AVERAGE,
-            Operation.VARIANCE,
-            Operation.SKEW,
-            Operation.KURTOSIS,
-        ):
-            t = T.DoubleType()
-        elif op is Operation.BOUNDED_UNIQUE_COUNT:
-            t = T.LongType()
-        elif op is Operation.APPROX_PERCENTILE:
-            t = T.ArrayType(T.DoubleType())
-        elif op is Operation.APPROX_HISTOGRAM_K:
-            t = T.MapType(T.StringType(), T.LongType())
-        elif op in (
-            Operation.TOP_K,
-            Operation.BOTTOM_K,
-            Operation.FIRST_K,
-            Operation.LAST_K,
-        ):
-            t = T.ArrayType(st_types[c["col"]])
-        else:  # MIN / MAX / FIRST / LAST — input-typed
-            t = st_types[c["col"]]
-        if c["bucket"] is not None:
-            t = T.MapType(T.StringType(), t)
-        out_fields.append(T.StructField(c["o"], t))
+    ev_schema = streamed.select(*inputs).schema
+    numeric = {f.name: isinstance(f.dataType, (T.NumericType, T.BooleanType)) for f in ev_schema}
+    integral = {f.name: isinstance(f.dataType, _INTEGRAL) for f in ev_schema}
+    kinds = {f.name: (numeric[f.name], integral[f.name], f.dataType) for f in ev_schema}
+    out_fields = [T.StructField(c, q_types[c]) for c in keys + passthrough]
+    out_fields += [output_field(p, ev_schema) for p in parts]
     out_schema = T.StructType(out_fields)
-    long_cols = {
-        f.name
-        for f in out_fields[len(keys) + len(passthrough) :]
-        if isinstance(f.dataType, T.LongType)
-    }
+    out_types = [to_arrow_type(f.dataType) for f in out_fields]
 
-    def kernel(l: pd.DataFrame, up: pd.DataFrame) -> pd.DataFrame:
-        q = l[l["__tag"] == 1]
-        if not len(q):
-            return pd.DataFrame({f.name: pd.Series(dtype=object) for f in out_fields})
-        ev = l[l["__tag"] == 0]
-        urow = up.iloc[0].to_dict() if len(up) else {}
-        qt = q[TS_COL].to_numpy(np.int64)
+    def kernel(lt: pa.Table, ut: pa.Table) -> pa.Table:
+        tag = lt.column("__tag").to_numpy()
+        q = lt.filter(pa.array(tag == 1))
+        if not q.num_rows:
+            return pa.schema([(f.name, t) for f, t in zip(out_fields, out_types)]).empty_table()
+        qt = q.column(TS_COL).to_numpy().astype(np.int64)
         if (qt < boundary).any():
             # the reference's fetcher contract: batchEndTs ≤ queryTs
             # (SawtoothOnlineAggregator.scala:29-126 lambdaAggregateIr)
@@ -1037,185 +846,26 @@ def fetch_features(
                 f"(end_ds={end_ds}); serve pre-boundary queries with a "
                 f"backfill (temporal_events), not the upload artifact"
             )
-        res: dict[str, np.ndarray] = {}
-
-        # per-input-col compacted head arrays, (ts, value)-tie-ordered
-        packs: dict[tuple, tuple] = {}
-
-        def pack(col, numeric):
-            if (col, numeric) not in packs:
-                vals = ev[col]
-                nn = vals.notna().to_numpy()
-                ets = ev[TS_COL].to_numpy(np.int64)[nn]
-                if numeric:
-                    cv = pd.to_numeric(vals[nn]).to_numpy(np.float64)
-                    order = np.lexsort((cv, ets))
-                else:
-                    cv = vals[nn].to_numpy(object)
-                    order = np.lexsort(
-                        (np.array([str(x) for x in cv], dtype=object), ets)
-                    )
-                cts, cv = ets[order], cv[order]
-                packs[(col, numeric)] = (cts, cv)
-            return packs[(col, numeric)]
-
-        for c in cfg:
-            o, op, col, w, r = c["o"], c["op"], c["col"], c["w"], c["r"]
-            # ---------------- batch state at each query's window start
-            if w is None:
-                ws = None
-                nb = np.full(len(qt), float(urow.get(f"{o}__n") or 0.0))
-            else:
-                ws = ((qt - w) // r) * r
-            if c["bucket"] is not None:
-                r_b = _fetch_bucketed(c, urow, ev, qt, ws, boundary)
-                if isinstance(r_b, dict):  # bucketed MG: four flat columns
-                    for sfx, arr in r_b.items():
-                        res[f"{o}__{sfx}"] = arr
-                else:
-                    res[o] = r_b
-                continue
-            if op is Operation.APPROX_UNIQUE_COUNT:
-                res[o] = _fetch_hll(c, urow, ev, qt, ws, boundary)
-                continue
-            # MG count-maps stringify head values like the raw kernel
-            # (original typed values, not float-coerced)
-            pk_numeric = c["numeric"] and op is not Operation.APPROX_HISTOGRAM_K
-            cts, cv = pack(col, pk_numeric)
-            j = np.searchsorted(cts, qt, side="left")
-            lo = (
-                np.zeros(len(qt), dtype=np.int64)
-                if ws is None
-                else np.searchsorted(cts, np.maximum(ws, boundary), side="left")
-            )
-            if op in (Operation.FIRST, Operation.LAST):
-                res[o] = _fetch_firstlast(c, urow, cts, cv, lo, j, ws)
-                continue
-            if op in _GATHER_OPS:
-                res[o] = _fetch_gather(c, urow, cv, lo, j, ws)
-                continue
-            # cumulative head states (prefix diffs serve ANY [lo, j) range)
-            cn = np.arange(1, len(cts) + 1, dtype=np.float64)
-            h_n = _rng(cn, lo, j)
-            if w is None:
-                b_n = nb
-            else:
-                hh = _np(urow, c["hop"], np.int64)
-                bidx = np.searchsorted(hh, ws, side="left")
-                b_n = _suffix_sum(_np(urow, f"{o}__n", np.float64), len(hh))[bidx]
-            n = b_n + h_n
-            if op is Operation.COUNT:
-                res[o] = np.where(n > 0, n, np.nan)
-                continue
-            if op in (Operation.MIN, Operation.MAX):
-                res[o] = _fetch_minmax(c, urow, cts, cv, lo, j, ws, boundary)
-                continue
-            # SUM / AVERAGE / moments
-            powers = {"s": 1, "s1": 1, "s2": 2, "s3": 3, "s4": 4}
-            need = [st for st in _MOMENT_STATES[op] if st != "n"]
-            tot = {}
-            for st in need:
-                pw = powers[st]
-                cs = np.concatenate(([0.0], np.cumsum(cv**pw)))
-                h_s = cs[j] - cs[lo]
-                if w is None:
-                    b_s = np.full(len(qt), _nan_f(urow.get(f"{o}__{st}")))
-                    b_s = np.where(np.isnan(b_s), 0.0, b_s)
-                else:
-                    hh = _np(urow, c["hop"], np.int64)
-                    bidx = np.searchsorted(hh, ws, side="left")
-                    arr = _np(urow, f"{o}__{st}", np.float64)
-                    b_s = _suffix_sum(np.nan_to_num(arr), len(hh))[bidx]
-                tot[st] = b_s + h_s
-            empty = n == 0
-            if op is Operation.SUM:
-                res[o] = np.where(empty, np.nan, tot["s"])
-            elif op is Operation.AVERAGE:
-                res[o] = np.where(empty, np.nan, tot["s1"] / np.maximum(n, 1))
-            else:
-                res[o] = _finalize_moments(op, n, tot)
-
-        out = {k: q[k].to_numpy() for k in keys}
-        for c in passthrough:
-            out[c] = q[c].to_numpy()
-        pdf = pd.DataFrame(out)
-        for c in cfg:
-            if c["bucket"] is not None and c["op"] is Operation.APPROX_HISTOGRAM_K:
-                for sfx in ("bk", "ln", "k", "v"):
-                    pdf[f"{c['o']}__{sfx}"] = res[f"{c['o']}__{sfx}"]
-                continue
-            vals = res[c["o"]]
-            if c["o"] in long_cols:
-                s = pd.array(
-                    [None if (isinstance(v, float) and np.isnan(v)) or v is None else int(round(v)) for v in vals],
-                    dtype="Int64",
-                )
-                pdf[c["o"]] = s
-            elif isinstance(vals, np.ndarray) and vals.dtype == object:
-                if c["bucket"] is None and (
-                    c["op"]
-                    in (
-                        Operation.VARIANCE,
-                        Operation.SKEW,
-                        Operation.KURTOSIS,
-                    )
-                    or (c["numeric"] and c["op"] in (Operation.FIRST, Operation.LAST))
-                ):
-                    # explicit mask keeps genuine NaN (skew/kurt n<3 rule)
-                    # distinct from SQL null — object columns would fold
-                    # NaN into null on the Arrow conversion
-                    mask = np.array([v is None for v in vals], dtype=bool)
-                    fv = np.array(
-                        [0.0 if m else float(v) for v, m in zip(vals, mask)],
-                        dtype=np.float64,
-                    )
-                    pdf[c["o"]] = pd.arrays.FloatingArray(fv, mask)
-                else:
-                    pdf[c["o"]] = vals
-            else:
-                # numeric doubles: NaN here always means "empty window"
-                # (null inputs were compacted away; formula-NaN ops return
-                # object arrays above) — emit SQL null, like the kernels
-                fv = np.asarray(vals, dtype=np.float64)
-                mask = np.isnan(fv)
-                pdf[c["o"]] = pd.arrays.FloatingArray(
-                    np.where(mask, 0.0, fv), mask
-                )
-        return pdf
+        ev = lt.filter(pa.array(tag == 0))
+        ets = ev.column(TS_COL).to_numpy().astype(np.int64)
+        order = np.argsort(ets, kind="stable")
+        cols = {c: ev.column(c).combine_chunks() for c in inputs + hll_names}
+        head = _Events(cols, order, np.zeros(len(order), dtype=np.int64), ets[order], numeric, integral)
+        urow = {c: ut.column(c)[0].as_py() for c in ut.column_names} if ut.num_rows else {}
+        feats = [_serve(p, urow, head, qt, kinds) for p in parts]
+        cols_q = [q.column(c).combine_chunks() for c in keys + passthrough]
+        arrays = [a.cast(t) for a, t in zip(cols_q + feats, out_types)]
+        return pa.Table.from_arrays(arrays, names=[f.name for f in out_fields])
 
     res = (
         left.groupby(*keys)
         .cogroup(uploaded.groupby(*keys))
-        .applyInPandas(kernel, schema=out_schema)
+        .applyInArrow(kernel, schema=out_schema)
     )
-    # densify bucketed MG flat columns to Map[bucket → Map[key → count]]
-    # (driver-free: pure higher-order-function select)
-    mg_b = [
-        c
-        for c in cfg
-        if c["bucket"] is not None and c["op"] is Operation.APPROX_HISTOGRAM_K
-    ]
-    if mg_b:
-        exprs, drop = [], set()
-        for c in mg_b:
-            o = c["o"]
-            off = f"aggregate(slice({o}__ln, 1, i), 0, (a, x) -> a + x)"
-            exprs.append(
-                F.expr(
-                    f"CASE WHEN {o}__bk IS NULL THEN NULL ELSE "
-                    f"map_from_entries(transform({o}__bk, (b, i) -> struct(b, "
-                    f"map_from_entries(zip_with("
-                    f"slice({o}__k, {off} + 1, element_at({o}__ln, i + 1)), "
-                    f"slice({o}__v, {off} + 1, element_at({o}__ln, i + 1)), "
-                    f"(kk, vv) -> struct(kk, vv)))))) END"
-                ).alias(o)
-            )
-            drop |= {f"{o}__bk", f"{o}__ln", f"{o}__k", f"{o}__v"}
-        res = res.select(*[x for x in res.columns if x not in drop], *exprs)
     if gb.derivations:
         # the reference's fetcher applies derivations at serve time
         # (online/Fetcher.scala derive step) — same selectExpr contract
-        # as the batch kernels (temporal_events:860-868)
+        # as the batch kernels (temporal_events)
         feature_names = {p.output_column for p in parts}
         base = (
             ["*"]
@@ -1227,1225 +877,117 @@ def fetch_features(
     return res
 
 
-def _rng(cum1, lo, j):
-    cs = np.concatenate(([0.0], cum1))
-    return cs[j] - cs[lo]
-
-
-def _suffix_sum(arr: np.ndarray, n: int) -> np.ndarray:
-    """suffix[i] = sum(arr[i:]); length n+1 (suffix[n] == 0) so a clipped
-    searchsorted index past the end reads 0."""
-    out = np.zeros(n + 1, dtype=np.float64)
-    if n:
-        out[:n] = np.cumsum(arr[::-1])[::-1]
-    return out
-
-
-def _finalize_moments(op, n, tot):
-    """Population-moment finalize — bit-for-bit the raw kernel's formulas
-    (operators/temporal.py:264-283): variance = m2 clipped ≥ 0; skew NaN
-    when n<3 or m2≤0; kurtosis excess, NaN when n<4 or m2≤0; None (not
-    NaN) when the window is empty."""
-    with np.errstate(invalid="ignore", divide="ignore"):
-        m1 = tot["s1"] / n
-        m2 = tot["s2"] / n - m1**2
-        if op is Operation.VARIANCE:
-            vals = np.maximum(m2, 0.0)
-        elif op is Operation.SKEW:
-            m3 = tot["s3"] / n - 3 * m1 * tot["s2"] / n + 2 * m1**3
-            vals = np.where(
-                (n < 3) | (m2 <= 0), np.nan, m3 / np.power(np.maximum(m2, 1e-300), 1.5)
-            )
-        else:
-            m4 = (
-                tot["s4"] / n
-                - 4 * m1 * tot["s3"] / n
-                + 6 * m1**2 * tot["s2"] / n
-                - 3 * m1**4
-            )
-            vals = np.where(
-                (n < 4) | (m2 <= 0), np.nan, m4 / np.maximum(m2, 1e-300) ** 2 - 3.0
-            )
-    out = np.empty(len(n), dtype=object)
-    out[:] = None
-    has = n > 0
-    out[has] = [float(v) for v in vals[has]]
-    return out
-
-
-_GATHER_OPS = {
-    Operation.TOP_K,
-    Operation.BOTTOM_K,
-    Operation.FIRST_K,
-    Operation.LAST_K,
-    Operation.BOUNDED_UNIQUE_COUNT,
-    Operation.APPROX_PERCENTILE,
-    Operation.APPROX_HISTOGRAM_K,
-}
-
-_MG_ERR_KEY = "\x00__mg_err"
-
-
-def _valid_n(x):
-    return x is not None and not (isinstance(x, float) and np.isnan(x))
-
-
-def _pct_union_sorted(a: np.ndarray, b: np.ndarray, p: float) -> float:
-    """Linear-interpolated percentile of the union of two SORTED double
-    arrays without materializing the merge: the element at merged rank r
-    is found by positioning b's merged ranks (searchsorted(a, b) +
-    arange) — O(log |b|) per rank, so per-query cost is O(|head| log)
-    instead of O(|window|). Bit-identical to np.percentile(concat)."""
-    n = len(a) + len(b)
-    x = p * (n - 1)
-    r0 = int(np.floor(x))
-    r1 = int(np.ceil(x))
-    if len(b) == 0:
-        v0, v1 = float(a[r0]), float(a[r1])
-    elif len(a) == 0:
-        v0, v1 = float(b[r0]), float(b[r1])
-    else:
-        br = np.searchsorted(a, b, side="left") + np.arange(len(b))
-
-        def val(r):
-            t = int(np.searchsorted(br, r, side="left"))
-            if t < len(br) and br[t] == r:
-                return float(b[t])
-            return float(a[r - t])
-
-        v0, v1 = val(r0), val(r1)
-    if r0 == r1:
-        return v0
-    return v0 + (v1 - v0) * (x - r0)
-
-
-def _fetch_gather(c, urow, cv, lo, j, ws):
-    """Bounded-IR gather/sketch family: suffix merge of the hop IRs with
-    the head range [lo, j) — the same merge algebra as the hot-key
-    slicer's baselines (temporal._merge_unbounded), applied to hop-grain
-    IRs instead of slice-grain. Exact for k-lists and capped sets
-    always; for APPROX_PERCENTILE while every hop kept all its values
-    (n ≤ S); for APPROX_HISTOGRAM_K while no hop truncated — beyond
-    that each degrades to its op's own sketch contract.
-
-    Suffix merges are computed once per DISTINCT window-start hop (a
-    serving day touches ≤ day/hop of them — ~25 for 7d@1h), never per
-    query: per-query work is O(head-range), not O(window/hop)."""
-    o, op, w, k = c["o"], c["op"], c["w"], c["k"]
-    nq = len(lo)
-    out = np.empty(nq, dtype=object)
-    out[:] = None
-
-    def _arr(col):
-        v = urow.get(col)
-        if v is None or (isinstance(v, float) and np.isnan(v)):
-            return []
-        return list(v)
-
-    def _hoplists(base, dtype=None):
-        """Rebuild per-hop lists from the (flat, lengths) parallel arrays
-        (nested array<array<>> cogroup inputs segfault pyarrow)."""
-        lens = _arr(f"{base}_l")
-        if not lens:
-            return []
-        ln = np.array([0 if not _valid_n(x) else int(x) for x in lens], dtype=np.int64)
-        off = np.concatenate(([0], np.cumsum(ln)))
-        flat_raw = urow.get(f"{base}_f")
-        flat = (
-            np.empty(0, dtype=dtype)
-            if flat_raw is None or (isinstance(flat_raw, float) and np.isnan(flat_raw))
-            else np.asarray(flat_raw, dtype=dtype)
-        )
-        return [flat[off[t] : off[t + 1]] for t in range(len(ln))]
-
-    if w is not None:
-        hh = _np(urow, c["hop"], np.int64)
-        bidx = np.searchsorted(hh, ws, side="left")
-        uniq_b = np.unique(bidx)
-
-    def _fin(vals):
-        if c["integral"]:
-            return [int(round(float(x))) for x in vals]
-        if c["numeric"]:
-            return [float(x) for x in vals]
-        return [str(x) for x in vals]
-
-    if op in (Operation.TOP_K, Operation.BOTTOM_K, Operation.FIRST_K, Operation.LAST_K):
-        st = {
-            Operation.TOP_K: "topk",
-            Operation.BOTTOM_K: "botk",
-            Operation.FIRST_K: "fstk",
-            Operation.LAST_K: "lstk",
-        }[op]
-        # one ≤k suffix merge per distinct window start (truncating the
-        # hop side to k is lossless for all four ops: any element past
-        # rank k on the IR side can't enter the merged top/first k)
-        if w is None:
-            pre_by = {None: list(_arr(f"{o}__{st}"))}
-            bkey = [None] * nq
-        else:
-            lists = _hoplists(f"{o}__{st}")
-            pre_by = {}
-            for b in uniq_b:
-                suffix = [l for l in lists[b:] if len(l)]
-                if op is Operation.LAST_K:
-                    # newest hop first; each hop list already newest-first
-                    flat_it = (x for l in suffix[::-1] for x in l)
-                else:
-                    flat_it = (x for l in suffix for x in l)
-                if op is Operation.TOP_K:
-                    pre_by[b] = sorted(flat_it, reverse=True)[:k]
-                elif op is Operation.BOTTOM_K:
-                    pre_by[b] = sorted(flat_it)[:k]
-                else:
-                    pre_by[b] = list(flat_it)[:k]
-            bkey = bidx
-        for i in range(nq):
-            head = list(cv[lo[i] : j[i]])
-            pre = pre_by[bkey[i]]
-            if op is Operation.FIRST_K:
-                m = (pre + head)[:k]
-            elif op is Operation.LAST_K:
-                m = (head[::-1] + pre)[:k]
-            elif op is Operation.TOP_K:
-                m = sorted(pre + head, reverse=True)[:k]
-            else:
-                m = sorted(pre + head)[:k]
-            out[i] = _fin(m) if m else None
-        return out
-
-    if op is Operation.BOUNDED_UNIQUE_COUNT:
-        # suffix sets accumulated once from the tail; per query only the
-        # head range is probed against the precomputed set
-        if w is None:
-            set_by = {None: set(_arr(f"{o}__uset"))}
-            bkey = [None] * nq
-        else:
-            sets = _hoplists(f"{o}__uset")
-            need = set(int(b) for b in uniq_b)
-            set_by = {}
-            cur: set = set()
-            if len(sets) in need:
-                set_by[len(sets)] = set()
-            lo_b = min(need) if need else 0
-            for t in range(len(sets) - 1, lo_b - 1, -1):
-                cur |= set(sets[t].tolist())
-                if t in need:
-                    set_by[t] = set(cur)
-            bkey = bidx
-        for i in range(nq):
-            s = set_by[None] if w is None else set_by[int(bkey[i])]
-            hs = set(cv[lo[i] : j[i]].tolist())
-            extra = len(hs - s)
-            total = len(s) + extra
-            out[i] = min(total, k) if total else None
-        return out
-
-    if op is Operation.APPROX_PERCENTILE:
-        from chronon_spark.operators.temporal import _weighted_pct
-
-        qs_p = c["percentiles"]
-        if w is None:
-            # unbounded: ONE collapsed (n, sample) prefix IR, scalar n
-            bn = urow.get(f"{o}__pqs_n")
-            bq = urow.get(f"{o}__pqs_q")
-            if _valid_n(bn) and bq is not None:
-                sq = np.sort(np.asarray(bq, dtype=np.float64))
-                exact0 = int(bn) == len(sq)
-                pre0 = (
-                    sq
-                    if exact0
-                    else (sq, np.full(len(sq), int(bn) / len(sq)))
-                )
-            else:
-                pre0 = None
-                exact0 = True
-            sorted_by = {None: pre0}
-            exact_by = {None: exact0}
-            bkey = [None] * nq
-        else:
-            ns_l = _arr(f"{o}__pqs_n")
-            ns = np.array(
-                [0 if not _valid_n(x) else int(x) for x in ns_l], dtype=np.int64
-            )
-            qarr = _hoplists(f"{o}__pqs_q", dtype=np.float64)
-            ln = np.array([len(q_) for q_ in qarr], dtype=np.int64)
-            # exact_from[t]: every hop ≥ t kept its full multiset
-            exact_from = np.ones(len(ns) + 1, dtype=bool)
-            for t in range(len(ns) - 1, -1, -1):
-                exact_from[t] = exact_from[t + 1] and (ln[t] == 0 or ns[t] == ln[t])
-            sorted_by = {}
-            exact_by = {}
-            for b in uniq_b:
-                bb = int(b)
-                vals = (
-                    np.concatenate([q_ for q_ in qarr[bb:]])
-                    if bb < len(qarr)
-                    else np.empty(0, dtype=np.float64)
-                )
-                exact_by[bb] = bool(exact_from[bb]) if bb <= len(ns) else True
-                if exact_by[bb]:
-                    sorted_by[bb] = np.sort(vals) if len(vals) else None
-                else:
-                    wts = (
-                        np.concatenate(
-                            [
-                                np.full(len(q_), n_ / len(q_))
-                                for n_, q_ in zip(ns[bb:], qarr[bb:])
-                                if len(q_)
-                            ]
-                        )
-                        if len(vals)
-                        else np.empty(0, dtype=np.float64)
-                    )
-                    order = np.argsort(vals, kind="mergesort")
-                    sorted_by[bb] = (vals[order], wts[order]) if len(vals) else None
-            bkey = bidx
-        for i in range(nq):
-            bb = None if w is None else int(bkey[i])
-            pre = sorted_by[bb]
-            exact = exact_by[bb]
-            head = np.sort(cv[lo[i] : j[i]].astype(np.float64))
-            if pre is None and len(head) == 0:
-                out[i] = None
-            elif exact:
-                # exact regime: rank-select over (sorted suffix, sorted
-                # head) — bit-identical to np.percentile on the union
-                a = pre if pre is not None else np.empty(0, dtype=np.float64)
-                out[i] = [_pct_union_sorted(a, head, q) for q in qs_p]
-            else:
-                sv, sw = (
-                    pre
-                    if pre is not None
-                    else (np.empty(0, np.float64), np.empty(0, np.float64))
-                )
-                va = np.concatenate([sv, head])
-                wa = np.concatenate([sw, np.ones(len(head))])
-                order = np.argsort(va, kind="mergesort")
-                va, wa = va[order], wa[order]
-                out[i] = [_weighted_pct(va, wa, q) for q in qs_p]
-        return out
-
-    # APPROX_HISTOGRAM_K: entry-sum merge of capped count-maps + exact
-    # head counts, truncated to k by (count desc, key asc); the chr(0)
-    # error sentinel accumulates internally but never surfaces
-    if w is None:
-        karr = _arr(f"{o}__mgk")
-        varr = _arr(f"{o}__mgv")
-        base0: dict = {}
-        for k_, v_ in zip(karr, varr):
-            base0[str(k_)] = base0.get(str(k_), 0) + int(v_)
-        map_by = {None: base0}
-        bkey = [None] * nq
-    else:
-        karr = _hoplists(f"{o}__mgk")
-        varr = _hoplists(f"{o}__mgv")
-        need = set(int(b) for b in uniq_b)
-        map_by = {}
-        curd: dict = {}
-        if len(karr) in need:
-            map_by[len(karr)] = {}
-        lo_b = min(need) if need else 0
-        for t in range(len(karr) - 1, lo_b - 1, -1):
-            for k_, v_ in zip(karr[t].tolist(), varr[t].tolist()):
-                sk = str(k_)
-                curd[sk] = curd.get(sk, 0) + int(v_)
-            if t in need:
-                map_by[t] = dict(curd)
-        bkey = bidx
-    # integral head values key in SQL string form ('14'): the union with
-    # null-input query rows float-coerces the pandas column to 14.0, but
-    # the JVM day IRs CAST the original type (temporal.py histogram branch)
-    int_keys = c["integral"]
-    for i in range(nq):
-        d = dict(map_by[None if w is None else int(bkey[i])])
-        for x in cv[lo[i] : j[i]]:
-            sx = str(int(x)) if int_keys else str(x)
-            d[sx] = d.get(sx, 0) + 1
-        d.pop(_MG_ERR_KEY, None)
-        if not d:
-            out[i] = None
-        else:
-            items = sorted(d.items(), key=lambda e: (-e[1], e[0]))
-            out[i] = dict(items[:k])
-    return out
-
-
-def _urow_arr(urow, col):
-    v = urow.get(col)
-    if v is None or (isinstance(v, float) and np.isnan(v)):
-        return []
-    return list(v)
-
-
-def _fetch_bucketed(c, urow, ev, qt, ws, boundary):
-    """Bucketed scalar part: Map[bucket → agg] per query, merged from
-    per-(hop, bucket) scalar IR rows + the head range — the
-    BucketedColumnAggregator contract (temporal.py kernel :766-798):
-    buckets keyed by string form, an entry only when the merged value is
-    non-None, NaN finalizations (skew n<3 etc.) kept, empty map → None.
-    Batch suffix dicts are accumulated AND finalized once per distinct
-    window-start hop; per-query work is O(head-range + touched buckets),
-    independent of the bucket cardinality."""
-    op, o, w = c["op"], c["o"], c["w"]
-    states = _MOMENT_STATES[op]
+def _serve(p: AggregationPart, urow: dict, head, qt: np.ndarray, kinds: dict) -> pa.Array:
+    """One part at every query of one key: the upload entries at hops ≥
+    the window start suffix-merged, merged with the head events in
+    [window start, qt), finalized. A bucketed part does this per (bucket,
+    query) pair and folds the pairs into Map[bucket → value]."""
+    part = AggregationPart(p.input_column, p.operation, p.arg_map, p.window, None)
     nq = len(qt)
-    out = np.empty(nq, dtype=object)
-    out[:] = None
-    integral, numeric = c["integral"], c["numeric"]
-
-    if op is Operation.APPROX_UNIQUE_COUNT:
-        return _fetch_bucketed_hll(c, urow, ev, qt, ws, boundary)
-
-    # ---- head pack: (ts, bucket, value), value-tie-ordered like the
-    # scalar pack so FIRST/LAST pick the same element on exact ties.
-    # MG count-maps keep original typed values (stringified at merge
-    # time, like the raw kernel), never float-coerced
-    numeric_pack = numeric and op is not Operation.APPROX_HISTOGRAM_K
-    bser = ev[c["bucket"]]
-    vser = ev[c["col"]]
-    m = (bser.notna() & vser.notna()).to_numpy()
-    ets = ev[TS_COL].to_numpy(np.int64)[m]
-    bvals = np.array([str(x) for x in bser[m]], dtype=object)
-    if numeric_pack:
-        xv = pd.to_numeric(vser[m]).to_numpy(np.float64)
-        order = np.lexsort((xv, ets))
+    ws = None
+    if p.window is not None:
+        r = sawtooth_hop_millis(p.window.millis)
+        ws = ((qt - p.window.millis) // r) * r
+    numeric, integral, itype = kinds[p.input_column]
+    values, hop_e, lab_e = _upload_entries(p, urow)
+    ir_e = alg.from_values(part, numeric, integral, values)
+    n_e = len(next(iter(ir_e.values())))
+    if p.bucket is None:
+        evs, labels, group = head, [None], {None: 0}
     else:
-        xv = vser[m].to_numpy(object)
-        order = np.lexsort((np.array([str(x) for x in xv], dtype=object), ets))
-    ets, bvals, xv = ets[order], bvals[order], xv[order]
-    j = np.searchsorted(ets, qt, side="left")
-    lo = (
-        np.zeros(nq, dtype=np.int64)
-        if ws is None
-        else np.searchsorted(ets, np.maximum(ws, boundary), side="left")
-    )
-
-    if op is Operation.APPROX_PERCENTILE:
-        return _fetch_bucketed_pq(c, urow, bvals, xv, lo, j, ws)
-    if op is Operation.APPROX_HISTOGRAM_K:
-        return _fetch_bucketed_mg(c, urow, bvals, xv, lo, j, ws)
-    if op in _GATHER_B:
-        return _fetch_bucketed_gather(c, urow, bvals, xv, lo, j, ws)
-
-    def _absorb(ent, st, val):
-        """Merge one batch state value into a bucket entry; hops are
-        absorbed newest→oldest, so fst overwrites (earliest hop wins)
-        and lst keeps the first non-None seen (latest hop wins)."""
-        if val is None or (isinstance(val, float) and np.isnan(val)):
-            return
-        if st == "n":
-            ent["n"] += int(val)
-        elif st in ("s", "s1", "s2", "s3", "s4"):
-            ent[st] = ent.get(st, 0.0) + float(val)
-        elif st == "mn":
-            ent["mn"] = val if ent.get("mn") is None else min(ent["mn"], val)
-        elif st == "mx":
-            ent["mx"] = val if ent.get("mx") is None else max(ent["mx"], val)
-        elif st == "fst":
-            ent["fst"] = val
-        elif st == "lst":
-            if ent.get("lst") is None:
-                ent["lst"] = val
-
-    def _new_ent():
-        return {"n": 0}
-
-    # ---- batch suffix state per bucket
-    if w is None:
-        bks = _urow_arr(urow, c["bu"])
-        arrs = {}
-        for st in states:
-            if st in ("fst", "lst"):
-                arrs[f"{st}_ts"] = _urow_arr(urow, f"{o}__{st}_ts_bu")
-                arrs[f"{st}_v"] = _urow_arr(urow, f"{o}__{st}_v_bu")
-            else:
-                arrs[st] = _urow_arr(urow, f"{o}__{st}_bu")
-        base0: dict = {}
-        for bi, b in enumerate(bks):
-            ent = base0.setdefault(str(b), _new_ent())
-            for st in states:
-                if st in ("fst", "lst"):
-                    ts_ok = _valid_n(arrs[f"{st}_ts"][bi]) if arrs[f"{st}_ts"] else False
-                    if ts_ok:
-                        _absorb(ent, st, arrs[f"{st}_v"][bi])
-                else:
-                    _absorb(ent, st, arrs[st][bi])
-        snap_by = {None: base0}
-        bkey = [None] * nq
-    else:
-        # per-ENTRY hop array (entries sorted by (hop, bucket)): the
-        # suffix for a window start is a flat entry range
-        hh_e = np.asarray(_urow_arr(urow, c["hop"]), dtype=np.int64)
-        bf = _urow_arr(urow, c["bf"])
-        flats = {}
-        for st in states:
-            if st in ("fst", "lst"):
-                flats[f"{st}_ts"] = _urow_arr(urow, f"{o}__{st}_ts_bw")
-                flats[f"{st}_v"] = _urow_arr(urow, f"{o}__{st}_v_bw")
-            else:
-                flats[st] = _urow_arr(urow, f"{o}__{st}_bw")
-        bidx = np.searchsorted(hh_e, ws, side="left")
-        snap_by = {}
-        cur: dict = {}
-        t = len(hh_e) - 1
-        for nb in sorted({int(b) for b in bidx}, reverse=True):
-            while t >= nb:
-                ent = cur.setdefault(str(bf[t]), _new_ent())
-                for st in states:
-                    if st in ("fst", "lst"):
-                        if _valid_n(flats[f"{st}_ts"][t]):
-                            _absorb(ent, st, flats[f"{st}_v"][t])
-                    else:
-                        _absorb(ent, st, flats[st][t])
-                t -= 1
-            snap_by[nb] = {b: dict(e) for b, e in cur.items()}
-        bkey = bidx
-
-    # ---- finalize-once + head-touched recompute: the per-query work is
-    # O(head-range + touched buckets) instead of O(all buckets). Each
-    # suffix snapshot is finalized ONCE; a query with an empty head range
-    # shares that dict, and otherwise only the buckets its head rows touch
-    # are re-merged from the raw IR entry. Identical (snapshot, lo, j)
-    # triples — common when many queries land between the same two events
-    # — are memoized. Output dicts are shared across rows, never mutated.
-    def _fin_val(v):
-        if v is None:
-            return None
-        if integral:
-            return int(round(float(v)))
-        if numeric:
-            return float(v)
-        return str(v)
-
-    def _fold_head(ent, hvals):
-        for x in hvals:
-            ent["n"] += 1
-            if op is Operation.SUM:
-                ent["s"] = ent.get("s", 0.0) + float(x)
-            elif op in (
-                Operation.AVERAGE,
-                Operation.VARIANCE,
-                Operation.SKEW,
-                Operation.KURTOSIS,
-            ):
-                fx = float(x)
-                ent["s1"] = ent.get("s1", 0.0) + fx
-                if op is not Operation.AVERAGE:
-                    ent["s2"] = ent.get("s2", 0.0) + fx * fx
-                    if op in (Operation.SKEW, Operation.KURTOSIS):
-                        ent["s3"] = ent.get("s3", 0.0) + fx**3
-                    if op is Operation.KURTOSIS:
-                        ent["s4"] = ent.get("s4", 0.0) + fx**4
-            elif op is Operation.MIN:
-                ent["mn"] = x if ent.get("mn") is None else min(ent["mn"], x)
-            elif op is Operation.MAX:
-                ent["mx"] = x if ent.get("mx") is None else max(ent["mx"], x)
-            elif op is Operation.FIRST:
-                if ent.get("fst") is None:
-                    ent["fst"] = x
-            elif op is Operation.LAST:
-                ent["lst"] = x
-
-    def _fin_ent(ent):
-        n = ent["n"]
-        if op is Operation.FIRST:
-            return _fin_val(ent.get("fst"))
-        if op is Operation.LAST:
-            return _fin_val(ent.get("lst"))
-        if n <= 0:
-            return None
-        if op is Operation.COUNT:
-            return int(n)
-        if op is Operation.SUM:
-            return int(round(ent.get("s", 0.0))) if integral else float(ent.get("s", 0.0))
-        if op is Operation.AVERAGE:
-            return float(ent.get("s1", 0.0)) / n
-        if op is Operation.MIN:
-            return _fin_val(ent.get("mn"))
-        if op is Operation.MAX:
-            return _fin_val(ent.get("mx"))
-        # VARIANCE / SKEW / KURTOSIS
-        s1 = ent.get("s1", 0.0)
-        s2 = ent.get("s2", 0.0)
-        m1 = s1 / n
-        m2 = s2 / n - m1 * m1
-        if op is Operation.VARIANCE:
-            return max(m2, 0.0)
-        if op is Operation.SKEW:
-            s3 = ent.get("s3", 0.0)
-            if n < 3 or m2 <= 0:
-                return float("nan")
-            m3 = s3 / n - 3 * m1 * s2 / n + 2 * m1**3
-            return m3 / max(m2, 1e-300) ** 1.5
-        s3, s4 = ent.get("s3", 0.0), ent.get("s4", 0.0)
-        if n < 4 or m2 <= 0:
-            return float("nan")
-        m4 = s4 / n - 4 * m1 * s3 / n + 6 * m1**2 * s2 / n - 3 * m1**4
-        return m4 / max(m2, 1e-300) ** 2 - 3.0
-
-    fin_by = {}
-    for nb, base in snap_by.items():
-        r = {}
-        for b, ent in base.items():
-            v = _fin_ent(ent)
-            if v is not None:
-                r[b] = v
-        fin_by[nb] = r
-
-    memo: dict = {}
-    for i in range(nq):
-        nb = None if w is None else int(bkey[i])
-        l_, r_ = int(lo[i]), int(j[i])
-        if l_ >= r_:
-            fin = fin_by[nb]
-            out[i] = fin if fin else None
-            continue
-        mk = (nb, l_, r_)
-        if mk in memo:
-            out[i] = memo[mk]
-            continue
-        base = snap_by[nb]
-        res = dict(fin_by[nb])
-        touched: dict = {}
-        for r_i in range(l_, r_):
-            touched.setdefault(bvals[r_i], []).append(xv[r_i])
-        for b, hvals in touched.items():
-            pre = base.get(b)
-            ent = dict(pre) if pre is not None else _new_ent()
-            _fold_head(ent, hvals)
-            v = _fin_ent(ent)
-            if v is None:
-                res.pop(b, None)
-            else:
-                res[b] = v
-        res = res if res else None
-        memo[mk] = res
-        out[i] = res
-    return out
-
-
-_GATHER_B = {
-    Operation.TOP_K: "topk",
-    Operation.BOTTOM_K: "botk",
-    Operation.FIRST_K: "fstk",
-    Operation.LAST_K: "lstk",
-    Operation.BOUNDED_UNIQUE_COUNT: "uset",
-}
-
-
-def _fetch_bucketed_gather(c, urow, bvals, xv, lo, j, ws):
-    """Bucketed k-lists / capped sets: Map[bucket → list|count] merged
-    from per-(hop, bucket) ≤k list entries + the head range. Same merge
-    algebra as the unbucketed gather fetch, applied per bucket; batch
-    suffixes accumulate newest→oldest once per distinct window start."""
-    op, o, w, k = c["op"], c["o"], c["w"], c["k"]
-    st = _GATHER_B[op]
-    is_set = op is Operation.BOUNDED_UNIQUE_COUNT
-    nq = len(lo)
-    out = np.empty(nq, dtype=object)
-    out[:] = None
-
-    def _fin(vals):
-        if c["integral"]:
-            return [int(round(float(x))) for x in vals]
-        if c["numeric"]:
-            return [float(x) for x in vals]
-        return [str(x) for x in vals]
-
-    def _lists(suffix_kind):
-        lens = _urow_arr(urow, f"{o}__{st}_{suffix_kind}_l")
-        ln = np.array([0 if not _valid_n(x) else int(x) for x in lens], dtype=np.int64)
-        off = np.concatenate(([0], np.cumsum(ln))).astype(np.int64)
-        flat_raw = urow.get(f"{o}__{st}_{suffix_kind}_f")
-        flat = (
-            np.empty(0, dtype=object)
-            if flat_raw is None
-            or (isinstance(flat_raw, float) and np.isnan(flat_raw))
-            else np.asarray(flat_raw)
-        )
-        return [list(flat[off[t] : off[t + 1]]) for t in range(len(ln))]
-
-    if w is None:
-        bks = _urow_arr(urow, c["bu"])
-        per_b = _lists("bu")
-        base0 = {}
-        for bi, b in enumerate(bks):
-            v = set(per_b[bi]) if is_set else per_b[bi]
-            base0[str(b)] = v
-        snap_by = {None: base0}
-        bkey = [None] * nq
-    else:
-        hh_e = np.asarray(_urow_arr(urow, c["hop"]), dtype=np.int64)
-        bf = _urow_arr(urow, c["bf"])
-        per_e = _lists("bw")
-        bidx = np.searchsorted(hh_e, ws, side="left")
-        snap_by = {}
-        cur: dict = {}
-        t = len(hh_e) - 1
-        for nb in sorted({int(b) for b in bidx}, reverse=True):
-            while t >= nb:
-                b = str(bf[t])
-                ent = per_e[t]
-                prev = cur.get(b)
-                # entries absorb newest→oldest: the current entry is
-                # EARLIER than everything merged so far
-                if is_set:
-                    cur[b] = (prev or set()) | set(ent)
-                elif op is Operation.TOP_K:
-                    cur[b] = sorted(ent + (prev or []), reverse=True)[:k]
-                elif op is Operation.BOTTOM_K:
-                    cur[b] = sorted(ent + (prev or []))[:k]
-                elif op is Operation.FIRST_K:
-                    cur[b] = (ent + (prev or []))[:k]
-                else:  # LAST_K — newest-first; older entry goes last
-                    cur[b] = ((prev or []) + ent)[:k]
-                t -= 1
-            snap_by[nb] = {
-                b: (set(v) if is_set else list(v)) for b, v in cur.items()
-            }
-        bkey = bidx
-
-    def _merge_bucket(pre, hd):
-        if is_set:
-            u = set(pre) | set(hd)
-            return min(len(u), k) if u else None
-        if op is Operation.TOP_K:
-            m = sorted(list(pre) + hd, reverse=True)[:k]
-        elif op is Operation.BOTTOM_K:
-            m = sorted(list(pre) + hd)[:k]
-        elif op is Operation.FIRST_K:
-            m = (list(pre) + hd)[:k]
-        else:  # LAST_K
-            m = (hd[::-1] + list(pre))[:k]
-        return _fin(m) if m else None
-
-    # finalize-once + head-touched recompute (see _fetch_bucketed): per
-    # query O(head + touched buckets), empty-head queries share the
-    # snapshot's finalized dict, (snapshot, lo, j) memoized
-    fin_by = {}
-    for nb, base in snap_by.items():
-        r = {}
-        for b, pre in base.items():
-            v = _merge_bucket(pre, [])
-            if v is not None:
-                r[b] = v
-        fin_by[nb] = r
-
-    memo: dict = {}
-    for i in range(nq):
-        nb = None if w is None else int(bkey[i])
-        l_, r_ = int(lo[i]), int(j[i])
-        if l_ >= r_:
-            fin = fin_by[nb]
-            out[i] = fin if fin else None
-            continue
-        mk = (nb, l_, r_)
-        if mk in memo:
-            out[i] = memo[mk]
-            continue
-        base = snap_by[nb]
-        heads: dict = {}
-        for r_i in range(l_, r_):
-            heads.setdefault(bvals[r_i], []).append(xv[r_i])
-        res = dict(fin_by[nb])
-        for b, hd in heads.items():
-            v = _merge_bucket(base.get(b, set() if is_set else []), hd)
-            if v is None:
-                res.pop(b, None)
-            else:
-                res[b] = v
-        res = res if res else None
-        memo[mk] = res
-        out[i] = res
-    return out
-
-
-def _fetch_bucketed_mg(c, urow, bvals, xv, lo, j, ws):
-    """Bucketed APPROX_HISTOGRAM_K: per bucket, entry-sum merge of the
-    per-(hop, bucket) capped Misra-Gries count-maps + exact head counts,
-    truncated to k by (count desc, key asc) — the unbucketed MG fetch
-    algebra applied per bucket. Because Map[bucket → Map[key → count]]
-    cannot cross the Arrow cogroup boundary, the result ships as FOUR
-    parallel flat columns per query ({o}__bk bucket labels, {o}__ln
-    per-bucket entry counts, {o}__k flat keys, {o}__v flat counts) and
-    fetch_features densifies them to the nested map in a post-kernel
-    select — the same flat-frame trick as the upload rows themselves."""
-    o, w, k = c["o"], c["w"], c["k"]
-    nq = len(lo)
-
-    def _pair_lists(kind):
-        def one(st):
-            lens = _urow_arr(urow, f"{o}__{st}_{kind}_l")
-            ln = np.array(
-                [0 if not _valid_n(x) else int(x) for x in lens], dtype=np.int64
-            )
-            off = np.concatenate(([0], np.cumsum(ln))).astype(np.int64)
-            flat_raw = urow.get(f"{o}__{st}_{kind}_f")
-            flat = (
-                np.empty(0, dtype=object)
-                if flat_raw is None
-                or (isinstance(flat_raw, float) and np.isnan(flat_raw))
-                else np.asarray(flat_raw)
-            )
-            return [flat[off[t] : off[t + 1]] for t in range(len(ln))]
-
-        return one("mgk"), one("mgv")
-
-    def _absorb_entry(d, ks_, vs_):
-        for k_, v_ in zip(ks_.tolist(), vs_.tolist()):
-            sk = str(k_)
-            d[sk] = d.get(sk, 0) + int(v_)
-
-    if w is None:
-        bks = _urow_arr(urow, c["bu"])
-        kls, vls = _pair_lists("bu")
-        base0: dict = {}
-        for bi, b in enumerate(bks):
-            _absorb_entry(base0.setdefault(str(b), {}), kls[bi], vls[bi])
-        snap_by = {None: base0}
-        bkey = [None] * nq
-    else:
-        hh_e = np.asarray(_urow_arr(urow, c["hop"]), dtype=np.int64)
-        bf = _urow_arr(urow, c["bf"])
-        kls, vls = _pair_lists("bw")
-        bidx = np.searchsorted(hh_e, ws, side="left")
-        snap_by = {}
-        cur: dict = {}
-        t = len(hh_e) - 1
-        for nb in sorted({int(b) for b in bidx}, reverse=True):
-            while t >= nb:
-                _absorb_entry(cur.setdefault(str(bf[t]), {}), kls[t], vls[t])
-                t -= 1
-            snap_by[nb] = {b: dict(e) for b, e in cur.items()}
-        bkey = bidx
-
-    outs = {s: np.empty(nq, dtype=object) for s in ("bk", "ln", "k", "v")}
-    for arr in outs.values():
-        arr[:] = None
-    # integral head values key in SQL string form — see the unbucketed
-    # MG fetch above
-    int_keys = c["integral"]
-
-    def _items_of(ent):
-        e = {k_: v_ for k_, v_ in ent.items() if k_ != _MG_ERR_KEY}
-        if not e:
-            return None
-        return sorted(e.items(), key=lambda x: (-x[1], x[0]))[:k]
-
-    def _assemble(itm):
-        bks_o, lns, fks, fvs = [], [], [], []
-        for b in sorted(itm):
-            items = itm[b]
-            bks_o.append(b)
-            lns.append(len(items))
-            fks.extend(x[0] for x in items)
-            fvs.extend(int(x[1]) for x in items)
-        return (bks_o, lns, fks, fvs) if bks_o else None
-
-    # finalize-once + head-touched recompute (see _fetch_bucketed): the
-    # per-bucket truncated item lists are computed once per snapshot;
-    # a query re-sorts only head-touched buckets, and identical
-    # (snapshot, lo, j) triples share one assembled flat tuple
-    fin_items = {}
-    fin_asm = {}
-    for nb, base in snap_by.items():
-        itm = {}
-        for b, ent in base.items():
-            it = _items_of(ent)
-            if it is not None:
-                itm[b] = it
-        fin_items[nb] = itm
-        fin_asm[nb] = _assemble(itm)
-
-    def _store(i, asm):
-        if asm is not None:
-            outs["bk"][i], outs["ln"][i] = asm[0], asm[1]
-            outs["k"][i], outs["v"][i] = asm[2], asm[3]
-
-    memo: dict = {}
-    for i in range(nq):
-        nb = None if w is None else int(bkey[i])
-        l_, r_ = int(lo[i]), int(j[i])
-        if l_ >= r_:
-            _store(i, fin_asm[nb])
-            continue
-        mk = (nb, l_, r_)
-        if mk in memo:
-            _store(i, memo[mk])
-            continue
-        base = snap_by[nb]
-        touched: dict = {}
-        for r_i in range(l_, r_):
-            ent = touched.setdefault(bvals[r_i], {})
-            sx = str(int(xv[r_i])) if int_keys else str(xv[r_i])
-            ent[sx] = ent.get(sx, 0) + 1
-        itm = dict(fin_items[nb])
-        for b, hcounts in touched.items():
-            ent = dict(base.get(b, ()))
-            for sk, n_ in hcounts.items():
-                ent[sk] = ent.get(sk, 0) + n_
-            it = _items_of(ent)
-            if it is None:
-                itm.pop(b, None)
-            else:
-                itm[b] = it
-        asm = _assemble(itm)
-        memo[mk] = asm
-        _store(i, asm)
-    return outs
-
-
-def _pct_lists(urow, base, kind):
-    """Per-entry (n, sample) percentile IR lists from flat arrays."""
-    lens = _urow_arr(urow, f"{base}_q_{kind}_l")
-    ln = np.array([0 if not _valid_n(x) else int(x) for x in lens], dtype=np.int64)
-    off = np.concatenate(([0], np.cumsum(ln))).astype(np.int64)
-    flat_raw = urow.get(f"{base}_q_{kind}_f")
-    flat = (
-        np.empty(0, dtype=np.float64)
-        if flat_raw is None or (isinstance(flat_raw, float) and np.isnan(flat_raw))
-        else np.asarray(flat_raw, dtype=np.float64)
-    )
-    ns = [
-        0 if not _valid_n(x) else int(x)
-        for x in _urow_arr(urow, f"{base}_n_{kind}")
-    ]
-    return ns, [flat[off[t] : off[t + 1]] for t in range(len(ln))]
-
-
-def _fetch_bucketed_pq(c, urow, bvals, xv, lo, j, ws):
-    """Bucketed APPROX_PERCENTILE: Map[bucket → percentile list] merged
-    from per-(hop, bucket) (n, ≤S equi-rank sample) IRs + head values —
-    exact per bucket while no contributing IR truncated, the op's own
-    weighted-sample contract beyond."""
-    from chronon_spark.operators.temporal import _weighted_pct
-
-    o, w, qs_p = c["o"], c["w"], c["percentiles"]
-    nq = len(lo)
-    out = np.empty(nq, dtype=object)
-    out[:] = None
-
-    if w is None:
-        bks = _urow_arr(urow, c["bu"])
-        ns, qls = _pct_lists(urow, f"{o}__pqs", "bu")
-        base0: dict = {}
-        for bi, b in enumerate(bks):
-            if bi < len(ns) and ns[bi] > 0:
-                base0.setdefault(str(b), []).append((ns[bi], qls[bi]))
-        snap_by = {None: base0}
-        bkey = [None] * nq
-    else:
-        hh_e = np.asarray(_urow_arr(urow, c["hop"]), dtype=np.int64)
-        bf = _urow_arr(urow, c["bf"])
-        ns, qls = _pct_lists(urow, f"{o}__pqs", "bw")
-        bidx = np.searchsorted(hh_e, ws, side="left")
-        snap_by = {}
-        cur: dict = {}
-        t = len(hh_e) - 1
-        for nb in sorted({int(b) for b in bidx}, reverse=True):
-            while t >= nb:
-                if ns[t] > 0:
-                    cur.setdefault(str(bf[t]), []).append((ns[t], qls[t]))
-                t -= 1
-            snap_by[nb] = {b: list(v) for b, v in cur.items()}
-        bkey = bidx
-
-    def _pct_of(prs, head):
-        if not prs and len(head) == 0:
-            return None
-        if all(n_ == len(q_) for n_, q_ in prs):
-            allv = np.concatenate([q_ for _, q_ in prs] + [head]) if prs else head
-            return [float(np.percentile(allv, q * 100)) for q in qs_p]
-        va = np.concatenate([q_ for _, q_ in prs] + [head])
-        wa = np.concatenate(
-            [np.full(len(q_), n_ / len(q_)) for n_, q_ in prs]
-            + [np.ones(len(head))]
-        )
-        order = np.argsort(va, kind="mergesort")
-        va, wa = va[order], wa[order]
-        return [_weighted_pct(va, wa, q) for q in qs_p]
-
-    # finalize-once + head-touched recompute (see _fetch_bucketed)
-    _EMPTY = np.empty(0, dtype=np.float64)
-    fin_by = {}
-    for nb, base in snap_by.items():
-        r = {}
-        for b, prs in base.items():
-            v = _pct_of(prs, _EMPTY)
-            if v is not None:
-                r[b] = v
-        fin_by[nb] = r
-
-    memo: dict = {}
-    for i in range(nq):
-        nb = None if w is None else int(bkey[i])
-        l_, r_ = int(lo[i]), int(j[i])
-        if l_ >= r_:
-            fin = fin_by[nb]
-            out[i] = fin if fin else None
-            continue
-        mk = (nb, l_, r_)
-        if mk in memo:
-            out[i] = memo[mk]
-            continue
-        base = snap_by[nb]
-        heads: dict = {}
-        for r_i in range(l_, r_):
-            heads.setdefault(bvals[r_i], []).append(float(xv[r_i]))
-        res = dict(fin_by[nb])
-        for b, hd in heads.items():
-            v = _pct_of(base.get(b, []), np.asarray(hd, dtype=np.float64))
-            if v is None:
-                res.pop(b, None)
-            else:
-                res[b] = v
-        res = res if res else None
-        memo[mk] = res
-        out[i] = res
-    return out
-
-
-def _fetch_bucketed_hll(c, urow, ev, qt, ws, boundary):
-    """Bucketed APPROX_UNIQUE_COUNT: Map[bucket → estimate] from
-    per-(hop, bucket) sparse HLL register entries + per-event head
-    (idx, rho) — register max is associative, so the merged estimate is
-    bit-identical to the raw kernel's per-bucket registers."""
-    o, col, w = c["o"], c["col"], c["w"]
-    nq = len(qt)
-    out = np.empty(nq, dtype=object)
-    out[:] = None
-
-    def _regs(kind):
-        lens = _urow_arr(urow, f"{o}__hreg_{kind}_l")
-        ln = np.array([0 if not _valid_n(x) else int(x) for x in lens], dtype=np.int64)
-        off = np.concatenate(([0], np.cumsum(ln))).astype(np.int64)
-        fi = np.asarray(_urow_arr(urow, f"{o}__hreg_i_{kind}_f"), dtype=np.int64)
-        fr = np.asarray(_urow_arr(urow, f"{o}__hreg_r_{kind}_f"), dtype=np.int64)
-        return ln, off, fi, fr
-
-    # head: (ts, bucket, idx, rho) — idx/rho precomputed JVM-side
-    hi = pd.to_numeric(ev[f"__hi_{col}"], errors="coerce").to_numpy(np.float64)
-    hr = pd.to_numeric(ev[f"__hr_{col}"], errors="coerce").to_numpy(np.float64)
-    bser = ev[c["bucket"]]
-    nn = ~np.isnan(hi) & bser.notna().to_numpy()
-    ets = ev[TS_COL].to_numpy(np.int64)[nn]
-    b_head = np.array([str(x) for x in bser[nn]], dtype=object)
-    ih = hi[nn].astype(np.int64)
-    rh = hr[nn].astype(np.uint8)
-    order = np.argsort(ets, kind="stable")
-    ets, b_head, ih, rh = ets[order], b_head[order], ih[order], rh[order]
-    j = np.searchsorted(ets, qt, side="left")
-    lo = (
-        np.zeros(nq, dtype=np.int64)
-        if ws is None
-        else np.searchsorted(ets, np.maximum(ws, boundary), side="left")
-    )
-
-    if w is None:
-        bks = _urow_arr(urow, c["bu"])
-        ln, off, fi, fr = _regs("bu")
-        base0: dict = {}
-        for bi, b in enumerate(bks):
-            regs = base0.setdefault(str(b), np.zeros(HLL_M, dtype=np.uint8))
-            if bi < len(ln) and ln[bi]:
-                np.maximum.at(
-                    regs, fi[off[bi] : off[bi + 1]], fr[off[bi] : off[bi + 1]].astype(np.uint8)
-                )
-        snap_by = {None: base0}
-        bkey = [None] * nq
-    else:
-        hh_e = np.asarray(_urow_arr(urow, c["hop"]), dtype=np.int64)
-        bf = _urow_arr(urow, c["bf"])
-        ln, off, fi, fr = _regs("bw")
-        bidx = np.searchsorted(hh_e, ws, side="left")
-        snap_by = {}
-        cur: dict = {}
-        t = len(hh_e) - 1
-        for nb in sorted({int(b) for b in bidx}, reverse=True):
-            while t >= nb:
-                regs = cur.setdefault(str(bf[t]), np.zeros(HLL_M, dtype=np.uint8))
-                if ln[t]:
-                    np.maximum.at(
-                        regs, fi[off[t] : off[t + 1]], fr[off[t] : off[t + 1]].astype(np.uint8)
-                    )
-                t -= 1
-            snap_by[nb] = {b: r.copy() for b, r in cur.items()}
-        bkey = bidx
-
-    # finalize-once + head-touched recompute (see _fetch_bucketed): the
-    # per-bucket estimates are computed once per snapshot; a query copies
-    # and re-estimates only head-touched buckets' registers
-    fin_by = {}
-    for nb, base in snap_by.items():
-        fin_by[nb] = {
-            b: int(round(float(hll_estimate(r)))) for b, r in base.items() if r.any()
-        }
-
-    memo: dict = {}
-    for i in range(nq):
-        nb = None if w is None else int(bkey[i])
-        l_, r_ = int(lo[i]), int(j[i])
-        if l_ >= r_:
-            fin = fin_by[nb]
-            out[i] = fin if fin else None
-            continue
-        mk = (nb, l_, r_)
-        if mk in memo:
-            out[i] = memo[mk]
-            continue
-        base = snap_by[nb]
-        touched: dict = {}
-        for r_i in range(l_, r_):
-            touched.setdefault(b_head[r_i], []).append(r_i)
-        res = dict(fin_by[nb])
-        for b, rows in touched.items():
-            pre = base.get(b)
-            regs = pre.copy() if pre is not None else np.zeros(HLL_M, dtype=np.uint8)
-            idx = np.array(rows, dtype=np.int64)
-            np.maximum.at(regs, ih[idx], rh[idx])
-            if regs.any():
-                res[b] = int(round(float(hll_estimate(regs))))
-            else:
-                res.pop(b, None)
-        res = res if res else None
-        memo[mk] = res
-        out[i] = res
-    return out
-
-
-def _fetch_minmax(c, urow, cts, cv, lo, j, ws, boundary):
-    o, op = c["o"], c["op"]
-    fn, acc = (np.fmin, np.minimum) if op is Operation.MIN else (np.fmax, np.maximum)
-    sname = "mn" if op is Operation.MIN else "mx"
-    # batch: suffix accumulate over hop states
-    if ws is None:
-        b = np.full(len(lo), _nan_f(urow.get(f"{o}__{sname}")))
-    else:
-        hh = _np(urow, c["hop"], np.int64)
-        arr = _np(urow, f"{o}__{sname}", np.float64)
-        suf = np.full(len(hh) + 1, np.nan)
-        if len(hh):
-            suf[:-1] = acc.accumulate(np.where(np.isnan(arr[::-1]), np.inf if op is Operation.MIN else -np.inf, arr[::-1]))[::-1]
-            suf[np.isinf(suf)] = np.nan
-        bidx = np.searchsorted(hh, ws, side="left")
-        b = suf[bidx]
-    # head: prefix accumulate covers lo == 0; short-window rows slice
-    n = len(cts)
-    h = np.full(len(lo), np.nan)
-    if n:
-        pre = acc.accumulate(cv)
-        full = lo == 0
-        jj = j[full]
-        h[full] = np.where(jj > 0, pre[np.maximum(jj - 1, 0)], np.nan)
-        for i in np.flatnonzero(~full):
-            if j[i] > lo[i]:
-                h[i] = cv[lo[i] : j[i]].min() if op is Operation.MIN else cv[lo[i] : j[i]].max()
-    return fn(b, h)
-
-
-def _fetch_firstlast(c, urow, cts, cv, lo, j, ws):
-    o, op = c["o"], c["op"]
-    first = op is Operation.FIRST
-    nq = len(lo)
-    out = np.empty(nq, dtype=object)
-    out[:] = None
-    if ws is None:
-        bts = urow.get(f"{o}__{'fst' if first else 'lst'}_ts")
-        bv = urow.get(f"{o}__{'fst' if first else 'lst'}_v")
-        has_b = np.full(nq, bts is not None and not (isinstance(bts, float) and np.isnan(bts)))
-        bvs = np.full(nq, bv, dtype=object)
-    else:
-        hh = _np(urow, c["hop"], np.int64)
-        st = "fst" if first else "lst"
-        hts = _np(urow, f"{o}__{st}_ts", np.float64)
-        hv_raw = urow.get(f"{o}__{st}_v")
-        hv = (
-            np.empty(0, dtype=object)
-            if hv_raw is None or (isinstance(hv_raw, float) and np.isnan(hv_raw))
-            else np.asarray(hv_raw, dtype=object)
-        )
-        valid = np.flatnonzero(~np.isnan(hts)) if len(hts) else np.empty(0, np.int64)
-        bidx = np.searchsorted(hh, ws, side="left")
-        has_b = np.zeros(nq, dtype=bool)
-        bvs = np.empty(nq, dtype=object)
-        # FIRST: first valid hop ≥ window start; LAST: last valid hop
-        # (hop ranges are disjoint ascending, so hop order is time order)
-        for i in range(nq):
-            k = np.searchsorted(valid, bidx[i], side="left")
-            if first:
-                if k < len(valid):
-                    has_b[i] = True
-                    bvs[i] = hv[valid[k]]
-            else:
-                if k < len(valid):
-                    has_b[i] = True
-                    bvs[i] = hv[valid[-1]]
-    has_h = j > lo
-    for i in range(nq):
-        if first:
-            out[i] = bvs[i] if has_b[i] else (cv[lo[i]] if has_h[i] else None)
+        evs, _, hl = head.by_bucket(p.bucket)
+        group = {lab: g for g, lab in enumerate(hl.to_pylist())}
+        labels = sorted(set(group) | set(lab_e))
+    pl = np.repeat(np.arange(len(labels)), nq)
+    pq = np.tile(np.arange(nq), len(labels))
+    # batch side: per label, one suffix merge per distinct window-start hop
+    pieces = []
+    for lab in labels:
+        sel = np.arange(n_e) if lab is None else np.flatnonzero(np.asarray(lab_e, dtype=object) == lab)
+        sub = alg.take(ir_e, sel)
+        if ws is None:
+            starts, pos = np.zeros(1, dtype=np.int64), np.zeros(nq, dtype=np.int64)
         else:
-            out[i] = cv[j[i] - 1] if has_h[i] else (bvs[i] if has_b[i] else None)
-    if c["numeric"]:
-        return np.array([np.nan if v is None else float(v) for v in out])
-    return out
+            starts, pos = np.unique(np.searchsorted(hop_e[sel], ws, side="left"), return_inverse=True)
+        pieces.append(alg.take(alg.suffix(part, sub, starts), pos))
+    batch = alg.concat(pieces) if pieces else alg.take(ir_e, np.zeros(0, dtype=np.int64))
+    # head side: the pair's events in [window start, qt)
+    g = np.array([group.get(lab, -1) for lab in labels], dtype=np.int64)[pl]
+    lo = np.zeros(len(pl), dtype=np.int64)
+    hi = np.zeros(len(pl), dtype=np.int64)
+    on = g >= 0
+    hi[on] = evs.search(g[on], qt[pq[on]])
+    lo[on] = evs.start(g[on]) if ws is None else evs.search(g[on], ws[pq[on]])
+    ir = alg.merge(part, batch, alg.reduce(part, evs.input(part), lo, hi))
+    arr = _to_arrow(alg.finalize(part, ir), part, itype)
+    if p.bucket is None:
+        return arr
+    return _bucket_map(arr, pa.array(labels, pa.string()), pl, pq, nq)
 
 
-def _fetch_hll(c, urow, ev, qt, ws, boundary):
-    o, col = c["o"], c["col"]
-    nq = len(qt)
-    # batch: per-hop-suffix dense register snapshots (windowed) or the
-    # collapsed register entries (unbounded)
-    if ws is None:
-        bi = _np(urow, f"{o}__i", np.int64)
-        br = _np(urow, f"{o}__r", np.int64)
-        base = np.zeros(HLL_M, dtype=np.uint8)
-        if len(bi):
-            np.maximum.at(base, bi, br.astype(np.uint8))
-        snaps, bidx = base[None, :], np.zeros(nq, dtype=np.int64)
+def _upload_entries(p: AggregationPart, urow: dict):
+    """The upload row's IR entries of one part, as serialized state values
+    (op_algebra.from_values), plus each entry's hop start (windowed parts;
+    hops ascending per bucket) and bucket label (bucketed parts).
+    Unbounded unbucketed parts have one collapsed entry; list states ride
+    as (flat values, per-entry lengths) columns (see group_by_upload)."""
+    o = p.output_column
+    windowed = p.window is not None
+    r = sawtooth_hop_millis(p.window.millis) if windowed else None
+    tag = "" if p.bucket is None else ("_bw" if windowed else "_bu")
+
+    def name(st: str, comp: str = "") -> str:
+        return f"{o}__{st}{comp}{tag}"
+
+    labels = None
+    if p.bucket is not None:
+        labels = urow.get(f"__bf_{r}_{p.bucket}" if windowed else f"__bu_{p.bucket}") or []
+        hops = urow.get(f"__bh_{r}_{p.bucket}") if windowed else None
+        n = len(labels)
+    elif windowed:
+        hops = urow.get(f"__h{r}") or []
+        n = len(hops)
     else:
-        hh_e = _np(urow, f"{o}__hh", np.int64)  # hop per entry (sorted)
-        bi = _np(urow, f"{o}__i", np.int64)
-        br = _np(urow, f"{o}__r", np.int64)
-        hops = np.unique(hh_e)
-        snaps = np.zeros((len(hops) + 1, HLL_M), dtype=np.uint8)
-        for k in range(len(hops) - 1, -1, -1):
-            snaps[k] = snaps[k + 1]
-            s0, s1 = np.searchsorted(hh_e, hops[k], "left"), np.searchsorted(
-                hh_e, hops[k], "right"
-            )
-            np.maximum.at(snaps[k], bi[s0:s1], br[s0:s1].astype(np.uint8))
-        bidx = np.searchsorted(hops, ws, side="left")
-    # head: per-event (idx, rho) precomputed JVM-side
-    hi = pd.to_numeric(ev[f"__hi_{col}"], errors="coerce").to_numpy(np.float64)
-    ets = ev[TS_COL].to_numpy(np.int64)
-    nn = ~np.isnan(hi)
-    ets, hi = ets[nn], hi[nn].astype(np.int64)
-    hr = (
-        pd.to_numeric(ev[f"__hr_{col}"], errors="coerce")
-        .to_numpy(np.float64)[nn]
-        .astype(np.uint8)
-    )
-    order = np.argsort(ets, kind="stable")
-    ets, hi, hr = ets[order], hi[order], hr[order]
-    out = np.empty(nq, dtype=object)
-    out[:] = None
-    j = np.searchsorted(ets, qt, side="left")
-    lo = (
-        np.zeros(nq, dtype=np.int64)
-        if ws is None
-        else np.searchsorted(ets, np.maximum(ws, boundary), side="left")
-    )
-    for i in range(nq):
-        regs = snaps[bidx[i]].copy()
-        if j[i] > lo[i]:
-            np.maximum.at(regs, hi[lo[i] : j[i]], hr[lo[i] : j[i]])
-        if regs.any():
-            out[i] = float(hll_estimate(regs))
+        hops, n = None, 1
+    single = p.bucket is None and not windowed
+
+    def scalars(nm: str) -> list:
+        v = urow.get(nm)
+        return [v] if single else (v or [None] * n)
+
+    def lists(nm: str, lens_nm: "str | None" = None) -> list:
+        if single:
+            return [urow.get(nm)]
+        lens = urow.get(f"{lens_nm or nm}_l") or [0] * n
+        flat = urow.get(f"{nm}_f") or []
+        off = np.concatenate(([0], np.cumsum([x or 0 for x in lens]))).astype(np.int64)
+        return [flat[a:b] for a, b in zip(off[:-1], off[1:])]
+
+    values = {}
+    for st in alg.STATES[p.operation]:
+        kind = alg.STATE_KIND[st]
+        if kind == "seq":
+            values[st] = lists(name(st))
+        elif st == "mgh":
+            values[st] = list(zip(lists(name("mgk")), lists(name("mgv"))))
+        elif st == "pqs":
+            values[st] = [alg.sample_of(m, q) for m, q in zip(scalars(name(st, "_n")), lists(name(st, "_q")))]
+        elif st == "hreg" and p.bucket is None:
+            # register entries (idx, rho), per hop entry when windowed
+            ii, rr = urow.get(f"{o}__i") or [], urow.get(f"{o}__r") or []
+            if single:
+                values[st] = [(ii, rr)]
+                continue
+            hh = np.asarray(urow.get(f"{o}__hh") or [], dtype=np.int64)
+            hops = np.unique(hh)
+            cut = np.searchsorted(hh, hops, side="right")
+            values[st] = [(ii[a:b], rr[a:b]) for a, b in zip(np.r_[0, cut[:-1]], cut)]
+        elif st == "hreg":
+            values[st] = list(zip(lists(name(st, "_i"), name(st)), lists(name(st, "_r"), name(st))))
         else:
-            out[i] = np.nan
-    return np.array([np.nan if v is None else v for v in out], dtype=np.float64)
+            values[st] = scalars(name(st))
+    hop_e = None if hops is None else np.asarray(hops, dtype=np.int64)
+    return values, hop_e, labels
 
 
 def fetch_consistency(

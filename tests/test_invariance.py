@@ -251,7 +251,7 @@ def test_segment_prefix_sums_bit_identical():
     """Float prefix sums over a batch of key segments restart per segment:
     every in-segment range sum equals the per-key prefix difference bit
     for bit."""
-    from chronon_spark.operators.temporal import _EventCol, _prefix
+    from chronon_spark.functions.op_algebra import EventCol as _EventCol, prefix as _prefix
 
     rng = np.random.default_rng(7)
     lens = rng.integers(1, 40, 60)

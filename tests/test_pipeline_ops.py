@@ -38,6 +38,18 @@ def test_exact_dedup(spark, docs):
     assert out.agg(F.sum("dup_count")).first()[0] == docs.count()
 
 
+def test_exact_dedup_fails_on_all_null_id_cluster(spark):
+    """min_by skips null ids: a cluster whose ids are all null has no row
+    to keep, so the query must fail instead of emitting doc_id = NULL,
+    text = NULL, dup_count = 2. A cluster with one non-null id keeps it."""
+    schema = "doc_id long, text string"
+    kept = exact_dedup(spark.createDataFrame([(None, "Same  Text"), (7, "same text")], schema))
+    assert [tuple(r) for r in kept.collect()] == [(7, "same text", 2)]
+    lost = exact_dedup(spark.createDataFrame([(None, "Same  Text"), (None, "same text")], schema))
+    with pytest.raises(Exception, match="no row with a non-null doc_id"):
+        lost.collect()
+
+
 def test_minhash_self_duplicates(spark, docs):
     """A doc duplicated verbatim must be found by minhash LSH."""
     d2 = docs.limit(5).withColumn("doc_id", F.col("doc_id") + 1_000_000)

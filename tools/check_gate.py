@@ -3,13 +3,17 @@ entry on Spark and its oracle_sql() in DuckDB at sf0.01, canonicalize both
 sides the way the driver does (columns sorted by name, rows sorted by all
 columns, pandas dtype + exact values), and diff.
 
+Spark runs at local[N] with N shuffle partitions, N = $SPARK_GRAFT_CPUS,
+or the CPUs this process may run on (what ``nproc`` prints) when unset.
+
 Usage: python tools/check_gate.py [sf_dir] [name...]
 """
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import numpy as np
@@ -73,7 +77,8 @@ def values_equal(a, b) -> bool:
 def main():
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = build_session(app_name="gate", master="local[8]", shuffle_partitions=8)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    spark = build_session(app_name="gate", master=f"local[{cpus}]", shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     con.execute("PRAGMA threads=8")
