@@ -31,6 +31,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from chronon_spark.api.types import AggregationPart, Operation
+from chronon_spark.functions.op_algebra import MG_ERR_KEY
 
 # epoch-millis ts column name used inside event frames
 TS = "ts"
@@ -575,8 +576,9 @@ _register(
 
 # Sentinel map key carrying the Misra-Gries truncation error inside
 # APPROX_HISTOGRAM_K day IRs. chr(0) prefix: sorts before (and cannot be
-# produced by) any printable stringified value.
-_MG_ERR_KEY_SQL = "concat(chr(0), '__mg_err')"
+# produced by) any printable stringified value. op_algebra.MG_ERR_KEY
+# spelled in SQL, where a string literal cannot hold chr(0).
+_MG_ERR_KEY_SQL = f"concat(chr(0), '{MG_ERR_KEY[1:]}')"
 
 
 def _hist_ir_capped(inp: str, part: AggregationPart) -> Column:

@@ -374,14 +374,6 @@ def sample_of(n, q) -> tuple:
 # ------------------------------------------------------------ the algebra
 
 
-def _k(part: AggregationPart) -> int:
-    return int(part.arg_map.get("k", 1))
-
-
-def _float_state(op: Operation, st: str, integral: bool) -> bool:
-    return not (st == "n" or (st == "s1" and integral and op is Operation.SUM))
-
-
 def _nones(n: int) -> np.ndarray:
     return np.full(n, None, dtype=object)
 
@@ -516,7 +508,7 @@ def finalize(part: AggregationPart, ir: dict):
         return v, (np.isfinite(v) if op in (Operation.MIN, Operation.MAX) else ~np.isnan(v))
     if op in (Operation.MIN, Operation.MAX, Operation.FIRST, Operation.LAST):
         return v
-    k = _k(part)
+    k = int(part.arg_map.get("k", 1))
     out = _nones(len(v))
     for i, x in enumerate(v):
         if op in (Operation.HISTOGRAM, Operation.APPROX_HISTOGRAM_K):
@@ -555,8 +547,8 @@ def from_values(part: AggregationPart, numeric: bool, integral: bool, values: di
         col = values[st]
         kind = STATE_KIND[st]
         if kind == "sum":
-            dt = np.float64 if _float_state(op, st, integral) else np.int64
-            ir[st] = np.array([0 if _null(v) else v for v in col], dtype=dt)
+            exact = st == "n" or (st == "s1" and integral and op is Operation.SUM)
+            ir[st] = np.array([0 if _null(v) else v for v in col], dtype=np.int64 if exact else np.float64)
         elif kind in ("min", "max", "first", "last") and numeric:
             empty = {"min": np.inf, "max": -np.inf}.get(kind, np.nan)
             ir[st] = np.array([empty if _null(v) else float(v) for v in col], dtype=np.float64)

@@ -900,16 +900,18 @@ def _serve(p: AggregationPart, urow: dict, head, qt: np.ndarray, kinds: dict) ->
         labels = sorted(set(group) | set(lab_e))
     pl = np.repeat(np.arange(len(labels)), nq)
     pq = np.tile(np.arange(nq), len(labels))
-    # batch side: per label, one suffix merge per distinct window-start hop
-    pieces = []
+    # batch side: per label, one suffix merge per distinct window-start
+    # hop; each pair points at its suffix row
+    pieces, rows, n_rows = [], [], 0
     for lab in labels:
         sel = np.arange(n_e) if lab is None else np.flatnonzero(np.asarray(lab_e, dtype=object) == lab)
-        sub = alg.take(ir_e, sel)
         if ws is None:
             starts, pos = np.zeros(1, dtype=np.int64), np.zeros(nq, dtype=np.int64)
         else:
             starts, pos = np.unique(np.searchsorted(hop_e[sel], ws, side="left"), return_inverse=True)
-        pieces.append(alg.take(alg.suffix(part, sub, starts), pos))
+        rows.append(pos + n_rows)
+        n_rows += len(starts)
+        pieces.append(alg.suffix(part, alg.take(ir_e, sel), starts))
     batch = alg.concat(pieces) if pieces else alg.take(ir_e, np.zeros(0, dtype=np.int64))
     # head side: the pair's events in [window start, qt)
     g = np.array([group.get(lab, -1) for lab in labels], dtype=np.int64)[pl]
@@ -918,8 +920,16 @@ def _serve(p: AggregationPart, urow: dict, head, qt: np.ndarray, kinds: dict) ->
     on = g >= 0
     hi[on] = evs.search(g[on], qt[pq[on]])
     lo[on] = evs.start(g[on]) if ws is None else evs.search(g[on], ws[pq[on]])
-    ir = alg.merge(part, batch, alg.reduce(part, evs.input(part), lo, hi))
-    arr = _to_arrow(alg.finalize(part, ir), part, itype)
+    empty = lo == hi
+    lo[empty] = hi[empty] = 0
+    # pairs with the same suffix row and head range share one evaluation:
+    # most (bucket, query) pairs of a wide bucket column have no head
+    # events and one of few window starts
+    key = np.stack([np.concatenate(rows) if rows else lo, lo, hi], axis=1)
+    uniq, inv = np.unique(key, axis=0, return_inverse=True)
+    head_ir = alg.reduce(part, evs.input(part), uniq[:, 1], uniq[:, 2])
+    ir = alg.merge(part, alg.take(batch, uniq[:, 0]), head_ir)
+    arr = _to_arrow(alg.finalize(part, ir), part, itype).take(inv.reshape(-1))
     if p.bucket is None:
         return arr
     return _bucket_map(arr, pa.array(labels, pa.string()), pl, pq, nq)

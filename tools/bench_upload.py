@@ -168,9 +168,9 @@ GB_HIBUCK = GroupBy(
     sources=(EventSource(table="ev"),),
     key_columns=("user",),
     aggregations=(
-        # one part per bucketed fetch family over a ~400-distinct bucket
-        # column: scalar (_fetch_bucketed), gather (_fetch_bucketed_gather),
-        # count-map (_fetch_bucketed_mg), percentile (_fetch_bucketed_pq)
+        # one part per IR state kind over a ~400-distinct bucket column:
+        # scalar sums, a k-list, a count-map and a weighted sample
+        # (functions/op_algebra.py STATE_KIND)
         Aggregation("v", Operation.SUM, windows=(Window(7),), buckets=("hib",)),
         Aggregation(
             "v", Operation.TOP_K, arg_map={"k": 3}, windows=(Window(7),), buckets=("hib",)
