@@ -2615,7 +2615,7 @@ def oracle_sql() -> dict[str, str]:
     )
     model_w = "[" + ", ".join(repr(float(x)) for x in _model_weights()) + "]"
     return {
-        "corpus_curation": f"""
+        "corpus_curation": rf"""
 WITH feat AS (
   SELECT doc_id, text, len({toks}) AS n_tokens,
          CASE WHEN length(text) > 0

@@ -315,10 +315,11 @@ def moments(op: Operation, n, s1, s2, s3=None, s4=None) -> np.ndarray:
 
 def percentiles(vals: np.ndarray, wts: "np.ndarray | None", qs) -> "list[float]":
     """Linear-interpolated percentiles of a (weighted) sample. Without
-    weights this is np.percentile. With weights, position x = q·(Σw − 1)
-    over the value-sorted cumulative weights — unit weights give numpy's
-    interpolation (the snapshot path's _pct_scan contract)."""
-    if wts is None:
+    weights, or with unit weights (a sample that kept every value), this
+    is np.percentile, bit for bit. Otherwise position x = q·(Σw − 1) over
+    the value-sorted cumulative weights (the snapshot path's _pct_scan
+    contract)."""
+    if wts is None or np.all(wts == 1):
         return [float(np.percentile(vals, q * 100)) for q in qs]
     order = np.argsort(vals, kind="stable")
     v = vals[order]

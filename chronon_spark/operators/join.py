@@ -23,9 +23,8 @@ shuffled semi join, which is still a strict filter, never a blowup).
 Scale notes: the folded left is persisted once and shared by every part
 (the reference caches leftDf, spark/JoinBase.scala:423-466). Parts are
 built concurrently on one thread pool, as in spark/Join.scala:292-404, so
-each part's driver-side work (plan construction, the temporal kernel
-decision, small-mode key collects, part-table writes) overlaps the
-others'; each source table is read once per backfill. The final fold is
+each part's driver-side work (plan construction, small-mode key
+collects, part-table writes) overlaps the others'; each source table is read once per backfill. The final fold is
 a sequence of LEFT OUTER equi-joins on (keys, ts, row_uid) — co-partitioned
 on the same keys, so AQE reuses the exchange.
 """
@@ -349,20 +348,18 @@ def compute_join_part(
     (ts | ds), feature columns prefixed with the part's full prefix.
     Returns (frame, the columns to fold it onto the left with).
 
-    Building the plan runs Spark actions (the small-mode key collect, the
-    "auto" kernel decision, a tile-range bound), which is why join_backfill
-    builds its parts concurrently.
+    Building the plan can run Spark actions (the small-mode key collect,
+    a tile-range bound), which is why join_backfill builds its parts
+    concurrently.
 
     ``temporal_mode``: forwarded to temporal_events for TEMPORAL parts.
-    "auto" measures the tile compression of the (pruned) right events
-    with one Spark action and runs the tiled kernel only where tiles at
-    least halve the heaviest key's events (temporal.choose_kernel).
-    Callers that KNOW the left spine is dense (queries at ~every event of
-    the right source, e.g. a self-join backfill) should pass "raw" — it
-    skips that action, and hop tiling degenerates there anyway (every
-    tile holds a query head, so the head semi-join keeps ~all raw events
-    on top of the tile build; see pipelines/webtext.py for the same
-    reasoning).
+    "auto" runs the raw kernel, or the TileStore with ``tile_warehouse``,
+    and plans without a Spark action. "tiled" suits a sparse spine over a
+    storm key whose 5-minute tiles compress its events several times
+    over; on a dense spine (queries at ~every event of the right source,
+    e.g. a self-join backfill) hop tiling degenerates (every tile holds a
+    query head, so the head semi-join keeps ~all raw events on top of the
+    tile build; see pipelines/webtext.py for the same reasoning).
 
     ``left_is_small``: shared probe verdict from join_backfill (one
     limit+count per backfill, not one per part).
@@ -611,9 +608,8 @@ def join_backfill(
 
     # every part is built on one pool (spark/Join.scala:292-404,
     # spark.chronon.join.part.parallelism): plan construction over py4j and
-    # the driver-side actions in it — a temporal part's kernel decision, the
-    # small-mode key collect, a part warehouse's write — overlap across
-    # parts. Each task runs with the caller's Spark local properties, so its
+    # the driver-side actions in it — the small-mode key collect, a part
+    # warehouse's write — overlap across parts. Each task runs with the caller's Spark local properties, so its
     # jobs stay in the caller's job group, and in a copy of its context, so
     # it shares this backfill's table scans.
     def in_pool(fn):

@@ -14,8 +14,8 @@ Execution: instead of the reference's three RDD cogroups keyed by
 (murmur_hash(keys), headStart) (spark/GroupBy.scala:279-358), the raw
 kernel streams like the reference's sawtooth aggregators: ONE stream of
 query and event rows (non-key columns packed in one struct column per
-role), hash-partitioned on the keys and sorted by (keys, ts). It has two
-shapes:
+role), hash-partitioned on the keys, sorted on the keys' xxhash64 in
+Spark and by (keys, ts) in the kernel. It has two shapes:
 
 - union: query rows and event rows from two frames, tag-unioned, each
   row carrying a single null slot for the other role;
@@ -26,9 +26,10 @@ shapes:
 A query's strict head is its segment's first event at ts ≥ qt, found by
 the same (segment, ts-rank) ``searchsorted`` that gives window tails, so
 the rule holds whatever the row order among equal ts. One
-``mapInArrow`` call per Arrow batch cuts the batch into key segments (an
-open segment carries into the next batch) and evaluates every query of
-every segment at once with vectorized numpy. Each op's IR, range-reduce,
+``mapInArrow`` call per Arrow batch cuts the batch into runs of one key
+hash (an open run carries into the next batch), sorts each chunk of
+whole runs into key segments and evaluates every query of every segment
+at once with vectorized numpy. Each op's IR, range-reduce,
 merge and finalize come from the shared numpy op registry
 (functions/op_algebra.py, also behind the upload fetch kernel): a query's
 value is finalize(reduce(its event range)), and under hot-key slicing
@@ -51,14 +52,13 @@ Results leave as typed Arrow arrays with validity masks.
 This is the same asymptotic shape as the reference's TwoStackLite
 (windowing/TwoStackLiteAggregator.scala:26-120) but batch-vectorized.
 Skew note: a key's whole history still sits in one task's memory (its
-segment accumulates until the key ends). ``mode="auto"`` therefore
-measures, for a tileable GroupBy, how much 5-minute tiles would compress
-the events (choose_kernel: one aggregate over keys and ts) and routes
-the GroupBy to operators/tiled.py, whose hop pre-tiling compresses a hot
-key to per-tile IRs before the cogroup, only when tiles at least halve
-the heaviest key's events; sparse inputs, and many keys that each
-compress but none of them heavy, stay on this kernel. Hot-key time slicing
-splits a dense-query key across tasks on either kernel.
+segment accumulates until the key ends). ``mode="auto"`` runs this kernel
+without measuring the input first (outside the TileStore); a storm key
+whose events 5-minute tiles would compress several times over runs
+faster on operators/tiled.py, whose hop pre-tiling compresses it to
+per-tile IRs before the cogroup, and ``mode="tiled"`` asks for that.
+Hot-key time slicing splits a dense-query key across tasks on either
+kernel.
 """
 
 from __future__ import annotations
@@ -74,11 +74,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
-from chronon_spark.api.types import FIVE_MINUTES_MS, AggregationPart, GroupBy, Operation
+from chronon_spark.api.types import AggregationPart, GroupBy, Operation
 from chronon_spark.functions import op_algebra as alg
 from chronon_spark.functions.op_algebra import EventCol, HllCol
 from chronon_spark.functions.sketches import hll_idx_rho_exprs
-from chronon_spark.sources.scan import TS_COL, null_key_filter
+from chronon_spark.sources.scan import TS_COL
 
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.BooleanType)
 
@@ -221,19 +221,26 @@ def _baseline_ir(p: AggregationPart, rows: "list[dict]", numeric: bool, integral
     return alg.from_values(p, numeric, integral, values)
 
 
-# the raw kernel's sorted stream: query rows and event rows on the
-# segment keys and ts, tagged in SIDE; each side's other columns ride
-# packed in one struct column (Q_PACK / EV_PACK), so event columns never
-# collide with query passthrough columns. The union shape tags query
-# rows SIDE_QUERY and event rows SIDE_EVENT (a row carries ONE null slot
-# for the other side); the dense shape tags a row that is both SIDE_BOTH
-# and fills both packs in place
+# the raw kernel's stream: query rows and event rows on the segment keys
+# and ts, tagged in SIDE; each side's other columns ride packed in one
+# struct column (Q_PACK / EV_PACK), so event columns never collide with
+# query passthrough columns. The union shape tags query rows SIDE_QUERY
+# and event rows SIDE_EVENT (a row carries ONE null slot for the other
+# side); the dense shape tags a row that is both SIDE_BOTH and fills both
+# packs in place. KEY_HASH is xxhash64 of the segment keys: a partition
+# arrives sorted on it alone (one long key, so Spark radix-sorts), and
+# the kernel orders each chunk of whole hash runs by (hash, keys, ts)
+KEY_HASH = "__h"
 SIDE = "__side"
 Q_PACK = "__q"
 EV_PACK = "__e"
 SIDE_QUERY, SIDE_EVENT, SIDE_BOTH = 0, 1, 2
 # rows of complete key segments evaluated per kernel step
 CHUNK_ROWS = 4096
+
+
+def _hashes(b: pa.RecordBatch) -> np.ndarray:
+    return b.column(KEY_HASH).to_numpy(zero_copy_only=False)
 
 
 def _concat(batches: "list[pa.RecordBatch]") -> pa.RecordBatch:
@@ -257,9 +264,11 @@ def _stream_columns(b: pa.RecordBatch) -> "tuple[dict, dict]":
 
 
 def _segment_starts(batch: pa.RecordBatch, keys: "list[str]") -> np.ndarray:
-    """Rows where a new key segment starts (row 0 always does). Neighbours
-    share a segment when every key is equal, null matching null and NaN
-    matching NaN — Spark's grouping equality."""
+    """Rows where a new key segment starts (row 0 always does) in a batch
+    sorted by the keys — which splits a KEY_HASH run that holds several
+    keys (a 64-bit collision). Neighbours share a segment when every key
+    is equal, null matching null and NaN matching NaN — Spark's grouping
+    equality."""
     n = batch.num_rows
     new = np.zeros(n, dtype=bool)
     new[:1] = True
@@ -433,20 +442,22 @@ def make_temporal_kernel(
     seg_keys: "list[str] | None" = None,
     baseline_cols: "dict[int, dict[str, str]] | None" = None,
 ):
-    """The raw as-of kernel: a ``mapInArrow`` function over one sorted
-    stream. Input rows are queries (the ``query_cols``, plus slicing
-    columns, under Q_PACK) and events (the inputs under EV_PACK), tagged
-    in SIDE: the union shape has query-only rows (SIDE_QUERY) and
-    event-only rows (SIDE_EVENT); the dense shape has rows that are both
-    (SIDE_BOTH), plus query-only rows where the row cannot be an event
-    (null keys or ts). Rows are sorted by (``seg_keys``, ts) within a
-    partition, so a key's rows form one contiguous segment, in any order
+    """The raw as-of kernel: a ``mapInArrow`` function over one stream.
+    Input rows are queries (the ``query_cols``, plus slicing columns,
+    under Q_PACK) and events (the inputs under EV_PACK), tagged in SIDE:
+    the union shape has query-only rows (SIDE_QUERY) and event-only rows
+    (SIDE_EVENT); the dense shape has rows that are both (SIDE_BOTH), plus
+    query-only rows where the row cannot be an event (null keys or ts).
+    Rows are sorted by KEY_HASH (xxhash64 of ``seg_keys``) within a
+    partition, so a key's rows are contiguous, in any order. Each batch
+    is cut into runs of equal KEY_HASH; the last, possibly still open,
+    carries into the next batch. Each chunk of complete runs is sorted by
+    (KEY_HASH, ``seg_keys``, ts) and cut into key segments, in any order
     among equal ts: a query's strict head ``ts < qt`` is its segment's
     first event at ts ≥ qt, found by the same (segment, ts-rank)
-    searchsorted that gives window tails. Each batch is cut into
-    segments; the last, possibly still open, carries into the next batch.
-    One output batch per chunk of complete segments: ``query_cols`` plus
-    one column per unpacked part, one row per query row.
+    searchsorted that gives window tails. One output batch per chunk:
+    ``query_cols`` plus one column per unpacked part, one row per query
+    row.
 
     Every part is evaluated batch-wide over all segments at once: window
     tails are one (segment, ts) searchsorted, prefix tables span the
@@ -469,8 +480,10 @@ def make_temporal_kernel(
     integral = {f.name: isinstance(f.dataType, _INTEGRAL) for f in events_schema.fields}
     input_types = {f.name: f.dataType for f in events_schema.fields}
     names = list(query_cols) + [p.output_column for p in parts]
+    sort_keys = [(c, "ascending") for c in [KEY_HASH, *seg_keys, TS_COL]]
 
     def evaluate(b: pa.RecordBatch) -> pa.RecordBatch:
+        b = b.take(pc.sort_indices(b, sort_keys=sort_keys, null_placement="at_start"))
         qc, evc = _stream_columns(b)
         side = qc[SIDE].to_numpy(zero_copy_only=False)
         seg = np.zeros(b.num_rows, dtype=np.int64)
@@ -579,29 +592,28 @@ def make_temporal_kernel(
         return pa.RecordBatch.from_arrays(cols + feats, names=names)
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # zero-copy slices holding the rows of the still-open segment; only
-        # they are ever copied, joined to the head chunk of the next batch
+        # zero-copy slices holding the rows of the still-open hash run;
+        # only they are ever copied, joined to the head chunk of the next
+        # batch
         pending: list[pa.RecordBatch] = []
         for b in batches:
             if b.num_rows == 0:
                 continue
-            starts = _segment_starts(b, seg_keys)
-            if pending and len(starts) == 1:
-                last = pending[-1]
-                joint = _concat([last.slice(last.num_rows - 1), b.slice(0, 1)])
-                if len(_segment_starts(joint, seg_keys)) == 1:
-                    pending.append(b)  # the open segment spans the whole batch
-                    continue
+            h = _hashes(b)
+            starts = np.flatnonzero(_run_starts(h))
+            if pending and len(starts) == 1 and _hashes(pending[-1])[-1] == h[0]:
+                pending.append(b)  # the open run spans the whole batch
+                continue
             cut = int(starts[-1])
-            # complete segments go in chunks of ~CHUNK_ROWS rows: the
-            # working set stays bounded whatever the Arrow batch size
+            # complete runs go in chunks of ~CHUNK_ROWS rows: the working
+            # set stays bounded whatever the Arrow batch size
             bounds = np.unique(starts[np.searchsorted(starts, np.arange(0, cut, CHUNK_ROWS))])
             bounds = bounds[bounds < cut]
             ends = np.r_[bounds[1:], cut]
             if pending:
-                # the open segment closes here: its rows (plus the rest of
-                # the batch's first segment when it continues) head the
-                # first chunk
+                # the open run closes here: its rows (plus the rest of the
+                # batch's first run when it continues) head the first
+                # chunk
                 z = int(ends[0]) if cut else 0
                 yield evaluate(_concat(pending + [b.slice(0, z)] if z else pending))
                 bounds, ends = bounds[1:], ends[1:]
@@ -702,8 +714,8 @@ def _attach_elementwise_temporal(
     ElementWiseAggregator.scala) on the temporal path: posexplode the array
     input and ride the existing BUCKET machinery with the position as the
     bucket, then densify Map[pos → value] into the output array. Any op ×
-    window works uniformly; the exploded GroupBy auto-dispatches like any
-    other (choose_kernel).
+    window works uniformly; the exploded GroupBy runs on the raw kernel
+    like any other ``mode="auto"`` call.
 
     Null contract: null/empty arrays never update (posexplode skips them);
     null elements inside arrays are skipped per-position (the reference
@@ -772,51 +784,6 @@ def _attach_elementwise_temporal(
     return out
 
 
-# mode="auto" picks the tiled kernel only when 5-minute tiles cut the
-# heaviest key's events at least this many times. The crossover, measured
-# with `tools/bench_raw_hotkey.py 1000000 2000 sparse` (one 1M-event key,
-# 2,000 random query times, local[4] on a shared 4-vCPU box, best of two):
-# raw/tiled seconds at 1, 1.5, 2, 3, 4 and 8 events per tile were
-# 6.99/8.73, 6.61/7.05, 5.93/5.96, 5.87/4.50, 5.94/3.91 and 5.32/3.14 —
-# the kernels tie at 2 and the tiled one wins from 3 on. Spread over 500 keys of 2,000 events, raw
-# stayed 1.5-1.75x faster up to 8 events per tile (the tiled kernel pays
-# one pandas call per key), so the rule reads no global ratio: compressing
-# tiles over many light keys do not pay for that call per key.
-TILE_MIN_COMPRESSION = 2
-
-
-def choose_kernel(gb: GroupBy, events: DataFrame) -> str:
-    """"tiled" or "raw" for a tileable GroupBy, from one aggregate over the
-    events' keys and ts: the heaviest key's events and approximate count
-    of distinct 5-minute tiles (the totals are only logged). Tiles pay for
-    a tile-build shuffle, a head semi-join and a per-key pandas cogroup;
-    they win only when the heaviest key's tiles compress, which keeps one
-    storm key on tiles however many cold keys surround it, so the key's
-    raw history never has to sit in one task. The decision is logged on
-    the ``chronon_spark`` logger."""
-    import logging
-
-    keys = list(gb.key_columns)
-    tile = (F.col(TS_COL) / FIVE_MINUTES_MS).cast("long")
-    per_key = (
-        null_key_filter(events, tuple(keys))
-        .filter(F.col(TS_COL).isNotNull())
-        .groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("e"), F.approx_count_distinct(tile).alias("t"))
-    )
-    r = per_key.agg(
-        F.sum("e").alias("e"), F.sum("t").alias("t"), F.max(F.struct("e", "t")).alias("h")
-    ).first()
-    e, t = r["e"] or 0, r["t"] or 0
-    h_e, h_t = (r["h"]["e"], r["h"]["t"]) if r["h"] is not None else (0, 0)
-    choice = "tiled" if h_e and h_e >= TILE_MIN_COMPRESSION * h_t else "raw"
-    logging.getLogger("chronon_spark").info(
-        "temporal dispatch %s: events=%d tiles~%d, heaviest key events=%d tiles~%d -> %s",
-        gb.name, e, t, h_e, h_t, choice,
-    )
-    return choice
-
-
 def _temporal_events_impl(
     spark: SparkSession,
     gb: GroupBy,
@@ -837,17 +804,15 @@ def _temporal_events_impl(
     1:1 (JoinTest.scala:389-394 contract). Query rows whose keys are all
     null get null features (padGroupByFields, spark/Join.scala:410-432).
 
-    ``mode``: "auto" uses the hop-tiled path (operators/tiled.py) when
-    every aggregation is tileable AND tiles compress the events at least
-    TILE_MIN_COMPRESSION-fold for the heaviest key (choose_kernel: one
-    Spark action) — hot keys then cost O(5-min
-    tiles) instead of O(events); otherwise the raw sorted-stream kernel.
-    With ``tile_warehouse`` + ``tile_range`` a tileable GroupBy always
-    reads the TileStore. "split" computes tileable parts tiled and the
-    rest raw, joined on (keys, ts) — only worth it when the raw parts
-    are rare/cheap, since the raw half still ships the full event stream
+    ``mode``: "auto" reads the TileStore when ``tile_warehouse`` +
+    ``tile_range`` are given and every aggregation is tileable, and
+    otherwise runs the raw sorted-stream kernel; it runs no Spark action
+    to decide. "raw"/"tiled" force a single path; on the hop-tiled path
+    (operators/tiled.py) a storm key costs O(5-min tiles) instead of
+    O(events). "split" computes tileable parts tiled and the rest raw,
+    joined on (keys, ts) — only worth it when the raw parts are
+    rare/cheap, since the raw half still ships the full event stream
     (measured: splitting a mixed GroupBy costs ~2x; see BENCH).
-    "raw"/"tiled" force a single path.
 
     ``passthrough=True`` declares that query rows are already unique on
     (keys, ts): every query column rides through the Arrow kernel and the
@@ -873,10 +838,8 @@ def _temporal_events_impl(
         if dense:
             events = queries  # the tiled paths read the rows as an event frame
         cached = tile_warehouse is not None and tile_range is not None
-        if mode == "auto" and is_tileable(gb, events.schema):
-            # the TileStore path keeps its persisted tiles; otherwise the
-            # measured tile compression picks the kernel
-            mode = "tiled" if cached else choose_kernel(gb, events)
+        if mode == "auto" and cached and is_tileable(gb, events.schema):
+            mode = "tiled"  # the TileStore path keeps its persisted tiles
         if mode == "tiled":
             if cached:
                 from chronon_spark.operators.tilestore import (
@@ -1064,18 +1027,24 @@ def _temporal_events_impl(
     kernel = make_temporal_kernel(
         gb, ev_schema, slim_cols, seg_keys=co_keys, baseline_cols=baseline_cols
     )
-    # ONE sorted stream, hash-partitioned on the segment keys and sorted
-    # by (keys, ts), then one Python call per Arrow batch, not one per
-    # key. Explicit repartition with a pinned partition count: the kernel
-    # stage is CPU-bound, and AQE's byte-targeted coalescing would
-    # otherwise shrink it to a handful of tasks (16MB of slim rows ≈ 10
-    # partitions on a 32-core box — a 3x parallelism loss measured). The
-    # dense shape partitions on the keys, so a query frame already
-    # partitioned that way (backfill_features) shares its exchange. The
-    # union shape partitions on a hash of the keys that no input carries:
-    # Spark drops a repartition on the keys when both union inputs are
-    # already partitioned on them, and once AQE coalesces one input the
-    # union splits keys from their events.
+    # ONE stream, hash-partitioned on the segment keys and sorted on their
+    # xxhash64 (KEY_HASH) alone, then one Python call per Arrow batch, not
+    # one per key. Spark radix-sorts one long key; a (keys, ts) sort falls
+    # through to a full row compare whenever the 8-byte key prefix ties
+    # (every url starts "https://"), and the kernel orders each chunk by
+    # (KEY_HASH, keys, ts) itself. Explicit repartition with a pinned
+    # partition count: the kernel stage is CPU-bound, and AQE's
+    # byte-targeted coalescing would otherwise shrink it to a handful of
+    # tasks (16MB of slim rows ≈ 10 partitions on a 32-core box — a 3x
+    # parallelism loss measured). The dense shape partitions on the keys,
+    # so a query frame already partitioned that way (backfill_features)
+    # shares its exchange. The union shape partitions on a hash of the
+    # keys that no input carries: Spark drops a repartition on the keys
+    # when both union inputs are already partitioned on them, and once AQE
+    # coalesces one input the union splits keys from their events.
+    # KEY_HASH is computed after the exchange (it is not shuffled) and
+    # over the union, so a key whose query and event types differ hashes
+    # in the widened type.
     def packed(frame: DataFrame, pack: str) -> list:
         rest = [c for c in frame.columns if c not in co_keys and c != TS_COL]
         return [F.struct(*rest).alias(pack)] if rest else []
@@ -1101,7 +1070,8 @@ def _temporal_events_impl(
     p_n = kernel_partitions(spark)
     feats = (
         stream.repartition(p_n, *part_by)
-        .sortWithinPartitions(*co_keys, TS_COL)
+        .withColumn(KEY_HASH, F.xxhash64(*co_keys))
+        .sortWithinPartitions(KEY_HASH)
         .mapInArrow(kernel, T.StructType(out_fields + feat_fields))
     )
     # the union widens a key or ts whose query and event types differ;

@@ -23,9 +23,11 @@ sliding counter over sorted queries so every tile entry is added and
 removed at most once), per-tile k-heaps (FIRST_K/LAST_K/TOP_K/BOTTOM_K;
 the window's k-selection is contained in the union of per-tile
 k-selections + head), and per-tile sorted value arrays
-(APPROX_PERCENTILE — exact). temporal_events(mode="auto") picks this
-path when every part qualifies and tiles at least halve the heaviest
-key's events (temporal.choose_kernel); otherwise the exact raw kernel, which reads sparse events faster.
+(APPROX_PERCENTILE — exact). temporal_events runs this path for
+mode="tiled" and for the TileStore (mode="auto" with a tile warehouse);
+otherwise mode="auto" runs the exact raw kernel. That kernel reads sparse
+events faster; a storm key whose tiles compress its events 3x or more
+runs faster here (tools/bench_raw_hotkey.py ... sparse).
 
 Tie semantics: events sharing an exact timestamp are ordered by
 (ts, value) inside tiles — deterministic across layouts. The raw kernel's

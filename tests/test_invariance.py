@@ -7,6 +7,9 @@
   adversarial random streams (no Spark in the loop)
 """
 
+import random
+import zlib
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -28,6 +31,7 @@ from chronon_spark.api.types import (
 )
 from chronon_spark.operators.temporal import (
     EV_PACK,
+    KEY_HASH,
     SIDE,
     SIDE_BOTH,
     SIDE_EVENT,
@@ -142,12 +146,20 @@ EV_SCHEMA = T.StructType(
 KEYS = ["a", "b", "c", None]  # events never carry the null key (null-key filtered)
 
 
-def _stream_batches(queries, events, cuts, dense=False):
-    """The kernel's input as Spark hands it over, sorted by (k, ts) with
-    nulls first, cut into Arrow batches at ``cuts``. Union shape: query
-    rows and event rows, events first among equal (k, ts), the order a
-    running-count head gets wrong. Dense shape: every event row is also a
-    query; the queries add only query-only rows, those with a null key
+def _key_hash(k, collide: bool) -> int:
+    """A stand-in for the JVM's xxhash64 of the key (42 for null, its
+    seed): distinct per key, or one value for every key when
+    ``collide``."""
+    return 42 if collide or k is None else zlib.crc32(k.encode())
+
+
+def _stream_batches(queries, events, cuts, dense=False, collide=False, order=None):
+    """The kernel's input as Spark hands it over: sorted by KEY_HASH alone,
+    rows in ``order``'s shuffle within a hash run (by (k, ts) with events
+    first among equal (k, ts), the order a running-count head gets wrong,
+    when ``order`` is None), cut into Arrow batches at ``cuts``. Union
+    shape: query rows and event rows. Dense shape: every event row is also
+    a query; the queries add only query-only rows, those with a null key
     or ts."""
     if dense:
         rows = [(k, t, SIDE_BOTH, v, bk) for k, t, v, bk in events] + [
@@ -158,8 +170,12 @@ def _stream_batches(queries, events, cuts, dense=False):
             (k, t, SIDE_QUERY, None, None) for k, t in queries
         ]
     rows.sort(key=lambda r: (r[0] is not None, r[0] or "", r[1] is not None, r[1] or 0))
+    if order is not None:
+        order.shuffle(rows)
+    rows.sort(key=lambda r: _key_hash(r[0], collide))
     table = pa.table(
         {
+            KEY_HASH: pa.array([_key_hash(r[0], collide) for r in rows], pa.int64()),
             "k": pa.array([r[0] for r in rows], pa.string()),
             "ts": pa.array([r[1] for r in rows], pa.int64()),
             SIDE: pa.array([r[2] for r in rows], pa.int8()),
@@ -190,10 +206,25 @@ def _times(hours):
 # the sawtooth gap, pinned: qt − 1h lies 60 s past a hop boundary
 # (T0 ≡ 200,000 mod 5 min), and the event sits between that boundary and
 # qt − 1h — inside the 1h/2h/4h windows, outside a plain sliding window
-@example(events=[(0, 150_000, 1, "x")], queries=[(0, 3_760_000)], cuts=[], dense=False)
+@example(
+    events=[(0, 150_000, 1, "x")], queries=[(0, 3_760_000)], cuts=[], dense=False,
+    collide=False, order=None,
+)
 # an exact-ts tie of two rows that are query and event at once: neither
 # may see the other
-@example(events=[(0, 0, 1, "x"), (0, 0, 2, "y")], queries=[(3, 0)], cuts=[], dense=True)
+@example(
+    events=[(0, 0, 1, "x"), (0, 0, 2, "y")], queries=[(3, 0)], cuts=[], dense=True,
+    collide=False, order=None,
+)
+# one hash run holding three keys and the null key, exact-ts ties across
+# keys, rows shuffled within the run and cut across batches: segments
+# must follow the keys, not the hash
+@example(
+    events=[(0, 0, 1, "x"), (1, 0, 2, "y"), (2, 0, 3, None), (0, 300_000, 4, "y"),
+            (1, 300_000, None, "x"), (2, 600_000, 5, "x")],
+    queries=[(0, 300_000), (1, 600_000), (2, 0), (3, 300_000), (1, None)],
+    cuts=[2, 5, 9], dense=False, collide=True, order=random.Random(3),
+)
 @given(
     events=st.lists(
         st.tuples(
@@ -214,16 +245,19 @@ def _times(hours):
     ),
     cuts=st.lists(st.integers(0, 200), max_size=6),
     dense=st.booleans(),
+    collide=st.booleans(),
+    order=st.randoms(use_true_random=False),
 )
-def test_kernel_property(events, queries, cuts, dense):
-    """Pure-kernel property test, no Spark: the sorted-stream kernel fed
-    arbitrary Arrow batch cuts (segments straddle batches) over several
+def test_kernel_property(events, queries, cuts, dense, collide, order):
+    """Pure-kernel property test, no Spark: the stream kernel fed
+    arbitrary Arrow batch cuts (hash runs straddle batches) over several
     keys, a null key, null-ts queries, exact-ts ties, off-grid times and
-    null values, in both stream shapes — every query row equals the naive
-    oracle."""
+    null values, in both stream shapes, with rows in any order within a
+    key hash run, and with one hash shared by every key (a collision) —
+    every query row equals the naive oracle."""
     ev = [(KEYS[k], T0 + t, None if v is None else float(v), bk) for k, t, v, bk in events]
     qs = [(KEYS[k], None if t is None else T0 + t) for k, t in queries]
-    batches = _stream_batches(qs, ev, cuts, dense)
+    batches = _stream_batches(qs, ev, cuts, dense, collide, order)
     if dense:
         qs = [e[:2] for e in ev] + [q for q in qs if q[0] is None or q[1] is None]
     kernel = make_temporal_kernel(KERNEL_GB, EV_SCHEMA, ["k", "ts"])

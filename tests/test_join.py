@@ -217,26 +217,25 @@ def test_small_mode_in_pushdown(spark):
 
 
 def test_parts_planned_concurrently_in_callers_job_group(spark, setup, monkeypatch):
-    """join_backfill builds its parts on a thread pool: the temporal part's
-    kernel decision runs off the calling thread, yet its jobs land in the
-    caller's job group; each table is read once per backfill, and every
-    frame it cached is released afterwards."""
+    """join_backfill builds its parts on a thread pool: each part's
+    small-mode key collect runs off the calling thread, yet its jobs land
+    in the caller's job group; each table is read once per backfill, and
+    every frame it cached is released afterwards."""
     import threading
 
     from chronon_spark.operators import join as join_mod
-    from chronon_spark.operators import temporal
     from chronon_spark.sources import scan
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    decisions, reads = [], []
-    choose, read = temporal.choose_kernel, scan._read_table
+    collects, reads = [], []
+    collect, read = join_mod.small_mode_key_values, scan._read_table
 
-    def traced_choose(gb, events):
-        decisions.append((threading.current_thread(), sc.getLocalProperty("spark.jobGroup.id")))
-        return choose(gb, events)
+    def traced_collect(*a, **kw):
+        collects.append((threading.current_thread(), sc.getLocalProperty("spark.jobGroup.id")))
+        return collect(*a, **kw)
 
-    monkeypatch.setattr(temporal, "choose_kernel", traced_choose)
+    monkeypatch.setattr(join_mod, "small_mode_key_values", traced_collect)
     monkeypatch.setattr(scan, "_read_table", lambda s, t: reads.append(t) or read(s, t))
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     ungrouped = set(tracker.getJobIdsForGroup(None))
@@ -247,15 +246,41 @@ def test_parts_planned_concurrently_in_callers_job_group(spark, setup, monkeypat
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    [(thread, group)] = decisions
-    assert thread is not threading.main_thread() and group == "g"
-    # the decision ran jobs, and no job of the backfill escaped the group
+    assert len(collects) == len(JOIN.right_parts)
+    assert all(t is not threading.main_thread() and g == "g" for t, g in collects)
+    # the collects ran jobs, and no job of the backfill escaped the group
     assert tracker.getJobIdsForGroup("g")
     assert set(tracker.getJobIdsForGroup(None)) == ungrouped
     assert sorted(reads) == ["checkouts", "purchases", "users_dim"]
     assert out.count() > 0
     join_mod.release_backfill_caches()
     assert not join_mod._ACTIVE_CACHES
+
+
+def test_part_pool_plans_without_jobs(spark, setup, monkeypatch):
+    """With the default temporal_mode and a left over the small-mode
+    cutoff (so no part collects keys), planning a backfill runs no Spark
+    job from its part pool: the temporal part picks its kernel without
+    looking at the data."""
+    from chronon_spark.operators import join as join_mod
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    build = join_mod.compute_join_part
+
+    def in_pool_group(*a, **kw):
+        sc.setJobGroup("part_pool", "join part plan")
+        return build(*a, **kw)
+
+    monkeypatch.setattr(join_mod, "SMALL_MODE_CUTOFF", 0)
+    monkeypatch.setattr(join_mod, "compute_join_part", in_pool_group)
+    try:
+        out = join_backfill(spark, JOIN, START, END)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert not tracker.getJobIdsForGroup("part_pool")
+        assert out.count() > 0
+    finally:
+        join_mod.release_backfill_caches()
 
 
 def test_release_backfill_caches_fails_loudly(spark):

@@ -8,6 +8,7 @@
   the events from that hop on;
 - sketch bands: a truncated equi-rank sample or Misra-Gries count-map
   merged with exact events stays inside its documented error band;
+- a unit-weight sample's percentiles are np.percentile's, bit for bit;
 - coverage: every op a kernel accepts has a registry entry.
 """
 
@@ -173,6 +174,19 @@ def test_percentile_sample_band():
             hi = np.searchsorted(full, v, side="right")
             pos = qq * (len(full) - 1)
             assert lo - slack <= pos <= hi + slack, (qq, v, pos, lo, hi)
+
+
+def test_unit_weight_percentiles_are_numpys():
+    """A sample whose weights are all 1 kept every value: its percentiles
+    equal the unweighted ones (np.percentile) bit for bit, so the tiled
+    kernel's exact regime and the raw kernel agree."""
+    rng = np.random.default_rng(11)
+    qs = [0.0, 0.3, 0.5, 0.75, 0.9, 1.0]
+    for _ in range(500):
+        v = rng.normal(0, 10.0 ** rng.integers(-3, 6), int(rng.integers(1, 60)))
+        got = alg.percentiles(v, np.ones(len(v)), qs)
+        exp = alg.percentiles(v, None, qs)
+        assert np.array_equal(np.array(got).view(np.int64), np.array(exp).view(np.int64)), v
 
 
 def test_count_map_error_band():

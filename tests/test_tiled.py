@@ -157,11 +157,11 @@ DISPATCH_GB = GroupBy(
 
 
 def _dispatch_input(kind: str, seed: int = 5):
-    """(events, queries, expected kernel). sparse: 5 keys, ~1 event per
-    tile; storm: one key with ~10 events per tile; diluted: that storm key
-    plus 200 cold keys whose tiles pull the global ratio under 2; packed:
-    300 cold keys of 8 events in one tile each (a global ratio over 2)
-    beside one heavy key of ~1 event per tile."""
+    """(events, queries) over one tile-compression regime. sparse: 5 keys,
+    ~1 event per 5-minute tile; storm: one key with ~10 events per tile;
+    diluted: that storm key plus 200 cold keys whose tiles pull the global
+    ratio under 2; packed: 300 cold keys of 8 events in one tile each (a
+    global ratio over 2) beside one heavy key of ~1 event per tile."""
     rng = np.random.default_rng(seed)
 
     def keyed(names, n, span_ms):
@@ -173,9 +173,9 @@ def _dispatch_input(kind: str, seed: int = 5):
 
     storm = keyed(["hot"], 3_000, MS_DAY)
     if kind == "sparse":
-        ev, want = keyed([f"u{i}" for i in range(5)], 1_000, 32 * MS_DAY), "raw"
+        ev = keyed([f"u{i}" for i in range(5)], 1_000, 32 * MS_DAY)
     elif kind == "storm":
-        ev, want = storm, "tiled"
+        ev = storm
     elif kind == "packed":
         tile_start = (T0 // 300_000 + np.repeat(np.arange(300), 8)) * 300_000
         cold = pd.DataFrame({
@@ -183,38 +183,24 @@ def _dispatch_input(kind: str, seed: int = 5):
             "ts": (tile_start + rng.integers(0, 300_000, 2_400)).astype(np.int64),
             "price": rng.integers(1, 500, 2_400).astype(float),
         })
-        ev, want = pd.concat([keyed(["heavy"], 1_000, 32 * MS_DAY), cold]), "raw"
+        ev = pd.concat([keyed(["heavy"], 1_000, 32 * MS_DAY), cold])
     else:
-        ev, want = pd.concat([storm, keyed([f"c{i}" for i in range(200)], 4_000, 32 * MS_DAY)]), "tiled"
+        ev = pd.concat([storm, keyed([f"c{i}" for i in range(200)], 4_000, 32 * MS_DAY)])
     q = ev.sample(100, random_state=seed)[["user", "ts"]].drop_duplicates()
     q["ts"] += rng.integers(-MS_DAY, MS_DAY, len(q))
-    return ev, q, want
+    return ev, q
 
 
 @pytest.mark.parametrize("kind", ["sparse", "storm", "diluted", "packed"])
-def test_auto_dispatch_by_tile_compression(spark, kind, caplog):
-    """mode="auto" runs the tiled kernel only when tiles at least halve
-    the heaviest key's events, whatever the global ratio, and logs its
-    decision; either way it answers what both forced kernels answer."""
-    import logging
-
-    from chronon_spark.operators.temporal import TILE_MIN_COMPRESSION
-
-    ev, q, want = _dispatch_input(kind)
-    tiles = ev.assign(t=ev["ts"] // 300_000).groupby("user")["t"].nunique()
-    ratio, hot_ratio = len(ev) / tiles.sum(), (ev["user"] == "hot").sum() / tiles.get("hot", 1)
-    if kind == "diluted":
-        assert ratio < TILE_MIN_COMPRESSION <= hot_ratio
-    if kind == "packed":
-        heavy_ratio = (ev["user"] == "heavy").sum() / tiles["heavy"]
-        assert heavy_ratio < TILE_MIN_COMPRESSION <= ratio
+def test_auto_dispatch_by_tile_compression(spark, kind):
+    """mode="auto" outside the TileStore plans the raw kernel whatever
+    the tiles would compress, without measuring the input first, and
+    answers what both forced kernels answer."""
+    ev, q = _dispatch_input(kind)
     ev_df, q_df = spark.createDataFrame(ev), spark.createDataFrame(q)
-    with caplog.at_level(logging.INFO, logger="chronon_spark"):
-        auto = temporal_events(spark, DISPATCH_GB, q_df, ev_df)
-    assert any(r.getMessage().endswith(f"-> {want}") for r in caplog.records)
+    auto = temporal_events(spark, DISPATCH_GB, q_df, ev_df)
     plan = auto._jdf.queryExecution().executedPlan().toString()
-    op = {"raw": "MapInArrow", "tiled": "FlatMapCoGroupsInPandas"}
-    assert op[want] in plan and op[{"raw": "tiled", "tiled": "raw"}[want]] not in plan
+    assert "MapInArrow" in plan and "FlatMapCoGroupsInPandas" not in plan
     for forced in ("raw", "tiled"):
         _assert_same_features(
             DISPATCH_GB, auto, temporal_events(spark, DISPATCH_GB, q_df, ev_df, mode=forced)

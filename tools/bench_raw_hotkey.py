@@ -13,9 +13,10 @@ LAST — O(1)/query vectorized, slicing pays mostly for replication);
 ``heavy`` = gather/percentile ops (per-query python loops — the shape
 where one hot task serializes real compute and slicing must win).
 
-``sparse`` = the raw/tiled crossover behind temporal.TILE_MIN_COMPRESSION:
-one key of 50k events up to ``n_hot_events`` at 3 and 8 events per
-5-minute tile (the key-size axis), then ``n_hot_events`` events at 1-8
+``sparse`` = the raw/tiled crossover, i.e. what a storm key pays for
+mode="auto" running raw outside the TileStore, and where mode="tiled"
+wins: one key of 50k events up to ``n_hot_events`` at 3 and 8 events
+per 5-minute tile (the key-size axis), then ``n_hot_events`` events at 1-8
 per tile on one key and spread over 500 keys; ``n_hot_queries`` random
 query times over the same span, mode="raw" timed against mode="tiled"
 (best of two, light ops):
