@@ -23,22 +23,11 @@ import os
 import sys
 import time
 
-
-def _box_heap() -> str:
-    """Half the box's memory in whole GB, at most 32g: the compute-bound
-    scaling fixture (≥20M rows) wants a large heap, while the Python
-    workers and the OS need the rest of the box."""
-    try:
-        with open("/proc/meminfo") as f:
-            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
-    except (OSError, StopIteration, ValueError):
-        return "32g"
-    return f"{min(32, max(1, kb // 2 // 2**20))}g"
-
+from chronon_spark.session import box_heap  # noqa: E402
 
 # must precede the first JVM launch: local-mode driver memory is fixed at
 # gateway start and later sessions inherit it
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _box_heap())
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", box_heap())
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 

@@ -14,8 +14,12 @@ is that registry for Spark expressions; this module is its numpy twin:
   value array);
 - ``merge(part, a, b)``: the IR of ``a``'s events followed by ``b``'s;
 - ``finalize(part, ir)``: the feature values;
-- ``from_values``: an IR from serialized state values (JVM-built rows);
-- ``suffix``: the merged IRs of hop ranges ``[s, H)`` for given starts.
+- ``from_values``: an IR from serialized state values (JVM-built rows
+  or tile columns);
+- ``range_merge``: the merged IR of each ``[lo, hi)`` range of pieces
+  (hop or tile IRs in time order), by prefix sums, sparse tables and
+  first/last searches for the scalar kinds and a 5-min → 1h → 1d rollup
+  for the rest.
 
 An IR is a dict {state: array}, one row per range. A state's merge rule
 is its kind's (``STATE_KIND``): sums add, extrema take min/max, FIRST
@@ -34,6 +38,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from chronon_spark.api.types import AggregationPart, Operation
 from chronon_spark.functions.sketches import HLL_M, hll_estimate
@@ -173,9 +178,9 @@ class EventCol:
             self.vals = vals
             if integral:
                 # exact long SUM: int64 prefix sums (running totals beyond
-                # 2^53 stay exact — same contract as the tiled kernel's
-                # int64 tile-prefix, tiled.py _TilePrefix). One prefix over
-                # all segments is exact: int64 differences are modular.
+                # 2^53 stay exact — the same contract as range_merge's int64
+                # prefix over tile sums). One prefix over all segments is
+                # exact: int64 differences are modular.
                 ivals = arr.cast(pa.int64()).fill_null(0).to_numpy(zero_copy_only=False)
                 self._ipsum = np.empty(len(ivals) + 1, dtype=np.int64)
                 self._ipsum[0] = 0
@@ -439,13 +444,6 @@ def reduce(part: AggregationPart, col, lo: np.ndarray, hi: np.ndarray) -> dict:
     return ir
 
 
-def _add_counts(a: dict, b: dict) -> dict:
-    out = dict(a)
-    for x, c in b.items():
-        out[x] = out.get(x, 0) + c
-    return out
-
-
 def _pick(kind: str):
     """Element merge of an object-valued state (x earlier than y)."""
     if kind == "min":
@@ -456,11 +454,7 @@ def _pick(kind: str):
         return lambda x, y: y if x is None else x
     if kind == "last":
         return lambda x, y: x if y is None else y
-    if kind == "seq":
-        return lambda x, y: np.concatenate([x, y])
-    if kind == "counts":
-        return _add_counts
-    return lambda x, y: _join_samples([x, y])
+    return lambda x, y: _combine(kind, [x, y], None)
 
 
 def merge(part: AggregationPart, a: dict, b: dict) -> dict:
@@ -538,10 +532,24 @@ def _null(v) -> bool:
     return v is None or (isinstance(v, float) and v != v)
 
 
+def _scalars(col, dtype, empty) -> np.ndarray:
+    """A scalar state's serialized values (a list or an Arrow array; null
+    or NaN = empty) as a numpy array; an Arrow float column of an int64
+    state (a bucketed tile's double sum) rounds."""
+    if isinstance(col, pa.Array):
+        if dtype is np.int64 and pa.types.is_floating(col.type):
+            col = pc.round(col)
+        out = col.cast(pa.from_numpy_dtype(dtype), safe=False).fill_null(empty).to_numpy(zero_copy_only=False)
+    else:
+        out = np.array([empty if _null(v) else v for v in col], dtype=dtype)
+    return np.where(np.isnan(out), empty, out) if dtype is np.float64 else out
+
+
 def from_values(part: AggregationPart, numeric: bool, integral: bool, values: dict) -> dict:
     """An IR from serialized state values, one list entry per row (None =
     the state is absent: an empty range). Serialized forms per kind are
-    those of STATE_KIND's comment."""
+    those of STATE_KIND's comment; a scalar state may come as an Arrow
+    array."""
     op = part.operation
     ir = {}
     for st in STATES[op]:
@@ -549,10 +557,9 @@ def from_values(part: AggregationPart, numeric: bool, integral: bool, values: di
         kind = STATE_KIND[st]
         if kind == "sum":
             exact = st == "n" or (st == "s1" and integral and op is Operation.SUM)
-            ir[st] = np.array([0 if _null(v) else v for v in col], dtype=np.int64 if exact else np.float64)
+            ir[st] = _scalars(col, np.int64 if exact else np.float64, 0)
         elif kind in ("min", "max", "first", "last") and numeric:
-            empty = {"min": np.inf, "max": -np.inf}.get(kind, np.nan)
-            ir[st] = np.array([empty if _null(v) else float(v) for v in col], dtype=np.float64)
+            ir[st] = _scalars(col, np.float64, {"min": np.inf, "max": -np.inf}.get(kind, np.nan))
         elif kind == "regs":
             regs = np.zeros((len(col), HLL_M), dtype=np.uint8)
             for i, v in enumerate(col):
@@ -590,60 +597,142 @@ def concat(irs: "list[dict]") -> dict:
     return {st: np.concatenate([ir[st] for ir in irs]) for st in irs[0]}
 
 
-def suffix(part: AggregationPart, ir: dict, starts: np.ndarray) -> dict:
-    """Row j merges rows [starts[j], H) of an H-row IR (hop IRs in time
-    order); a start of H gives the empty IR. ``starts`` ascending."""
-    h = len(next(iter(ir.values())))
+_HOUR_MS = 3_600_000
+_DAY_MS = 86_400_000
+
+
+def _cap(part: AggregationPart, st: str, v):
+    """A rolled-up state value cut back to the op's bound: k for the
+    k-lists and the capped set, the ``accuracy`` sample budget (an
+    equi-rank resample of the weighted sample) for percentiles; a set
+    keeps its distinct values. Every cut but the resample is lossless."""
+    k = int(part.arg_map.get("k", 1))
+    if st == "fstk":
+        return v[:k]
+    if st == "lstk":
+        return v[-k:]
+    if st in ("topk", "botk"):
+        v = np.sort(v)
+        return v[::-1][:k] if st == "topk" else v[:k]
+    if st in ("set", "uset"):
+        v = np.unique(v)
+        return v[:k] if st == "uset" else v
+    if st == "pqs":
+        cap = int(part.arg_map.get("accuracy", 128))
+        vals, wts = v
+        if len(vals) > cap:
+            total = len(vals) if wts is None else wts.sum()
+            vals = np.asarray(percentiles(vals, wts, np.linspace(0.0, 1.0, cap)))
+            return vals, np.full(cap, total / cap)
+    return v
+
+
+def _combine(kind: str, items: list, empty):
+    """The merge of a run of object-valued state values, in order."""
+    if not items:
+        return empty
+    if kind == "seq":
+        return np.concatenate(items)
+    if kind == "sample":
+        return _join_samples(items)
+    if kind == "regs":
+        return np.max(np.stack(items), axis=0)
+    if kind == "counts":
+        out = dict(items[0])
+        for d in items[1:]:
+            for x, c in d.items():
+                out[x] = out.get(x, 0) + c
+        return out
+    f = _pick(kind)  # min, max, first, last over objects
+    acc = items[0]
+    for x in items[1:]:
+        acc = f(acc, x)
+    return acc
+
+
+def _cover(lo: np.ndarray, hi: np.ndarray, starts: np.ndarray, n: int):
+    """The groups (piece-index ``starts``, ascending, from 0; the last
+    ends at n) lying wholly in each [lo, hi): group indices [a, b) and
+    the piece range [m_lo, m_hi) they span (empty at hi when none)."""
+    ends = np.r_[starts[1:], n]
+    a = np.searchsorted(starts, lo, side="left")
+    b = np.maximum(a, np.searchsorted(ends, hi, side="right"))
+    has = b > a
+    m_lo = np.where(has, starts[np.minimum(a, len(starts) - 1)], hi)
+    m_hi = np.where(has, ends[np.maximum(b - 1, 0)], hi)
+    return a, b, m_lo, m_hi
+
+
+def _rollup(part: AggregationPart, st: str, x: np.ndarray, ts: np.ndarray, lo, hi) -> np.ndarray:
+    """Range merge of an object-valued (or register) state: the pieces
+    rolled up to 1h and 1d groups of their start times (the reference's
+    hop pyramid, Resolution.scala:37-47), each group merged and capped
+    once; a range is its whole days, the whole hours at its rims and the
+    pieces left over, merged in time order."""
+    kind = STATE_KIND[st]
+    n = len(x)
+    if kind == "regs":
+        empty = np.zeros(HLL_M, dtype=np.uint8)
+    else:
+        empty = {"seq": np.empty(0), "sample": (np.empty(0), None), "counts": {}}.get(kind)
+    levels, starts = [x], [np.arange(n)]
+    for width in (_HOUR_MS, _DAY_MS):
+        grp = ts[starts[-1]] // width
+        first = np.flatnonzero(np.r_[True, grp[1:] != grp[:-1]]) if len(grp) else np.zeros(0, np.int64)
+        prev = levels[-1]
+        ends = np.r_[first[1:], len(prev)]
+        levels.append(_objs(_cap(part, st, _combine(kind, list(prev[a:b]), empty)) for a, b in zip(first, ends)))
+        starts.append(starts[-1][first])
+    if n == 0:
+        segs = []
+    else:
+        # days wholly inside; hours wholly inside the rims left of them
+        # and right of them; the pieces in between
+        a2, b2, d_lo, d_hi = _cover(lo, hi, starts[2], n)
+        a1, b1, h_lo, h_hi = _cover(lo, d_lo, starts[1], n)
+        a3, b3, r_lo, r_hi = _cover(d_hi, hi, starts[1], n)
+        segs = [(0, lo, h_lo), (1, a1, b1), (0, h_hi, d_lo), (2, a2, b2),
+                (0, d_hi, r_lo), (1, a3, b3), (0, r_hi, hi)]
+    out = []
+    for j in range(len(lo)):
+        items = [v for lv, a, b in segs for v in levels[lv][a[j] : b[j]]]
+        out.append(_combine(kind, items, empty))
+    if kind == "regs":
+        return np.stack(out) if out else np.zeros((0, HLL_M), dtype=np.uint8)
+    return _objs(out)
+
+
+def range_merge(part: AggregationPart, ir: dict, ts: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> dict:
+    """Row j merges rows [lo[j], hi[j]) of an H-row IR of pieces in time
+    order (hop or tile IRs starting at ``ts``); an empty range gives the
+    empty IR. The method goes by state kind: sums by prefix sums, numeric
+    extrema by a sparse table, FIRST/LAST by the range's first/last
+    non-empty piece, every other kind by the 5-min → 1h → 1d rollup."""
     out = {}
-    if not len(starts):
-        return take(ir, np.zeros(0, dtype=np.int64))
     for st, x in ir.items():
         kind = STATE_KIND[st]
-        if kind == "sum" or (x.dtype != object and kind in ("min", "max")):
-            empty = {"sum": 0, "min": np.inf, "max": -np.inf}[kind]
-            acc = {"sum": np.cumsum, "min": np.minimum.accumulate, "max": np.maximum.accumulate}
-            scan = np.full(h + 1, empty, dtype=x.dtype)
-            scan[:h] = acc[kind](x[::-1])[::-1]
-            out[st] = scan[starts]
-            continue
-        # one backward pass, one snapshot per start: sequences and samples
-        # gather their pieces and join once per snapshot
-        snaps = {}
-        need = set(int(s) for s in starts)
-        if kind == "regs":
-            cur = np.zeros(HLL_M, dtype=np.uint8)
-        elif kind == "counts":
-            cur = {}
-        elif kind in ("seq", "sample"):
-            cur = []
+        if kind == "sum":
+            pref = np.zeros(len(x) + 1, dtype=x.dtype)
+            np.cumsum(x, out=pref[1:])
+            out[st] = pref[hi] - pref[lo]
+        elif kind in ("min", "max") and x.dtype != object:
+            out[st] = SparseTable(x, is_min=kind == "min").query(lo, hi)
+        elif kind in ("first", "last"):
+            numeric = x.dtype != object
+            full = np.flatnonzero(~np.isnan(x) if numeric else np.array([v is not None for v in x], dtype=bool))
+            if kind == "first":
+                j = np.searchsorted(full, lo, side="left")
+                ok = j < len(full)
+                ok[ok] &= full[j[ok]] < hi[ok]
+            else:
+                j = np.searchsorted(full, hi, side="left") - 1
+                ok = j >= 0
+                ok[ok] &= full[j[ok]] >= lo[ok]
+            v = np.full(len(lo), np.nan) if numeric else _nones(len(lo))
+            v[ok] = x[full[j[ok]]]
+            out[st] = v
         else:
-            cur = np.nan if x.dtype != object else None
-        f = _pick(kind) if kind in ("min", "max", "first", "last") else None
-        for t in range(h, int(starts[0]) - 1, -1):
-            if t < h:
-                if kind == "regs":
-                    cur = np.maximum(cur, x[t])
-                elif kind == "counts":
-                    cur = _add_counts(x[t], cur)
-                elif kind in ("seq", "sample"):
-                    cur.append(x[t])
-                elif x.dtype != object:
-                    cur = x[t] if (kind == "first" and x[t] == x[t]) or (kind == "last" and cur != cur) else cur
-                else:
-                    cur = f(x[t], cur)
-            if t in need:
-                if kind == "seq":
-                    snaps[t] = np.concatenate(cur[::-1]) if cur else np.empty(0)
-                elif kind == "sample":
-                    snaps[t] = _join_samples(cur[::-1])
-                else:
-                    snaps[t] = cur
-        if kind == "regs":
-            out[st] = np.stack([snaps[int(s)] for s in starts])
-        elif x.dtype != object and kind in ("first", "last"):
-            out[st] = np.array([snaps[int(s)] for s in starts], dtype=x.dtype)
-        else:
-            out[st] = _objs(snaps[int(s)] for s in starts)
+            out[st] = _rollup(part, st, x, ts, lo, hi)
     return out
 
 

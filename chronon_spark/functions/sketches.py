@@ -8,10 +8,12 @@ mergeable-IR contract the reference carries in its CPC hops
 (aggregator/base/SimpleAggregators.scala:716-760; CPC byte parity is
 out of reach without the datasketches wheel, documented in BENCH).
 
-Both the tiled kernel (operators/tiled.py) and the raw temporal kernel
-(operators/temporal.py) import from here, so ``mode="raw"`` and
-``mode="tiled"`` answer the same estimate on identical input — the
-round-2 estimator-divergence gap.
+Every path hashes values to (idx, rho) on the JVM the same way
+(``hll_idx_rho_exprs``; the tile frame's register maps spell the same
+expression), and every kernel estimates with ``hll_estimate`` through
+the shared op algebra (functions/op_algebra.py), so ``mode="raw"``,
+``mode="tiled"`` and the upload fetch answer the same estimate on
+identical input.
 """
 
 from __future__ import annotations

@@ -58,7 +58,9 @@ whose events 5-minute tiles would compress several times over runs
 faster on operators/tiled.py, whose hop pre-tiling compresses it to
 per-tile IRs before the cogroup, and ``mode="tiled"`` asks for that.
 Hot-key time slicing splits a dense-query key across tasks on either
-kernel.
+kernel. The tiled kernel and the upload fetch evaluate every part with
+``stitch`` (below): pieces (tile or hop IRs) range-merged up to where
+raw events take over, merged with the reduce of those events.
 """
 
 from __future__ import annotations
@@ -435,6 +437,77 @@ def _scatter(pieces: list, n: int, atype: pa.DataType) -> pa.Array:
     return pa.concat_arrays([v for _, v in pieces]).take(pa.array(src, mask=src < 0))
 
 
+def stitch(
+    p: AggregationPart,
+    pieces: tuple,
+    head: _Events,
+    qt: np.ndarray,
+    tail: "np.ndarray | None",
+    head_start,
+    input_type: T.DataType,
+) -> pa.Array:
+    """One part at every query of one key, the reference's sawtooth
+    stitch (SawtoothAggregator.scala:64-139):
+
+        window(qt) = merge(pieces in [tail, head_start)) ⊕ reduce(head events in [max(tail, head_start), qt))
+
+    finalized. ``pieces`` = (IR, start times, bucket labels or None): hop
+    or tile IRs in time order (per label when bucketed); ``head``: the
+    key's raw events in one segment; ``tail``: each query's window start
+    (None = unbounded); ``head_start``: where raw events take over from
+    pieces (one time, or one per query). A bucketed part does this per
+    (bucket, query) pair and folds the pairs into Map[bucket → value]."""
+    part = AggregationPart(p.input_column, p.operation, p.arg_map, p.window, None)
+    ir_e, ts_e, lab_e = pieces
+    nq = len(qt)
+    hs = np.broadcast_to(np.asarray(head_start, dtype=np.int64), (nq,))
+    n_e = len(ts_e)
+    if p.bucket is None:
+        evs, labels, group = head, [None], {None: 0}
+    else:
+        evs, _, hl = head.by_bucket(p.bucket)
+        group = {lab: g for g, lab in enumerate(hl.to_pylist())}
+        labels = sorted(set(group) | set(lab_e))
+        if not labels:
+            return pa.nulls(nq, to_arrow_type(T.MapType(T.StringType(), _plain_output_type(part, input_type))))
+    pl = np.repeat(np.arange(len(labels)), nq)
+    pq = np.tile(np.arange(nq), len(labels))
+    # piece side: per label, each distinct [tail, head_start) piece range
+    # merged once; each pair points at its merged row
+    merged, rows, n_rows = [], [], 0
+    lab_arr = np.asarray(lab_e, dtype=object)
+    for lab in labels:
+        sel = np.arange(n_e) if lab is None else np.flatnonzero(lab_arr == lab)
+        t = ts_e[sel]
+        lo = np.zeros(nq, dtype=np.int64) if tail is None else np.searchsorted(t, tail, side="left")
+        rng, pos = np.unique(np.stack([lo, np.searchsorted(t, hs, side="left")], axis=1), axis=0, return_inverse=True)
+        rows.append(pos.reshape(-1) + n_rows)
+        n_rows += len(rng)
+        merged.append(alg.range_merge(part, alg.take(ir_e, sel), t, rng[:, 0], rng[:, 1]))
+    batch = alg.concat(merged)
+    # head side: the pair's events in [max(tail, head_start), qt)
+    start = hs if tail is None else np.maximum(tail, hs)
+    g = np.array([group.get(lab, -1) for lab in labels], dtype=np.int64)[pl]
+    lo = np.zeros(len(pl), dtype=np.int64)
+    hi = np.zeros(len(pl), dtype=np.int64)
+    on = g >= 0
+    hi[on] = evs.search(g[on], qt[pq[on]])
+    lo[on] = evs.search(g[on], start[pq[on]])
+    empty = lo >= hi
+    lo[empty] = hi[empty] = 0
+    # pairs with the same merged row and head range share one evaluation:
+    # most (bucket, query) pairs of a wide bucket column have no head
+    # events and one of few window starts
+    key = np.stack([np.concatenate(rows), lo, hi], axis=1)
+    uniq, inv = np.unique(key, axis=0, return_inverse=True)
+    head_ir = alg.reduce(part, evs.input(part), uniq[:, 1], uniq[:, 2])
+    ir = alg.merge(part, alg.take(batch, uniq[:, 0]), head_ir)
+    arr = _to_arrow(alg.finalize(part, ir), part, input_type).take(inv.reshape(-1))
+    if p.bucket is None:
+        return arr
+    return _bucket_map(arr, pa.array(labels, pa.string()), pl, pq, nq)
+
+
 def make_temporal_kernel(
     gb: GroupBy,
     events_schema: T.StructType,
@@ -480,33 +553,38 @@ def make_temporal_kernel(
     integral = {f.name: isinstance(f.dataType, _INTEGRAL) for f in events_schema.fields}
     input_types = {f.name: f.dataType for f in events_schema.fields}
     names = list(query_cols) + [p.output_column for p in parts]
-    sort_keys = [(c, "ascending") for c in [KEY_HASH, *seg_keys, TS_COL]]
+    sort_cols = [KEY_HASH, *seg_keys, TS_COL]
+    sort_keys = [(c, "ascending") for c in sort_cols]
 
     def evaluate(b: pa.RecordBatch) -> pa.RecordBatch:
-        b = b.take(pc.sort_indices(b, sort_keys=sort_keys, null_placement="at_start"))
+        # the (hash, keys, ts) order as an index composed into every take
+        # that follows: the packed structs are never copied to sort them
+        order = pc.sort_indices(
+            b.select(sort_cols), sort_keys=sort_keys, null_placement="at_start"
+        ).to_numpy()
         qc, evc = _stream_columns(b)
-        side = qc[SIDE].to_numpy(zero_copy_only=False)
+        side = qc[SIDE].to_numpy(zero_copy_only=False)[order]
         seg = np.zeros(b.num_rows, dtype=np.int64)
-        seg[_segment_starts(b, seg_keys)] = 1
+        seg[_segment_starts(b.select(seg_keys).take(order), seg_keys)] = 1
         seg = np.cumsum(seg) - 1
-        ts_col = qc[TS_COL]
+        ts_col = qc[TS_COL].take(order)
         ts = ts_col.fill_null(0).cast(pa.int64()).to_numpy(zero_copy_only=False)
         q_rows = np.flatnonzero(side != SIDE_EVENT)
         q_ok = np.flatnonzero(ts_col.is_valid().to_numpy(zero_copy_only=False)[q_rows])
         rows = q_rows[q_ok]
         qs, qt = seg[rows], ts[rows]
         ev_rows = np.flatnonzero(side != SIDE_QUERY)
-        ev = _Events(evc, ev_rows, seg[ev_rows], ts[ev_rows], numeric, integral)
+        ev = _Events(evc, order[ev_rows], seg[ev_rows], ts[ev_rows], numeric, integral)
         # strict head: the segment's first event at ts ≥ qt
         head = ev.search(qs, qt)
 
         def cell(name: str, i: int):
-            return qc[name][int(rows[i])].as_py() if name in qc else None
+            return qc[name][int(order[rows[i]])].as_py() if name in qc else None
 
         # hot-key slices: segments whose queries carry a slice start
         sliced_segs = []
         if baseline_cols and "__slice_lo" in qc:
-            slo = qc["__slice_lo"].take(rows).is_valid().to_numpy(zero_copy_only=False)
+            slo = qc["__slice_lo"].take(order[rows]).is_valid().to_numpy(zero_copy_only=False)
             for s in np.unique(qs[slo]):
                 qi = np.arange(*np.searchsorted(qs, [s, s + 1]))
                 sliced_segs.append((s, qi, cell("__slice_lo", qi[0])))
@@ -588,7 +666,7 @@ def make_temporal_kernel(
                 pieces += [(qi, sliced_part(p, mapping, s, qi, slo)) for s, qi, slo in sliced_segs]
             full = _scatter(pieces, len(rows), atype)
             feats.append(_scatter([(q_ok, full)], len(q_rows), atype))
-        cols = [qc[c].take(q_rows) for c in query_cols]
+        cols = [qc[c].take(order[q_rows]) for c in query_cols]
         return pa.RecordBatch.from_arrays(cols + feats, names=names)
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -667,6 +745,8 @@ def temporal_events(
     only head tiles on later runs."""
     import dataclasses
 
+    if mode not in ("auto", "raw", "tiled"):
+        raise ValueError(f"mode must be 'auto', 'raw' or 'tiled', not {mode!r}")
     ew_aggs = tuple(a for a in gb.aggregations if a.element_wise)
     if ew_aggs:
         base_aggs = tuple(a for a in gb.aggregations if not a.element_wise)
@@ -681,7 +761,9 @@ def temporal_events(
         else:
             out = queries
         out = _attach_elementwise_temporal(
-            spark, gb, ew_aggs, out, queries, queries if events is None else events
+            spark, gb, ew_aggs, out, queries, queries if events is None else events,
+            mode=mode, hot_key_threshold=hot_key_threshold, hot_keys=hot_keys,
+            hot_slice_ms=hot_slice_ms,
         )
     else:
         out = _temporal_events_impl(
@@ -709,13 +791,19 @@ def _attach_elementwise_temporal(
     out: DataFrame,
     queries: DataFrame,
     events: DataFrame,
+    mode: str = "auto",
+    hot_key_threshold: "int | str | None" = None,
+    hot_keys: "list[tuple] | None" = None,
+    hot_slice_ms: int | None = None,
 ) -> DataFrame:
     """Config-level element_wise (api.thrift:229-234, aggregator/row/
     ElementWiseAggregator.scala) on the temporal path: posexplode the array
     input and ride the existing BUCKET machinery with the position as the
     bucket, then densify Map[pos → value] into the output array. Any op ×
-    window works uniformly; the exploded GroupBy runs on the raw kernel
-    like any other ``mode="auto"`` call.
+    window works uniformly; the exploded GroupBy runs with the caller's
+    ``mode`` and hot-key arguments. The TileStore arguments are not
+    forwarded: the exploded GroupBy has no persisted tiles of its own, so
+    it runs the kernel ``mode`` names.
 
     Null contract: null/empty arrays never update (posexplode skips them);
     null elements inside arrays are skipped per-position (the reference
@@ -764,7 +852,10 @@ def _attach_elementwise_temporal(
         sub_gb = dataclasses.replace(
             gb, name=f"{gb.name}__ew_{col}", aggregations=col_aggs, derivations=None
         )
-        feats = temporal_events(spark, sub_gb, qslim, exploded)
+        feats = temporal_events(
+            spark, sub_gb, qslim, exploded, mode=mode, hot_key_threshold=hot_key_threshold,
+            hot_keys=hot_keys, hot_slice_ms=hot_slice_ms,
+        )
         # rename bucketed map outputs to the declared element_wise column
         # names and densify to null-padded arrays
         renames = []
@@ -807,12 +898,9 @@ def _temporal_events_impl(
     ``mode``: "auto" reads the TileStore when ``tile_warehouse`` +
     ``tile_range`` are given and every aggregation is tileable, and
     otherwise runs the raw sorted-stream kernel; it runs no Spark action
-    to decide. "raw"/"tiled" force a single path; on the hop-tiled path
+    to decide. "raw"/"tiled" force one kernel; on the hop-tiled kernel
     (operators/tiled.py) a storm key costs O(5-min tiles) instead of
-    O(events). "split" computes tileable parts tiled and the rest raw,
-    joined on (keys, ts) — only worth it when the raw parts are
-    rare/cheap, since the raw half still ships the full event stream
-    (measured: splitting a mixed GroupBy costs ~2x; see BENCH).
+    O(events). Any other mode is a ValueError.
 
     ``passthrough=True`` declares that query rows are already unique on
     (keys, ts): every query column rides through the Arrow kernel and the
@@ -829,11 +917,7 @@ def _temporal_events_impl(
         raise ValueError("events=None streams the query rows as events; it needs passthrough=True")
     keys = list(gb.key_columns)
     if mode != "raw":
-        from chronon_spark.operators.tiled import (
-            is_tileable,
-            split_by_tileability,
-            temporal_events_tiled,
-        )
+        from chronon_spark.operators.tiled import is_tileable, temporal_events_tiled
 
         if dense:
             events = queries  # the tiled paths read the rows as an event frame
@@ -857,11 +941,6 @@ def _temporal_events_impl(
                 hot_key_threshold=hot_key_threshold, hot_keys=hot_keys,
                 hot_slice_ms=hot_slice_ms,
             )
-        if mode == "split":
-            gb_tiled, gb_raw = split_by_tileability(gb, events.schema)
-            if gb_tiled is not None and gb_raw is not None:
-                tiled_out = temporal_events_tiled(spark, gb_tiled, queries, events)
-                return temporal_events(spark, gb_raw, tiled_out, events, mode="raw")
     parts = gb.unpacked()
 
     # ship only the columns the kernel reads (inputs + buckets), never

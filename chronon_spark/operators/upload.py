@@ -17,11 +17,11 @@ key whose width is O(window/hop) REGARDLESS of history length —
 — and ``fetch_features`` answers (key, ts) requests by merging the hop
 IRs at/after each request's sawtooth window start with the streamed
 events in [boundary, ts), per key, inside one Arrow cogroup kernel (the
-offline twin of the fetcher's in-memory merge). The per-op algebra of
-that merge — IR states, range-reduce, merge, finalize — is the shared
-numpy op registry (functions/op_algebra.py), the same one the raw as-of
-kernel evaluates; this module only lays the upload row out and reads it
-back as registry IRs (_upload_entries).
+offline twin of the fetcher's in-memory merge). That merge is the as-of
+stitch the tiled kernel also runs (temporal.stitch: hop IRs range-merged,
+head events reduced on top, finalized), over the shared numpy op
+registry (functions/op_algebra.py); this module only lays the upload row
+out and reads it back as registry IRs (_upload_pieces).
 
 Layout notes (deliberate deviations from the reference, documented):
 - IRs are typed columns / flat parallel arrays, not serialized blobs —
@@ -80,11 +80,10 @@ from chronon_spark.api.types import (
 from chronon_spark.functions import op_algebra as alg
 from chronon_spark.functions.sketches import hll_idx_rho_exprs
 from chronon_spark.operators.temporal import (
-    _bucket_map,
     _Events,
     _hreg_reduce,
-    _to_arrow,
     output_field,
+    stitch,
 )
 from chronon_spark.sources.scan import TS_COL, null_key_filter
 
@@ -700,10 +699,10 @@ def fetch_features(
     ``ts``, ts ≥ boundary) from the ``group_by_upload`` artifact plus the
     ``streamed`` head (events with ts ≥ boundary; earlier rows are
     ignored — they are the upload's job). Extra query columns pass
-    through. One shuffle on the keys; per key, every part is
-    "suffix-merge the hop IRs from the window start, merge the head
-    range, finalize" in the shared op algebra (functions/op_algebra.py),
-    never a history scan."""
+    through. One shuffle on the keys; per key, every part is the as-of
+    stitch (temporal.stitch): the hop IRs from the window start on
+    range-merged, merged with the head events, finalized, in the shared
+    op algebra (functions/op_algebra.py) — never a history scan."""
     import dataclasses
 
     if any(a.element_wise for a in gb.aggregations):
@@ -852,7 +851,15 @@ def fetch_features(
         cols = {c: ev.column(c).combine_chunks() for c in inputs + hll_names}
         head = _Events(cols, order, np.zeros(len(order), dtype=np.int64), ets[order], numeric, integral)
         urow = {c: ut.column(c)[0].as_py() for c in ut.column_names} if ut.num_rows else {}
-        feats = [_serve(p, urow, head, qt, kinds) for p in parts]
+        feats = []
+        for p in parts:
+            tail = None
+            if p.window is not None:
+                r = sawtooth_hop_millis(p.window.millis)
+                tail = ((qt - p.window.millis) // r) * r
+            is_num, is_int, itype = kinds[p.input_column]
+            pieces = _upload_pieces(p, urow, is_num, is_int)
+            feats.append(stitch(p, pieces, head, qt, tail, boundary, itype))
         cols_q = [q.column(c).combine_chunks() for c in keys + passthrough]
         arrays = [a.cast(t) for a, t in zip(cols_q + feats, out_types)]
         return pa.Table.from_arrays(arrays, names=[f.name for f in out_fields])
@@ -877,70 +884,12 @@ def fetch_features(
     return res
 
 
-def _serve(p: AggregationPart, urow: dict, head, qt: np.ndarray, kinds: dict) -> pa.Array:
-    """One part at every query of one key: the upload entries at hops ≥
-    the window start suffix-merged, merged with the head events in
-    [window start, qt), finalized. A bucketed part does this per (bucket,
-    query) pair and folds the pairs into Map[bucket → value]."""
-    part = AggregationPart(p.input_column, p.operation, p.arg_map, p.window, None)
-    nq = len(qt)
-    ws = None
-    if p.window is not None:
-        r = sawtooth_hop_millis(p.window.millis)
-        ws = ((qt - p.window.millis) // r) * r
-    numeric, integral, itype = kinds[p.input_column]
-    values, hop_e, lab_e = _upload_entries(p, urow)
-    ir_e = alg.from_values(part, numeric, integral, values)
-    n_e = len(next(iter(ir_e.values())))
-    if p.bucket is None:
-        evs, labels, group = head, [None], {None: 0}
-    else:
-        evs, _, hl = head.by_bucket(p.bucket)
-        group = {lab: g for g, lab in enumerate(hl.to_pylist())}
-        labels = sorted(set(group) | set(lab_e))
-    pl = np.repeat(np.arange(len(labels)), nq)
-    pq = np.tile(np.arange(nq), len(labels))
-    # batch side: per label, one suffix merge per distinct window-start
-    # hop; each pair points at its suffix row
-    pieces, rows, n_rows = [], [], 0
-    for lab in labels:
-        sel = np.arange(n_e) if lab is None else np.flatnonzero(np.asarray(lab_e, dtype=object) == lab)
-        if ws is None:
-            starts, pos = np.zeros(1, dtype=np.int64), np.zeros(nq, dtype=np.int64)
-        else:
-            starts, pos = np.unique(np.searchsorted(hop_e[sel], ws, side="left"), return_inverse=True)
-        rows.append(pos + n_rows)
-        n_rows += len(starts)
-        pieces.append(alg.suffix(part, alg.take(ir_e, sel), starts))
-    batch = alg.concat(pieces) if pieces else alg.take(ir_e, np.zeros(0, dtype=np.int64))
-    # head side: the pair's events in [window start, qt)
-    g = np.array([group.get(lab, -1) for lab in labels], dtype=np.int64)[pl]
-    lo = np.zeros(len(pl), dtype=np.int64)
-    hi = np.zeros(len(pl), dtype=np.int64)
-    on = g >= 0
-    hi[on] = evs.search(g[on], qt[pq[on]])
-    lo[on] = evs.start(g[on]) if ws is None else evs.search(g[on], ws[pq[on]])
-    empty = lo == hi
-    lo[empty] = hi[empty] = 0
-    # pairs with the same suffix row and head range share one evaluation:
-    # most (bucket, query) pairs of a wide bucket column have no head
-    # events and one of few window starts
-    key = np.stack([np.concatenate(rows) if rows else lo, lo, hi], axis=1)
-    uniq, inv = np.unique(key, axis=0, return_inverse=True)
-    head_ir = alg.reduce(part, evs.input(part), uniq[:, 1], uniq[:, 2])
-    ir = alg.merge(part, alg.take(batch, uniq[:, 0]), head_ir)
-    arr = _to_arrow(alg.finalize(part, ir), part, itype).take(inv.reshape(-1))
-    if p.bucket is None:
-        return arr
-    return _bucket_map(arr, pa.array(labels, pa.string()), pl, pq, nq)
-
-
-def _upload_entries(p: AggregationPart, urow: dict):
-    """The upload row's IR entries of one part, as serialized state values
-    (op_algebra.from_values), plus each entry's hop start (windowed parts;
-    hops ascending per bucket) and bucket label (bucketed parts).
-    Unbounded unbucketed parts have one collapsed entry; list states ride
-    as (flat values, per-entry lengths) columns (see group_by_upload)."""
+def _upload_pieces(p: AggregationPart, urow: dict, numeric: bool, integral: bool) -> tuple:
+    """The upload row's IR entries of one part as stitch pieces: (registry
+    IR, each entry's hop start, each entry's bucket label or None). Hops
+    ascend per bucket; an unbounded part's entries (one collapsed entry,
+    or one per bucket) start at 0. List states ride as (flat values,
+    per-entry lengths) columns (see group_by_upload)."""
     o = p.output_column
     windowed = p.window is not None
     r = sawtooth_hop_millis(p.window.millis) if windowed else None
@@ -996,8 +945,10 @@ def _upload_entries(p: AggregationPart, urow: dict):
             values[st] = list(zip(lists(name(st, "_i"), name(st)), lists(name(st, "_r"), name(st))))
         else:
             values[st] = scalars(name(st))
-    hop_e = None if hops is None else np.asarray(hops, dtype=np.int64)
-    return values, hop_e, labels
+    part = AggregationPart(p.input_column, p.operation, p.arg_map, p.window, None)
+    ir = alg.from_values(part, numeric, integral, values)
+    n = len(next(iter(ir.values())))
+    return ir, np.zeros(n, dtype=np.int64) if hops is None else np.asarray(hops, dtype=np.int64), labels
 
 
 def fetch_consistency(

@@ -14,6 +14,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def box_heap() -> str:
+    """Half the box's memory in whole GB, at most 32g: the JVM gets a
+    large heap, while the Python workers and the OS need the rest of the
+    box."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "32g"
+    return f"{min(32, max(1, kb // 2 // 2**20))}g"
+
+
 def build_session(
     app_name: str = "chronon_spark",
     master: str | None = None,
@@ -21,11 +33,12 @@ def build_session(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
-    cores = os.cpu_count() or 8
+    cores = len(os.sched_getaffinity(0))
     if shuffle_partitions is None:
-        # local mode: one shuffle partition per core is the sweet spot; AQE
-        # coalesces further at runtime. On a real cluster this would be
-        # 2-3x total executor cores (set via spark-submit conf).
+        # local mode: one shuffle partition per core this process may use
+        # is the sweet spot; AQE coalesces further at runtime. On a real
+        # cluster this would be 2-3x total executor cores (set via
+        # spark-submit conf).
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", cores))
     b = (
         SparkSession.builder.appName(app_name)
@@ -44,7 +57,7 @@ def build_session(
         # ds partition values stay strings (engine contract: ds string
         # yyyy-MM-dd, TableUtils.scala:343-347)
         .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or box_heap())
         # PySpark 4's DataFrame-debugging captures a Python stack trace on
         # EVERY DataFrame/Column API call (inspect.currentframe walk + a
         # per-call origin string shipped over py4j; first use even imports

@@ -4,8 +4,10 @@
   A | B (either side may be empty), with nulls and exact-ts ties,
   finalize(merge(reduce(A), reduce(B))) == finalize(reduce(A ++ B)) bit
   for bit, for every registry op on float, integral and string inputs;
-- suffix law: hop IRs suffix-merged from any start equal the reduce of
-  the events from that hop on;
+- suffix law: hop IRs range-merged from any start to the last hop equal
+  the reduce of the events from that hop on;
+- range law: tile IRs range-merged over any piece range equal the
+  reduce of that range's events, across the 1h/1d rollup levels;
 - sketch bands: a truncated equi-rank sample or Misra-Gries count-map
   merged with exact events stays inside its documented error band;
 - a unit-weight sample's percentiles are np.percentile's, bit for bit;
@@ -129,9 +131,69 @@ def test_split_law_hll():
         assert _rows(split) == _rows(whole)
 
 
+def _tiled_stream(rng, kind):
+    """(ts, Arrow values, piece cuts, piece start times): events in
+    5-minute tiles of the hours 22, 23, 0 and 1 of three days, so piece
+    ranges cross 1h and 1d rollup edges; few distinct times per tile."""
+    n = int(rng.integers(0, 120))
+    day = rng.integers(0, 3, n)
+    hour = rng.choice([22, 23, 0, 1], n)
+    tile = np.sort(day * 288 + hour * 12 + rng.integers(0, 12, n))
+    ts = tile * 300_000 + rng.integers(0, 3, n) * 1_000
+    null = rng.random(n) < 0.2
+    if kind == "str":
+        arr = pa.array([None if m else f"w{x}" for m, x in zip(null, rng.integers(0, 9, n))], pa.string())
+    elif kind == "int":
+        arr = pa.array([None if m else int(x) for m, x in zip(null, rng.integers(-9, 9, n))], pa.int64())
+    else:
+        arr = pa.array([None if m else float(v) for m, v in zip(null, rng.integers(-40, 40, n) / 4.0)])
+    cuts = np.r_[0, np.flatnonzero(np.diff(tile)) + 1, n] if n else np.zeros(1, np.int64)
+    return ts, arr, cuts, tile[cuts[:-1]] * 300_000
+
+
+RANGE_CASES = CASES + [(Operation.APPROX_UNIQUE_COUNT, "float")]
+
+
+@pytest.mark.parametrize("op,kind", RANGE_CASES, ids=[f"{o.name}-{k}" for o, k in RANGE_CASES])
+def test_range_law(op, kind):
+    """Tiles = 5-minute piece IRs; range_merge(tiles, [lo, hi)) ==
+    reduce(events of those tiles) for every range: empty, single-piece,
+    whole, and across 1h/1d rollup edges. Exact ops bit for bit; the
+    percentile sample (budget 4, so rollups resample) within the rank
+    band of test_percentile_sample_band."""
+    args = dict(ARGS.get(op, {}))
+    if op is Operation.APPROX_PERCENTILE:
+        args["accuracy"] = 4
+    p = AggregationPart("v", op, args, None, None)
+    rng = np.random.default_rng(zlib.crc32(f"range-{op.name}-{kind}".encode()))
+    for _ in range(8):
+        ts, arr, cuts, piece_ts = _tiled_stream(rng, kind)
+        col = _hll(rng, len(ts)) if op is Operation.APPROX_UNIQUE_COUNT else _col(ts, arr, kind)
+        pieces = alg.reduce(p, col, cuts[:-1], cuts[1:])
+        lo, hi = np.triu_indices(len(cuts))
+        got = alg.finalize(p, alg.range_merge(p, pieces, piece_ts, lo, hi))
+        exp = alg.finalize(p, alg.reduce(p, col, cuts[lo], cuts[hi]))
+        if op is not Operation.APPROX_PERCENTILE:
+            assert _rows(got) == _rows(exp), (op, kind, ts, arr)
+            continue
+        vals = arr.to_numpy(zero_copy_only=False)
+        for j, (g, e) in enumerate(zip(got, exp)):
+            assert (g is None) == (e is None)
+            if g is None:
+                continue
+            full = np.sort(vals[cuts[lo[j]] : cuts[hi[j]]])
+            full = full[~np.isnan(full)]
+            slack = len(full) / args["accuracy"] + 1
+            for qq, v in zip(args["percentiles"], g):
+                pos = qq * (len(full) - 1)
+                a, b = np.searchsorted(full, v, side="left"), np.searchsorted(full, v, side="right")
+                assert a - slack <= pos <= b + slack, (qq, v, pos, a, b, slack)
+
+
 @pytest.mark.parametrize("op", list(alg.STATES), ids=[o.name for o in alg.STATES])
 def test_suffix_law(op):
-    """Hops = consecutive ts runs; suffix(hops, s) == reduce(events of hops ≥ s)."""
+    """Hops = consecutive ts runs; range_merge(hops, [s, H)) — the fetch
+    kernel's window-start-to-boundary shape — == reduce(events of hops ≥ s)."""
     p = _part(op)
     kind = "float"
     rng = np.random.default_rng(11)
@@ -144,7 +206,8 @@ def test_suffix_law(op):
             col = _col(ts, arr, kind)
         hops = alg.reduce(p, col, cuts[:-1], cuts[1:])
         starts = np.unique(rng.integers(0, len(cuts), 4))
-        got = alg.finalize(p, alg.suffix(p, hops, starts))
+        end = np.full(len(starts), len(cuts) - 1, dtype=np.int64)
+        got = alg.finalize(p, alg.range_merge(p, hops, ts[cuts[:-1]], starts, end))
         n = np.full(len(starts), len(ts), dtype=np.int64)
         exp = alg.finalize(p, alg.reduce(p, col, cuts[starts], n))
         assert _rows(got) == _rows(exp), (op, ts, arr, starts)

@@ -245,3 +245,47 @@ def test_temporal_derivations(spark):
         last = r[1_700_000_000_000 + 5000]
         assert last["price_sum_7d"] == 15.0 and last["price_count_7d"] == 5
         assert last["price_mean_7d"] == 3.0
+
+
+def test_unknown_mode_raises(spark):
+    """``mode`` has three values; anything else is refused, not run raw."""
+    ev, q = _gen(n_events=60, n_queries=50)
+    ev_df, q_df = spark.createDataFrame(ev), spark.createDataFrame(q)
+    gb = GroupBy(name="m", sources=(EventSource(table="ev"),), key_columns=("user",),
+                 aggregations=(Aggregation("price", Operation.SUM, windows=(Window(7),)),))
+    for mode in ("split", "fast"):
+        with pytest.raises(ValueError, match="mode"):
+            temporal_events(spark, gb, q_df, ev_df, mode=mode)
+
+
+def test_elementwise_follows_mode(spark):
+    """An element-wise aggregation's exploded GroupBy runs the kernel the
+    caller's ``mode`` names: mode="tiled" plans the tiled cogroup, and its
+    features equal mode="raw"'s."""
+    rng = np.random.default_rng(8)
+    n = 300
+    ev = pd.DataFrame({
+        "user": [f"u{i % 3}" for i in range(n)],
+        "ts": (T0 + rng.integers(0, 6 * MS_DAY, n)).astype(np.int64),
+    })
+    ev["vec"] = [list(map(float, rng.integers(1, 50, 3))) for _ in range(n)]
+    gb = GroupBy(
+        name="ewm", sources=(EventSource(table="ev"),), key_columns=("user",),
+        aggregations=(
+            Aggregation("price", Operation.COUNT, windows=(Window(2),)),
+            Aggregation("vec", Operation.AVERAGE, windows=(Window(2),), element_wise=True),
+        ),
+    )
+    ev["price"] = rng.integers(1, 9, n).astype(float)
+    ev_df = spark.createDataFrame(ev)
+    q_df = ev_df.select("user", "ts")
+    tiled = temporal_events(spark, gb, q_df, ev_df, mode="tiled")
+    plan = tiled._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FlatMapCoGroupsInArrow") == 2 and "MapInArrow" not in plan
+    raw = temporal_events(spark, gb, q_df, ev_df, mode="raw")
+    cols = ["user", "ts", "price_count_2d", "vec_average_2d"]
+    got = sorted(tuple(r[c] if c != "vec_average_2d" else tuple(r[c] or ()) for c in cols) for r in tiled.collect())
+    exp = sorted(tuple(r[c] if c != "vec_average_2d" else tuple(r[c] or ()) for c in cols) for r in raw.collect())
+    assert len(got) == len(exp) == n
+    for g, e in zip(got, exp):
+        assert g[:3] == e[:3] and np.allclose(g[3], e[3]), (g, e)

@@ -200,7 +200,7 @@ def test_auto_dispatch_by_tile_compression(spark, kind):
     ev_df, q_df = spark.createDataFrame(ev), spark.createDataFrame(q)
     auto = temporal_events(spark, DISPATCH_GB, q_df, ev_df)
     plan = auto._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" in plan and "FlatMapCoGroupsInPandas" not in plan
+    assert "MapInArrow" in plan and "FlatMapCoGroupsInArrow" not in plan
     for forced in ("raw", "tiled"):
         _assert_same_features(
             DISPATCH_GB, auto, temporal_events(spark, DISPATCH_GB, q_df, ev_df, mode=forced)
